@@ -15,7 +15,7 @@ et al., "Connected Components in MapReduce and Beyond").
 Scale shape per round: one join of the edge list against the label
 frame (shuffle on node id), one aggregation, one self-join of the
 label frame. State between rounds is only the label frame —
-O(participating nodes), persisted and superseded round over round.
+O(participating nodes), checkpointed and superseded round over round.
 Lineage is truncated EVERY round (localCheckpoint — executor-memory
 blocks, free); every ``checkpoint_every``-th round additionally takes
 a RELIABLE checkpoint (``DataFrame.checkpoint`` to the configured
@@ -29,7 +29,11 @@ localCheckpoint and behavior is unchanged.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import cached
 
 #: Pointer jumping converges in O(log2 n) rounds; 30 covers 2^30 nodes
 #: with margin. Hitting the cap means something is broken, not slow.
@@ -61,119 +65,108 @@ def connected_components(
     ``{"rounds": N, "reliable_checkpoints": M}`` for observability.
 
     Runs Spark ACTIONS to convergence (this is an algorithm, not a
-    lazy plan); the returned frame is small and stays persisted.
+    lazy plan); the returned frame is small and checkpoint-backed, so
+    it outlives the edge and seed-label caches released here.
     """
-    e = (
-        edges.select("src", "dst")
-        .union(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .persist()
-    )
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
-    labels.count()  # materialize edges+labels before iterating
-    # NULL endpoints never equi-join (null != null), so a null edge
-    # would silently STOP label propagation across it and leak a
-    # phantom node=NULL row into the output — violating the no-silent-
-    # split contract. The frames are materialized, so this check reads
-    # the cache, not the source (review r06).
-    if e.filter(
-        F.col("src").isNull() | F.col("dst").isNull()
-    ).limit(1).count():
-        e.unpersist(False)
-        labels.unpersist(False)
-        raise ValueError(
-            "connected_components: edge list contains NULL endpoints; "
-            "drop or repair them upstream — a null edge cannot "
-            "propagate labels and would split components silently"
-        )
-    retired = labels  # frame superseded (and dereferenced) next round
-
     sc = edges.sparkSession.sparkContext
     can_reliable = sc.getCheckpointDir() is not None
     n_reliable = 0
-
     converged = False
     rounds = 0
-    for rounds in range(1, max_iters + 1):
-        nb = e.join(labels, e.dst == labels.node).select(
-            F.col("src").alias("node"), "label", F.lit(False).alias("own")
-        )
-        # Tag each node's OWN current label through the min-aggregation
-        # (exactly one own-row per node) so convergence is decidable
-        # from the round's output frame alone — folding what was a
-        # separate join-against-old-labels + count() action into the
-        # same single action per round (r02: 2 actions + 3 joins per
-        # round; now 1 action + 2 joins).
-        cand = (
-            labels.select("node", "label", F.lit(True).alias("own"))
-            .union(nb)
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.max(F.when(F.col("own"), F.col("label"))).alias(
-                    "old_label"
-                ),
+    sym = edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    # ``e`` is read by every round's neighbor join; the seed labels
+    # only feed round 1, whose checkpoint cuts all later rounds loose,
+    # so ``seed`` is closed right after round 1's action.
+    with cached(sym) as e, ExitStack() as seed:
+        labels = seed.enter_context(
+            cached(
+                e.select(F.col("src").alias("node"))
+                .distinct()
+                .withColumn("label", F.col("node"))
             )
         )
-        # Pointer jump: label ← label(label). Every label value is a
-        # node id in the same frame, so the inner self-join is total.
-        parent = cand.select(
-            F.col("node").alias("p_node"), F.col("label").alias("p_label")
-        )
-        # Lazy truncation, not persist: each round's plan references
-        # the previous frame several times, so lineage GROWS ~4× per
-        # round — O(log n) rounds is still an exponentially large plan
-        # by round ~7 (observed driver OOM on a 100-node chain).
-        # Truncating keeps planning O(1) per round; lazy (not eager)
-        # so the convergence aggregate below both materializes the
-        # checkpoint AND computes the changed-count in ONE action.
-        # localCheckpoint normally (executor memory, free); every
-        # checkpoint_every-th round a RELIABLE checkpoint instead, so
-        # executor loss replays at most checkpoint_every rounds.
-        jumped = cand.join(parent, cand.label == parent.p_node).select(
-            "node",
-            F.col("p_label").alias("label"),
-            (F.col("p_label") != F.col("old_label")).alias("changed"),
-        )
-        if can_reliable and rounds % checkpoint_every == 0:
-            jumped = jumped.checkpoint(eager=False)
-            n_reliable += 1
-        else:
-            jumped = jumped.localCheckpoint(eager=False)
-        # Single action: materializes the lazy checkpoint AND returns
-        # the convergence count (None only on an empty graph).
-        changed = (
-            jumped.agg(F.sum(F.col("changed").cast("long"))).first()[0] or 0
-        )
-        # For round 1's `labels` this truly unpersists; for later
-        # rounds `retired` is a checkpoint-backed frame whose blocks
-        # DataFrame.unpersist does NOT free (it only clears
-        # CacheManager entries) — those blocks are released by
-        # ContextCleaner once the superseded frame is garbage
-        # collected, which dropping our reference below enables.
-        # Peak extra footprint is therefore O(a few label frames),
-        # bounded by GC latency, not by round count (review r06
-        # corrected the comment that claimed deterministic freeing).
-        retired.unpersist()
-        retired = jumped
-        labels = jumped.select("node", "label")
-        if changed == 0:
-            converged = True
-            break
-    e.unpersist(False)
+        labels.count()  # fill edges+labels before iterating
+        # NULL endpoints never equi-join (null != null), so a null edge
+        # would silently STOP label propagation across it and leak a
+        # phantom node=NULL row into the output — violating the no-
+        # silent-split contract. The frames are filled, so this check
+        # reads the cache, not the source.
+        if e.filter(
+            F.col("src").isNull() | F.col("dst").isNull()
+        ).limit(1).count():
+            raise ValueError(
+                "connected_components: edge list contains NULL "
+                "endpoints; drop or repair them upstream — a null edge "
+                "cannot propagate labels and would split components "
+                "silently"
+            )
+        for rounds in range(1, max_iters + 1):
+            nb = e.join(labels, e.dst == labels.node).select(
+                F.col("src").alias("node"), "label", F.lit(False).alias("own")
+            )
+            # Tag each node's OWN current label through the
+            # min-aggregation (exactly one own-row per node) so
+            # convergence is decidable from the round's output frame
+            # alone: one action and two joins per round, with no separate
+            # join against the old labels.
+            cand = (
+                labels.select("node", "label", F.lit(True).alias("own"))
+                .union(nb)
+                .groupBy("node")
+                .agg(
+                    F.min("label").alias("label"),
+                    F.max(F.when(F.col("own"), F.col("label"))).alias(
+                        "old_label"
+                    ),
+                )
+            )
+            # Pointer jump: label ← label(label). Every label value is a
+            # node id in the same frame, so the inner self-join is total.
+            parent = cand.select(
+                F.col("node").alias("p_node"), F.col("label").alias("p_label")
+            )
+            # Lazy truncation, not persist: each round's plan references
+            # the previous frame several times, so lineage GROWS ~4× per
+            # round — O(log n) rounds is still an exponentially large plan
+            # by round ~7 (observed driver OOM on a 100-node chain).
+            # Truncating keeps planning O(1) per round; lazy (not eager)
+            # so the convergence aggregate below both materializes the
+            # checkpoint AND computes the changed-count in ONE action.
+            # localCheckpoint normally (executor memory, free); every
+            # checkpoint_every-th round a RELIABLE checkpoint instead, so
+            # executor loss replays at most checkpoint_every rounds.
+            jumped = cand.join(parent, cand.label == parent.p_node).select(
+                "node",
+                F.col("p_label").alias("label"),
+                (F.col("p_label") != F.col("old_label")).alias("changed"),
+            )
+            if can_reliable and rounds % checkpoint_every == 0:
+                jumped = jumped.checkpoint(eager=False)
+                n_reliable += 1
+            else:
+                jumped = jumped.localCheckpoint(eager=False)
+            # Single action: materializes the lazy checkpoint AND returns
+            # the convergence count (None only on an empty graph).
+            changed = (
+                jumped.agg(F.sum(F.col("changed").cast("long"))).first()[0]
+                or 0
+            )
+            seed.close()  # no-op after round 1
+            # The superseded round's checkpoint blocks are released by
+            # ContextCleaner once that frame is garbage collected,
+            # which rebinding ``labels`` enables. Peak extra footprint
+            # is therefore O(a few label frames), bounded by GC
+            # latency, not by round count.
+            labels = jumped.select("node", "label")
+            if changed == 0:
+                converged = True
+                break
     if stats is not None:
         stats["rounds"] = rounds
         stats["reliable_checkpoints"] = n_reliable
     if not converged:
-        retired.unpersist(False)
         raise RuntimeError(
             f"connected components did not converge in {max_iters} "
             "rounds — with pointer jumping that indicates a bug or a "

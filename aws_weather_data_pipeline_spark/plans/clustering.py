@@ -33,6 +33,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
 
@@ -185,99 +186,97 @@ def _kmeans_assign(
     # q feeds the seed sort plus every iteration's crossJoin and
     # update join (~5 branches at 2 iterations); Spark does not
     # dedupe common subplans, so persist the quantized frame once
-    # (review r06 — similarity.py documents this exact trap).
-    q = e.select("vec_id", F.expr(_QUANT).alias("v")).persist()
-    q.count()
+    # (similarity.py documents this exact trap).
+    with cached(e.select("vec_id", F.expr(_QUANT).alias("v"))) as q:
+        q.count()
 
-    from pyspark.sql import Window
+        from pyspark.sql import Window
 
-    order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
-    seeds = (
-        q.orderBy(*order)
-        .limit(k)
-        # Post-limit window over k rows — single tiny partition by
-        # construction, not a scale concern.
-        .select(
-            (F.row_number().over(Window.orderBy(*order)) - 1)
-            .cast("int")
-            .alias("cluster"),
-            "v",
-        )
-    )
-
-    def assign(cents: DataFrame) -> DataFrame:
-        # One-row sorted centroid ARRAY instead of a k-row broadcast
-        # relation: the argmin runs IN-ROW (transform + array_min over
-        # the k candidates) rather than materializing corpus×k rows
-        # through a crossJoin and re-collapsing them with a hash
-        # aggregate keyed by vec_id (guide §2.4; r16 optimization —
-        # one Exchange of O(corpus) rows removed per Lloyd iteration,
-        # at any scale). Same integer distance arithmetic and the same
-        # (dist, cluster) lexicographic tie-break as the former
-        # min(struct(dist, cluster)) hash aggregate — array_min uses
-        # identical struct ordering — so assignments are bit-identical
-        # (oracle-pinned).
-        carr = cents.agg(
-            F.array_sort(
-                F.collect_list(F.struct("cluster", "v"))
-            ).alias("cents")
-        )
-        m = F.array_min(
-            F.transform(
-                "cents",
-                lambda c: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            "v", c["v"], lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    ).alias("dist"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        # ``v`` rides along so update() explodes it directly instead
-        # of joining back to q on vec_id — the iteration's second
-        # removed shuffle (the old plan exchanged q AND the argmin
-        # output by vec_id to feed the centroid update).
-        return q.crossJoin(F.broadcast(carr)).select(
-            "vec_id",
-            m["cluster"].alias("cluster"),
-            m["dist"].alias("dist"),
-            "v",
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        ex = (
-            assigned
-            .select("cluster", F.posexplode("v").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(
-                F.sum("val").alias("sv"),
-                F.count(F.lit(1)).alias("n"),
-            )
+        order = [F.md5(F.col("vec_id").cast("string")), F.col("vec_id")]
+        seeds = (
+            q.orderBy(*order)
+            .limit(k)
+            # Post-limit window over k rows — single tiny partition by
+            # construction, not a scale concern.
             .select(
-                "cluster",
-                "dim",
-                F.expr("(sv - pmod(sv, n)) div n").alias("cq"),
+                (F.row_number().over(Window.orderBy(*order)) - 1)
+                .cast("int")
+                .alias("cluster"),
+                "v",
             )
         )
-        return ex.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cq"))),
-                lambda s: s["cq"],
-            ).alias("v")
-        )
 
-    try:
+        def assign(cents: DataFrame) -> DataFrame:
+            # One-row sorted centroid ARRAY instead of a k-row broadcast
+            # relation: the argmin runs IN-ROW (transform + array_min over
+            # the k candidates) rather than materializing corpus×k rows
+            # through a crossJoin and re-collapsing them with a hash
+            # aggregate keyed by vec_id — one Exchange of O(corpus) rows
+            # fewer per Lloyd iteration, at any scale. Same integer
+            # distance arithmetic and the same
+            # (dist, cluster) lexicographic tie-break as the former
+            # min(struct(dist, cluster)) hash aggregate — array_min uses
+            # identical struct ordering — so assignments are bit-identical
+            # (oracle-pinned).
+            carr = cents.agg(
+                F.array_sort(
+                    F.collect_list(F.struct("cluster", "v"))
+                ).alias("cents")
+            )
+            m = F.array_min(
+                F.transform(
+                    "cents",
+                    lambda c: F.struct(
+                        F.aggregate(
+                            F.zip_with(
+                                "v", c["v"], lambda x, y: (x - y) * (x - y)
+                            ),
+                            F.lit(0).cast("long"),
+                            lambda acc, x: acc + x,
+                        ).alias("dist"),
+                        c["cluster"].alias("cluster"),
+                    ),
+                )
+            )
+            # ``v`` rides along so update() explodes it directly instead
+            # of joining back to q on vec_id — the iteration's second
+            # removed shuffle (the old plan exchanged q AND the argmin
+            # output by vec_id to feed the centroid update).
+            return q.crossJoin(F.broadcast(carr)).select(
+                "vec_id",
+                m["cluster"].alias("cluster"),
+                m["dist"].alias("dist"),
+                "v",
+            )
+
+        def update(assigned: DataFrame) -> DataFrame:
+            ex = (
+                assigned
+                .select("cluster", F.posexplode("v").alias("dim", "val"))
+                .groupBy("cluster", "dim")
+                .agg(
+                    F.sum("val").alias("sv"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .select(
+                    "cluster",
+                    "dim",
+                    F.expr("(sv - pmod(sv, n)) div n").alias("cq"),
+                )
+            )
+            return ex.groupBy("cluster").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("dim", "cq"))),
+                    lambda s: s["cq"],
+                ).alias("v")
+            )
+
         cents = seeds
         assigned = None
         for i in range(KMEANS_ITERATIONS):
             assigned = assign(cents)
             if i < KMEANS_ITERATIONS - 1:
                 cents = update(assigned)
-        # detach (eager) so the cache releases now, not at session end
         cols = [
             F.col("vec_id"),
             F.col("cluster").cast("int").alias("cluster"),
@@ -285,9 +284,7 @@ def _kmeans_assign(
         ]
         if keep_v:
             cols.append(F.col("v"))
-        return assigned.select(*cols).localCheckpoint(eager=True)
-    finally:
-        q.unpersist(False)
+        return detach(assigned.select(*cols))
 
 
 # --------------------------------------------------------------------------
@@ -393,51 +390,43 @@ def semantic_dedup_keep_list(
     sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
     # The assignment frame is referenced by THREE branches below (pair
     # sides a/b + the final keep-list join); Spark does not dedupe
-    # common subplans across join inputs, so persist + materialize it
-    # once (the frame is O(corpus) rows of quantized vectors — the
-    # same footprint the signature cache carries in
-    # plans/similarity.py, and the same recompute trap documented
-    # there).
-    n = assigned.withColumn("nrm", sq_norm).persist()
-    n.count()
-    a = n.select(
-        F.col("vec_id").alias("vec_a"),
-        "cluster",
-        F.col("v").alias("va"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = n.select(
-        F.col("vec_id").alias("vec_b"),
-        "cluster",
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y),"
-        " 0L, (acc, x) -> acc + x)"
-    )
-    dups = (
-        a.join(b, "cluster")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter((F.col("nrm_a") > 0) & (F.col("nrm_b") > 0))
-        .filter(
-            dot / F.sqrt(F.col("nrm_a") * F.col("nrm_b"))
-            >= SEMDEDUP_THRESHOLD
+    # common subplans across join inputs, so persist + fill it once
+    # (the frame is O(corpus) rows of quantized vectors — the same
+    # footprint the signature cache carries in plans/similarity.py,
+    # and the same recompute trap documented there).
+    with cached(assigned.withColumn("nrm", sq_norm)) as n:
+        n.count()
+        a = n.select(
+            F.col("vec_id").alias("vec_a"),
+            "cluster",
+            F.col("v").alias("va"),
+            F.col("nrm").alias("nrm_a"),
         )
-        .select(F.col("vec_b").alias("dup_id"))
-        .distinct()
-    )
-    out = (
-        n.join(dups, n.vec_id == dups.dup_id, "left")
-        .select(
-            "vec_id",
-            F.col("cluster").cast("int").alias("cluster"),
-            F.col("dup_id").isNull().alias("kept"),
+        b = n.select(
+            F.col("vec_id").alias("vec_b"),
+            "cluster",
+            F.col("v").alias("vb"),
+            F.col("nrm").alias("nrm_b"),
         )
-        # Eagerly detach the (tiny) result so the cache can be
-        # released before returning — no cache leak across the
-        # 100+-query bench/driver session.
-        .localCheckpoint(eager=True)
-    )
-    n.unpersist()
-    return out
+        dot = F.expr(
+            "aggregate(zip_with(va, vb, (x, y) -> x * y),"
+            " 0L, (acc, x) -> acc + x)"
+        )
+        dups = (
+            a.join(b, "cluster")
+            .filter(F.col("vec_a") < F.col("vec_b"))
+            .filter((F.col("nrm_a") > 0) & (F.col("nrm_b") > 0))
+            .filter(
+                dot / F.sqrt(F.col("nrm_a") * F.col("nrm_b"))
+                >= SEMDEDUP_THRESHOLD
+            )
+            .select(F.col("vec_b").alias("dup_id"))
+            .distinct()
+        )
+        return detach(
+            n.join(dups, n.vec_id == dups.dup_id, "left").select(
+                "vec_id",
+                F.col("cluster").cast("int").alias("cluster"),
+                F.col("dup_id").isNull().alias("kept"),
+            )
+        )

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
 from .text import (
@@ -343,17 +344,11 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TWICE per execution (r16 scan audit: 2 documents scans — the
     # r08 corpus_filter_funnel defect class). The cached frame is 5
     # numeric columns per doc — tiny next to the text it replaces —
-    # so one pass + cache wins at every scale; the top-k result is
-    # detached (localCheckpoint) so the cache releases before return.
-    tf = _bm25_tf(spark, sf_dir).persist()
-    tf.count()
-    try:
-        # Eager detach: the top-k is BM25_TOP_K rows, so checkpointing
-        # it costs nothing and lets the tf cache release immediately
-        # instead of leaking across the bench session.
-        return _bm25_score_topk(tf).localCheckpoint(eager=True)
-    finally:
-        tf.unpersist(False)
+    # so one pass + cache wins at every scale. The top-k result is
+    # BM25_TOP_K rows, so detaching it costs nothing.
+    with cached(_bm25_tf(spark, sf_dir)) as tf:
+        tf.count()
+        return detach(_bm25_score_topk(tf))
 
 
 def _bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,10 +491,8 @@ def doc_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize→bigram→aggregate subtree: Spark does not share common
     # subplans across join branches. c1 folds FROM c12 (sum over w2),
     # never rescanning the corpus.
-    c12 = (
-        train.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
+    c12 = detach(
+        train.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     )
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     model = c12.join(c1, "w1").select(
@@ -600,9 +593,8 @@ def doc_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts in a single aggregate); the 256-row result materializes
     # eagerly so totals / model derive from it without re-scanning —
     # four lazy branches over `tok` would tokenize the corpus 4x.
-    counts = (
-        tok.groupBy("bucket")
-        .agg(
+    counts = detach(
+        tok.groupBy("bucket").agg(
             F.sum(
                 F.when(F.col("doc_id") % LM_TRAIN_MOD == 0, 1).otherwise(0)
             ).alias("tc"),
@@ -610,7 +602,6 @@ def doc_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("doc_id") % LM_TRAIN_MOD != 0, 1).otherwise(0)
             ).alias("rc"),
         )
-        .localCheckpoint(eager=True)
     )
     totals = counts.agg(
         F.sum("tc").alias("tt"), F.sum("rc").alias("rt")

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached, detach
 from ..sources.tables import load_tables
 from .registry import QueryCatalog
 
@@ -120,18 +121,12 @@ _PR_SQL = (
     tags=("join", "agg", "profiling"),
 )
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges_deg = pagerank_edges_deg(spark, sf_dir).persist()
-    try:
+    # The detach lives at this catalog boundary; pagerank_plan stays
+    # lazy and inspectable (tests/test_plans.py pins the persisted-edge
+    # reuse there).
+    with cached(pagerank_edges_deg(spark, sf_dir)) as edges_deg:
         n = edges_deg.select("src").distinct().count()
-        # Eagerly detach the O(nodes) result from the persisted edge
-        # frame (same hygiene as kmeans_lloyd_assignments) so the
-        # finally-block unpersist is real, not a leaked cache entry in
-        # a long-lived multi-query session. The detach lives at this
-        # catalog boundary; pagerank_plan stays lazy and inspectable
-        # (tests/test_plans.py pins the persisted-edge reuse there).
-        return pagerank_plan(edges_deg, n).localCheckpoint(eager=True)
-    finally:
-        edges_deg.unpersist(False)
+        return detach(pagerank_plan(edges_deg, n))
 
 
 def pagerank_edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,9 +27,11 @@ from __future__ import annotations
 
 import logging
 import random
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import cached, detach
 from ..sources.tables import load_spread, load_tables
 from .registry import QueryCatalog
 from .text import SIMHASH_CTE_SQL
@@ -152,17 +154,6 @@ def _with_shingles(d: DataFrame) -> DataFrame:
     )
 
 
-def _detach(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a RESULT frame (localCheckpoint) so its
-    lineage no longer references the caller's persisted intermediates —
-    the caller can then unpersist them immediately instead of leaking
-    cache entries into the session (100+ catalog queries share one
-    session in bench/driver runs). Only ever applied to near-dup
-    pair/label frames: tiny relative to the corpus, so the checkpoint
-    write is negligible at any scale."""
-    return df.localCheckpoint(eager=True)
-
-
 def _minhash_bands(sigs: DataFrame) -> DataFrame:
     """``(doc_id, band, k1, k2)`` — one row per doc per LSH band."""
     return sigs.select(
@@ -189,8 +180,7 @@ def _minhash_bands(sigs: DataFrame) -> DataFrame:
 def _minhash_candidates(
     sigs: DataFrame,
     max_bucket: int | None = None,
-    audit: bool = True,
-    caches: list | None = None,
+    stack: ExitStack | None = None,
 ) -> DataFrame:
     """Distinct (doc_a < doc_b) candidates from the LSH band join.
 
@@ -249,53 +239,42 @@ def _minhash_candidates(
     natural (un-templated) near-dup scale are ≤ a few dozen rows,
     so caps in the 50–500 range only shave pathological buckets.
 
-    ``caches``: when the caller passes a list (the materialized
-    path), the CAPPED bands frame is persisted + eagerly filled and
-    appended to it — the caller unpersists after detaching its
-    result. Without it, the window count that applies the cap is
-    re-computed once PER JOIN SIDE (Spark does not dedupe the two
-    sides' identical window subplans — r16 not-yet-optimized #2);
-    with it, the window runs once and both sides read the cache.
-    Left None on the pure-lazy path (materialize=False), where a
-    persist would truncate the inspectable plan.
+    ``stack``: when the caller passes one (the executing path), the
+    CAPPED bands frame is cached and filled for the stack's lifetime.
+    Without it, the window count that applies the cap is re-computed
+    once PER JOIN SIDE (Spark does not dedupe the two sides' identical
+    window subplans); with it, the window runs once and both sides
+    read the cache. Plan inspection passes none, since a persist would
+    truncate the inspectable plan.
     """
     bands = _minhash_bands(sigs)
     if max_bucket is not None:
-        if audit:
-            # Audit the cap's recall effect before applying it
-            # (ADVICE r15): a single-row aggregate — groupBy
-            # partial-aggregates map-side, so this is one linear
-            # pass over the persisted sigs cache plus a 1-row
-            # collect (bounded by construction, same defense as the
-            # runner's validation probes). ``audit=False`` is for
-            # callers handing back a PURE LAZY plan
-            # (materialize=False, the plan-shape-test path): an
-            # action here would both execute the unpersisted
-            # signature pipeline and truncate the inspectable
-            # laziness. It skips ONLY the audit — the cap filter
-            # below applies regardless.
-            excl = (
-                bands.groupBy("band", "k1", "k2")
-                .agg(F.count(F.lit(1)).alias("bsz"))
-                .filter(F.col("bsz") > max_bucket)
-                .agg(
-                    F.coalesce(F.sum("bsz"), F.lit(0)).alias("rows"),
-                    F.count(F.lit(1)).alias("buckets"),
-                )
-                .collect()[0]
+        # Audit the cap's recall effect before applying it (ADVICE
+        # r15): a single-row aggregate — groupBy partial-aggregates
+        # map-side, so this is one linear pass over the caller's sigs
+        # cache plus a 1-row collect (bounded by construction, same
+        # defense as the runner's validation probes).
+        excl = (
+            bands.groupBy("band", "k1", "k2")
+            .agg(F.count(F.lit(1)).alias("bsz"))
+            .filter(F.col("bsz") > max_bucket)
+            .agg(
+                F.coalesce(F.sum("bsz"), F.lit(0)).alias("rows"),
+                F.count(F.lit(1)).alias("buckets"),
             )
-            if excl["rows"]:
-                _LOG.warning(
-                    "minhash max_bucket=%d excluded %d band-rows "
-                    "across %d hot buckets from candidate "
-                    "generation; recall for pairs colliding ONLY in "
-                    "those buckets is lost (capped LSH is "
-                    "approximate — see _minhash_candidates "
-                    "docstring)",
-                    max_bucket,
-                    excl["rows"],
-                    excl["buckets"],
-                )
+            .collect()[0]
+        )
+        if excl["rows"]:
+            _LOG.warning(
+                "minhash max_bucket=%d excluded %d band-rows across %d "
+                "hot buckets from candidate generation; recall for "
+                "pairs colliding ONLY in those buckets is lost (capped "
+                "LSH is approximate — see _minhash_candidates "
+                "docstring)",
+                max_bucket,
+                excl["rows"],
+                excl["buckets"],
+            )
         from pyspark.sql import Window
 
         # Cost of the cap, measured (r15 .explain audit): the window
@@ -317,13 +296,12 @@ def _minhash_candidates(
             .filter(F.col("__bsz") <= max_bucket)
             .drop("__bsz")
         )
-        if caches is not None:
+        if stack is not None:
             # One window evaluation instead of one per join side
             # (see docstring); count() fills the cache before the
             # self-join's branches race to compute it.
-            bands = bands.persist()
+            bands = stack.enter_context(cached(bands))
             bands.count()
-            caches.append(bands)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "k1", "k2")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "k1", "k2")
     return (
@@ -447,56 +425,42 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "dedup", "join"),
 )
 def near_dup_pairs_minhash(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = True,
-    max_bucket: int | None = None,
+    spark: SparkSession, sf_dir: str, max_bucket: int | None = None
 ) -> DataFrame:
     d = _with_shingles(_docs(spark, sf_dir))
     # The signature pipeline feeds FOUR plan branches (band self-join
     # a/b + verify joins sa/sb); Spark does not dedupe common subplans
     # across join inputs, so without a persist each branch re-runs the
-    # whole shingle+md5+signature pipeline (~4× — the r02 bench's 30 s).
-    # Persist, materialize, derive everything, then hand back a frame
-    # whose lineage no longer references the cache (_detach) so it can
-    # be unpersisted before returning. materialize=False returns the
-    # pure lazy plan instead (plan-shape tests inspect the join tree,
-    # which _detach would truncate to a checkpoint scan).
+    # whole shingle+md5+signature pipeline (~4×).
     sigs = d.select("doc_id", "shingles", *minhash_signature_cols())
-    caches: list = []
-    if materialize:
-        sigs = sigs.persist()
+    with cached(sigs) as sigs, ExitStack() as stack:
         sigs.count()  # fill the cache before concurrent branches race
-    try:
-        cand = _minhash_candidates(
-            sigs,
-            max_bucket,
-            audit=materialize,
-            caches=caches if materialize else None,
-        )
-        sa = sigs.select(
-            F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        jaccard = inter.cast("double") / (
-            F.size("sh_a") + F.size("sh_b") - inter
-        )
-        out = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn("jaccard", jaccard)
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-        return _detach(out) if materialize else out
-    finally:
-        if materialize:
-            sigs.unpersist(False)
-            for c in caches:
-                c.unpersist(False)
+        return detach(near_dup_pairs_minhash_plan(sigs, max_bucket, stack))
+
+
+def near_dup_pairs_minhash_plan(
+    sigs: DataFrame,
+    max_bucket: int | None = None,
+    stack: ExitStack | None = None,
+) -> DataFrame:
+    """The lazy near-dup pairs plan over ``sigs`` (doc_id, shingles,
+    MinHash signature); ``stack`` as in ``_minhash_candidates``."""
+    cand = _minhash_candidates(sigs, max_bucket, stack)
+    sa = sigs.select(
+        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
+    )
+    sb = sigs.select(
+        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jaccard = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "jaccard")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -544,62 +508,59 @@ EDIT_THRESHOLD = 16
     tags=("similarity", "dedup", "join"),
 )
 def near_dup_pairs_editdist(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = True,
-    max_bucket: int | None = None,
+    spark: SparkSession, sf_dir: str, max_bucket: int | None = None
 ) -> DataFrame:
     d = _with_shingles(_docs(spark, sf_dir))
     # Same recompute hazard as near_dup_pairs_minhash: the band
     # self-join is two branches over the signature pipeline.
     sigs = d.select("doc_id", *minhash_signature_cols())
-    caches: list = []
-    if materialize:
-        sigs = sigs.persist()
+    with cached(sigs) as sigs, ExitStack() as stack:
         sigs.count()
-    try:
-        cand = _minhash_candidates(
-            sigs,
-            max_bucket,
-            audit=materialize,
-            caches=caches if materialize else None,
-        )
-        docs = _docs(spark, sf_dir)
-        ta = docs.select(
-            F.col("doc_id").alias("doc_a"),
-            F.substring("text", 1, EDIT_PREFIX).alias("txt_a"),
-        )
-        tb = docs.select(
-            F.col("doc_id").alias("doc_b"),
-            F.substring("text", 1, EDIT_PREFIX).alias("txt_b"),
-        )
-        # Two exact-result-preserving prunes before the quadratic DP:
-        # (1) |len_a - len_b| > k implies distance > k (length is a
-        #     lower bound on edit distance) — free column compare;
-        # (2) thresholded levenshtein (Ukkonen banding: O(len·k) cells
-        #     instead of O(len²), returns -1 above k) — 8× less work
-        #     per surviving pair at k=16, len=256. Same result set as
-        #     the oracle's unbounded levenshtein ≤ k.
-        out = (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .filter(
-                F.abs(F.length("txt_a") - F.length("txt_b"))
-                <= EDIT_THRESHOLD
+        return detach(
+            near_dup_pairs_editdist_plan(
+                sigs, _docs(spark, sf_dir), max_bucket, stack
             )
-            .withColumn(
-                "edit_distance",
-                F.levenshtein("txt_a", "txt_b", EDIT_THRESHOLD).cast("int"),
-            )
-            .filter(F.col("edit_distance") >= 0)
-            .select("doc_a", "doc_b", "edit_distance")
         )
-        return _detach(out) if materialize else out
-    finally:
-        if materialize:
-            sigs.unpersist(False)
-            for c in caches:
-                c.unpersist(False)
+
+
+def near_dup_pairs_editdist_plan(
+    sigs: DataFrame,
+    docs: DataFrame,
+    max_bucket: int | None = None,
+    stack: ExitStack | None = None,
+) -> DataFrame:
+    """The lazy edit-distance pairs plan over ``sigs`` (doc_id,
+    MinHash signature) and ``docs`` (doc_id, text); ``stack`` as in
+    ``_minhash_candidates``."""
+    cand = _minhash_candidates(sigs, max_bucket, stack)
+    ta = docs.select(
+        F.col("doc_id").alias("doc_a"),
+        F.substring("text", 1, EDIT_PREFIX).alias("txt_a"),
+    )
+    tb = docs.select(
+        F.col("doc_id").alias("doc_b"),
+        F.substring("text", 1, EDIT_PREFIX).alias("txt_b"),
+    )
+    # Two exact-result-preserving prunes before the quadratic DP:
+    # (1) |len_a - len_b| > k implies distance > k (length is a
+    #     lower bound on edit distance) — free column compare;
+    # (2) thresholded levenshtein (Ukkonen banding: O(len·k) cells
+    #     instead of O(len²), returns -1 above k) — 8× less work
+    #     per surviving pair at k=16, len=256. Same result set as
+    #     the oracle's unbounded levenshtein ≤ k.
+    return (
+        cand.join(ta, "doc_a")
+        .join(tb, "doc_b")
+        .filter(
+            F.abs(F.length("txt_a") - F.length("txt_b")) <= EDIT_THRESHOLD
+        )
+        .withColumn(
+            "edit_distance",
+            F.levenshtein("txt_a", "txt_b", EDIT_THRESHOLD).cast("int"),
+        )
+        .filter(F.col("edit_distance") >= 0)
+        .select("doc_a", "doc_b", "edit_distance")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -651,69 +612,58 @@ _SIMHASH_BANDS_SQL = "\nUNION ALL\n".join(
     "vectors), MinHash catches shingle-set edits.",
     tags=("similarity", "dedup", "join"),
 )
-def near_dup_pairs_simhash(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def near_dup_pairs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import simhash_frame
 
-    sigs = simhash_frame(spark, sf_dir)
+    # band self-join = two branches over the signature scan
+    with cached(simhash_frame(spark, sf_dir)) as sigs:
+        sigs.count()
+        return detach(near_dup_pairs_simhash_plan(sigs))
 
-    def build(s: DataFrame) -> DataFrame:
-        # One generator pass over the signatures (posexplode), not a
-        # 5-way union — same lesson as the MinHash bands.
-        bands = s.select(
-            "doc_id",
-            "simhash",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.expr(
-                            f"(simhash >> {j * SIMHASH_BAND_BITS})"
-                            f" & {(1 << SIMHASH_BAND_BITS) - 1}"
-                        )
-                        for j in range(SIMHASH_BANDS)
-                    ]
-                )
-            ).alias("band", "bucket"),
-        )
-        a = bands.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("simhash").alias("sig_a"),
-            "band",
-            "bucket",
-        )
-        b = bands.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("simhash").alias("sig_b"),
-            "band",
-            "bucket",
-        )
-        cand = (
-            a.join(b, on=["band", "bucket"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "sig_a", "sig_b")
-            .distinct()
-        )
-        hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
-        return (
-            cand.withColumn("hamming", hamming.cast("int"))
-            .filter(F.col("hamming") <= HAMMING_THRESHOLD)
-            .select("doc_a", "doc_b", "hamming")
-        )
 
-    if not materialize:
-        return build(sigs)
-    # band self-join = two branches over the signature scan. The try
-    # opens IMMEDIATELY after the persist is filled so any failure
-    # during plan construction still unpersists (review r06: the old
-    # shape leaked the cache entry on an AnalysisException between
-    # count() and the detach).
-    sigs = sigs.persist()
-    sigs.count()
-    try:
-        return _detach(build(sigs))
-    finally:
-        sigs.unpersist(False)
+def near_dup_pairs_simhash_plan(sigs: DataFrame) -> DataFrame:
+    """The lazy SimHash pairs plan over ``sigs`` (doc_id, simhash)."""
+    # One generator pass over the signatures (posexplode), not a
+    # 5-way union — same lesson as the MinHash bands.
+    bands = sigs.select(
+        "doc_id",
+        "simhash",
+        F.posexplode(
+            F.array(
+                *[
+                    F.expr(
+                        f"(simhash >> {j * SIMHASH_BAND_BITS})"
+                        f" & {(1 << SIMHASH_BAND_BITS) - 1}"
+                    )
+                    for j in range(SIMHASH_BANDS)
+                ]
+            )
+        ).alias("band", "bucket"),
+    )
+    a = bands.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("simhash").alias("sig_a"),
+        "band",
+        "bucket",
+    )
+    b = bands.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("simhash").alias("sig_b"),
+        "band",
+        "bucket",
+    )
+    cand = (
+        a.join(b, on=["band", "bucket"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", "sig_a", "sig_b")
+        .distinct()
+    )
+    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
+    return (
+        cand.withColumn("hamming", hamming.cast("int"))
+        .filter(F.col("hamming") <= HAMMING_THRESHOLD)
+        .select("doc_a", "doc_b", "hamming")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -760,22 +710,18 @@ def near_dup_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Both self-join branches read fps: persist so the windowed
     # fingerprint pipeline (posexplode + two window passes) runs once,
-    # not once per side — Spark does not dedupe common subplans
-    # (review r06; same discipline as the other pairs queries).
-    fps = fps.persist()
-    fps.count()
-    try:
+    # not once per side — Spark does not dedupe common subplans.
+    with cached(fps) as fps:
+        fps.count()
         a = fps.select(F.col("doc_id").alias("doc_a"), "fp")
         b = fps.select(F.col("doc_id").alias("doc_b"), "fp")
-        return _detach(
+        return detach(
             a.join(b, "fp")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("n_shared_fps"))
             .filter(F.col("n_shared_fps") >= WINNOW_SHARED_THRESHOLD)
         )
-    finally:
-        fps.unpersist(False)
 
 
 def _attach_winnow_pairs_oracle() -> None:
@@ -895,39 +841,31 @@ def _ngram_candidates(srt: DataFrame, filters: bool = True) -> DataFrame:
     "shingle hash (uniform by construction), verify only candidates.",
     tags=("similarity", "dedup", "join"),
 )
-def near_dup_pairs_ngram(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def near_dup_pairs_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _with_shingles(_docs(spark, sf_dir))
     # srt feeds four branches (prefix-index a/b + verify sa/sb) — same
     # recompute hazard as the MinHash family.
     srt = d.select("doc_id", F.array_sort("sh_hashes").alias("sh"))
-    if materialize:
-        srt = srt.persist()
+    with cached(srt) as srt:
         srt.count()
-    try:
-        cand = _ngram_candidates(srt)
-        sa = srt.select(
-            F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-        )
-        sb = srt.select(
-            F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        jaccard = inter.cast("double") / (
-            F.size("sh_a") + F.size("sh_b") - inter
-        )
-        out = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn("jaccard", jaccard)
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-        return _detach(out) if materialize else out
-    finally:
-        if materialize:
-            srt.unpersist(False)
+        return detach(near_dup_pairs_ngram_plan(srt))
+
+
+def near_dup_pairs_ngram_plan(srt: DataFrame) -> DataFrame:
+    """The lazy exact n-gram pairs plan over ``srt`` (doc_id, sorted
+    shingle hashes ``sh``)."""
+    cand = _ngram_candidates(srt)
+    sa = srt.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = srt.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jaccard = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "jaccard")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2380,9 +2318,8 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same recompute hazard as the rest of the MinHash family: bands +
     # two verify joins + the batch keep-list all branch off sigs.
     sigs = d.select("doc_id", "shingles", *minhash_signature_cols())
-    sigs = sigs.persist()
-    sigs.count()
-    try:
+    with cached(sigs) as sigs:
+        sigs.count()
         bands = _minhash_bands(sigs)
         bb = bands.filter(
             F.col("doc_id") % BATCH_MOD == BATCH_REMAINDER
@@ -2429,9 +2366,7 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.count("dup_of") == 0).alias("is_new"),
             )
         )
-        return _detach(out)
-    finally:
-        sigs.unpersist(False)
+        return detach(out)
 
 
 # --------------------------------------------------------------------------

@@ -45,6 +45,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
 
@@ -452,79 +453,74 @@ def bloom_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base feeds THREE branches (filter bits, probe, ground-truth
     # marker); Spark does not dedupe common subplans, so without the
     # persist one action scans + md5-hashes the documents table three
-    # times (review r06 — the same trap clustering.py documents).
+    # times (the same trap clustering.py documents).
     base = d.select(
         "doc_id",
         F.md5("text").alias("ch"),
         (F.col("doc_id") % BLOOM_MOD == BLOOM_REM).alias("is_batch"),
-    ).persist()
-    base.count()
-    corpus = base.filter(~F.col("is_batch")).select("ch").distinct()
-
-    def pos_col() -> F.Column:
-        return F.expr(
-            "cast(conv(substr(md5(concat('bloom', cast(j as string),"
-            f" ':', ch)), 1, 15), 16, 10) as bigint) % {BLOOM_M}"
-        )
-
-    ks = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))).alias("j")
-    corpus_bits = (
-        corpus.select("ch", ks)
-        .select(pos_col().alias("pos"))
-        .groupBy(
-            F.expr(f"pos div {BLOOM_BITS_PER_WORD}").alias("word")
-        )
-        .agg(
-            F.bit_or(
-                F.expr(f"shiftleft(1L, cast(pos % {BLOOM_BITS_PER_WORD}"
-                       " as int))")
-            ).alias("bits")
-        )
     )
-    probe = (
-        base.filter("is_batch")
-        .select("doc_id", "ch", ks)
-        .select("doc_id", "ch", pos_col().alias("pos"))
-    )
-    hits = (
-        probe.join(
-            F.broadcast(corpus_bits),
-            F.expr(f"pos div {BLOOM_BITS_PER_WORD}") == F.col("word"),
-            "left",
+    with cached(base) as base:
+        base.count()
+        corpus = base.filter(~F.col("is_batch")).select("ch").distinct()
+
+        def pos_col() -> F.Column:
+            return F.expr(
+                "cast(conv(substr(md5(concat('bloom', cast(j as string),"
+                f" ':', ch)), 1, 15), 16, 10) as bigint) % {BLOOM_M}"
+            )
+
+        ks = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))).alias("j")
+        corpus_bits = (
+            corpus.select("ch", ks)
+            .select(pos_col().alias("pos"))
+            .groupBy(
+                F.expr(f"pos div {BLOOM_BITS_PER_WORD}").alias("word")
+            )
+            .agg(
+                F.bit_or(
+                    F.expr(f"shiftleft(1L, cast(pos % {BLOOM_BITS_PER_WORD}"
+                           " as int))")
+                ).alias("bits")
+            )
         )
-        .groupBy("doc_id", "ch")
-        .agg(
-            F.bool_and(
-                (
-                    F.coalesce(F.col("bits"), F.lit(0).cast("long"))
-                    .bitwiseAND(
-                        F.expr(
-                            f"shiftleft(1L, cast(pos % "
-                            f"{BLOOM_BITS_PER_WORD} as int))"
+        probe = (
+            base.filter("is_batch")
+            .select("doc_id", "ch", ks)
+            .select("doc_id", "ch", pos_col().alias("pos"))
+        )
+        hits = (
+            probe.join(
+                F.broadcast(corpus_bits),
+                F.expr(f"pos div {BLOOM_BITS_PER_WORD}") == F.col("word"),
+                "left",
+            )
+            .groupBy("doc_id", "ch")
+            .agg(
+                F.bool_and(
+                    (
+                        F.coalesce(F.col("bits"), F.lit(0).cast("long"))
+                        .bitwiseAND(
+                            F.expr(
+                                f"shiftleft(1L, cast(pos % "
+                                f"{BLOOM_BITS_PER_WORD} as int))"
+                            )
                         )
                     )
-                )
-                != 0
-            ).alias("bloom_candidate")
+                    != 0
+                ).alias("bloom_candidate")
+            )
         )
-    )
-    marker = corpus.withColumn("in_corpus", F.lit(1))
-    try:
-        return (
-            hits.join(marker, "ch", "left")
-            .select(
+        marker = corpus.withColumn("in_corpus", F.lit(1))
+        return detach(
+            hits.join(marker, "ch", "left").select(
                 "doc_id",
                 "bloom_candidate",
                 F.col("in_corpus").isNotNull().alias("actual_dup"),
                 (
-                    F.col("bloom_candidate")
-                    & F.col("in_corpus").isNull()
+                    F.col("bloom_candidate") & F.col("in_corpus").isNull()
                 ).alias("is_false_positive"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        base.unpersist(False)
 
 
 # --------------------------------------------------------------------------
@@ -723,9 +719,9 @@ def mg_heavy_hitter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _char_pairs(docs)
     # <= (k+1) rows per partition; eager checkpoint so the two readers
     # below (candidates + totals) don't each re-run the pass-1 scan.
-    summary = misra_gries_partials(
-        pairs, "pair", MG_K, emit_totals=True
-    ).localCheckpoint(eager=True)
+    summary = detach(
+        misra_gries_partials(pairs, "pair", MG_K, emit_totals=True)
+    )
     candidates = (
         summary.filter(F.col("key").isNotNull())
         .select(F.col("key").alias("pair"))

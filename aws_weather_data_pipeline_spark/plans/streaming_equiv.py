@@ -33,10 +33,11 @@ import os
 import shutil
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions import weather as wx
 from ..schemas import DERIVED_COLUMNS, FLAT_COLUMNS
+from ..session import cached, detach
 from ..sources.tables import load_tables
 from .registry import QueryCatalog
 
@@ -122,7 +123,7 @@ def _collect_sink(spark: SparkSession, path, work, columns=None):
     df = spark.read.parquet(path)
     if columns is not None:
         df = df.select(*columns)
-    out = df.localCheckpoint(eager=True)
+    out = detach(df)
     shutil.rmtree(work, ignore_errors=True)
     return out
 
@@ -193,12 +194,13 @@ def write_landing_files(readings: DataFrame, landing_dir: str) -> None:
     document per file)."""
     envelopes = readings.groupBy("env_id").agg(
         F.collect_list(F.struct(*FLAT_COLUMNS)).alias("readings")
-    ).persist()  # two filtered writes below — build the 2 rows once
-    for i in (0, 1):
-        envelopes.filter(F.col("env_id") == i).select(
-            "readings"
-        ).coalesce(1).write.mode("append").json(landing_dir)
-    envelopes.unpersist()
+    )
+    # two filtered writes below — build the 2 rows once
+    with cached(envelopes) as envelopes:
+        for i in (0, 1):
+            envelopes.filter(F.col("env_id") == i).select(
+                "readings"
+            ).coalesce(1).write.mode("append").json(landing_dir)
 
 
 #: Columns compared against the oracle: the full processed surface
@@ -458,24 +460,55 @@ def streaming_windowed_alert_counts(
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
 
-def _write_typed_landing(
-    spark: SparkSession, sf_dir: str, dirs: dict
+def write_event_files(
+    spark: SparkSession,
+    sf_dir: str,
+    files: list[tuple[str, Column | None]],
 ) -> None:
-    """Split the two-day event fixture into one landing dir per
-    event_type (micros-precision JSON) — ONE definition shared by
-    both stream-stream attribution fixtures (review r06: the ~18
-    lines were pasted into each)."""
+    """The raw-events landing fixture: the first two days of
+    ``events`` (five columns, micros-precision JSON), written as one
+    file per ``(directory, predicate)`` entry of ``files``, in order.
+    A ``None`` predicate writes every event.
+
+    FileStreamSource orders files by modification time, which
+    back-to-back writes cannot be trusted to distinguish, so each
+    entry's file is stamped with an explicit, strictly increasing
+    mtime: a ``maxFilesPerTrigger=1`` replay reads them in list order.
+    """
     ev = (
         load_tables(spark, sf_dir, ("events",))["events"]
         .filter(F.col("ts") < F.to_timestamp(F.lit(_TS_CUTOFF)))
         .select("event_id", "ts", "user_id", "event_type", "value")
-        .persist()
     )
-    for etype, d in dirs.items():
-        ev.filter(F.col("event_type") == etype).coalesce(1).write.mode(
-            "append"
-        ).option("timestampFormat", _TS_FMT).json(d)
-    ev.unpersist()
+    # several filtered writes — scan events once
+    with cached(ev) as ev:
+        for i, (d, pred) in enumerate(files):
+            before = set(glob.glob(f"{d}/part-*"))
+            frame = ev if pred is None else ev.filter(pred)
+            frame.coalesce(1).write.mode("append").option(
+                "timestampFormat", _TS_FMT
+            ).json(d)
+            stamp = 1_700_000_000 + 60 * i
+            for f in set(glob.glob(f"{d}/part-*")) - before:
+                os.utime(f, (stamp, stamp))
+
+
+def _parity_files(landing_dir: str) -> list[tuple[str, Column]]:
+    """Two files split by event_id parity, so ``maxFilesPerTrigger=1``
+    replays them as two micro-batches whose composition is
+    deterministic (not mtime-ordering-dependent)."""
+    return [(landing_dir, F.col("event_id") % 2 == i) for i in (0, 1)]
+
+
+def _typed_files(
+    clicks_dir: str, purchases_dir: str
+) -> list[tuple[str, Column]]:
+    """One landing dir per event_type, for the stream-stream
+    attribution fixtures."""
+    return [
+        (clicks_dir, F.col("event_type") == "click"),
+        (purchases_dir, F.col("event_type") == "purchase"),
+    ]
 
 
 # Success paths still rmtree immediately (_collect_sink); the shared
@@ -498,26 +531,6 @@ def _typed_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.option("timestampFormat", _TS_FMT).json(d)
-
-
-def write_event_landing_files(
-    spark: SparkSession, sf_dir: str, landing_dir: str
-) -> None:
-    """Raw-events landing fixture: the first two days of ``events``
-    split into two JSON files by event_id parity, so
-    ``maxFilesPerTrigger=1`` replays them as two micro-batches whose
-    composition is deterministic (not mtime-ordering-dependent)."""
-    ev = (
-        load_tables(spark, sf_dir, ("events",))["events"]
-        .filter(F.col("ts") < F.to_timestamp(F.lit(_TS_CUTOFF)))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .persist()  # two parity-filtered writes — scan events once
-    )
-    for i in (0, 1):
-        ev.filter(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-            "append"
-        ).option("timestampFormat", _TS_FMT).json(landing_dir)
-    ev.unpersist()
 
 
 @CATALOG.add(
@@ -578,7 +591,7 @@ def streaming_running_user_stats(
     outdir = f"{work}/updates"
     ckpt = f"{work}/ckpt"
 
-    write_event_landing_files(spark, sf_dir, landing)
+    write_event_files(spark, sf_dir, _parity_files(landing))
     events = _typed_stream(spark, landing, max_files_per_trigger=1)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -684,7 +697,7 @@ def streaming_session_windows(
     outdir = f"{work}/sessions"
     ckpt = f"{work}/ckpt"
 
-    write_event_landing_files(spark, sf_dir, landing)
+    write_event_files(spark, sf_dir, _parity_files(landing))
     # No maxFilesPerTrigger: both files in one micro-batch (see doc).
     sessions = sessionized_user_activity(
         _typed_stream(spark, landing),
@@ -768,9 +781,8 @@ def streaming_attributed_purchases(
     outdir = f"{work}/attributed"
     ckpt = f"{work}/ckpt"
 
-    _write_typed_landing(
-        spark, sf_dir,
-        {"click": clicks_dir, "purchase": purchases_dir},
+    write_event_files(
+        spark, sf_dir, _typed_files(clicks_dir, purchases_dir)
     )
 
     # Watermark > horizon: a buffered click must stay in state for
@@ -834,7 +846,7 @@ def streaming_static_enrichment(
     outdir = f"{work}/enriched"
     ckpt = f"{work}/ckpt"
 
-    write_event_landing_files(spark, sf_dir, landing)
+    write_event_files(spark, sf_dir, _parity_files(landing))
     customer = load_tables(spark, sf_dir, ("customer",))["customer"]
     stream = _typed_stream(spark, landing, max_files_per_trigger=1)
     enriched = (
@@ -952,9 +964,8 @@ def streaming_attribution_with_timeouts(
     outdir = f"{work}/attributed"
     ckpt = f"{work}/ckpt"
 
-    _write_typed_landing(
-        spark, sf_dir,
-        {"click": clicks_dir, "purchase": purchases_dir},
+    write_event_files(
+        spark, sf_dir, _typed_files(clicks_dir, purchases_dir)
     )
 
     joined = attributed_purchases(
@@ -1017,30 +1028,16 @@ def streaming_dedup_replay(
     outdir = f"{work}/deduped"
     ckpt = f"{work}/ckpt"
 
-    ev = (
-        load_tables(spark, sf_dir, ("events",))["events"]
-        .filter(F.col("ts") < F.to_timestamp(F.lit(_TS_CUTOFF)))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .persist()
-    )
     # File 1: every event. File 2: the replayed duplicates. The
     # micro-batch ORDER is load-bearing: if the replay file were
     # processed first, the watermark would advance past most odd
-    # events and late-drop them in batch 2 (review r06).
-    # FileStreamSource orders files by modification time, which two
-    # back-to-back writes cannot be trusted to distinguish — pin it
-    # with explicit, strictly increasing mtimes.
-    for i, frame in enumerate(
-        (ev, ev.filter(F.col("event_id") % 2 == 0))
-    ):
-        before = set(glob.glob(f"{landing}/part-*"))
-        frame.coalesce(1).write.mode("append").option(
-            "timestampFormat", _TS_FMT
-        ).json(landing)
-        stamp = 1_700_000_000 + 60 * i
-        for f in set(glob.glob(f"{landing}/part-*")) - before:
-            os.utime(f, (stamp, stamp))
-    ev.unpersist()
+    # events and late-drop them in batch 2; write_event_files pins
+    # the mtimes to the list order.
+    write_event_files(
+        spark,
+        sf_dir,
+        [(landing, None), (landing, F.col("event_id") % 2 == 0)],
+    )
 
     deduped = deduplicated_events(
         _typed_stream(spark, landing, max_files_per_trigger=1)

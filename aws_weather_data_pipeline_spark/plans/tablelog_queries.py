@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached
 from ..sinks import incremental, tablelog
 from ..sources.tables import load_tables
 from .registry import QueryCatalog
@@ -84,8 +85,8 @@ def build_folded_events_log(spark: SparkSession, sf_dir: str) -> str:
     # persist: the six slice commits each scan events TWICE (the range
     # partitioner samples, then the write reads) — 12 parquet scans
     # without the cache, 1 with it
-    events = load_tables(spark, sf_dir, ("events",))["events"].persist()
-    try:
+    events = load_tables(spark, sf_dir, ("events",))["events"]
+    with cached(events) as events:
         for rem in range(N_SLICES):
             op = tablelog.overwrite if rem == 0 else tablelog.append
             op(
@@ -108,8 +109,6 @@ def build_folded_events_log(spark: SparkSession, sf_dir: str) -> str:
             table,
             txn_id="slice-1",
         )
-    finally:
-        events.unpersist()
     return table
 
 
@@ -308,8 +307,9 @@ def tablelog_restore_audit(
     enriched = events.withColumn(
         "big_value",
         F.when(F.col("value") >= BIG_CUTOFF, F.col("value")),
-    ).persist()
-    try:
+    )
+    # four commits each read enriched: scan events once
+    with cached(enriched) as enriched:
         for rem, op in ((0, tablelog.overwrite), (1, tablelog.append),
                         (2, tablelog.append)):
             op(
@@ -324,8 +324,6 @@ def tablelog_restore_audit(
             .repartitionByRange(N_RANGE_FILES, "user_id"),
             table,
         )
-    finally:
-        enriched.unpersist()
     v = tablelog.restore(table, 2)
     if v != 4:
         raise ValueError(f"restore committed v{v}, expected v4")
@@ -594,14 +592,9 @@ def build_synced_state_logs(
     # batches, and the writer-half's two insert-only batches each
     # read events (and merge_changes re-evaluates its batch lineage
     # per attempt) — one parquet scan instead of six-plus
-    events_all = load_tables(spark, sf_dir, ("events",))["events"].persist()
-    try:
+    events_all = load_tables(spark, sf_dir, ("events",))["events"]
+    with cached(events_all) as events_all:
         return _build_synced_state_logs(spark, events_all, work)
-    finally:
-        # unpersist on EVERY exit: a contract-check raise must not
-        # leak the cached input into the rest of the session
-        # (review r13)
-        events_all.unpersist()
 
 
 def _build_synced_state_logs(

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.exact import davg, dsum
+from ..session import cached, detach
 from ..sources.tables import load_tables
 from .registry import QueryCatalog
 
@@ -355,10 +356,9 @@ def range_join_plan(ev: DataFrame, wins: DataFrame) -> DataFrame:
 
     Factored out of the catalog builder so ``tests/test_plans.py``
     can assert the BroadcastHashJoin shape on the pre-checkpoint
-    frame (the catalog boundary wraps this in an eager
-    ``localCheckpoint`` to release the persisted ``wins`` cache,
-    which replaces the visible plan with ``Scan ExistingRDD`` —
-    VERDICT r07 #2)."""
+    frame (the catalog boundary ``detach``es it to release the cached
+    ``wins`` frame, which replaces the visible plan with
+    ``Scan ExistingRDD``)."""
     # Bucketize: a window row per overlapped hour bucket; an event joins
     # only its own hour bucket, so each event meets ≤1 row per window.
     win_buckets = wins.select(
@@ -435,21 +435,13 @@ def interval_range_join_counts(
     # empty-window-restoring left join; Spark duplicates the subtree
     # per reference, so without a persist the full events scan +
     # distinct-dates shuffle runs twice per execution — an entire
-    # extra fact-table pass at the design point (review r06). The
-    # frame is calendar-sized, so the persist is ~free.
-    wins = range_join_windows(ev.sparkSession, sf_dir).persist()
-    wins.count()
-    try:
-        # Eagerly detach the calendar-sized result so the persisted
-        # `wins` frame can be released here instead of leaking a cache
-        # entry into the shared session (ADVICE r06) — as written the
-        # returned plan references `wins`, so a bare unpersist would
-        # silently re-run the events scan twice on later actions. The
-        # eager detach lives HERE (the catalog boundary), not in
-        # range_join_plan, so the plan contract stays inspectable.
-        return range_join_plan(ev, wins).localCheckpoint(eager=True)
-    finally:
-        wins.unpersist(False)
+    # extra fact-table pass at the design point. The frame is
+    # calendar-sized, so the persist is ~free. The detach lives here
+    # (the catalog boundary), not in range_join_plan, so the plan
+    # contract stays inspectable.
+    with cached(range_join_windows(ev.sparkSession, sf_dir)) as wins:
+        wins.count()
+        return detach(range_join_plan(ev, wins))
 
 
 # --------------------------------------------------------------------------

@@ -21,8 +21,11 @@ bit arithmetic.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
 
@@ -609,16 +612,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``tf`` feeds two branches (the df aggregate and the join's left
     # side) and Spark does not dedupe common subplans across join
     # inputs, so the unpersisted plan ran the whole scan+tokenize+
-    # explode+aggregate chain TWICE per execution (r16 scan audit:
-    # 3 documents scans; same defect class as the r08
-    # corpus_filter_funnel fix). Persist+materialize collapses it to
-    # ONE corpus pass — the term that dominates at 100 TB, where the
-    # second pass re-reads and re-explodes the whole corpus; the
-    # result detaches (localCheckpoint) so the cache can be released
-    # before returning, per the module's standing hygiene.
-    tf = tf.persist()
-    tf.count()
-    try:
+    # explode+aggregate chain TWICE per execution. Caching it collapses
+    # that to ONE corpus pass — the term that dominates at 100 TB,
+    # where the second pass re-reads and re-explodes the whole corpus.
+    with cached(tf) as tf:
+        tf.count()
         df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         n = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
         # No broadcast hint on df: vocabulary grows with corpus size
@@ -636,9 +634,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "term", "tf", "df", tf_idf.alias("tf_idf"), "rnk"
             )
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        tf.unpersist(False)
+        return detach(out)
 
 
 # --------------------------------------------------------------------------
@@ -989,27 +985,22 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the corpus is touched ONCE (the word-frequency
     shuffle); every round after that runs on the vocabulary-sized
     cached table, which is why BPE trainers at scale iterate on word
-    counts, never on the corpus. The persisted word table is released
-    via the same eager-checkpoint boundary as pagerank
+    counts, never on the corpus. The cached word table is released
+    after the result is detached, the same boundary as pagerank
     (plans/graph.py).
     """
-    words0 = bpe_words(spark, sf_dir).persist()
-    words0.count()
-    cached: list[DataFrame] = []
-    try:
-        return bpe_train_plan(words0, cached).localCheckpoint(eager=True)
-    finally:
-        for frame in cached:
-            frame.unpersist(False)
-        words0.unpersist(False)
+    with ExitStack() as stack:
+        words0 = stack.enter_context(cached(bpe_words(spark, sf_dir)))
+        words0.count()
+        return detach(bpe_train_plan(words0, stack))
 
 
 def bpe_train_plan(
-    words0: DataFrame, _cached: list[DataFrame] | None = None
+    words0: DataFrame, stack: ExitStack | None = None
 ) -> DataFrame:
     """LAZY unrolled BPE merge-round plan — the inspectable contract
-    (the catalog boundary adds the eager cache-releasing checkpoint,
-    the same split as range_join_plan / pagerank_plan).
+    (the catalog boundary detaches it, the same split as
+    range_join_plan / pagerank_plan).
 
     Each round's 1-row winner carries a LAZY ``persist`` mark: the
     winner is referenced twice (its merge-table row + the word-table
@@ -1020,9 +1011,9 @@ def bpe_train_plan(
     corpus_filter_funnel fix, compounded per round (review r08). The
     mark keeps the plan fully inspectable and costs nothing until
     execution, where it collapses the work to exactly BPE_ROUNDS
-    aggregations. Callers that EXECUTE the plan pass ``_cached`` and
-    release the marks afterwards (``bpe_train_merges`` does, inside
-    the same try/finally as the word table).
+    aggregations. Callers that EXECUTE the plan pass the ``stack``
+    that releases the marks (``bpe_train_merges`` does, the same stack
+    that holds the word table).
     """
     words = words0
     merge_rows = []
@@ -1034,13 +1025,12 @@ def bpe_train_plan(
         )
         # persist marks ONLY when the caller will release them —
         # otherwise a direct executor of this plan (tests, ad-hoc use)
-        # would leak BPE_ROUNDS cache entries per call (review r08);
-        # the unreleased path pays the exponential re-evaluation,
-        # which is fine at inspection/test scale and never happens at
-        # corpus scale (bpe_train_merges always threads _cached)
-        if _cached is not None:
-            winner = winner.persist()
-            _cached.append(winner)
+        # would leak BPE_ROUNDS cache entries per call; the unreleased
+        # path pays the exponential re-evaluation, which is fine at
+        # inspection/test scale and never happens at corpus scale
+        # (bpe_train_merges always passes its stack)
+        if stack is not None:
+            winner = stack.enter_context(cached(winner))
         merge_rows.append(
             winner.select(
                 F.lit(r).cast("int").alias("merge_round"),

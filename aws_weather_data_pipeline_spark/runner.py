@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.summary import daily_weather_summary
 from .functions.weather import apply_transformations
+from .session import cached
 from .sinks.writers import (
     idempotent_append,
     overwrite_partitioned,
@@ -90,8 +91,8 @@ def load(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
     processed = apply_transformations(clean).withColumn(
         "reading_date", F.to_date("timestamp_parsed")
     )
-    processed.persist()
-    try:
+    # three sinks read this one frame: scan and transform once
+    with cached(processed):
         # Dynamic partition overwrite, not append: a re-run (retry)
         # rewrites the same hour partitions instead of duplicating them
         # — every sink in this load is idempotent.
@@ -107,8 +108,6 @@ def load(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
         upsert_summary_by_partition(
             summary, paths.summary_dir, "summary_date"
         )
-    finally:
-        processed.unpersist()
     return processed
 
 
@@ -132,12 +131,8 @@ def validate(
     res = ValidationResult()
     # Six independent actions follow (counts, aggs, groupBys) — each
     # is its own job over the serving table, so without a persist the
-    # validation pass rescans the parquet six times (review r06).
-    serving = spark.read.parquet(paths.serving_dir).persist()
-    # try/finally (review r11): an AnalysisException mid-validate —
-    # e.g. a missing column after a schema change — must not leak
-    # the cached table into a long-lived session
-    try:
+    # validation pass rescans the parquet six times.
+    with cached(spark.read.parquet(paths.serving_dir)) as serving:
         total = serving.count()
         res.stats["total_rows"] = total
         res.checks["has_rows"] = total > 0
@@ -211,8 +206,6 @@ def validate(
             and -CLOCK_SKEW_TOLERANCE_SECONDS <= age < MAX_STALENESS_SECONDS
         )
         return res
-    finally:
-        serving.unpersist(False)
 
 
 def report(spark: SparkSession, paths: PipelinePaths) -> str:

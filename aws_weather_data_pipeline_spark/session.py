@@ -16,8 +16,10 @@ One place to encode the scale-aware defaults:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEF_SHUFFLE = max(4, os.cpu_count() or 4)
 
@@ -76,3 +78,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the body of a ``with`` block and unpersist it
+    on every exit, normal or exceptional.
+
+    The cache fills lazily, on the first action over it. A body that
+    needs it filled before several branches read it calls ``count()``
+    itself, so every Spark job stays visible at the call site.
+    """
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def detach(df: DataFrame) -> DataFrame:
+    """Evaluate ``df`` now and cut its lineage (``localCheckpoint``), so
+    the caches it was computed from can be released before it is
+    read."""
+    return df.localCheckpoint(eager=True)

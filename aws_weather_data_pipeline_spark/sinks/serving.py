@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached
+
 #: The serving-table fixed-point declarations, straight from
 #: sql/create_tables.sql:15-66 (weather_readings + daily_weather_summary
 #: share column names and precisions).
@@ -143,29 +145,23 @@ def jdbc_append_missing(
             raise
         existing = None
     if existing is None:
-        to_insert = deduped.persist()
-        try:
+        with cached(deduped) as to_insert:
             n = to_insert.count()
             if n:
                 write_jdbc(
                     to_insert, url, table, mode="append",
                     properties=props,
                 )
-        finally:
-            to_insert.unpersist(False)
         return n
     # persist: count-then-write would otherwise run the anti-join —
     # including the DATABASE read — twice, and rows inserted by a
     # concurrent writer between the two executions would make the
-    # returned n disagree with what was actually appended (review
-    # r06 TOCTOU).
-    to_insert = deduped.join(existing, on=keys, how="left_anti").persist()
-    try:
+    # returned n disagree with what was actually appended.
+    anti = deduped.join(existing, on=keys, how="left_anti")
+    with cached(anti) as to_insert:
         n = to_insert.count()
         if n:
             write_jdbc(
                 to_insert, url, table, mode="append", properties=props
             )
-    finally:
-        to_insert.unpersist(False)
     return n

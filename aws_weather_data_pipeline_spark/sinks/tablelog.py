@@ -60,8 +60,11 @@ import re
 import time
 import uuid
 import warnings
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import cached
 
 
 class CommitConflict(Exception):
@@ -1705,12 +1708,12 @@ def delete_where(
             # would silently drop it without ever recording a delete
             # — review r09)
             is_match = F.coalesce(F.expr(condition), F.lit(False))
-            if write_changefeed:
-                # both outputs read this one scan: persist so the
-                # candidates are read once, not twice (the same
-                # double-scan guard merge_changes has)
-                scanned = scanned.persist()
-            try:
+            with ExitStack() as stack:
+                if write_changefeed:
+                    # both outputs read this one scan: persist so the
+                    # candidates are read once, not twice (the same
+                    # double-scan guard merge_changes has)
+                    scanned = stack.enter_context(cached(scanned))
                 new_files, new_stats = _write_data_files(
                     scanned.filter(~is_match), table
                 )
@@ -1732,9 +1735,6 @@ def delete_where(
                         for name in written
                     )
                     cdc_files = written if n_deleted else []
-            finally:
-                if write_changefeed:
-                    scanned.unpersist(False)
         prev_stats = manifest_prev.get("stats", {})
         manifest = {
             "version": head + 1,
@@ -1834,9 +1834,8 @@ def merge_changes(
     # persist: the op-validation probe, the window dedup, and the
     # per-retry join otherwise each re-evaluate the batch lineage
     # from scratch — for the sync path that is a re-read of every
-    # cdc/added file in the range per evaluation (review r11)
-    changes = changes.persist()
-    try:
+    # cdc/added file in the range per evaluation
+    with cached(changes) as changes:
         if op_col in changes.columns:
             # eager, bounded: one limit(1) probe over the batch — a merge
             # applying misclassified ops (NULL, 'd', 'delete') must fail
@@ -1928,7 +1927,7 @@ def merge_changes(
                 eq = F.col(f"b.{k}") == F.col(f"c.{k}")
                 cond = eq if cond is None else cond & eq
             changed = F.col(f"c.{op_col}").isNotNull()
-            # persist + count in EVERY branch (r14 review): the count
+            # persist + count in EVERY branch: the count
             # MATERIALIZES the join at its full shuffle parallelism
             # BEFORE the coalesced writes below — coalesce is a narrow
             # dependency, so without this the whole reduce stage
@@ -1937,14 +1936,13 @@ def merge_changes(
             # 50 MB table through ONE task. The count also gives the
             # exact output row bound the file sizing needs, and with
             # the changefeed it additionally keeps the scan-once
-            # contract (review r08) — both outputs read the cache.
+            # contract — both outputs read the cache.
             # Reusing a prior attempt's n_out across a CommitConflict
             # retry was considered and DECLINED — full rationale in
             # bench.py BENCH_NOTES["merge_retry_materialize_r15"]
             # (the count is the materialization barrier, and a retry
             # joins the NEW head's base, so nothing is reusable).
-            joined = b.join(c, cond, "full").persist()
-            try:
+            with cached(b.join(c, cond, "full")) as joined:
                 joined_rows = joined.count()
                 # size both rewrite outputs by estimated bytes, never
                 # core count (see _merge_output_partitions)
@@ -2012,16 +2010,12 @@ def merge_changes(
                         for name in cdc_files
                     )
                     manifest["cdc_files"] = cdc_files if n_changed else []
-            finally:
-                joined.unpersist(False)
             try:
                 _publish(table, head + 1, manifest)
                 return head + 1
             except CommitConflict:
                 continue  # head moved: recompute the merge against it
         raise CommitConflict(f"merge on {table} kept losing the race")
-    finally:
-        changes.unpersist(False)
 
 
 def read_changes(

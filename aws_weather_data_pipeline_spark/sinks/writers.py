@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import cached
+
 
 #: DataFrameWriter option for per-WRITE dynamic partition overwrite.
 #: Per-write, not the session conf (review r11): the old save/set/
@@ -101,16 +103,6 @@ def overwrite_partitioned(
     with_time_partitions(df, ts_col).write.mode("overwrite").option(
         *DYNAMIC_OVERWRITE
     ).partitionBy("year", "month", "day", "hour").parquet(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    """S9: raw-zone JSON batch sink."""
-    df.write.mode("overwrite").json(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """S10: CSV sink with header, like the reference's to_csv."""
-    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_orc(df: DataFrame, path: str) -> None:
@@ -219,15 +211,11 @@ def idempotent_append(
     else:
         to_insert = deduped
     # persist: count-then-write would otherwise execute the dedup +
-    # anti-join (and the existing-table scan) twice per load (review
-    # r06)
-    to_insert = to_insert.persist()
-    try:
+    # anti-join (and the existing-table scan) twice per load
+    with cached(to_insert) as to_insert:
         n = to_insert.count()
         if n:
             to_insert.write.mode("append").parquet(path)
-    finally:
-        to_insert.unpersist(False)
     return n
 
 

@@ -38,6 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.weather import apply_transformations
 from ..schemas import ALERT_COLUMNS
+from ..session import cached
 from ..sinks.writers import DYNAMIC_OVERWRITE, with_time_partitions
 from ..sources.readers import (
     flatten_readings,
@@ -129,12 +130,11 @@ def write_both_sinks(
     # single-run callers.
     epoch_val = f"{run_ns}-{epoch_id}" if run_ns else str(epoch_id)
     batch_df = batch_df.withColumn("epoch_id", F.lit(epoch_val))
-    batch_df.persist()
-    try:
-        # per-WRITE dynamic overwrite (review r11): the old
-        # session-conf toggle was shared mutable state — a concurrent
-        # writer could run its overwrite in static mode and drop
-        # every partition of its sink
+    # two sinks read the batch: compute it once
+    with cached(batch_df):
+        # per-WRITE dynamic overwrite: a session-conf toggle would be
+        # shared mutable state — a concurrent writer could run its
+        # overwrite in static mode and drop every partition of its sink
         with_time_partitions(batch_df, "timestamp_parsed").write.mode(
             "overwrite"
         ).option(*DYNAMIC_OVERWRITE).partitionBy(
@@ -152,8 +152,6 @@ def write_both_sinks(
         ).option(*DYNAMIC_OVERWRITE).partitionBy("epoch_id").parquet(
             alerts_path
         )
-    finally:
-        batch_df.unpersist()
 
 
 def start_pipeline(

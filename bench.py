@@ -406,7 +406,7 @@ BENCH_NOTES = {
         "itself probes BELOW its r09 number via doc_simhash. "
         "Callers composing the pairs into cascades that "
         "re-materialize anyway already skip the whole charge with "
-        "materialize=False (option a, in the signature since r06). "
+        "the lazy near_dup_pairs_simhash_plan (option a). "
         "Off the watch list; future movers judge against the "
         "1.2-1.3s isolated anchor, not r09's 0.81s."
     ),

@@ -290,9 +290,9 @@ def test_bpe_encode_empty_token_matches_oracle_shape(spark):
 
 
 def test_bpe_train_plan_direct_execution_leaks_no_cache(spark):
-    """Without the _cached out-param the plan must carry NO persist
-    marks — a direct executor (tests, ad-hoc use) would leak them for
-    the session's lifetime (review r08). Compared as ID SETS, not
+    """Without a ``stack`` the plan must carry NO persist marks — a
+    direct executor (tests, ad-hoc use) would leak them for the
+    session's lifetime. Compared as ID SETS, not
     counts: a sibling test's unpersist(blocking=False) completing
     mid-test shrinks the global count and flaked the count form
     under the full suite — only NEW ids mean a leak."""

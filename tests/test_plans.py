@@ -13,6 +13,8 @@ from __future__ import annotations
 import io
 import contextlib
 
+from aws_weather_data_pipeline_spark.session import cached
+
 from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
 
 CATALOG = build_catalog()
@@ -146,31 +148,40 @@ def test_near_dup_queries_have_no_cartesian_product(spark, sf_dir):
     # (band bucket / prefix hash / cell id) — a CartesianProduct or
     # BroadcastNestedLoopJoin anywhere means the all-pairs quadratic
     # trap snuck back in.
-    # The registered builders eagerly materialize (localCheckpoint),
-    # which truncates the inspectable plan to a checkpoint scan —
-    # materialize=False returns the identical LAZY plan for shape
-    # checks. near_dup_clusters is excluded: its builder executes the
-    # propagation loop (actions); its join shapes are those of
-    # near_dup_pairs_minhash below, and correctness is covered by the
-    # oracle test.
-    from aws_weather_data_pipeline_spark.plans import similarity as sim
+    # The registered builders detach their result, which truncates the
+    # inspectable plan to a checkpoint scan — the *_plan functions
+    # return the LAZY plan for shape checks. near_dup_clusters is
+    # excluded: its builder executes the propagation loop (actions);
+    # its join shapes are those of near_dup_pairs_minhash below, and
+    # correctness is covered by the oracle test.
+    from pyspark.sql import functions as F
 
-    lazy_builders = {
-        "near_dup_pairs_minhash": sim.near_dup_pairs_minhash,
-        "near_dup_pairs_simhash": sim.near_dup_pairs_simhash,
-        "near_dup_pairs_ngram": sim.near_dup_pairs_ngram,
-        "near_dup_pairs_editdist": sim.near_dup_pairs_editdist,
-        # the r15 hot-bucket cap must keep the equi-join shape — the
+    from aws_weather_data_pipeline_spark.plans import similarity as sim
+    from aws_weather_data_pipeline_spark.plans.text import simhash_frame
+
+    d = sim._with_shingles(sim._docs(spark, sf_dir))
+    sigs = d.select("doc_id", "shingles", *sim.minhash_signature_cols())
+    lazy_plans = {
+        "near_dup_pairs_minhash": sim.near_dup_pairs_minhash_plan(sigs),
+        "near_dup_pairs_simhash": sim.near_dup_pairs_simhash_plan(
+            simhash_frame(spark, sf_dir)
+        ),
+        "near_dup_pairs_ngram": sim.near_dup_pairs_ngram_plan(
+            d.select("doc_id", F.array_sort("sh_hashes").alias("sh"))
+        ),
+        "near_dup_pairs_editdist": sim.near_dup_pairs_editdist_plan(
+            d.select("doc_id", *sim.minhash_signature_cols()),
+            sim._docs(spark, sf_dir),
+        ),
+        # the hot-bucket cap must keep the equi-join shape — the
         # window count filters band-bucket rows, it must never
         # degrade the self-join into a nested-loop
-        "near_dup_pairs_minhash[cap=50]": (
-            lambda spark, sf_dir, materialize: sim.near_dup_pairs_minhash(
-                spark, sf_dir, materialize=materialize, max_bucket=50
-            )
+        "near_dup_pairs_minhash[cap=50]": sim.near_dup_pairs_minhash_plan(
+            sigs, max_bucket=50
         ),
     }
-    for name, fn in lazy_builders.items():
-        plan = _formatted(fn(spark, sf_dir, materialize=False))
+    for name, df in lazy_plans.items():
+        plan = _formatted(df)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
     plan = _formatted(
@@ -216,12 +227,9 @@ def test_lsh_banding_candidate_rate_and_recall(spark):
     from tests.conftest import SF_SMOKE
 
     d = sim._with_shingles(sim._docs(spark, SF_SMOKE))
-    sigs = d.select("doc_id", *sim.minhash_signature_cols()).persist()
-    try:
+    with cached(d.select("doc_id", *sim.minhash_signature_cols())) as sigs:
         n_docs = sigs.count()
         n_cand = sim._minhash_candidates(sigs).count()
-    finally:
-        sigs.unpersist(False)
     all_pairs = n_docs * (n_docs - 1) / 2
     assert n_cand <= 0.05 * all_pairs, (
         f"band join admits {n_cand}/{all_pairs:.0f} pairs "
@@ -254,10 +262,8 @@ def test_ngram_length_positional_filters_prune_without_recall_loss(spark):
     from tests.conftest import SF_SMOKE
 
     d = sim._with_shingles(sim._docs(spark, SF_SMOKE))
-    srt = d.select(
-        "doc_id", F.array_sort("sh_hashes").alias("sh")
-    ).persist()
-    try:
+    srt = d.select("doc_id", F.array_sort("sh_hashes").alias("sh"))
+    with cached(srt) as srt:
         plain = sim._ngram_candidates(srt, filters=False).count()
         filtered_df = sim._ngram_candidates(srt, filters=True)
         filtered = filtered_df.count()
@@ -265,8 +271,6 @@ def test_ngram_length_positional_filters_prune_without_recall_loss(spark):
             f"filters pruned nothing: {filtered} vs {plain} candidates"
         )
         cand = {(r.doc_a, r.doc_b) for r in filtered_df.collect()}
-    finally:
-        srt.unpersist(False)
     true_pairs = {
         (r.doc_a, r.doc_b)
         for r in sim.near_dup_pairs_ngram(spark, SF_SMOKE).collect()
@@ -455,12 +459,10 @@ def test_pagerank_iterations_reuse_persisted_edges(spark, sf_dir):
     # (InMemoryTableScan), never rebuild the symmetrize+distinct+degree
     # subtree — at 100 TB a rebuild per iteration re-reads the fact
     # tables PR_ITERS times. Pinned on the lazy pagerank_plan (the
-    # catalog builder adds the eager cache-releasing checkpoint on top,
-    # which would hide the plan — VERDICT r07 #2).
+    # catalog builder detaches the result, which would hide the plan).
     from aws_weather_data_pipeline_spark.plans import graph as g
 
-    edges_deg = g.pagerank_edges_deg(spark, sf_dir).persist()
-    try:
+    with cached(g.pagerank_edges_deg(spark, sf_dir)) as edges_deg:
         edges_deg.count()
         plan = _formatted(g.pagerank_plan(edges_deg, n=100))
         # PR_ITERS iteration joins + the initial rank frame all read
@@ -469,8 +471,6 @@ def test_pagerank_iterations_reuse_persisted_edges(spark, sf_dir):
         assert n_cache_scans >= g.PR_ITERS + 1, plan
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
-    finally:
-        edges_deg.unpersist(False)
 
 
 def test_ivf_pq_carries_cell_without_rejoin(spark, sf_dir):
@@ -954,9 +954,9 @@ def test_pq_codebook_source_agnostic_kmeans_training(spark, sf_dir):
         _pq_subvectors,
     )
 
-    sub = _pq_subvectors(_emb(spark, sf_dir)).persist()
-    try:
-        codes0 = _pq_codes(sub, _pq_codebook(sub)).persist()
+    with cached(_pq_subvectors(_emb(spark, sf_dir))) as sub, cached(
+        _pq_codes(sub, _pq_codebook(sub))
+    ) as codes0:
         t0 = codes0.agg(F.sum("sq_dist")).first()[0]
 
         ex = (
@@ -998,9 +998,6 @@ def test_pq_codebook_source_agnostic_kmeans_training(spark, sf_dir):
         assert again == {
             (r["vec_id"], r["subspace"], r["code"]) for r in rows
         }
-        codes0.unpersist(False)
-    finally:
-        sub.unpersist(False)
 
 
 def test_pagerank_conserves_integer_mass(spark, sf_dir):
@@ -1352,12 +1349,10 @@ def test_minhash_hot_bucket_cap_bounds_candidates_keeps_true_pairs(
     d = sim._with_shingles(
         spark.createDataFrame(docs, "doc_id long, text string")
     )
-    sigs = d.select(
-        "doc_id", "shingles", *sim.minhash_signature_cols()
-    ).persist()
+    sigs = d.select("doc_id", "shingles", *sim.minhash_signature_cols())
     import logging
 
-    try:
+    with cached(sigs) as sigs:
         sigs.count()
         uncapped = sim._minhash_candidates(sigs).count()
         with caplog.at_level(
@@ -1368,17 +1363,6 @@ def test_minhash_hot_bucket_cap_bounds_candidates_keeps_true_pairs(
                 for r in sim._minhash_candidates(sigs, max_bucket=20)
                 .collect()
             }
-        # audit=False (the lazy-plan path) skips ONLY the logging
-        # action — the cap filter itself must still apply
-        capped_noaudit = {
-            (r.doc_a, r.doc_b)
-            for r in sim._minhash_candidates(
-                sigs, max_bucket=20, audit=False
-            ).collect()
-        }
-    finally:
-        sigs.unpersist(False)
-    assert capped_noaudit == capped
     assert uncapped >= 120 * 119 / 2  # the boilerplate blowup
     assert len(capped) < 20  # bounded: hot buckets excluded
     assert (200, 201) in capped and (300, 301) in capped
@@ -1408,14 +1392,12 @@ def test_minhash_hot_bucket_cap_bounds_candidates_keeps_true_pairs(
 
 
 def test_minhash_capped_bands_persist_single_window(spark, tmp_path):
-    """r16 not-yet-optimized #2 (VERDICT r16 task 7): in capped
-    materialized mode the window count that applies the hot-bucket
-    cap must run ONCE, not once per self-join side — the caller
-    passes ``caches`` and the capped bands frame persists. Pins
-    (a) result parity with the no-caches path, (b) exactly one
-    Window node in the candidates plan (the second side reads the
-    cache), (c) the persisted frame is handed back for cleanup."""
-    from pyspark.sql import functions as F
+    """In capped executing mode the window count that applies the
+    hot-bucket cap must run ONCE, not once per self-join side — the
+    caller passes a ``stack`` and the capped bands frame is cached on
+    it. Pins (a) result parity with the lazy path, (b) both self-join
+    sides read the cache, (c) the stack releases the bands cache."""
+    from contextlib import ExitStack
 
     from aws_weather_data_pipeline_spark.plans import similarity as sim
 
@@ -1427,40 +1409,31 @@ def test_minhash_capped_bands_persist_single_window(spark, tmp_path):
     d = sim._with_shingles(
         spark.createDataFrame(docs, "doc_id long, text string")
     )
-    sigs = d.select(
-        "doc_id", "shingles", *sim.minhash_signature_cols()
-    ).persist()
-    caches: list = []
-    try:
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    sigs = d.select("doc_id", "shingles", *sim.minhash_signature_cols())
+    with cached(sigs) as sigs:
         sigs.count()
         plain = {
             (r.doc_a, r.doc_b)
-            for r in sim._minhash_candidates(
-                sigs, max_bucket=20, audit=False
-            ).collect()
+            for r in sim._minhash_candidates(sigs, max_bucket=20).collect()
         }
-        cand = sim._minhash_candidates(
-            sigs, max_bucket=20, audit=False, caches=caches
-        )
-        cached = {(r.doc_a, r.doc_b) for r in cand.collect()}
-        assert cached == plain
-        assert (200, 201) in cached
-        # one persisted capped-bands frame handed back for cleanup
-        assert len(caches) == 1 and caches[0].is_cached
-        plan = cand._sc._jvm.PythonSQLUtils.explainString(
-            cand._jdf.queryExecution(), "formatted"
-        )
-        # BOTH self-join sides read the cache — the windowed cap
-        # subplan executes once, at the eager cache fill. (formatted
-        # explain re-prints the cached relation's definition inline
-        # per reference, so counting Window nodes in the TEXT cannot
-        # distinguish the shapes; the InMemoryTableScan pair can.)
-        assert plan.count("InMemoryTableScan") >= 2, plan
-    finally:
-        for c in caches:
-            c.unpersist(False)
-        sigs.unpersist(False)
-    assert not caches or not caches[0].is_cached
+        with ExitStack() as stack:
+            cand = sim._minhash_candidates(sigs, max_bucket=20, stack=stack)
+            got = {(r.doc_a, r.doc_b) for r in cand.collect()}
+            assert got == plain
+            assert (200, 201) in got
+            # sigs plus the one capped-bands frame
+            assert cache_manager.cachedData().size() == 2
+            plan = _formatted(cand)
+            # BOTH self-join sides read the cache — the windowed cap
+            # subplan executes once, at the eager cache fill. (formatted
+            # explain re-prints the cached relation's definition inline
+            # per reference, so counting Window nodes in the TEXT cannot
+            # distinguish the shapes; the InMemoryTableScan pair can.)
+            assert plan.count("InMemoryTableScan") >= 2, plan
+        assert cache_manager.cachedData().size() == 1  # sigs only
+    assert cache_manager.isEmpty()
 
 
 def test_semantic_dedup_k_scales_cells_and_keeps_exact_dups(

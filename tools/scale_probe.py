@@ -44,6 +44,7 @@ import os
 import sys
 import time
 import urllib.request
+from contextlib import nullcontext
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -455,63 +456,56 @@ def graph_probe(runs: int = 3, scales: tuple = (3, 10)) -> int:
         connected_components,
     )
     from aws_weather_data_pipeline_spark.plans import graph as gp
+    from aws_weather_data_pipeline_spark.session import cached
 
     spark, app_id = _ui_session("scale-probe-graph")
 
-    base = gp.pagerank_edges_deg(spark, SF01).persist()
-    hi = base.select(
-        F.greatest(F.max("src"), F.max("dst")).alias("m")
-    ).collect()[0]["m"]
-    shift = int(hi) + 1
+    with cached(gp.pagerank_edges_deg(spark, SF01)) as base:
+        hi = base.select(
+            F.greatest(F.max("src"), F.max("dst")).alias("m")
+        ).collect()[0]["m"]
+        shift = int(hi) + 1
 
-    def copies(k: int):
-        out = None
-        for i in range(k):
-            c = base.select(
-                (F.col("src") + i * shift).alias("src"),
-                (F.col("dst") + i * shift).alias("dst"),
-                "outdeg",
-            )
-            out = c if out is None else out.unionAll(c)
-        return out
+        def copies(k: int):
+            out = None
+            for i in range(k):
+                c = base.select(
+                    (F.col("src") + i * shift).alias("src"),
+                    (F.col("dst") + i * shift).alias("dst"),
+                    "outdeg",
+                )
+                out = c if out is None else out.unionAll(c)
+            return out
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
+        def noop(df):
+            df.write.format("noop").mode("overwrite").save()
 
-    report: dict = {}
-    seen: set = set()
-    _, seen = _stage_metrics(app_id, seen)  # absorb edge-build stages
-    for k in (1,) + tuple(scales):
-        # at k=1 the copy would be an identity projection of the
-        # already-persisted base — reuse it instead of caching the
-        # same frame twice (review r15)
-        edges = base if k == 1 else copies(k).persist()
-        n = edges.select("src").distinct().count()
-        entry: dict = {"nodes": n}
-        entry["pagerank"], seen = _measure(
-            app_id, seen, runs,
-            lambda: noop(gp.pagerank_plan(edges, n)),
-        )
+        report: dict = {}
+        seen: set = set()
+        _, seen = _stage_metrics(app_id, seen)  # absorb edge-build stages
+        for k in (1,) + tuple(scales):
+            # at k=1 the copy would be an identity projection of the
+            # already-cached base — reuse it instead of caching the
+            # same frame twice
+            with nullcontext(base) if k == 1 else cached(copies(k)) as edges:
+                n = edges.select("src").distinct().count()
+                entry: dict = {"nodes": n}
+                entry["pagerank"], seen = _measure(
+                    app_id, seen, runs,
+                    lambda: noop(gp.pagerank_plan(edges, n)),
+                )
 
-        cc_out: list = []
+                def cc_once():
+                    stats: dict = {}
+                    noop(connected_components(edges, stats=stats))
+                    return {"rounds": stats["rounds"]}
 
-        def cc_once():
-            stats: dict = {}
-            cc = connected_components(edges, stats=stats)
-            noop(cc)
-            cc_out.append(cc)
-            return {"rounds": stats["rounds"]}
-
-        entry["connected_components"], seen = _measure(
-            app_id, seen, runs, cc_once,
-            post=lambda: cc_out.pop().unpersist(False),
-        )
-        if k != 1:
-            edges.unpersist(False)
-        label = "sf0.1" if k == 1 else f"x{k}"
-        report[label] = entry
-        print(f"graph @ {label}: {entry}", flush=True)
-    base.unpersist(False)
+                entry["connected_components"], seen = _measure(
+                    app_id, seen, runs, cc_once
+                )
+            label = "sf0.1" if k == 1 else f"x{k}"
+            report[label] = entry
+            print(f"graph @ {label}: {entry}", flush=True)
     keys = _SLOPE_KEYS[:2]  # wall + shuffle; input is table-invariant
     report["slopes"] = {
         label: {
