@@ -42,117 +42,63 @@ OPERATOR_MODULES = (
 # tests/test_catalog_oracle.py regardless of window position.
 # ROUND-START CHECKLIST: run `python tools/rotate_window.py`, paste
 # the emitted tuple here (adjusting only the free-slot choices), and
-# re-run `pytest tests/test_rotation_policy.py` — r07 skipped this
-# step and burned the round's 50 driver slots re-checking green rows.
+# re-run `pytest tests/test_rotation_policy.py`.
 #
-# Round 17's window (rotated per the checklist — the interrupted
-# first r17 session skipped this step, which would have burned the
-# round's 50 driver slots re-checking the r16 sample, the exact r07
-# mistake this comment warns about): base = the aged block whose
-# latest driver row is r14 (age 3 at r17), as emitted by
-# tools/rotate_window.py, with 13 free-slot swaps toward policy (b)'s
-# intent — every query whose EXECUTION PLAN changed in the r17
-# optimization work gets same-round post-change driver evidence
-# (VERDICT r16 "What's wrong #1" asked exactly this; semantics are
-# unchanged and driver_sim-verified 150/150, but self-reported runs
-# are weaker than driver rows). Swapped IN: the 8 streaming drains
-# (state-partition resize, r15-checked pre-change),
-# exact_substr_removal (scan fusion, r15), leakage_safe_split_
-# assignment + split_leakage_audit (split_expr helper, r15), and
-# corpus_build_manifest + dataset_split_assignment (helper refactor
-# landed AFTER their r16 driver rows). Swapped OUT (unchanged since
-# r14, single-pass relational/temporal, age 3 = still inside the
-# cadence; they form r18's mandatory block): cube_type_user_bucket,
-# customers_with_high_value_orders, daily_value_rollup,
-# date_range_revenue, event_gaps_lag, event_rank_functions,
-# events_table_profile, except_users_without_big_events,
-# gap_based_sessions, grouping_sets_pricing,
-# intersect_error_purchase_users, interval_range_join_counts,
-# user_running_totals. Net ages stay <= 3 for every query
-# (tests/test_rotation_policy.py green), and the cadence stays
-# feasible at zero slack: r18 = those 13 + 37 of the 39 remaining
-# r15-checked rows; r19 = the last 2 + the 48 remaining r16-checked
-# rows. Both are exactly 50.
-#
-# Round 16's window (history): the r13-aged block, no swaps
-# (rotated in 31466ba; sampled by the driver in CORRECTNESS_r16).
-#
-# Capacity ledger: the sustainability test caps the catalog at
-# 50 * MAX_AGE_ROUNDS = 150 queries. Every round since r09 ends AT
-# the cap (r12: 50 r10-latest + 50 r11-latest + the 50 in this
-# window). At N=150 every round's window is exactly its mandatory
-# aged block — ZERO slack — so the standing protocol for any new
-# query or schema/semantics change is: retire (or subsume) one query
-# in the SAME commit, swapping its window slot to the new/changed
-# query; never grow past 150 and never let a changed query ride on
-# stale driver evidence. Swap history: r10 retired
-# top10_orders_by_price → incremental_agg_maintenance and
-# filter_isin_projection → tablelog_manifest_stats (subsumption
-# arguments in those modules); r11 retired multimodal_frame_sample →
-# multimodal_decode_avi and union_distinct_active_users →
-# tablelog_nullcount_prune (subsumption arguments in those modules);
-# r12 retired multimodal_decode_wav → multimodal_decode_flac (above)
-# and tablelog_time_travel_prune → tablelog_checkpoint_fold (strict
-# subsumption IN PLACE — the retiree was already mandatory in this
-# window, so the fold query inherits its slot: same time-travel +
-# zone-map-prune recipe exercised through a vacuumed, checkpoint-
-# folded log plus a fold-answered txn replay; note in
-# plans/tablelog_queries.py); r13 retired incremental_agg_maintenance
-# → changefeed_keyed_sync and tablelog_manifest_stats →
-# tablelog_restore_audit (both strict subsumptions IN PLACE, the r12
-# fold-swap pattern — header note above; subsumption notes in
-# plans/tablelog_queries.py).
+# Capacity: the rotation test caps the catalog at 50 * MAX_AGE_ROUNDS
+# = 150 queries. The catalog never grows past the cap: a new query
+# retires (or subsumes) one query in the same commit and takes its
+# window slot.
 DRIVER_WINDOW = (
-    "ann_hyperplane_lsh_topk",  # r14
-    "bloom_dedup_probe",  # r14
-    "cdc_merge_apply",  # r14
-    "cms_user_activity_sketch",  # r14
-    "corpus_build_manifest",  # r16, helper refactor landed post-check
-    "corpus_mixture_sample",  # r14
-    "dataset_split_assignment",  # r16, helper refactor post-check
-    "dedup_incremental_batch",  # r14
-    "dedup_incremental_near",  # r14
-    "doc_bigram_lm_score",  # r14
-    "doc_chunk_tokens",  # r14
-    "doc_duplicated_spans",  # r14
-    "doc_fingerprints",  # r14
-    "doc_importance_weights",  # r14
-    "doc_quality_scores",  # r14, also r17-changed (shared gate cols)
-    "doc_repetition_metrics",  # r14
-    "doc_simhash",  # r14
-    "doc_stopword_filtered",  # r14
-    "doc_token_stats",  # r14
-    "exact_substr_removal",  # r15, r17 scan fusion
-    "kmeans_lloyd_assignments",  # r14
-    "label_centroids",  # r14
-    "leakage_safe_split_assignment",  # r15, r17 split_expr helper
-    "minhash_signatures",  # r14
-    "multimodal_decode_avi",  # r14
-    "multimodal_decode_jpeg",  # r14
-    "multimodal_decode_ppm",  # r14
-    "multimodal_distinct_bytes",  # r14
-    "multimodal_payload_stats",  # r14
-    "near_dup_pairs_editdist",  # r14
-    "near_dup_pairs_embedding",  # r14
-    "near_dup_pairs_ngram",  # r14
-    "near_dup_pairs_simhash",  # r14
-    "pii_redaction",  # r14
-    "referential_integrity_audit",  # r14
-    "sliding_hourly_activity",  # r14
-    "split_leakage_audit",  # r15, r17 split_expr helper
-    "stratified_sample_per_lang",  # r14
-    "streaming_attributed_purchases",  # r15, r17 state partitions
-    "streaming_attribution_with_timeouts",  # r15, r17 state parts
-    "streaming_batch_equivalence",  # r15, r17 state partitions
-    "streaming_dedup_replay",  # r15, r17 state partitions
-    "streaming_running_user_stats",  # r15, r17 pandas-state parts
-    "streaming_session_windows",  # r15, r17 state partitions
-    "streaming_static_enrichment",  # r15, r17 drain-conf path
-    "streaming_windowed_alert_counts",  # r15, r17 state partitions
-    "tablelog_nullcount_prune",  # r14
-    "term_frequencies",  # r14
-    "top3_events_per_user",  # r14
-    "trailing_hour_user_stats",  # r14
+    "cube_type_user_bucket",  # r14
+    "customers_with_high_value_orders",  # r14
+    "daily_value_rollup",  # r14
+    "date_range_revenue",  # r14
+    "event_gaps_lag",  # r14
+    "event_rank_functions",  # r14
+    "events_table_profile",  # r14
+    "except_users_without_big_events",  # r14
+    "gap_based_sessions",  # r14
+    "grouping_sets_pricing",  # r14
+    "intersect_error_purchase_users",  # r14
+    "interval_range_join_counts",  # r14
+    "user_running_totals",  # r14
+    "ann_multiprobe_lsh_topk",  # r15
+    "bpe_train_merges",  # r15
+    "corpus_filter_funnel",  # r15
+    "corpus_relative_quality_filter",  # r15
+    "dedup_attrition_by_source",  # r15
+    "doc_simpson_diversity",  # r15
+    "doc_winnowing_fingerprints",  # r15
+    "fixed_size_doc_sample",  # r15
+    "hard_negative_mining",  # r15
+    "ivf_pq_search_topk",  # r15
+    "length_weighted_doc_sample",  # r15
+    "lineitem_unpivot_measures",  # r15
+    "mg_heavy_hitter_pairs",  # r15
+    "multimodal_audio_windows",  # r15
+    "multimodal_decode_flac",  # r15
+    "multimodal_decode_png",  # r15
+    "multimodal_image_tiles",  # r15
+    "multimodal_resize_stats",  # r15
+    "near_dup_pairs_winnow",  # r15
+    "pq_adc_topk",  # r15
+    "pq_code_assignment",  # r15
+    "price_percentiles_by_flag",  # r15
+    "quantile_sketch_estimates",  # r15
+    "salted_hot_key_join",  # r15
+    "salted_user_event_lists",  # r15
+    "semantic_dedup_keep_list",  # r15
+    "small_quantity_order_revenue",  # r15
+    "tablelog_checkpoint_fold",  # r15
+    "temperature_mixture_sample",  # r15
+    "value_histogram",  # r15
+    "value_outliers_exact",  # r15
+    "weather_alert_feed",  # r15
+    "weather_comfort_heat_index",  # r15
+    "weather_conversions",  # r15
+    "weather_daily_summary",  # r15
+    "weather_quality_flags",  # r15
+    "weather_severity_class",  # r15
 )
 
 

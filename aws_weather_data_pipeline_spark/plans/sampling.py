@@ -27,6 +27,8 @@ is pure north-star extension (BASELINE.md's training-data operators).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources.tables import load_spread
@@ -72,7 +74,12 @@ def split_expr(key: str = "doc_id") -> F.Column:
     task 5: the bucket hash + boundary CASE was duplicated verbatim at
     those sites, so a hash or boundary retune had to be made in four
     places). Expression-level — sharing it adds no plan node.
+
+    Raises ``ValueError`` for a ``key`` that is not a plain
+    identifier, since it is pasted into SQL text.
     """
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", key):
+        raise ValueError(f"split_expr key must be a plain identifier: {key!r}")
     bucket = F.expr(
         f"cast(conv(substr(md5(cast({key} as string)), 1, 15), 16, 10)"
         f" as bigint) % 100"

@@ -1937,11 +1937,9 @@ def merge_changes(
             # exact output row bound the file sizing needs, and with
             # the changefeed it additionally keeps the scan-once
             # contract — both outputs read the cache.
-            # Reusing a prior attempt's n_out across a CommitConflict
-            # retry was considered and DECLINED — full rationale in
-            # bench.py BENCH_NOTES["merge_retry_materialize_r15"]
-            # (the count is the materialization barrier, and a retry
-            # joins the NEW head's base, so nothing is reusable).
+            # A CommitConflict retry recounts instead of reusing the
+            # prior attempt's n_out: the count is the materialization
+            # barrier, and a retry joins the new head's base.
             with cached(b.join(c, cond, "full")) as joined:
                 joined_rows = joined.count()
                 # size both rewrite outputs by estimated bytes, never

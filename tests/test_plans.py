@@ -888,6 +888,23 @@ def test_multiprobe_candidates_superset_of_single_probe(spark, sf_dir):
     assert multi, "vacuous: multiprobe returned nothing"
 
 
+def test_split_expr_rejects_non_identifier_keys(spark):
+    """``split_expr`` pastes its key into SQL text, so anything but a
+    plain column identifier is refused before it reaches the parser."""
+    import pytest
+
+    from aws_weather_data_pipeline_spark.plans.sampling import split_expr
+
+    for bad in ("doc_id) OR (1", "doc id", "1doc", "", "doc_id; --"):
+        with pytest.raises(ValueError):
+            split_expr(bad)
+    df = spark.createDataFrame([(1, 2)], "doc_id long, group_key long")
+    row = df.select(
+        split_expr().alias("a"), split_expr("group_key").alias("b")
+    ).collect()[0]
+    assert {row["a"], row["b"]} <= {"train", "val", "test"}
+
+
 def test_group_split_has_zero_leakage_and_respects_boundaries(
     spark, sf_dir
 ):

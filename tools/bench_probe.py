@@ -2,22 +2,22 @@
 
 Usage: python tools/bench_probe.py name [name ...] [--runs N]
 
-Runs ONLY the named catalog queries under the exact bench.py session
-(same confs, same noop sink, same clearCache hygiene) on an otherwise
-idle session, printing every sample. Comparing these isolated numbers
-with the full-catalog BENCH_DETAIL.json figures separates plan
-regressions (isolated time matches the inflated catalog time) from
-ambient host drift (isolated time recovers the old level) — the
-protocol VERDICT r06-r08 asked for on every unannotated >1.5x mover.
+Runs ONLY the named catalog queries under bench.py's own session and
+run step (``bench_session``, ``run_once``) on an otherwise idle
+session, printing every sample. Comparing these isolated numbers with
+the full-catalog BENCH_DETAIL.json figures separates plan regressions
+(isolated time matches the inflated catalog time) from ambient host
+drift (isolated time recovers the old level).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_session, run_once  # noqa: E402
 
 
 def main() -> int:
@@ -39,39 +39,18 @@ def main() -> int:
         return 2
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ["TZ"] = "UTC"
-    time.tzset()
 
     from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
-    from aws_weather_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="bench-probe",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(1 << 20),
-            "spark.driver.memory": "48g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("bench-probe")
     catalog = build_catalog()
 
-    def run_once(builder) -> float:
-        t0 = time.perf_counter()
-        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return elapsed
-
     # Same warmup as bench.py so run 1 doesn't absorb session costs.
-    first = next(iter(catalog.queries.values()))
-    run_once(first.builder)
+    run_once(spark, next(iter(catalog.queries.values())).builder, sf_dir)
 
     for name in names:
         q = catalog.queries[name]
-        samples = [round(run_once(q.builder), 3) for _ in range(runs)]
+        samples = [run_once(spark, q.builder, sf_dir) for _ in range(runs)]
         print(f"{name}: min={min(samples)} samples={samples}")
     return 0
 

@@ -1,79 +1,69 @@
 """Simulate the driver harness: vanilla SparkSession (none of the
-engine's tuned confs), import __spark_entry__, run entry() smoke and
-every queries()[name] at sf0.01 vs oracle_sql()[name] in DuckDB,
-order-insensitive value compare."""
+engine's tuned confs), import __spark_entry__, run queries()[name] at
+sf0.01 and compare each with oracle_sql()[name] in DuckDB through
+``tests.oracle.compare`` (schema, row count, and bit-exact values
+after an order-insensitive sort).
 
-import math
+Usage: python tools/driver_sim.py [name ...]
+
+With no names, runs the entry() smoke and every catalog query. With
+names, checks only those queries; an unknown name exits 2.
+Env: SPARK_GRAFT_SIM_SF overrides the sf dir (default sf0.01).
+
+Python-UDF queries run on worker processes that import the package, so
+the repo must be on their path: run from the repo root or put it on
+PYTHONPATH.
+"""
+
 import os
 import sys
-from datetime import datetime
 
-import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as e  # noqa: E402
+from tests.oracle import compare  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
 
-# vanilla session — deliberately NOT the engine's factory
-spark = (
-    SparkSession.builder.master("local[8]").appName("driver-sim")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
 
-# --- smoke ---
-df = e.entry(spark)
-rows = df.collect()
-print(f"SMOKE entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
-assert len(rows) > 0
+def main(names: list[str]) -> int:
+    qs, osql = e.queries(), e.oracle_sql()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
 
-qs, osql = e.queries(), e.oracle_sql()
-print(f"catalog: {len(qs)} queries, {len(osql)} with oracle")
+    # vanilla session — deliberately NOT the engine's factory
+    spark = (
+        SparkSession.builder.master("local[8]").appName("driver-sim")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
-con = duckdb.connect()
-for t in ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split():
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+    if not names:
+        df = e.entry(spark)
+        rows = df.collect()
+        print(f"SMOKE entry(): {len(rows)} rows, "
+              f"schema={[f.name for f in df.schema.fields]}")
+        assert len(rows) > 0
+        print(f"catalog: {len(qs)} queries, {len(osql)} with oracle")
+
+    fails = []
+    for name in names or sorted(qs):
+        try:
+            n = compare(spark, SF, qs[name], osql[name], name)
+            print(f"  MATCH    {name}: {n} rows")
+        except Exception as exc:  # noqa: BLE001 - report, keep checking
+            fails.append(name)
+            print(f"  MISMATCH {name}: {type(exc).__name__}: {exc}")
+
+    print("RESULT:", "ALL MATCH" if not fails else f"FAILURES: {fails}")
+    return 1 if fails else 0
 
 
-def norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None)
-    return v
-
-
-fails = []
-for name, fn in sorted(qs.items()):
-    sdf = fn(spark, SF)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    if name not in osql:
-        print(f"  rows-only  {name}: {len(srows)} rows")
-        continue
-    res = con.execute(osql[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    ok = sorted(scols) == sorted(dcols)
-    so = sorted(range(len(scols)), key=lambda i: scols[i])
-    do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    sset = sorted([tuple(norm(r[i]) for i in so) for r in srows],
-                  key=lambda t: tuple((x is None, str(x)) for x in t))
-    dset = sorted([tuple(norm(r[i]) for i in do) for r in drows],
-                  key=lambda t: tuple((x is None, str(x)) for x in t))
-    ok = ok and sset == dset
-    print(f"  {'MATCH    ' if ok else 'MISMATCH '}{name}: spark={len(srows)} duckdb={len(drows)}")
-    if not ok:
-        fails.append(name)
-        for a, b in list(zip(sset, dset))[:3]:
-            if a != b:
-                print("    spark :", a)
-                print("    duckdb:", b)
-
-print("RESULT:", "ALL MATCH" if not fails else f"FAILURES: {fails}")
-sys.exit(1 if fails else 0)
+if __name__ == "__main__":
+    raise SystemExit(main(sys.argv[1:]))

@@ -8,8 +8,8 @@ algorithms run their loops — the returned frame's plan is what the
 bench times via the noop sink), then the formatted physical plan of
 the returned DataFrame is written to ``OUTDIR/<name>.txt``.
 
-Runs under the exact bench.py session confs so the captured plans are
-the bench's plans (shuffle partitions, split size, AQE flags).
+Runs under bench.py's ``bench_session`` so the captured plans are the
+bench's plans (shuffle partitions, split size, AQE flags).
 """
 
 from __future__ import annotations
@@ -20,6 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session  # noqa: E402
+
 
 def main() -> int:
     if len(sys.argv) < 2:
@@ -29,24 +31,11 @@ def main() -> int:
     names = sys.argv[2:]
     os.makedirs(outdir, exist_ok=True)
 
-    os.environ["TZ"] = "UTC"
-    time.tzset()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
-    from aws_weather_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="explain-dump",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(1 << 20),
-            "spark.driver.memory": "48g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("explain-dump")
 
     catalog = build_catalog()
     targets = names or list(catalog.queries)

@@ -9,7 +9,7 @@ optimization work actually changed. This tool captures the honest
 shape two ways:
 
 - ``pagerank_trade_graph``: the factored-out lazy pieces
-  (``pagerank_edges_deg`` — where the r16 distinct removal lives).
+  (``pagerank_edges_deg``, the edges-and-degree frame).
 - the others: the REGISTERED builder runs with
   ``DataFrame.localCheckpoint`` patched to identity, so the returned
   frame keeps its full lineage (persisted intermediates surface as
@@ -17,18 +17,19 @@ shape two ways:
   builders with no internal convergence loops, where the patch
   cannot change behaviour, just visibility.
 
-Runs under the bench session confs so the captured plans are the
+Runs under bench.py's ``bench_session`` so the captured plans are the
 bench's plans. A ``suffix`` of e.g. ``_before`` names the files
-``<query>_before.txt`` for the plans/r16 deliverable convention.
+``<query>_before.txt``.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_session  # noqa: E402
 
 PATCHED = (
     "kmeans_lloyd_assignments",
@@ -46,10 +47,7 @@ def main() -> int:
     suffix = sys.argv[2] if len(sys.argv) > 2 else ""
     os.makedirs(outdir, exist_ok=True)
 
-    os.environ["TZ"] = "UTC"
-    time.tzset()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     # Patch the CLASSIC DataFrame class: in Spark 4 the runtime object
     # is pyspark.sql.classic.dataframe.DataFrame, which OVERRIDES
@@ -58,14 +56,8 @@ def main() -> int:
     from pyspark.sql.classic.dataframe import DataFrame
 
     from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
-    from aws_weather_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="explain-lazy",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("explain-lazy")
     catalog = build_catalog()
 
     def write(name: str, df) -> None:
@@ -77,7 +69,7 @@ def main() -> int:
             ))
         print("wrote", path)
 
-    # pagerank: the lazy edges+degree frame (the r16 change site).
+    # pagerank: the lazy edges+degree frame.
     from aws_weather_data_pipeline_spark.plans import graph as g
 
     write("pagerank_edges_deg", g.pagerank_edges_deg(spark, sf_dir))

@@ -23,7 +23,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-WINDOW = int(sys.argv[1]) if len(sys.argv) > 1 else 50
 MAX_AGE_ROUNDS = 3  # keep in sync with tests/test_rotation_policy.py
 
 
@@ -53,6 +52,7 @@ def latest_green() -> tuple[dict[str, int], int]:
 
 
 def main() -> int:
+    size = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
 
     latest, next_round = latest_green()
@@ -70,13 +70,13 @@ def main() -> int:
         key=lambda n: (latest[n], n),
     )
     mandatory = never + aged
-    window = (mandatory + rest)[:WINDOW]
+    window = (mandatory + rest)[:size]
 
     print(f"# next_round=r{next_round:02d}  catalog={len(names)}  "
           f"mandatory={len(mandatory)} (never={len(never)}, "
-          f"aged={len(aged)})  free_slots={WINDOW - len(mandatory)}")
-    if len(mandatory) > WINDOW:
-        print(f"# WARNING: {len(mandatory) - WINDOW} mandatory queries "
+          f"aged={len(aged)})  free_slots={size - len(mandatory)}")
+    if len(mandatory) > size:
+        print(f"# WARNING: {len(mandatory) - size} mandatory queries "
               "do not fit — structural debt; they spill to the round "
               "after and the rotation test will stay red for them")
     print("DRIVER_WINDOW = (")

@@ -43,14 +43,15 @@ import json
 import os
 import sys
 import time
-import urllib.request
 from contextlib import nullcontext
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import bench_session, run_once  # noqa: E402
+from perfbench.spans import STAGE_FIELDS, Tracer  # noqa: E402
+
 SF01 = "/root/testdata/sf0.1"
-UI_PORT = 4545
 SCALE = 10
 
 
@@ -208,57 +209,22 @@ def gen(scale: int = SCALE) -> None:
 
 # ---------------------------------------------------------------- run
 
-def _api(path: str):
-    url = f"http://localhost:{UI_PORT}/api/v1/{path}"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.load(r)
-
-
-def _ui_session(app_name: str, extra_conf: dict | None = None):
-    """Shared probe session: UTC, local[$SPARK_GRAFT_CPUS], UI on for
-    the stage-metric REST reads. Returns (spark, app_id)."""
-    from aws_weather_data_pipeline_spark.session import get_spark
-
-    os.environ["TZ"] = "UTC"
-    time.tzset()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name=app_name,
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.driver.memory": "48g",
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            **(extra_conf or {}),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark, _api("applications")[0]["id"]
-
-
-def _measure(app_id: str, seen: set, runs: int, fn, post=None):
-    """Drain stage metrics, run ``fn`` ``runs`` times, and pair the
-    reported metrics — and any extra dict ``fn`` returns (e.g. CC's
-    round count) — with the SAME run the wall minimum comes from
-    (review r15: mixing run 1's wall with run 3's stages or rounds
-    would make the artifact describe two different executions).
-    ``post``, if given, runs after each timing window (cache
-    hygiene that must not be billed to the measured wall)."""
+def _measure(tracer, runs: int, fn):
+    """Run ``fn`` ``runs`` times, each in its own traced span, and pair
+    the span's job count and stage counters — and any extra dict ``fn``
+    returns (e.g. CC's round count) — with the SAME run the wall
+    minimum comes from, so a row never mixes two executions."""
     walls, best = [], None
     for _ in range(runs):
-        _, seen = _stage_metrics(app_id, seen)
-        t0 = time.perf_counter()
-        extra = fn() or {}
-        wall = round(time.perf_counter() - t0, 3)
-        if post is not None:
-            post()
+        with tracer.span("probe", "run") as span:
+            extra = fn() or {}
+        wall = round(span.wall_s, 3)
         walls.append(wall)
-        metrics, seen = _stage_metrics(app_id, seen)
         if best is None or wall < best[0]:
-            best = (wall, metrics, extra)
-    entry = {"wall_min": best[0], "walls": walls, **best[1], **best[2]}
-    return entry, seen
+            # the first seven counters are the probe's stored field set
+            metrics = {k: span.counters[k] for k in STAGE_FIELDS[:7]}
+            best = (wall, {"jobs": span.jobs, **metrics}, extra)
+    return {"wall_min": best[0], "walls": walls, **best[1], **best[2]}
 
 
 #: slope fields: (name, numerator field, divide-by-zero floor)
@@ -281,52 +247,6 @@ def _slopes(points: dict, keys=_SLOPE_KEYS) -> dict:
         for label, e in points.items()
         if label not in ("sf0.1", "slopes")
     }
-
-
-def _stage_metrics(app_id: str, seen: set) -> tuple[dict, set]:
-    """Aggregate metrics over completed stages not in ``seen``."""
-    stages = _api(f"applications/{app_id}/stages?status=complete")
-    agg = {
-        "shuffle_read_bytes": 0,
-        "shuffle_write_bytes": 0,
-        "input_bytes": 0,
-        "peak_task_shuffle_read": 0,
-        "peak_task_input": 0,
-        "stages": 0,
-        "tasks": 0,
-    }
-    new_seen = set(seen)
-    for st in stages:
-        key = (st["stageId"], st["attemptId"])
-        if key in seen:
-            continue
-        new_seen.add(key)
-        agg["stages"] += 1
-        agg["tasks"] += st.get("numCompleteTasks", 0)
-        agg["shuffle_read_bytes"] += st.get("shuffleReadBytes", 0)
-        agg["shuffle_write_bytes"] += st.get("shuffleWriteBytes", 0)
-        agg["input_bytes"] += st.get("inputBytes", 0)
-        # peak per-task bytes from the stage-level task summary
-        try:
-            summ = _api(
-                f"applications/{app_id}/stages/{key[0]}/{key[1]}"
-                "/taskSummary?quantiles=1.0"
-            )
-            sr = (summ.get("shuffleReadMetrics") or {}).get(
-                "readBytes"
-            ) or [0]
-            inp = (summ.get("inputMetrics") or {}).get(
-                "bytesRead"
-            ) or [0]
-            agg["peak_task_shuffle_read"] = max(
-                agg["peak_task_shuffle_read"], int(max(sr))
-            )
-            agg["peak_task_input"] = max(
-                agg["peak_task_input"], int(max(inp))
-            )
-        except Exception:
-            pass  # summary endpoint is best-effort
-    return agg, new_seen
 
 
 def run(runs: int, scales: list[int], only: list[str] | None = None) -> int:
@@ -384,22 +304,10 @@ def run(runs: int, scales: list[int], only: list[str] | None = None) -> int:
             return 2
         targets = [(n, b) for n, b in targets if n in only]
 
-    # bench_probe's maxPartitionBytes for comparability
-    spark, app_id = _ui_session(
-        "scale-probe",
-        {"spark.sql.files.maxPartitionBytes": str(1 << 20)},
-    )
-
-    def once(builder, sf_dir):
-        builder(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
+    spark = bench_session("scale-probe")
     # warmup, as in bench.py / bench_probe.py
-    once(next(iter(catalog.queries.values())).builder, SF01)
-    spark.catalog.clearCache()
-    seen: set = set()
-    _, seen = _stage_metrics(app_id, seen)  # absorb warmup stages
+    run_once(spark, next(iter(catalog.queries.values())).builder, SF01)
+    tracer = Tracer(spark, enabled=True)
 
     # merge into the existing artifact so --only updates single rows
     out_path = os.path.join(REPO, "SCALE_PROBE.json")
@@ -413,11 +321,11 @@ def run(runs: int, scales: list[int], only: list[str] | None = None) -> int:
             (f"x{s}", out_dir(s)) for s in scales
         ]
         for label, sf_dir in points:
-            entry[label], seen = _measure(
-                app_id, seen, runs,
-                lambda: once(builder, sf_dir),
-                post=spark.catalog.clearCache,
-            )
+
+            def once():
+                run_once(spark, builder, sf_dir)
+
+            entry[label] = _measure(tracer, runs, once)
             print(f"{name} @ {label}: {entry[label]}", flush=True)
         # a --scales subset must not drop the row's previously
         # committed points (review r15: --only + --scales 3 used to
@@ -458,7 +366,8 @@ def graph_probe(runs: int = 3, scales: tuple = (3, 10)) -> int:
     from aws_weather_data_pipeline_spark.plans import graph as gp
     from aws_weather_data_pipeline_spark.session import cached
 
-    spark, app_id = _ui_session("scale-probe-graph")
+    spark = bench_session("scale-probe-graph")
+    tracer = Tracer(spark, enabled=True)
 
     with cached(gp.pagerank_edges_deg(spark, SF01)) as base:
         hi = base.select(
@@ -481,8 +390,6 @@ def graph_probe(runs: int = 3, scales: tuple = (3, 10)) -> int:
             df.write.format("noop").mode("overwrite").save()
 
         report: dict = {}
-        seen: set = set()
-        _, seen = _stage_metrics(app_id, seen)  # absorb edge-build stages
         for k in (1,) + tuple(scales):
             # at k=1 the copy would be an identity projection of the
             # already-cached base — reuse it instead of caching the
@@ -490,9 +397,8 @@ def graph_probe(runs: int = 3, scales: tuple = (3, 10)) -> int:
             with nullcontext(base) if k == 1 else cached(copies(k)) as edges:
                 n = edges.select("src").distinct().count()
                 entry: dict = {"nodes": n}
-                entry["pagerank"], seen = _measure(
-                    app_id, seen, runs,
-                    lambda: noop(gp.pagerank_plan(edges, n)),
+                entry["pagerank"] = _measure(
+                    tracer, runs, lambda: noop(gp.pagerank_plan(edges, n))
                 )
 
                 def cc_once():
@@ -500,8 +406,8 @@ def graph_probe(runs: int = 3, scales: tuple = (3, 10)) -> int:
                     noop(connected_components(edges, stats=stats))
                     return {"rounds": stats["rounds"]}
 
-                entry["connected_components"], seen = _measure(
-                    app_id, seen, runs, cc_once
+                entry["connected_components"] = _measure(
+                    tracer, runs, cc_once
                 )
             label = "sf0.1" if k == 1 else f"x{k}"
             report[label] = entry
@@ -536,19 +442,9 @@ def changefeed() -> int:
 
     from pyspark.sql import functions as F
 
-    from aws_weather_data_pipeline_spark.session import get_spark
     from aws_weather_data_pipeline_spark.sinks import tablelog as tl
 
-    os.environ["TZ"] = "UTC"
-    time.tzset()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="scale-probe-cf",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.driver.memory": "48g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("scale-probe-cf")
     root = os.path.join(REPO, ".scaleprobe", "cf")
     shutil.rmtree(root, ignore_errors=True)
     # warmup: a tiny end-to-end commit+sync so the first measured

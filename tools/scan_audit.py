@@ -1,8 +1,8 @@
 """Audit every catalog query for funnel-class duplicate table scans.
 
-Round 8 found corpus_filter_funnel referencing an unpersisted
-aggregate twice, which made Spark evaluate the whole O(L^2) per-row
-subtree twice per execution. This tool sweeps ALL catalog queries:
+A funnel-class defect is a plan that references an unpersisted
+aggregate twice, so Spark evaluates the whole subtree twice per
+execution. This tool sweeps ALL catalog queries:
 for each, it builds the plan at sf0.001 and reports how many times
 each parquet table is physically scanned. A table scanned more than
 once is either (a) a deliberate multi-pass algorithm (self-join,
@@ -20,9 +20,9 @@ import os
 import re
 import sys
 
-from pyspark.sql import SparkSession
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_session  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -30,15 +30,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 def main() -> int:
     from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("scan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("scan-audit")
 
     multi = {}
     errs = {}
