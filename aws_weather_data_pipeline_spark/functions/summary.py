@@ -9,50 +9,25 @@ Semantics choices (SURVEY §7.4):
 - averages/sums route through DECIMAL intermediates (functions/exact.py)
   then ROUND(x, 2) like the Postgres original — on exact decimals, so
   the rounding is reproducible across engines and partitionings;
-- MODE() WITHIN GROUP tie-breaking is NON-deterministic in Spark's
-  F.mode, so dominant values use count → row_number(count DESC, value
-  ASC) == 1 — the deterministic equivalent of Postgres's ordered mode.
+- MODE() WITHIN GROUP is Spark's ``mode(col, deterministic=True)``: it
+  ignores NULLs (an all-NULL group gets NULL) and breaks count ties
+  towards the lowest value, as Postgres's ordered mode does.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .exact import davg, dec
-
-
-def _dominant(df: DataFrame, col: str, out: str) -> DataFrame:
-    """A5: per-(city, date) modal value with deterministic tie-break.
-
-    NULL values are excluded from the candidates — Postgres
-    MODE() WITHIN GROUP ignores NULLs, and without the filter a
-    mostly-null group would elect NULL as its "dominant" value (and
-    the asc tie-break would even prefer NULL on count ties; review
-    r06). An all-null group emits no row and the caller's LEFT join
-    yields NULL, matching mode() over an empty set."""
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy("city", "summary_date", col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    w = Window.partitionBy("city", "summary_date").orderBy(
-        F.col("_n").desc(), F.col(col).asc()
-    )
-    return (
-        counts.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("city", "summary_date", F.col(col).alias(out))
-    )
 
 
 def daily_weather_summary(processed: DataFrame) -> DataFrame:
     """A2/A3/A4 + F15: one row per (city, reading date).
 
     Input: the processed weather frame (post apply_transformations).
-    One hash-shuffle on the (city, date) key for the main aggregate;
-    the two dominant-value sub-aggregates shuffle on the same key
-    prefix, and their join sides are one-row-per-group — AQE broadcasts
-    them.
+    One aggregate, so one hash-shuffle on the (city, date) key; the two
+    dominant values (A5) are deterministic modes computed in the same
+    pass.
     """
     e = processed.withColumn(
         "summary_date", F.to_date("timestamp_parsed")
@@ -62,7 +37,7 @@ def daily_weather_summary(processed: DataFrame) -> DataFrame:
         return F.sum(F.when(pred, 1).otherwise(0))
 
     r2 = lambda c: F.round(c, 2)  # noqa: E731 — F15 serving-side rounding
-    main = e.groupBy("city", "summary_date").agg(
+    return e.groupBy("city", "summary_date").agg(
         r2(davg("temperature_celsius")).alias("avg_temperature"),
         F.min("temperature_celsius").alias("min_temperature"),
         F.max("temperature_celsius").alias("max_temperature"),
@@ -87,9 +62,6 @@ def daily_weather_summary(processed: DataFrame) -> DataFrame:
             / F.count(F.lit(1))
         ).alias("alert_percentage"),
         r2(davg("data_quality_score")).alias("avg_quality_score"),
-    )
-    dom_cond = _dominant(e, "weather_condition", "dominant_condition")
-    dom_comfort = _dominant(e, "comfort_level", "dominant_comfort")
-    return main.join(dom_cond, ["city", "summary_date"], "left").join(
-        dom_comfort, ["city", "summary_date"], "left"
+        F.mode("weather_condition", True).alias("dominant_condition"),
+        F.mode("comfort_level", True).alias("dominant_comfort"),
     )

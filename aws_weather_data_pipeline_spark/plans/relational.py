@@ -166,8 +166,9 @@ def conditional_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Deterministic per-group mode (dominant value). Reference: "
     "MODE() WITHIN GROUP (ORDER BY weather_condition) at "
     "airflow/src/load_to_postgres.py:420-421 (SURVEY A5); tie-break is "
-    "count DESC, value ASC exactly as SURVEY §7.4-2 prescribes (Spark's "
-    "F.mode tie-break is nondeterministic, so we rank instead).",
+    "count DESC, value ASC exactly as SURVEY §7.4-2 prescribes. It ranks "
+    "the per-value counts rather than calling F.mode because it also "
+    "returns the winning count n.",
     tags=("agg", "window"),
 )
 def dominant_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -129,83 +129,92 @@ def validate(
     if now.tzinfo is None:
         now = now.replace(tzinfo=datetime.timezone.utc)
     res = ValidationResult()
-    # Six independent actions follow (counts, aggs, groupBys) — each
-    # is its own job over the serving table, so without a persist the
-    # validation pass rescans the parquet six times.
-    with cached(spark.read.parquet(paths.serving_dir)) as serving:
-        total = serving.count()
-        res.stats["total_rows"] = total
-        res.checks["has_rows"] = total > 0
-
-        nulls = serving.filter(
-            F.col("station_id").isNull()
-            | F.col("city").isNull()
-            | F.col("timestamp").isNull()
-        ).count()
-        res.stats["null_critical_rows"] = nulls
-        res.checks["no_null_critical"] = nulls == 0
-
-        q = serving.agg(
+    # Two aggregate passes over one read (one file listing): a rollup
+    # whose per-level rows are the alert distribution and whose total
+    # row carries every table-wide figure, then the duplicate-key
+    # count, which needs its own (station_id, timestamp) grouping.
+    # Each Spark action costs scheduling latency that dwarfs the scan
+    # at a daily load's size, so the checks share passes, not a cache.
+    serving = spark.read.parquet(paths.serving_dir)
+    groups = (
+        serving.rollup("alert_level")
+        .agg(
+            F.grouping("alert_level").alias("is_total"),
+            F.count(F.lit(1)).alias("n"),
+            F.count(
+                F.when(
+                    F.col("station_id").isNull()
+                    | F.col("city").isNull()
+                    | F.col("timestamp").isNull(),
+                    1,
+                )
+            ).alias("nulls"),
             F.avg("data_quality_score").alias("avg_q"),
-            F.min("data_quality_score").alias("min_q"),
-        ).first()
-        res.stats["avg_quality"] = q["avg_q"]
-        res.checks["quality_floor"] = (
-            q["avg_q"] is not None and q["avg_q"] >= MIN_AVG_QUALITY
+            # Aggregated as epoch micros, not TimestampType: PySpark
+            # renders a collected timestamp through the driver process's
+            # OS timezone, so a non-UTC driver host would skew the
+            # staleness by the UTC offset (up to ±14h against the 24h
+            # bound). Epoch arithmetic has no zone.
+            F.max(F.unix_micros("timestamp_parsed")).alias("latest_us"),
         )
+        .collect()
+    )
+    # A rollup over an empty table returns no rows, not even the total.
+    empty = {"n": 0, "nulls": 0, "avg_q": None, "latest_us": None}
+    totals = next((r for r in groups if r["is_total"]), empty)
+    total = totals["n"]
+    res.stats["total_rows"] = total
+    res.checks["has_rows"] = total > 0
 
-        dist = {
-            r["alert_level"]: r["n"]
-            for r in serving.groupBy("alert_level")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        res.stats["alert_distribution"] = dist
-        res.checks["alert_levels_known"] = set(dist) <= {
-            "NORMAL",
-            "WATCH",
-            "WARNING",
-            "CRITICAL",
-        }
+    nulls = totals["nulls"]
+    res.stats["null_critical_rows"] = nulls
+    res.checks["no_null_critical"] = nulls == 0
 
-        dup = (
-            serving.groupBy("station_id", "timestamp")
-            .count()
-            .filter("count > 1")
-            .count()
-        )
-        res.stats["duplicate_keys"] = dup
-        res.checks["unique_key"] = dup == 0
+    avg_q = totals["avg_q"]
+    res.stats["avg_quality"] = avg_q
+    res.checks["quality_floor"] = avg_q is not None and avg_q >= MIN_AVG_QUALITY
 
-        # Freshness (reference README.md:750-755: NOW() - MAX(ts) < 1 day).
-        # One MAX aggregate over the persisted frame; the comparison
-        # happens driver-side on a single value.
-        # Aggregated as epoch micros, not TimestampType: PySpark renders a
-        # collected timestamp through the driver process's OS timezone, so
-        # a non-UTC driver host would skew the staleness by the UTC offset
-        # (up to ±14h against the 24h bound). Epoch arithmetic has no zone.
-        latest_us = serving.agg(
-            F.max(F.unix_micros("timestamp_parsed")).alias("latest_us")
-        ).first()["latest_us"]
-        latest = (
-            datetime.datetime.fromtimestamp(
-                latest_us / 1_000_000, datetime.timezone.utc
-            )
-            if latest_us is not None
-            else None
+    # grouping() tells a real NULL alert level from the total row.
+    dist = {r["alert_level"]: r["n"] for r in groups if not r["is_total"]}
+    res.stats["alert_distribution"] = dist
+    res.checks["alert_levels_known"] = set(dist) <= {
+        "NORMAL",
+        "WATCH",
+        "WARNING",
+        "CRITICAL",
+    }
+
+    dup = (
+        serving.groupBy("station_id", "timestamp")
+        .count()
+        .filter("count > 1")
+        .count()
+    )
+    res.stats["duplicate_keys"] = dup
+    res.checks["unique_key"] = dup == 0
+
+    # Freshness (reference README.md:750-755: NOW() - MAX(ts) < 1 day),
+    # compared driver-side on the rollup's single MAX value.
+    latest_us = totals["latest_us"]
+    latest = (
+        datetime.datetime.fromtimestamp(
+            latest_us / 1_000_000, datetime.timezone.utc
         )
-        age = (
-            now.timestamp() - latest_us / 1_000_000
-            if latest_us is not None
-            else None
-        )
-        res.stats["latest_timestamp"] = latest
-        res.stats["staleness_seconds"] = age
-        res.checks["fresh"] = (
-            age is not None
-            and -CLOCK_SKEW_TOLERANCE_SECONDS <= age < MAX_STALENESS_SECONDS
-        )
-        return res
+        if latest_us is not None
+        else None
+    )
+    age = (
+        now.timestamp() - latest_us / 1_000_000
+        if latest_us is not None
+        else None
+    )
+    res.stats["latest_timestamp"] = latest
+    res.stats["staleness_seconds"] = age
+    res.checks["fresh"] = (
+        age is not None
+        and -CLOCK_SKEW_TOLERANCE_SECONDS <= age < MAX_STALENESS_SECONDS
+    )
+    return res
 
 
 def report(spark: SparkSession, paths: PipelinePaths) -> str:

@@ -6,6 +6,10 @@ import datetime
 
 import pytest
 
+from aws_weather_data_pipeline_spark import runner
+from aws_weather_data_pipeline_spark.functions.summary import (
+    daily_weather_summary,
+)
 from aws_weather_data_pipeline_spark.runner import (
     MAX_STALENESS_SECONDS,
     PipelinePaths,
@@ -173,3 +177,150 @@ def test_validate_tolerates_producer_clock_skew(spark, paths):
     far_before = latest - datetime.timedelta(hours=2)
     res2 = validate(spark, paths, now=far_before)
     assert not res2.checks["fresh"], "wild future-dating must fail"
+
+
+def test_daily_summary_dominant_values(spark):
+    """A5: the dominant condition and comfort follow Postgres's
+    MODE() WITHIN GROUP — NULLs never win, however many there are, a
+    count tie goes to the lowest value, and an all-NULL group is NULL.
+    Expected rows are computed by hand from the fixture."""
+    t = lambda h: datetime.datetime(2024, 1, 15, h)  # noqa: E731
+    cols = (
+        "city string, timestamp_parsed timestamp, temperature_celsius double,"
+        " heat_index_celsius double, humidity_percent double,"
+        " pressure_hpa double, wind_speed_kmh double,"
+        " precipitation_mm double, alert_level string,"
+        " data_quality_score double, weather_condition string,"
+        " comfort_level string"
+    )
+    processed = spark.createDataFrame(
+        [
+            # Mumbai: a 1-1 condition tie (Clear < Rain); Hot is the
+            # comfort majority
+            ("Mumbai", t(1), 20.0, 22.0, 50.0, 1000.0, 10.0, 1.0,
+             "NORMAL", 100.0, "Rain", "Hot"),
+            ("Mumbai", t(2), 22.0, 24.0, 60.0, 1010.0, 20.0, 2.5,
+             "WARNING", 90.0, "Clear", "Hot"),
+            ("Mumbai", t(3), 24.0, 26.0, 70.0, 1020.0, 30.0, 0.0,
+             "WATCH", 80.0, None, "Mild"),
+            # Delhi: two NULL conditions against one Fog; comfort all NULL
+            ("Delhi", t(1), 30.0, 33.0, 40.0, 1005.0, 5.0, 0.0,
+             "CRITICAL", 100.0, None, None),
+            ("Delhi", t(2), 30.0, 33.0, 40.0, 1005.0, 5.0, 0.0,
+             "CRITICAL", 100.0, None, None),
+            ("Delhi", t(3), 30.0, 33.0, 40.0, 1005.0, 5.0, 0.0,
+             "NORMAL", 100.0, "Fog", None),
+        ],
+        cols,
+    )
+    out = daily_weather_summary(processed)
+    assert out.columns == [
+        "city", "summary_date", "avg_temperature", "min_temperature",
+        "max_temperature", "avg_heat_index", "avg_humidity", "avg_pressure",
+        "avg_wind_speed", "total_precipitation", "max_precipitation",
+        "reading_count", "normal_count", "watch_count", "warning_count",
+        "critical_count", "alert_percentage", "avg_quality_score",
+        "dominant_condition", "dominant_comfort",
+    ]
+    day = datetime.date(2024, 1, 15)
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("Delhi", day, 30.0, 30.0, 30.0, 33.0, 40.0, 1005.0, 5.0, 0.0, 0.0,
+         3, 1, 0, 0, 2, 66.67, 100.0, "Fog", None),
+        ("Mumbai", day, 22.0, 20.0, 24.0, 24.0, 60.0, 1010.0, 20.0, 3.5, 2.5,
+         3, 1, 1, 1, 0, 33.33, 90.0, "Clear", "Hot"),
+    ]
+
+
+def test_validate_flags_dirty_serving_table(spark, tmp_path):
+    """X3 on a serving table that breaks every data check at once; a
+    NULL alert level is its own distribution key, apart from the
+    table total."""
+    ts = datetime.datetime(2024, 1, 15, 10)
+    serving = tmp_path / "serving"
+    spark.createDataFrame(
+        [
+            ("WS001", "Mumbai", "2024-01-15T10:00:00", "NORMAL", 100.0, ts),
+            ("WS001", "Mumbai", "2024-01-15T10:00:00", "NORMAL", 100.0, ts),
+            ("WS002", None, "2024-01-15T10:00:00", "WATCH", 80.0, ts),
+            ("WS003", "Delhi", "2024-01-15T10:00:00", "SEVERE", 70.0, ts),
+            ("WS004", "Chennai", "2024-01-15T10:00:00", None, 60.0, ts),
+        ],
+        "station_id string, city string, timestamp string,"
+        " alert_level string, data_quality_score double,"
+        " timestamp_parsed timestamp",
+    ).write.parquet(str(serving))
+
+    res = validate(
+        spark, PipelinePaths("", "", str(serving), ""), now=FIXTURE_NOW
+    )
+    assert res.stats["total_rows"] == 5
+    assert res.stats["null_critical_rows"] == 1
+    assert res.stats["duplicate_keys"] == 1
+    assert res.stats["alert_distribution"] == {
+        "NORMAL": 2, "WATCH": 1, "SEVERE": 1, None: 1,
+    }
+    assert res.stats["avg_quality"] == pytest.approx(82.0)
+    assert res.checks == {
+        "has_rows": True,
+        "no_null_critical": False,
+        "quality_floor": False,
+        "alert_levels_known": False,
+        "unique_key": False,
+        "fresh": True,
+    }
+
+
+def test_validate_empty_serving_table(spark, tmp_path):
+    serving = tmp_path / "serving"
+    spark.createDataFrame(
+        [],
+        "station_id string, city string, timestamp string,"
+        " alert_level string, data_quality_score double,"
+        " timestamp_parsed timestamp",
+    ).write.parquet(str(serving))
+
+    res = validate(
+        spark, PipelinePaths("", "", str(serving), ""), now=FIXTURE_NOW
+    )
+    assert res.stats == {
+        "total_rows": 0,
+        "null_critical_rows": 0,
+        "avg_quality": None,
+        "alert_distribution": {},
+        "duplicate_keys": 0,
+        "latest_timestamp": None,
+        "staleness_seconds": None,
+    }
+    assert [k for k, ok in res.checks.items() if not ok] == [
+        "has_rows", "quality_floor", "fresh",
+    ]
+
+
+#: Spark jobs each daily-run step may start on the ``paths`` fixture.
+#: Every job pays scheduling latency that dwarfs the work at this size.
+DAILY_RUN_MAX_JOBS = {
+    "check_prerequisites": 1,
+    "load": 8,
+    "validate": 6,
+    "report": 2,
+}
+
+
+def test_daily_run_job_counts(spark, paths):
+    sc = spark.sparkContext
+    counts = {}
+    for step in DAILY_RUN_MAX_JOBS:
+        group = f"test-daily-run-{step}"
+        kwargs = {"now": FIXTURE_NOW} if step == "validate" else {}
+        sc.setJobGroup(group, step)
+        try:
+            getattr(runner, step)(spark, paths, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is filled from the listener bus: drain it
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        counts[step] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(
+        counts[s] <= n for s, n in DAILY_RUN_MAX_JOBS.items()
+    ), counts
