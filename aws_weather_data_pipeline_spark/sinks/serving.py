@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..session import cached
+from .writers import missing_keys
 
 #: The serving-table fixed-point declarations, straight from
 #: sql/create_tables.sql:15-66 (weather_readings + daily_weather_summary
@@ -134,9 +135,9 @@ def jdbc_append_missing(
         # first load against a fresh database: the serving table does
         # not exist yet, so there is nothing to conflict with and the
         # append below creates it — the parquet twin's PATH_NOT_FOUND
-        # case (review r11). Matched conservatively on the driver's
-        # own "missing table" wording; anything else (connection
-        # refused, permissions) still propagates.
+        # case. Matched conservatively on the driver's own "missing
+        # table" wording; anything else (connection refused,
+        # permissions) still propagates.
         msg = str(exc).lower()
         if not (
             table.lower() in msg
@@ -157,8 +158,7 @@ def jdbc_append_missing(
     # including the DATABASE read — twice, and rows inserted by a
     # concurrent writer between the two executions would make the
     # returned n disagree with what was actually appended.
-    anti = deduped.join(existing, on=keys, how="left_anti")
-    with cached(anti) as to_insert:
+    with cached(missing_keys(deduped, existing, keys)) as to_insert:
         n = to_insert.count()
         if n:
             write_jdbc(

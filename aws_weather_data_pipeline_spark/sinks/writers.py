@@ -24,6 +24,8 @@ The reference's sink surface, re-expressed Spark-first:
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -31,12 +33,11 @@ from ..session import cached
 
 
 #: DataFrameWriter option for per-WRITE dynamic partition overwrite.
-#: Per-write, not the session conf (review r11): the old save/set/
-#: restore context manager mutated session-GLOBAL state, so a
-#: concurrent writer in the same SparkSession could run its
-#: overwrite in STATIC mode while another held the toggle — deleting
-#: every partition of its table, not just the batch's. The writer
-#: option scopes the mode to exactly one write with no shared state.
+#: Per-write, not the session conf: a session-GLOBAL toggle would let
+#: a concurrent writer in the same SparkSession run its overwrite in
+#: STATIC mode while another held the toggle — deleting every
+#: partition of its table, not just the batch's. The writer option
+#: scopes the mode to exactly one write with no shared state.
 DYNAMIC_OVERWRITE = ("partitionOverwriteMode", "dynamic")
 
 
@@ -49,10 +50,10 @@ def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
     writes them (scripts/kinesis_to_s3.py:205-206).
 
     Refuses by name if the frame ALREADY carries any of the derived
-    column names (review r13): withColumn would silently replace the
-    caller's data with the fabricated partition value — the same
-    reserved-name hazard the table log refuses loudly
-    (_check_cdc_collisions). Rename or drop the colliding column;
+    column names: withColumn would silently replace the caller's data
+    with the fabricated partition value — the same reserved-name
+    hazard the table log refuses loudly (_check_cdc_collisions).
+    Rename or drop the colliding column;
     partition columns here are always derived, never trusted from
     the input (the reference's bug was the reverse).
     """
@@ -118,6 +119,21 @@ def write_orc(df: DataFrame, path: str) -> None:
 MAX_SCOPE_VALUES = 10_000
 
 
+def missing_keys(
+    rows: DataFrame, existing: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The ``rows`` whose key is absent from ``existing`` (LEFT ANTI).
+
+    Keys match with ``eqNullSafe``: under plain equality a NULL key
+    field never matches the identical existing row, so every replay
+    would re-append it. ``dropDuplicates`` already treats NULLs as
+    equal, so this makes the batch dedup and the anti-join agree.
+    """
+    ex = existing.select(*keys)
+    cond = reduce(and_, [rows[k].eqNullSafe(ex[k]) for k in keys])
+    return rows.join(ex, on=cond, how="left_anti")
+
+
 def idempotent_append(
     spark: SparkSession,
     new_rows: DataFrame,
@@ -159,8 +175,8 @@ def idempotent_append(
             raise
         # PATH_NOT_FOUND: first load. UNABLE_TO_INFER_SCHEMA: the
         # directory exists but is EMPTY (infra pre-provisioning) —
-        # semantically the same "nothing to conflict with" state
-        # (review r11); any other condition still propagates.
+        # semantically the same "nothing to conflict with" state;
+        # any other condition still propagates.
         existing = None
     if existing is not None:
         if scope_col is not None:
@@ -189,25 +205,15 @@ def idempotent_append(
             # null), so a batch containing null-scope rows — e.g. an
             # unparseable timestamp surviving to a null reading_date —
             # would exclude the matching EXISTING rows from conflict
-            # detection and re-append duplicates on retry (review
-            # r06). Null scopes need an explicit isNull arm.
+            # detection and re-append duplicates on retry. Null
+            # scopes need an explicit isNull arm.
             pred = F.col(scope_col).isin(
                 [v for v in scopes if v is not None]
             )
             if any(v is None for v in scopes):
                 pred = pred | F.col(scope_col).isNull()
             existing = existing.filter(pred)
-        # eqNullSafe per key (review r11): a NULL key field under
-        # plain equality never matches the identical existing row, so
-        # every replay re-appends it — the null-scope fix (r06)
-        # applied to the join itself. dropDuplicates already treats
-        # NULLs as equal, so this makes the two dedup layers agree.
-        ex = existing.select(*keys)
-        cond = None
-        for k in keys:
-            clause = deduped[k].eqNullSafe(ex[k])
-            cond = clause if cond is None else cond & clause
-        to_insert = deduped.join(ex, on=cond, how="left_anti")
+        to_insert = missing_keys(deduped, existing, keys)
     else:
         to_insert = deduped
     # persist: count-then-write would otherwise execute the dedup +

@@ -147,3 +147,22 @@ def test_jdbc_append_missing_bootstraps_fresh_database(spark, tmp_path):
         )
         == 0
     )
+
+
+def test_jdbc_append_missing_matches_null_keys(spark, tmp_path):
+    """A NULL key field is the same key on replay: the anti-join must
+    match it null-safely, like ``idempotent_append``, or every replay
+    re-appends the NULL-key row."""
+    url = _url(tmp_path)
+    batch = spark.createDataFrame(
+        [("A", "2024-01-15"), (None, "2024-01-15")],
+        "station_id string, reading_date string",
+    )
+    keys = ["station_id", "reading_date"]
+    appended = [
+        jdbc_append_missing(spark, batch, url, "nullkeys", keys, DERBY_PROPS)
+        for _ in range(3)
+    ]
+    assert appended == [2, 0, 0]
+    back = spark.read.jdbc(url, "nullkeys", properties=DERBY_PROPS)
+    assert back.count() == 2

@@ -8,8 +8,10 @@ files in batch.
 
 from __future__ import annotations
 
-import os
+import uuid
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from aws_weather_data_pipeline_spark.functions.weather import (
@@ -125,25 +127,6 @@ def test_stream_sees_nested_landing_subdirectories(spark, tmp_path):
     assert spark.read.parquet(processed).count() == 4
 
 
-def test_checkpoint_namespace_resolves_uri_schemes(spark, tmp_path):
-    """Review r11: checkpoint locations are Hadoop URIs — a scheme'd
-    location resolves its marker through the checkpoint's own
-    filesystem (exercised here via file:, the Hadoop LocalFileSystem),
-    staying stable across calls and rotating with the directory."""
-    from aws_weather_data_pipeline_spark.streaming.pipeline import (
-        _checkpoint_namespace,
-    )
-
-    uri = "file:" + str(tmp_path / "ck_uri")
-    ns1 = _checkpoint_namespace(uri, spark)
-    assert ns1 and _checkpoint_namespace(uri, spark) == ns1
-    assert _checkpoint_namespace(
-        "file:" + str(tmp_path / "ck_other"), spark
-    ) != ns1
-    # the marker lives INSIDE the checkpoint dir on the target FS
-    assert (tmp_path / "ck_uri" / ".tablelog-namespace").exists()
-
-
 def test_stream_checkpoint_resume_no_duplicates(spark, tmp_path):
     # T3: restarting against the same checkpoint must process only new
     # files — no re-emission of already-committed batches.
@@ -210,16 +193,62 @@ def test_write_both_sinks_replay_is_idempotent(spark, tmp_path):
         read_raw_json_fixture(spark, tmp_path)
     )
     processed, alerts = str(tmp_path / "p"), str(tmp_path / "a")
-    write_both_sinks(batch, processed, alerts, epoch_id=7)
+    write_both_sinks(batch, processed, alerts, epoch_id=7, run_ns="r1")
     n1 = spark.read.parquet(processed).count()
     a1 = spark.read.parquet(alerts).count()
     # Replay of the same epoch (e.g. crash between the two writes).
-    write_both_sinks(batch, processed, alerts, epoch_id=7)
+    write_both_sinks(batch, processed, alerts, epoch_id=7, run_ns="r1")
     assert spark.read.parquet(processed).count() == n1
     assert spark.read.parquet(alerts).count() == a1
     # A genuinely new epoch appends.
-    write_both_sinks(batch, processed, alerts, epoch_id=8)
+    write_both_sinks(batch, processed, alerts, epoch_id=8, run_ns="r1")
     assert spark.read.parquet(processed).count() == 2 * n1
+
+
+def test_crash_between_sinks_then_restart_leaves_one_copy(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch that dies after the lake write and before the
+    alerts write is replayed on restart under the same query id, so the
+    replay overwrites its own epoch partitions: each sink ends with one
+    copy of the batch, in one epoch_id. Had the namespace changed
+    across the restart, the replay would land as a second lake copy."""
+    from aws_weather_data_pipeline_spark.streaming import pipeline
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_batch_file(
+        landing / "a.json", [make_reading(i) for i in range(10)]
+    )
+    processed, alerts = str(tmp_path / "processed"), str(tmp_path / "alerts")
+    args = (spark, str(landing), processed, alerts, str(tmp_path / "ckpt"))
+    crashes = []
+
+    def crash_once(df):
+        if not crashes:
+            crashes.append(1)
+            raise RuntimeError("crash between the two sinks")
+        return alerts_view(df)
+
+    monkeypatch.setattr(pipeline, "alerts_view", crash_once)
+    q1 = start_pipeline(*args)
+    with pytest.raises(StreamingQueryException, match="between the two"):
+        q1.awaitTermination(120)
+    assert spark.read.parquet(processed).count() == 10
+    assert not (tmp_path / "alerts").exists()
+
+    q2 = start_pipeline(*args)
+    assert q2.awaitTermination(120)
+    assert q2.id == q1.id
+    epoch = f"{uuid.UUID(q2.id).hex}-0"
+    batch = apply_transformations(read_raw_json(spark, str(landing)))
+    n_alerts = alerts_view(batch).count()
+    assert n_alerts > 0  # fixture must trigger alerts
+    lake, feed = spark.read.parquet(processed), spark.read.parquet(alerts)
+    assert (lake.count(), feed.count()) == (10, n_alerts)
+    for sink in (lake, feed):
+        got = sink.select("epoch_id").distinct().collect()
+        assert [r.epoch_id for r in got] == [epoch]
 
 
 def read_raw_json_fixture(spark, tmp_path):
@@ -472,60 +501,6 @@ def test_stateful_operator_under_rocksdb_state_store(spark, tmp_path):
     assert rocks[3] == (1, 7.0, "error")
 
 
-def test_checkpoint_namespace_create_failure_names_root_cause(spark):
-    """Review r13: a failed exclusive create used to be swallowed and
-    re-surface one second later as 'marker stayed empty; remove it' —
-    instructing the operator to remove a file that was never created.
-    When no marker ever appears AND our create failed, the create
-    error is the diagnosis."""
-    import uuid as _uuid
-
-    import pytest
-
-    from aws_weather_data_pipeline_spark.streaming.pipeline import (
-        _checkpoint_namespace,
-    )
-
-    # an uncreatable location (procfs rejects mkdir even for root)
-    bad = f"file:///proc/ns-test-{_uuid.uuid4().hex}/cp"
-    with pytest.raises(RuntimeError, match="could not create"):
-        _checkpoint_namespace(bad, spark)
-
-
-def test_checkpoint_namespace_schemeless_follows_default_fs(spark):
-    """Review r13: Spark resolves a schemeless checkpointLocation
-    against fs.defaultFS, so the namespace marker must live there too
-    — with a non-file defaultFS the local os.* fallback would put the
-    marker on the driver's local disk, and a failover host would mint
-    a fresh namespace and double-commit a replayed epoch. Pin the
-    routing: under a (fake, unreachable) hdfs defaultFS the schemeless
-    path takes the Hadoop branch (here: fails loudly reaching for the
-    fake cluster) instead of silently succeeding locally."""
-    import uuid as _uuid
-
-    import pytest
-
-    from aws_weather_data_pipeline_spark.streaming.pipeline import (
-        _checkpoint_namespace,
-    )
-
-    conf = spark._jsc.hadoopConfiguration()
-    old = conf.get("fs.defaultFS", "file:///")
-    conf.set("fs.defaultFS", "hdfs://fake-nn:1")
-    try:
-        with pytest.raises(Exception) as exc:
-            _checkpoint_namespace(
-                f"/tmp/ns-default-fs-{_uuid.uuid4().hex}/cp", spark
-            )
-        # the failure must come from reaching for the CLUSTER fs (the
-        # fake namenode), not from the local branch succeeding
-        assert "fake-nn" in str(exc.value) or "could not create" in str(
-            exc.value
-        ), exc.value
-    finally:
-        conf.set("fs.defaultFS", old)
-
-
 def test_stream_through_tablelog_under_folding_vacuum_with_consumer(
     spark, tmp_path
 ):
@@ -657,9 +632,9 @@ def test_stream_through_tablelog_under_folding_vacuum_with_consumer(
     assert tl.sync_position(dst, table) == tl.latest_version(table)
     # replay of the FIRST epoch — manifest long vacuumed — is still a
     # no-op: its txn id lives in the fold, not the expired manifest
-    ns = (
-        open(os.path.join(ckpt, ".tablelog-namespace")).read().strip()
-    )
+    txn_ids = [m["txn_id"] for m in tl.history(table) if m.get("txn_id")]
+    ns = txn_ids[-1].split("-")[1]
+    assert ns == uuid.UUID(q.id).hex
     head = tl.latest_version(table)
     append_epoch_to_tablelog(_rows(0, 10), table, 0, ns)
     assert tl.latest_version(table) == head

@@ -975,25 +975,46 @@ def test_pruned_to_zero_respects_merge_schema(spark, tmp_path):
     assert df.count() == 0
 
 
-def test_checkpoint_reset_rotates_txn_namespace(tmp_path):
-    """Wiping a checkpoint to reprocess restarts epochs at 0 with NEW
-    data; the namespace must rotate with the checkpoint's lifetime or
-    the new run's first batches would be dropped as replays of the
-    old one (review r08 — a path-derived namespace survived the
-    wipe). A restart WITHOUT a wipe keeps the namespace, or epoch
-    replay dedup would stop working."""
+def test_checkpoint_reset_rotates_txn_namespace(spark, tmp_path):
+    """The txn namespace is the query id Spark keeps in the checkpoint.
+    A restart on the same checkpoint keeps it, or epoch replay dedup
+    would stop working. Wiping the checkpoint to reprocess restarts
+    epochs at 0 with NEW data, so the namespace must rotate, or the
+    new run's first batches would be dropped as replays of the old
+    one. Outside a streaming batch there is no query id to take."""
     import shutil
+    import uuid
 
     from aws_weather_data_pipeline_spark.streaming.pipeline import (
-        _checkpoint_namespace,
+        _query_namespace,
+        start_tablelog_sink,
     )
 
+    src, table = str(tmp_path / "src"), str(tmp_path / "t")
     ckpt = str(tmp_path / "ckpt")
-    ns1 = _checkpoint_namespace(ckpt)
-    assert _checkpoint_namespace(ckpt) == ns1  # restart: stable
+
+    def drain(lo, hi):
+        _frame(spark, lo, hi).write.mode("append").parquet(src)
+        stream = spark.readStream.schema("v bigint").parquet(src)
+        q = start_tablelog_sink(stream, table, ckpt)
+        assert q.awaitTermination(120)
+        return q.id, tl.history(table)[-1]["txn_id"]
+
+    first, txn1 = drain(0, 5)
+    restart, txn2 = drain(5, 8)  # restart: same namespace, next epoch
+    assert restart == first
+    ns = uuid.UUID(first).hex
+    assert (txn1, txn2) == (f"epoch-{ns}-0", f"epoch-{ns}-1")
     shutil.rmtree(ckpt)  # reset: reprocess from scratch
-    ns2 = _checkpoint_namespace(ckpt)
-    assert ns2 != ns1
+    wiped, txn3 = drain(8, 10)
+    assert wiped != first
+    assert txn3 == f"epoch-{uuid.UUID(wiped).hex}-0"
+    # the reprocessed epoch 0 committed instead of being skipped
+    assert _values(tl.read_snapshot(spark, table)) == sorted(
+        list(range(8)) + list(range(10))
+    )
+    with pytest.raises(RuntimeError, match="foreachBatch"):
+        _query_namespace(spark.range(1))
 
 
 def test_catalog_query_fixture_folds_prunes_and_isolates(spark, sf_dir):
