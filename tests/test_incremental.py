@@ -197,7 +197,7 @@ def test_aggregate_sync_is_idle_and_replay_safe(spark, tmp_path):
     tl.overwrite(
         tl.read_snapshot(spark, dst), dst,
         txn_id=(
-            f"{inc.AGG_TXN_PREFIX}:{inc._source_key(src)}"
+            f"{inc.AGG_TXN_PREFIX}:{tl.source_key(src)}"
             f":{tl.latest_version(src)}"
         ),
     )
@@ -526,8 +526,8 @@ def test_multi_source_fan_in_keeps_per_source_positions(
     inc.sync_aggregate(spark, src_a, dst, ["user"], ["value"])
     tl.append(_events(spark, [(1, 10.0), (3, 30.0)]), src_b)
     # ADVICE r13: a never-seen source against existing fold history
-    # is refused by default (it is indistinguishable from a legacy /
-    # respelled-path double-count) — onboarding must be explicit
+    # is refused by default (it is indistinguishable from a moved-
+    # path double-count) — onboarding must be explicit
     with pytest.raises(ValueError, match="allow_new_source"):
         inc.sync_aggregate(spark, src_b, dst, ["user"], ["value"])
     assert inc.sync_aggregate(
@@ -673,7 +673,7 @@ def test_source_identity_survives_path_respelling(spark, tmp_path):
     inc.sync_aggregate(spark, src, dst, ["user"], ["value"])
     link = str(tmp_path / "src_link")
     os.symlink(src, link)
-    assert inc._source_key(link) == inc._source_key(src)
+    assert tl.source_key(link) == tl.source_key(src)
     # same source through the symlink: idle, NOT a double-fold
     assert inc.sync_aggregate(spark, link, dst, ["user"], ["value"]) is None
     assert _folded(spark, dst)[(1,)] == (1, Decimal("1.00"))

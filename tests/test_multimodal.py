@@ -191,14 +191,14 @@ def test_png_payload_decodes_end_to_end(spark):
 def test_ppm_payload_decodes_end_to_end(spark):
     from aws_weather_data_pipeline_spark.functions.multimodal import (
         PPM_SCHEMA,
-        decode_ppm_features,
+        decode_image_features,
         with_ppm_payload,
     )
 
     # doc_id=9: width 1+9%8=2, height 1+9%5=5 → raster 30 bytes; text
     # is 4 chars so rpad fills 26 'x' bytes.
     df = spark.createDataFrame([Row(doc_id=9, text="abcd")])
-    feats = decode_ppm_features(with_ppm_payload(df))
+    feats = decode_image_features(with_ppm_payload(df))
     assert feats.schema == PPM_SCHEMA
     r = feats.first()
     assert (r["width"], r["height"], r["maxval"]) == (2, 5, 255)
@@ -838,8 +838,8 @@ def test_decode_quarantine_splits_bad_rows_without_killing_stage(spark):
 
     from aws_weather_data_pipeline_spark.functions.multimodal import (
         PPM_QUARANTINE_SCHEMA,
+        decode_image_features,
         decode_image_features_with_quarantine,
-        decode_ppm_features,
         with_ppm_payload,
     )
 
@@ -870,7 +870,7 @@ def test_decode_quarantine_splits_bad_rows_without_killing_stage(spark):
     assert rows[99]["width"] is None
     assert rows[98]["decode_error"].startswith("NotImplementedError")
     # clean rows identical to the strict stage
-    strict = {r["doc_id"]: r for r in decode_ppm_features(clean).collect()}
+    strict = {r["doc_id"]: r for r in decode_image_features(clean).collect()}
     for did in (9, 3):
         assert rows[did]["decode_error"] is None
         for col in ("width", "height", "pixel_byte_sum"):

@@ -86,14 +86,9 @@ def test_append_rebases_on_lost_race_and_loses_nothing(
     def racing_publish(tbl, version, manifest):
         if not raced["done"]:
             raced["done"] = True
-            rival, _ = tl._write_data_files(_frame(spark, 50, 52), tbl)
-            real_publish(
-                tbl,
-                version,
-                {"version": version, "op": "append",
-                 "files": tl._read_manifest(tbl, version - 1)["files"] + rival,
-                 "txn_id": None},
-            )
+            # a real rival commit; its own publish passes straight
+            # through to the real one
+            tl.append(_frame(spark, 50, 52), tbl)
         return real_publish(tbl, version, manifest)
 
     monkeypatch.setattr(tl, "_publish", racing_publish)
@@ -112,13 +107,7 @@ def test_overwrite_raises_on_lost_race_instead_of_clobbering(
     def racing_publish(tbl, version, manifest):
         if not raced["done"]:
             raced["done"] = True
-            rival, _ = tl._write_data_files(_frame(spark, 50, 52), tbl)
-            real_publish(
-                tbl, version,
-                {"version": version, "op": "append",
-                 "files": tl._read_manifest(tbl, version - 1)["files"] + rival,
-                 "txn_id": None},
-            )
+            tl.append(_frame(spark, 50, 52), tbl)
         return real_publish(tbl, version, manifest)
 
     monkeypatch.setattr(tl, "_publish", racing_publish)
@@ -270,18 +259,11 @@ def test_merge_changes_recomputes_after_interleaved_commit(
     def racing_publish(tbl, version, manifest):
         if not raced["done"]:
             raced["done"] = True
-            rival, rstats = tl._write_data_files(
+            tl.append(
                 spark.createDataFrame(
                     [(7, "mid", 5)], "k int, s string, seq int"
                 ),
                 tbl,
-            )
-            real_publish(
-                tbl, version,
-                {"version": version, "op": "append",
-                 "files": tl._read_manifest(tbl, version - 1)["files"]
-                 + rival,
-                 "stats": rstats, "txn_id": None},
             )
         return real_publish(tbl, version, manifest)
 
@@ -1413,15 +1395,6 @@ def test_metadata_only_count_and_minmax(spark, tmp_path):
     assert tl.snapshot_row_count(table) == 30
     # refuse rather than guess: unknown column
     assert tl.column_minmax(table, "nope") is None
-    # legacy manifest without counts: strip them and expect None
-    head = tl.latest_version(table)
-    path = tl._manifest_path(table, head)
-    manifest = json.load(open(path))
-    for fstats in manifest["stats"].values():
-        fstats.pop("__rows", None)
-    os.unlink(path)
-    json.dump(manifest, open(path, "w"))
-    assert tl.snapshot_row_count(table) is None
     # an all-null column in ANY file poisons minmax to None
     t2 = str(tmp_path / "t2")
     tl.append(
@@ -1506,13 +1479,12 @@ def test_metadata_only_null_counts(spark, tmp_path):
     # delete_where rewrites keep counts exact on the survivors
     tl.delete_where(spark, table, "k = 2")
     assert tl.column_null_count(table, "s") == 3
-    # legacy manifest without the __nulls/__cols keys: honest None
+    # footer chunks without the null-count statistic: honest None
     head = tl.latest_version(table)
     path = tl._manifest_path(table, head)
     manifest = json.load(open(path))
     for fstats in manifest["stats"].values():
         fstats.pop("__nulls", None)
-        fstats.pop("__cols", None)
     os.unlink(path)
     json.dump(manifest, open(path, "w"))
     assert tl.column_null_count(table, "s") is None
@@ -1571,13 +1543,13 @@ def test_null_predicate_pruning(spark, tmp_path):
     # bad predicate refused loudly
     with pytest.raises(ValueError, match="isnull"):
         tl.files_for(table, where=("s", "equals"))
-    # legacy manifests (no __nulls/__cols) keep everything
+    # files without recorded null counts for s (footer chunks lacking
+    # the statistic) keep everything
     head = tl.latest_version(table)
     path = tl._manifest_path(table, head)
     manifest = json.load(open(path))
     for fstats in manifest["stats"].values():
         fstats.pop("__nulls", None)
-        fstats.pop("__cols", None)
     os.unlink(path)
     json.dump(manifest, open(path, "w"))
     assert len(tl.files_for(table, where=("s", "isnull"))) == 4
@@ -1608,8 +1580,7 @@ def test_schema_on_write_refuses_retyped_columns(spark, tmp_path):
     omitting columns NULL-backfills on read — but RETYPING an
     existing column is refused, because it poisons every later
     merge-schema read of the snapshot. Overwrite is the declared
-    escape hatch, and legacy manifests (no recorded schema) skip the
-    check."""
+    escape hatch."""
     table = str(tmp_path / "t")
     tl.append(_frame(spark, 0, 3), table)  # v bigint
     # additive: new column OK; the recorded schema is the union
@@ -1637,14 +1608,6 @@ def test_schema_on_write_refuses_retyped_columns(spark, tmp_path):
     tl.append(spark.createDataFrame([("t",)], "v string"), table)
     with pytest.raises(ValueError, match="retype"):
         tl.append(_frame(spark, 0, 1), table)
-    # legacy manifest without a schema: enforcement skips
-    head = tl.latest_version(table)
-    path = tl._manifest_path(table, head)
-    manifest = json.load(open(path))
-    manifest.pop("schema")
-    os.unlink(path)
-    json.dump(manifest, open(path, "w"))
-    tl.append(_frame(spark, 0, 1), table)  # no error
 
 
 def test_schema_enforcement_survives_maintenance_ops(spark, tmp_path):
@@ -1718,36 +1681,61 @@ def test_restore_rolls_back_bad_commit_keeping_history(spark, tmp_path):
         tl.restore(table, 1)
 
 
-def test_maintenance_ops_do_not_enable_enforcement_on_legacy_tables(
-    spark, tmp_path
-):
-    """A legacy table (no recorded schema) must stay legacy through
-    compact/delete: a maintenance op silently ENABLING enforcement
-    against a parquet-round-trip schema the writers never declared is
-    as wrong as erasing a declared one (review r09)."""
-    table = str(tmp_path / "t")
-    tl.append(_frame(spark, 0, 4), table)
-    path = tl._manifest_path(table, 0)
-    manifest = json.load(open(path))
-    manifest.pop("schema")
-    os.unlink(path)
-    json.dump(manifest, open(path, "w"))
-    tl.compact(spark, table, n_files=1)
-    assert tl._read_manifest(table, 1).get("schema") is None
-    tl.delete_where(spark, table, "v = 0")
-    assert tl._read_manifest(table, 2).get("schema") is None
-    # legacy contract: the retyped append is (still) not refused
-    tl.append(spark.createDataFrame([("x",)], "v string"), table)
+def test_every_commit_writes_the_current_format(spark, tmp_path):
+    """The readers depend on what every writer records, with no
+    fallback for a missing key: each manifest carries a schema, an
+    append names the files it added, every live file's stats carry
+    its row count, byte size and column census, and the checkpoint
+    fold carries the rollback markers."""
+    old, table = str(tmp_path / "src_old"), str(tmp_path / "t")
+    tl.append(_frame(spark, 0, 5), old)
+    tl.sync_changes(spark, old, table)
+    tl.append(_frame(spark, 5, 8), table)
+    old_key = tl.source_key(old)
+    new = str(tmp_path / "src_new")
+    os.rename(old, new)
+    tl.migrate_consumer_position(table, new, old_key=old_key)
+    tl.overwrite(_frame(spark, 0, 10).repartition(3), table)
+    tl.compact(spark, table, n_files=2)
+    tl.delete_where(spark, table, "v = 1")
+    tl.delete_where(spark, table, "v = 2", write_changefeed=True)
+    tl.merge_changes(
+        spark, table,
+        spark.createDataFrame(
+            [("U", 20, 1), ("D", 3, 1)], "op string, v long, seq int"
+        ),
+        keys=["v"], order_cols=["seq"], write_changefeed=True,
+    )
+    tl.restore(table, 4)
+    tl.vacuum(table, retain_last=100, min_age_seconds=0)
+    history = tl.history(table)
+    assert [m["op"] for m in history] == [
+        "append", "append", "compact", "overwrite", "compact",
+        "delete", "delete", "merge", "restore",
+    ]
+    for m in history:
+        assert isinstance(m["schema"], dict) and m["schema"], m
+        if m["op"] == "append":
+            assert set(m["added"]) <= set(m["files"]), m
+        for name in m["files"]:
+            fstats = m["stats"][name]
+            assert isinstance(fstats["__rows"], int), m
+            assert isinstance(fstats["__bytes"], int), m
+            assert isinstance(fstats["__cols"], list), m
+    assert tl._read_checkpoint(table)["rollbacks"] == []
 
 
 def test_files_for_keeps_files_with_unorderable_zone_maps(
     spark, tmp_path
 ):
-    """Mixed-type zone maps (legacy pre-enforcement retype) must keep
-    the file under the superset contract, not crash the prune
-    (review r09 — column_minmax already refused with None)."""
+    """Zone maps that do not order against the caller's bounds (a
+    bound of another type, or a hand-edited manifest) must keep the
+    file under the superset contract, not crash the prune (review
+    r09 — column_minmax already refused with None)."""
     table = str(tmp_path / "t")
     tl.append(_frame(spark, 0, 4), table)
+    # a string bound against the int zone maps: every file is kept
+    assert tl.files_for(table, where=("v", "a", "z")) == tl.files_for(table)
     head = tl.latest_version(table)
     path = tl._manifest_path(table, head)
     manifest = json.load(open(path))
@@ -1947,8 +1935,9 @@ def test_reserved_txn_namespaces_enforced_and_recovery_hardened(
     """Review r10: a caller txn id colliding with a consumer-offset
     namespace without an integer position would wedge (ValueError in
     txn_position) or corrupt every later sync on the destination —
-    refused at write time; and recovery itself skips malformed legacy
-    entries instead of crashing."""
+    refused at write time by every committing operation; and
+    recovery itself skips a malformed id read from disk instead of
+    crashing."""
     table = str(tmp_path / "t")
     with pytest.raises(ValueError, match="reserved"):
         tl.append(_frame(spark, 0, 3), table, txn_id="changefeed-sync:run-7")
@@ -1970,8 +1959,18 @@ def test_reserved_txn_namespaces_enforced_and_recovery_hardened(
             spark.createDataFrame([("U", 1, 1)], "op string, v long, seq int"),
             keys=["v"], order_cols=["seq"], txn_id="changefeed-sync:nope",
         )
-    # legacy manifest with a malformed reserved txn id (predates the
-    # write-time check): recovery skips it rather than raising
+    # the maintenance ops publish their own manifests: the same check
+    # holds there, or the fake position 7 would be recovered below
+    with pytest.raises(ValueError, match="reserved"):
+        tl.compact(spark, table, n_files=1,
+                   txn_id="changefeed-sync:nightly:7")
+    with pytest.raises(ValueError, match="reserved"):
+        tl.delete_where(spark, table, "v = 0", txn_id="agg-sync:7")
+    assert [m["op"] for m in tl.history(table)] == ["append"]
+    assert tl.sync_position(table) == -1
+    # a hand-edited manifest with a malformed reserved txn id (the
+    # write-time check never saw it): recovery skips it rather than
+    # raising
     head = tl.latest_version(table)
     path = tl._manifest_path(table, head)
     manifest = json.load(open(path))
@@ -2105,92 +2104,6 @@ def test_restore_replay_after_rollback_raises_not_success(
     tl.append(_frame(spark, 950, 951), table)  # fresh head manifest
     with pytest.raises(FileNotFoundError, match="checkpoint-folded"):
         tl.restore(table, 0, txn_id="restore-run-1")
-
-
-def test_rollback_marker_migrates_from_prekey_checkpoint(
-    spark, tmp_path, monkeypatch
-):
-    """Review r11: a checkpoint written BEFORE the rollbacks key
-    existed may have folded past a marker-bearing manifest; the next
-    write_checkpoint must rescan all retained manifests once (the
-    one-time migration) so the replay guard survives the marker
-    manifest's later expiry."""
-    table = str(tmp_path / "t")
-    tl.append(_frame(spark, 0, 5), table)             # v0: target
-    tl.overwrite(_frame(spark, 900, 903), table)      # v1: head
-    target_files = tl._read_manifest(table, 0)["files"]
-    real_publish = tl._publish
-    fired = []
-
-    def sabotage(tbl, version, manifest):
-        real_publish(tbl, version, manifest)
-        if manifest.get("op") == "restore" and not fired:
-            fired.append(version)
-            os.unlink(os.path.join(tl._data_dir(tbl), target_files[0]))
-
-    monkeypatch.setattr(tl, "_publish", sabotage)
-    with pytest.raises(FileNotFoundError, match="lost the race"):
-        tl.restore(table, 0, txn_id="restore-run-1")
-    monkeypatch.setattr(tl, "_publish", real_publish)
-    rollback_v = tl.latest_version(table)
-    # simulate the PRE-upgrade fold: checkpoint past the marker with
-    # no rollbacks key
-    tl.write_checkpoint(table)
-    path = tl._checkpoint_path(table)
-    old = json.load(open(path))
-    assert old.pop("rollbacks") == [fired[0]]
-    os.unlink(path)
-    json.dump(old, open(path, "w"))
-    tl._CKPT_CACHE.pop(path, None)
-    # post-upgrade fold: marker manifests still retained -> the
-    # migration rescan must recover the marker into the checkpoint
-    tl.append(_frame(spark, 950, 951), table)
-    tl.write_checkpoint(table)
-    assert fired[0] in tl._read_checkpoint(table)["rollbacks"]
-    # now the marker manifests can expire and the guard still holds
-    for v in (fired[0], rollback_v):
-        os.unlink(tl._manifest_path(table, v))
-    with pytest.raises(FileNotFoundError, match="checkpoint-folded"):
-        tl.restore(table, 0, txn_id="restore-run-1")
-
-
-def test_prekey_checkpoint_migrates_even_when_already_folded(
-    spark, tmp_path, monkeypatch
-):
-    """Review r11 #2 follow-up: vacuum calls write_checkpoint with
-    upto == the previous fold's version right before deleting expired
-    manifests; a pre-rollbacks-key checkpoint must NOT early-return
-    there — that call is the last chance to rescue retained markers."""
-    table = str(tmp_path / "t")
-    tl.append(_frame(spark, 0, 5), table)
-    tl.overwrite(_frame(spark, 900, 903), table)
-    target_files = tl._read_manifest(table, 0)["files"]
-    real_publish = tl._publish
-    fired = []
-
-    def sabotage(tbl, version, manifest):
-        real_publish(tbl, version, manifest)
-        if manifest.get("op") == "restore" and not fired:
-            fired.append(version)
-            os.unlink(os.path.join(tl._data_dir(tbl), target_files[0]))
-
-    monkeypatch.setattr(tl, "_publish", sabotage)
-    with pytest.raises(FileNotFoundError, match="lost the race"):
-        tl.restore(table, 0, txn_id="restore-run-1")
-    monkeypatch.setattr(tl, "_publish", real_publish)
-    # pre-upgrade fold AT the head: strip the rollbacks key
-    head = tl.latest_version(table)
-    tl.write_checkpoint(table)
-    path = tl._checkpoint_path(table)
-    old = json.load(open(path))
-    old.pop("rollbacks")
-    os.unlink(path)
-    json.dump(old, open(path, "w"))
-    tl._CKPT_CACHE.pop(path, None)
-    # the exact vacuum-shaped call: upto == prev fold version — must
-    # migrate, not early-return, and never regress the fold version
-    assert tl.write_checkpoint(table, upto=head) == head
-    assert fired[0] in tl._read_checkpoint(table)["rollbacks"]
 
 
 def test_noop_merge_records_empty_changefeed(spark, tmp_path):
@@ -3794,41 +3707,6 @@ def test_migrate_consumer_position_moved_source_path(spark, tmp_path):
     assert _values(tl.read_snapshot(spark, dst)) == list(range(8))
 
 
-def test_migrate_consumer_position_legacy_bare_ids(spark, tmp_path):
-    """A pre-qualification destination (bare ``<prefix>:<version>``
-    sync ids, the shape r12 wrote) migrates via the bare-only walk —
-    and the walk must NOT misattribute another source's QUALIFIED id
-    as the legacy position."""
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    tl.append(_frame(spark, 0, 4), src)
-    tl.sync_changes(spark, src, dst)
-    # rewrite the sync commit's txn id to the legacy bare shape
-    # (write-time _check_txn_id refuses it now, so edit the manifest
-    # directly — exactly what a pre-qualification log looks like)
-    v_sync = tl.latest_version(dst)
-    path = tl._manifest_path(dst, v_sync)
-    manifest = json.load(open(path))
-    pos = tl.latest_version(src)
-    manifest["txn_id"] = f"{tl.SYNC_TXN_PREFIX}:{pos}"
-    json.dump(manifest, open(path, "w"))
-    # another source's QUALIFIED sync id lands on top: the bare-only
-    # walk must skip it (else fan-in migrates to the WRONG position)
-    other = str(tmp_path / "other")
-    tl.append(_frame(spark, 100, 102), other)
-    tl.sync_changes(spark, other, dst, allow_new_source=True)
-    assert tl.sync_position(dst, src) == -1  # qualified walk: nothing
-    with pytest.raises(ValueError, match="migrate_consumer_position"):
-        tl.sync_changes(spark, src, dst)
-    tl.migrate_consumer_position(dst, src)
-    assert tl.sync_position(dst, src) == pos
-    assert tl.sync_changes(spark, src, dst) is None  # drained, no re-apply
-    tl.append(_frame(spark, 4, 6), src)
-    tl.sync_changes(spark, src, dst)
-    assert _values(tl.read_snapshot(spark, dst)) == (
-        list(range(6)) + [100, 101]
-    )
-
-
 def test_migrate_consumer_position_refusals(spark, tmp_path):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     tl.append(_frame(spark, 0, 2), src)
@@ -3837,42 +3715,11 @@ def test_migrate_consumer_position_refusals(spark, tmp_path):
     # and re-running with a stale old_key must not regress
     with pytest.raises(ValueError, match="already records"):
         tl.migrate_consumer_position(dst, src, old_key="0" * 12)
-    # no legacy position at all
+    # no position under the old key at all
     fresh = str(tmp_path / "fresh")
     tl.append(_frame(spark, 0, 1), fresh)
     with pytest.raises(ValueError, match="nothing to migrate"):
-        tl.migrate_consumer_position(dst, fresh)
-    with pytest.raises(ValueError, match="nothing to migrate"):
         tl.migrate_consumer_position(dst, fresh, old_key="f" * 12)
-
-
-def test_migrate_consumer_position_abspath_era_agg_key(spark, tmp_path):
-    """The r13 agg-sync era keyed positions on sha256(abspath):
-    legacy_abspath_key reproduces that key for a symlink spelling so
-    the aggregate destination migrates instead of re-bootstrapping."""
-    real = str(tmp_path / "real_src")
-    tl.append(_frame(spark, 0, 3), real)
-    link = str(tmp_path / "link_src")
-    os.symlink(real, link)
-    # abspath key (what r13 recorded for the symlink spelling)
-    # differs from today's realpath key
-    assert tl.legacy_abspath_key(link) != tl.source_key(link)
-    assert tl.legacy_abspath_key(real) == tl.source_key(real)
-    from aws_weather_data_pipeline_spark.sinks import incremental as inc
-
-    dst = str(tmp_path / "agg_dst")
-    # simulate the r13-era destination: a sync committed under the
-    # abspath-hashed qualified id
-    tl.append(
-        spark.createDataFrame([(1, 2)], "k int, n int"), dst,
-        txn_id=f"{inc.AGG_TXN_PREFIX}:{tl.legacy_abspath_key(link)}:0",
-    )
-    assert inc.aggregate_position(dst, link) == -1
-    tl.migrate_consumer_position(
-        dst, link, prefix=inc.AGG_TXN_PREFIX,
-        old_key=tl.legacy_abspath_key(link),
-    )
-    assert inc.aggregate_position(dst, link) == 0
 
 
 def test_migrate_consumer_position_cas_on_concurrent_sync(
@@ -3913,7 +3760,7 @@ def test_migrate_consumer_position_cas_on_concurrent_sync(
         tl.migrate_consumer_position(dst, new, old_key=old_key)
     monkeypatch.undo()
     # the rival's position survives as the newest record — NOT
-    # regressed to the legacy one
+    # regressed to the old key's one
     assert tl.sync_position(dst, new) == src_head
     # the cheap operator re-run now refuses (a current-key position
     # exists) instead of silently regressing
@@ -3927,9 +3774,8 @@ def test_migrate_consumer_position_cas_on_concurrent_sync(
 def test_migrate_consumer_position_refuses_current_key_as_old_key(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r15: ``old_key`` equal to the CURRENT key (abspath ==
-    realpath: the path traverses no symlink) used to get two
-    different outcomes by log depth — the carrier txn id coincides
+    """ADVICE r15: ``old_key`` equal to the CURRENT key used to get
+    two different outcomes by log depth — the carrier txn id coincides
     with the ordinary sync commit's, so inside the txn dedup horizon
     the call returned that sync's version as a 'successful
     migration', and past it raised 'already records'. It must be ONE
@@ -3937,8 +3783,7 @@ def test_migrate_consumer_position_refuses_current_key_as_old_key(
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     tl.append(_frame(spark, 0, 2), src)
     tl.sync_changes(spark, src, dst)
-    key = tl.legacy_abspath_key(src)
-    assert key == tl.source_key(src)  # the degenerate no-symlink case
+    key = tl.source_key(src)
     with pytest.raises(ValueError, match="current source key"):
         tl.migrate_consumer_position(dst, src, old_key=key)
     # age the sync commit out of a shrunken dedup horizon: the
