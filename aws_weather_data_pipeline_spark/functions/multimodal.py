@@ -46,16 +46,16 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_binary_payload(df: DataFrame) -> DataFrame:
     """Attach an opaque binary payload + typed metadata struct.
 
     In production the payload is the raw image/audio bytes read from the
-    lake; here it is the utf-8 encoding of ``text_col`` so every stage
-    downstream is testable. Metadata travels as a struct column, not
+    lake; here it is the utf-8 encoding of the ``text`` column so every
+    stage downstream is testable. Metadata travels as a struct column, not
     loose columns, so a single ``payload_meta`` schema evolves cleanly.
     """
     return df.withColumn(
-        "payload", F.encode(F.col(text_col), "utf-8")
+        "payload", F.encode(F.col("text"), "utf-8")
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -68,7 +68,8 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
 #: The malformed-input exception surface of the pure-Python codecs:
 #: what truncating or bit-flipping a valid payload actually raises
 #: (fuzz-verified, ADVICE r08). decode_media normalizes these to
-#: ValueError so every per-row quarantine guard has ONE contract.
+#: ValueError, so a strict decode stage fails on bad input with one
+#: exception type that names the content type.
 _MALFORMED_INPUT_ERRORS = (
     struct.error,
     zlib.error,
@@ -114,14 +115,15 @@ def decode_media(payload_bytes: bytes, content_type: str) -> dict:
         except ValueError:
             raise
         except _MALFORMED_INPUT_ERRORS as exc:
-            # Normalize the full malformed-input surface to ValueError
-            # so per-row guards (the quarantine twins) need exactly one
-            # exception contract. Truncated or bit-flipped payloads
-            # legitimately escape the decoders as struct.error /
-            # zlib.error (short PNG/GIF chunks), IndexError / KeyError
-            # (corrupt JPEG Huffman tables), OverflowError / EOFError
-            # (malformed lengths) — at a 100 TB scan these ARE data
-            # errors, not bugs (ADVICE r08, fuzz-verified).
+            # Normalize the full malformed-input surface to ValueError:
+            # input validation, so a bad payload fails the stage as a
+            # data error that names its content type. Truncated or
+            # bit-flipped payloads legitimately escape the decoders as
+            # struct.error / zlib.error (short PNG/GIF chunks),
+            # IndexError / KeyError (corrupt JPEG Huffman tables),
+            # OverflowError / EOFError (malformed lengths) — at a
+            # 100 TB scan these ARE data errors, not bugs (ADVICE r08,
+            # fuzz-verified).
             raise ValueError(
                 f"malformed {content_type} payload: "
                 f"{type(exc).__name__}: {exc}"
@@ -460,9 +462,9 @@ def _decode_wav(b: bytes) -> dict:
     }
 
 
-def with_wav_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_wav_payload(df: DataFrame) -> DataFrame:
     """Attach a synthetic 16-bit PCM WAV payload derived from
-    ``text_col``.
+    the ``text`` column.
 
     Channel count, sample rate, and frame count come from doc_id;
     sample values are an affine map of the text's bytes (padded with
@@ -492,7 +494,7 @@ def with_wav_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.Series(out)
 
     return df.withColumn(
-        "payload", _to_wav(F.col("doc_id"), F.col(text_col))
+        "payload", _to_wav(F.col("doc_id"), F.col("text"))
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -502,8 +504,9 @@ def with_wav_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_flac_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach a synthetic FLAC payload derived from ``text_col``.
+def with_flac_payload(df: DataFrame) -> DataFrame:
+    """Attach a synthetic FLAC payload derived from the ``text``
+    column.
 
     Channel count / sample rate / frame count come from doc_id;
     samples are an affine map of the text bytes scaled by 4 (two
@@ -549,7 +552,7 @@ def with_flac_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.Series(out)
 
     return df.withColumn(
-        "payload", _to_flac(F.col("doc_id"), F.col(text_col))
+        "payload", _to_flac(F.col("doc_id"), F.col("text"))
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -629,8 +632,8 @@ def wav_window_energy(df: DataFrame, window_frames: int = 8) -> DataFrame:
     energy (sum of squared samples) and peak amplitude — the framing
     step under VAD / audio fingerprinting / silence trimming. Row
     EXPANSION through Arrow (one input row → ⌈frames/window⌉ output
-    rows), same boundary discipline as ``sample_frames``; windows are
-    frame-aligned so multichannel frames never split."""
+    rows), same boundary discipline as ``decode_avi_frames``; windows
+    are frame-aligned so multichannel frames never split."""
 
     def gen(pdf_iter: Iterator) -> Iterator:
         for pdf in pdf_iter:
@@ -910,9 +913,9 @@ def _decode_gif(b: bytes) -> dict:
     return {"width": width, "height": height, "frames": frames}
 
 
-def with_gif_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_gif_payload(df: DataFrame) -> DataFrame:
     """Attach a synthetic animated-GIF payload derived from
-    ``text_col``.
+    the ``text`` column.
 
     Frame dimensions and count come from doc_id (width 1-6, height
     1-4, 2-4 frames); frame ``f``'s pixel indices are the text bytes
@@ -941,7 +944,7 @@ def with_gif_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.Series(out)
 
     return df.withColumn(
-        "payload", _to_gif(F.col("doc_id"), F.col(text_col))
+        "payload", _to_gif(F.col("doc_id"), F.col("text"))
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -971,7 +974,7 @@ def decode_gif_frames(df: DataFrame) -> DataFrame:
     and LZW recurrence are interpreter-side — LZW's dictionary
     feedback is inherently sequential, the per-sample analog of the
     Paeth scanline filter). Row expansion through Arrow, same narrow
-    no-shuffle shape as ``sample_frames``."""
+    no-shuffle shape as ``decode_avi_frames``."""
 
     def gen(pdf_iter: Iterator) -> Iterator:
         for pdf in pdf_iter:
@@ -1267,9 +1270,9 @@ def _decode_avi(b: bytes) -> dict:
     }
 
 
-def with_avi_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach a synthetic AVI payload derived from ``text_col``,
-    mixing BOTH supported codecs so one fixture exercises both
+def with_avi_payload(df: DataFrame) -> DataFrame:
+    """Attach a synthetic AVI payload derived from the ``text``
+    column, mixing BOTH supported codecs so one fixture exercises both
     decode paths.
 
     Docs with ``doc_id % 5 == 0`` carry a motion-JPEG ('MJPG') stream:
@@ -1321,7 +1324,7 @@ def with_avi_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.Series(out)
 
     return df.withColumn(
-        "payload", _to_avi(F.col("doc_id"), F.col(text_col))
+        "payload", _to_avi(F.col("doc_id"), F.col("text"))
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -1351,8 +1354,7 @@ def decode_avi_frames(df: DataFrame, stride: int = 1) -> DataFrame:
     and the frame's md5 (SQL-checkable — the decoded RGB bytes ARE
     the construction rule's text bytes). Row expansion through Arrow,
     narrow no-shuffle stage; downstream per-frame ops key on
-    (doc_id, frame_idx). Subsumes ``sample_frames``' fixed-window
-    stand-in once registered: same plumbing shape, real container."""
+    (doc_id, frame_idx)."""
     import hashlib
 
     def gen(pdf_iter: Iterator) -> Iterator:
@@ -2043,9 +2045,9 @@ def _decode_jpeg(b: bytes) -> dict:
     }
 
 
-def with_jpeg_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_jpeg_payload(df: DataFrame) -> DataFrame:
     """Attach a synthetic baseline-JPEG payload derived from
-    ``text_col``.
+    the ``text`` column.
 
     Dimensions come from doc_id (1-3 blocks wide x 1-2 blocks high,
     i.e. 8-24 x 8-16 pixels) and every 8x8 block is CONSTANT gray:
@@ -2076,7 +2078,7 @@ def with_jpeg_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.Series(out)
 
     return df.withColumn(
-        "payload", _to_jpeg(F.col("doc_id"), F.col(text_col))
+        "payload", _to_jpeg(F.col("doc_id"), F.col("text"))
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -2086,8 +2088,9 @@ def with_jpeg_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach a synthetic PNG payload derived from ``text_col``.
+def with_png_payload(df: DataFrame) -> DataFrame:
+    """Attach a synthetic PNG payload derived from the ``text``
+    column.
 
     Same raster rule as ``with_ppm_payload`` — width 1-8 and height
     1-5 from doc_id, raster = text truncated/right-padded to w*h*3
@@ -2113,7 +2116,7 @@ def with_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.Series(out)
 
     return df.withColumn(
-        "payload", _to_png(F.col("doc_id"), F.col(text_col))
+        "payload", _to_png(F.col("doc_id"), F.col("text"))
     ).withColumn(
         "payload_meta",
         F.struct(
@@ -2123,8 +2126,9 @@ def with_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_ppm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach a synthetic binary-PPM payload derived from ``text_col``.
+def with_ppm_payload(df: DataFrame) -> DataFrame:
+    """Attach a synthetic binary-PPM payload derived from the
+    ``text`` column.
 
     Dimensions come from doc_id (width 1-8, height 1-5) and the raster
     is the document text truncated/right-padded to exactly w*h*3 bytes
@@ -2142,7 +2146,7 @@ def with_ppm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     # rpad TRUNCATES past the target length, so the raster is exactly
     # w*h*3 bytes whether the text is long or short (max 8*5*3 = 120).
     raster = F.expr(
-        f"rpad(substring({text_col}, 1, 120), "
+        "rpad(substring(text, 1, 120), "
         "(1 + pmod(doc_id, 8)) * (1 + pmod(doc_id, 5)) * 3, 'x')"
     )
     return df.withColumn(
@@ -2211,74 +2215,6 @@ def decode_image_features(df: DataFrame) -> DataFrame:
     ).mapInPandas(gen, schema=PPM_SCHEMA)
 
 
-#: ``decode_image_features`` output plus the dead-letter column.
-PPM_QUARANTINE_SCHEMA = T.StructType(
-    list(PPM_SCHEMA.fields)
-    + [T.StructField("decode_error", T.StringType(), True)]
-)
-
-
-def decode_image_features_with_quarantine(df: DataFrame) -> DataFrame:
-    """Dead-letter twin of ``decode_image_features``.
-
-    The strict stage raises on the first malformed payload — correct
-    for oracle-checked fixtures, fatal for a 100 TB scan where one
-    truncated image at row N kills the whole job hours in. This twin
-    applies the reference's quarantine idea (S4 raw-JSON dead letter,
-    ``sources/readers.py read_raw_json_with_quarantine``) to media
-    decode: each row decodes under a per-item guard; failures emit
-    the row with NULL statistics and the exception text in
-    ``decode_error`` (NULL on success), so the caller splits the
-    frame into the clean path and a quarantine sink with one filter.
-    Catches ``ValueError`` (malformed bytes — ``decode_media``
-    normalizes the codecs' whole malformed-input surface to it, see
-    ``_MALFORMED_INPUT_ERRORS``) and ``NotImplementedError``
-    (codec-less content type) — anything else is a bug and still
-    propagates.
-    """
-
-    def gen(pdf_iter: Iterator) -> Iterator:
-        for pdf in pdf_iter:
-            out = {k.name: [] for k in PPM_QUARANTINE_SCHEMA.fields}
-            for doc_id, payload, ctype in zip(
-                pdf["doc_id"], pdf["payload"], pdf["content_type"]
-            ):
-                try:
-                    img = decode_media(bytes(payload), ctype)
-                except (ValueError, NotImplementedError) as exc:
-                    out["doc_id"].append(doc_id)
-                    for col in (
-                        "width", "height", "maxval",
-                        "n_pixel_bytes", "pixel_byte_sum",
-                        "mean_pixel_value",
-                    ):
-                        out[col].append(None)
-                    out["decode_error"].append(
-                        f"{type(exc).__name__}: {exc}"
-                    )
-                    continue
-                n = len(img["pixels"])
-                s = int(
-                    np.frombuffer(img["pixels"], dtype=np.uint8).sum(
-                        dtype=np.int64
-                    )
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                out["maxval"].append(img["maxval"])
-                out["n_pixel_bytes"].append(n)
-                out["pixel_byte_sum"].append(s)
-                out["mean_pixel_value"].append(s / n if n else None)
-                out["decode_error"].append(None)
-            yield pd.DataFrame(out)
-
-    return df.select(
-        "doc_id", "payload",
-        F.col("payload_meta.content_type").alias("content_type"),
-    ).mapInPandas(gen, schema=PPM_QUARANTINE_SCHEMA)
-
-
 def fake_byte_features(pdf_iter: Iterator) -> Iterator:
     """Deterministic per-payload features (the decode stand-in).
 
@@ -2319,62 +2255,6 @@ def extract_features(df: DataFrame) -> DataFrame:
     """
     return df.select("doc_id", "payload").mapInPandas(
         fake_byte_features, schema=FEATURE_SCHEMA
-    )
-
-
-#: Frame-sampling stage output — one row per SAMPLED frame.
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("frame_idx", T.LongType(), True),
-        T.StructField("n_frame_bytes", T.IntegerType(), True),
-        T.StructField("frame_md5", T.StringType(), True),
-    ]
-)
-
-FRAME_BYTES = 64
-FRAME_STRIDE = 4
-
-
-def sample_frames(
-    df: DataFrame,
-    frame_bytes: int = FRAME_BYTES,
-    stride: int = FRAME_STRIDE,
-) -> DataFrame:
-    """Frame-sampling stage: every ``stride``-th fixed-size frame.
-
-    The video-pipeline shape: payload → frames → keep a deterministic
-    subset (here every stride-th ``frame_bytes`` window stands in for
-    ffmpeg keyframe extraction — the container has no codecs). Row
-    EXPANSION inside ``mapInPandas``: one input row yields
-    ⌈n_bytes/frame_bytes⌉/stride output rows, which Arrow batches
-    back without a shuffle — the stage stays narrow, and downstream
-    per-frame ops key on (doc_id, frame_idx).
-    """
-    import hashlib
-
-    def gen(pdf_iter: Iterator) -> Iterator:
-        for pdf in pdf_iter:
-            out = {
-                "doc_id": [],
-                "frame_idx": [],
-                "n_frame_bytes": [],
-                "frame_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                for idx in range(0, -(-len(b) // frame_bytes), stride):
-                    frame = b[idx * frame_bytes : (idx + 1) * frame_bytes]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(idx)
-                    out["n_frame_bytes"].append(len(frame))
-                    out["frame_md5"].append(
-                        hashlib.md5(frame).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
-    return df.select("doc_id", "payload").mapInPandas(
-        gen, schema=FRAME_SCHEMA
     )
 
 

@@ -88,22 +88,6 @@ def morton_code(a: int, b: int, bits: int) -> int:
     return z
 
 
-def demorton_expr_spark(z: str, dim: int, bits: int) -> str:
-    """Spark SQL text extracting dimension ``dim`` (0 or 1) back out of
-    a Morton code — the inverse of :func:`morton_expr_spark`, used to
-    recover tile coordinates from a code range (e.g. mapping a file's
-    code span back to the (a, b) rectangle it covers)."""
-    if dim not in (0, 1):
-        raise ValueError(f"dim must be 0 or 1: {dim}")
-    if not 1 <= bits <= MAX_BITS:
-        raise ValueError(f"bits must be in [1, {MAX_BITS}]: {bits}")
-    terms = [
-        f"shiftleft(shiftright({z}, {2 * i + dim}) & 1, {i})"
-        for i in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def zorder_repartition(
     df: DataFrame, a: str, b: str, bits: int, num_files: int
 ) -> DataFrame:

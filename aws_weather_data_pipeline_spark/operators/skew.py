@@ -36,6 +36,15 @@ def _check_salt_free(df: DataFrame, side: str) -> None:
         )
 
 
+def _check_n_salts(n_salts: int) -> None:
+    """Salts are ``pmod(hash, n_salts)``: a non-positive ``n_salts``
+    gives probe salts the replicated build side does not carry (an
+    inner join drops probe rows, a left join nulls their match) or a
+    division by zero inside a task."""
+    if n_salts < 1:
+        raise ValueError(f"n_salts must be >= 1, got {n_salts}")
+
+
 def salted_join(
     probe: DataFrame,
     build: DataFrame,
@@ -64,6 +73,7 @@ def salted_join(
         raise ValueError(
             f"salted_join supports inner/left joins only, got {how!r}"
         )
+    _check_n_salts(n_salts)
     _check_salt_free(probe, "probe")
     _check_salt_free(build, "build")
     salt_col = (
@@ -94,6 +104,7 @@ def salted_collect_list(
     """
     if salt_from is None:
         raise ValueError("salt_from (a varying column) is required")
+    _check_n_salts(n_salts)
     _check_salt_free(df, "input")
     salt_col = (
         F.col(salt_from) if isinstance(salt_from, str) else salt_from

@@ -486,9 +486,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # codecs", and multimodal_decode_avi strictly subsumes it — the SAME
 # Arrow row-expansion + stride sampling + SQL-md5 check, but over REAL
 # RIFF container frames (DIB and MJPG streams both). Its window slot
-# transferred to multimodal_decode_avi; functions.multimodal
-# .sample_frames (the underlying stage) stays, unit-pinned by
-# tests/test_multimodal.py.
+# transferred to multimodal_decode_avi.
 
 
 @CATALOG.add(

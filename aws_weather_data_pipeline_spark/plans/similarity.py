@@ -32,7 +32,7 @@ from contextlib import ExitStack
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..session import cached, detach
-from ..sources.tables import load_spread, load_tables
+from ..sources.tables import load_spread
 from .registry import QueryCatalog
 from .text import SIMHASH_CTE_SQL
 
@@ -922,20 +922,13 @@ FROM reach GROUP BY u
     "one that scales.",
     tags=("similarity", "dedup", "iterative"),
 )
-def near_dup_clusters(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
-) -> DataFrame:
+def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     # near_dup_pairs_minhash returns an eagerly-materialized frame
     # (localCheckpoint inside), so the operator's symmetrizing union
     # reads checkpointed partitions — no recompute, no extra persist.
-    # A caller that already materialized the pairs (the dedup cascade,
-    # a multi-metric pipeline) threads them via ``pairs=`` instead of
-    # re-running shingle→signature→band-join→verify.
-    if pairs is None:
-        pairs = near_dup_pairs_minhash(spark, sf_dir)
-    pairs = pairs.select(
+    pairs = near_dup_pairs_minhash(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     labels = connected_components(pairs)
@@ -2450,39 +2443,15 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def split_leakage_audit_simhash(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The leakage audit re-run over the SimHash detector's pairs.
-
-    RETIRED from the catalog in r09 (zero-slack ledger,
-    plans/catalog.py): it is a one-line composition of two queries
-    that each keep independent driver rows — the audit aggregation
-    (``split_leakage_audit``, MinHash pairs) and the SimHash pair
-    pipeline (``near_dup_pairs_simhash``) — so its slot transferred
-    to ``tablelog_time_travel_prune``, giving the r08 table log its
-    first driver-grade evidence. Kept as a building block: different
-    detectors surface different near-dup populations, so a thorough
-    pre-training audit still runs this composition per detector.
-    """
-    return leakage_audit(
-        spark, sf_dir, near_dup_pairs_simhash(spark, sf_dir)
-    )
-
-
 def _attach_split_leakage_oracle() -> None:
     from .sampling import TRAIN_HI, VAL_HI, _KEYHASH_SQL
 
-    for name, pairs_query in (
-        ("split_leakage_audit", "near_dup_pairs_minhash"),
-        # split_leakage_audit_simhash retired r09 (see its docstring)
-    ):
-        CATALOG.queries[name].oracle = _SPLIT_LEAKAGE_SQL.format(
-            pairs=CATALOG.queries[pairs_query].oracle,
-            keyhash=_KEYHASH_SQL,
-            train_hi=TRAIN_HI,
-            val_hi=VAL_HI,
-        )
+    CATALOG.queries["split_leakage_audit"].oracle = _SPLIT_LEAKAGE_SQL.format(
+        pairs=CATALOG.queries["near_dup_pairs_minhash"].oracle,
+        keyhash=_KEYHASH_SQL,
+        train_hi=TRAIN_HI,
+        val_hi=VAL_HI,
+    )
 
 
 _attach_split_leakage_oracle()
@@ -2534,20 +2503,16 @@ def leakage_safe_split_assignment(
     spark: SparkSession,
     sf_dir: str,
     pairs: DataFrame | None = None,
-    clusters: DataFrame | None = None,
 ) -> DataFrame:
     from .sampling import split_expr
 
-    # ``clusters=`` threads a precomputed (doc_id, cluster_id) map —
-    # the connected-components loop is the expensive stage, and any
-    # pipeline that already clustered (the cascade, the manifest)
-    # holds exactly this frame. The default path builds the map via
-    # _cluster_map (labels only): the former near_dup_clusters call
-    # dragged the sizes aggregate+join into the plan behind columns
-    # this query drops (r16 optimization — see _cluster_map).
-    if clusters is None:
-        clusters = _cluster_map(spark, sf_dir, pairs=pairs)
-    clusters = clusters.select("doc_id", "cluster_id")
+    # The map comes from _cluster_map (labels only): the former
+    # near_dup_clusters call dragged the sizes aggregate+join into the
+    # plan behind columns this query drops (r16 optimization — see
+    # _cluster_map).
+    clusters = _cluster_map(spark, sf_dir, pairs=pairs).select(
+        "doc_id", "cluster_id"
+    )
     d = _docs(spark, sf_dir).select("doc_id").join(
         clusters, "doc_id", "left"
     )
@@ -2790,9 +2755,7 @@ GROUP BY d.source, c.reason
     "reason).",
     tags=("similarity", "dedup", "agg"),
 )
-def dedup_attrition_by_source(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
-) -> DataFrame:
+def dedup_attrition_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     # ``source`` rides the cascade's own document scan (carry=) — the
@@ -2800,9 +2763,7 @@ def dedup_attrition_by_source(
     # corpus-wide doc_id shuffle join to attach one column the
     # cascade's scan already touched (guide §2.4; r16 optimization —
     # one Scan parquet + one SortMergeJoin removed, oracle-pinned).
-    verdicts = dedup_cascade_keep_list(
-        spark, sf_dir, pairs=pairs, carry=("source",)
-    )
+    verdicts = dedup_cascade_keep_list(spark, sf_dir, carry=("source",))
     agg = verdicts.groupBy("source", "reason").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )

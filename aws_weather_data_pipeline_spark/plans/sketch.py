@@ -609,56 +609,8 @@ def misra_gries_partials(
     return df.mapInPandas(fold, "key string, lower_bound long")
 
 
-def misra_gries_merge(partials: DataFrame, k: int = MG_K) -> DataFrame:
-    """Merge per-partition MG summaries into ONE global ≤k summary.
-
-    Counters add by key (SUM is the exact merge of lower bounds), then
-    the (k+1)-th largest combined counter is subtracted from all and
-    non-positives dropped — the same Agarwal et al. combine, applied
-    once over the O(k × partitions)-row partial frame. The result
-    keeps the global guarantee: every key with corpus frequency
-    > N/(k+1) is present. The trim threshold is derived with a
-    row_number over the tiny combined frame and broadcast back — no
-    driver collect.
-    """
-    from pyspark.sql import Window as W
-
-    combined = partials.groupBy("key").agg(
-        F.sum("lower_bound").alias("lower_bound")
-    )
-    ranked = combined.select(
-        "key",
-        "lower_bound",
-        F.row_number()
-        .over(
-            W.orderBy(F.col("lower_bound").desc(), F.col("key"))
-        )
-        .alias("rnk"),
-    )
-    kth = ranked.filter(F.col("rnk") == k + 1).select(
-        F.col("lower_bound").alias("kth")
-    )
-    # Left join against the 0-or-1-row threshold frame; absent row
-    # (≤ k distinct keys survive) means no trim.
-    return (
-        ranked.crossJoin(F.broadcast(kth.limit(1)))
-        .filter(F.col("lower_bound") > F.col("kth"))
-        .select(
-            "key",
-            (F.col("lower_bound") - F.col("kth")).alias("lower_bound"),
-        )
-        .union(
-            # no (k+1)-th counter exists -> keep everything as-is
-            ranked.join(
-                F.broadcast(kth.limit(1)), F.lit(True), "left_anti"
-            ).select("key", "lower_bound")
-        )
-    )
-
-
 def _char_pairs(docs: DataFrame) -> DataFrame:
-    """Adjacent character pairs inside whitespace tokens — the SAME
-    key stream bpe_merge_candidates counts exactly (plans/text.py)."""
+    """Adjacent character pairs inside whitespace tokens."""
     tok = docs.select(
         F.explode(F.split("text", " ")).alias("token")
     ).filter(F.length("token") >= 2)
@@ -693,8 +645,8 @@ def mg_heavy_hitter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Misra-Gries heavy hitters over the corpus char-pair stream —
     every pair with support > 1/(MG_K+1), with EXACT counts.
 
-    The streaming complement to ``term_frequencies`` and
-    ``bpe_merge_candidates``: those shuffle the full key domain; this
+    The streaming complement to ``term_frequencies``: that shuffles
+    the full key domain; this
     is the classic 2-pass bounded-memory plan whose shuffle volume is
     independent of the domain size. Pass 1 folds each partition into
     a ≤MG_K-counter MG summary (misra_gries_partials) — the

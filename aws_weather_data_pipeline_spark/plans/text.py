@@ -789,44 +789,6 @@ def doc_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# BPE merge candidates (tokenizer-training step 1)
-# --------------------------------------------------------------------------
-
-#: Merge candidates returned (the top of the first BPE merge table).
-BPE_TOP_PAIRS = 20
-
-
-def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge candidates — the top-{BPE_TOP_PAIRS} adjacent
-    character pairs corpus-wide (one round of the trainer's loop).
-
-    RETIRED from the catalog in r09: ``bpe_train_merges`` strictly
-    subsumes it (round 1's merge-table row IS this query's top pair —
-    pinned by tests/test_bpe.py), so its window slot transferred to
-    the trainer per the zero-slack protocol in plans/catalog.py.
-    Kept as the documented one-round building block.
-    """
-    d = _tokens(_docs(spark, sf_dir))
-    tok = d.select(F.explode_outer("tokens").alias("token")).filter(
-        F.length("token") >= 2
-    )
-    pairs = tok.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(token) - 1),"
-                " i -> substring(token, i, 2))"
-            )
-        ).alias("pair")
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), "pair")
-        .limit(BPE_TOP_PAIRS)
-    )
-
-
-# --------------------------------------------------------------------------
 # Iterative BPE training (tokenizer-training step 2)
 # --------------------------------------------------------------------------
 
@@ -871,9 +833,7 @@ def _bpe_iter_sql(r: int) -> str:
 
 
 #: Exact iterative oracle for bpe_train_merges (DuckDB), unrolled like
-#: the pagerank oracle. Registered in r09 in place of
-#: bpe_merge_candidates, whose single round the trainer subsumes (see
-#: the capacity ledger in plans/catalog.py).
+#: the pagerank oracle.
 _BPE_TRAIN_CTES = """
     WITH w0 AS (
         SELECT array_to_string(list_transform(
@@ -964,17 +924,14 @@ def _bpe_pair_counts(words: DataFrame) -> DataFrame:
     "vocab), and a broadcast leftmost-first rewrite. No driver-side "
     "collect per round; the whole merge table is one job. At 100 TB "
     "the corpus is touched exactly once — BPE trainers at scale "
-    "iterate on word counts, never the corpus. Subsumes the retired "
-    "bpe_merge_candidates (round 1's row is its top pair, pinned).",
+    "iterate on word counts, never the corpus.",
     tags=("text", "iterative"),
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE training: BPE_ROUNDS merge rounds, emitting the
     merge table (merge_round, lhs, rhs, merged, n_occurrences).
 
-    Tokenizer-training step 2 — bpe_merge_candidates is one round of
-    this loop (its top pair IS round 1's row, pinned by test). Each
-    round: (1) weighted adjacent-symbol-pair counts over the
+    Tokenizer training. Each round: (1) weighted adjacent-symbol-pair counts over the
     vocabulary-sized word table; (2) the argmax pair with the
     deterministic tie order (cnt DESC, lhs, rhs) — nondeterministic
     merge order forks the whole downstream vocab; (3) rewrite every

@@ -33,10 +33,14 @@ def register_catalog_views(
     Queries tagged ``iterative`` (connected components) are EXCLUDED
     by default: their builders run Spark actions to convergence, which
     would break this function's registration-is-free contract. Pass
-    them explicitly via ``names`` to opt in.
+    them explicitly via ``names`` to opt in. A name that is not a
+    catalog query raises ``ValueError`` before anything is registered.
     """
-    register_views(spark, sf_dir)
     catalog = build_catalog()
+    unknown = sorted(set(names or ()) - set(catalog.queries))
+    if unknown:
+        raise ValueError(f"not catalog queries: {unknown}")
+    register_views(spark, sf_dir)
     registered = []
     for name, q in catalog.queries.items():
         if names is None:

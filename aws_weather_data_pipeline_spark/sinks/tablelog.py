@@ -1,13 +1,11 @@
 """Manifest-committed table log: atomic, snapshot-isolated parquet
 tables (the missing transactional layer under S7/S11/S12).
 
-Why the sinks in ``writers.py``/``maintenance.py`` are not enough at
-100 TB: every one of them publishes by DIRECTORY LISTING — a reader
-discovers the table's files by listing the path, so a reader that
-lists while a compaction swaps directories, an overwrite deletes
-part-files, or a half-failed append leaves orphans sees a torn table.
-``compact_path`` narrows the window with a rename dance + crash
-marker; this module removes the window entirely with the (public)
+Why the sinks in ``writers.py`` are not enough at 100 TB: every one
+of them publishes by DIRECTORY LISTING — a reader discovers the
+table's files by listing the path, so a reader that lists while an
+overwrite deletes part-files or a half-failed append leaves orphans
+sees a torn table. This module removes that window with the (public)
 log-structured table idea behind Delta Lake and Iceberg:
 
 - Data files are IMMUTABLE and uniquely named under ``data/``. No
@@ -979,8 +977,7 @@ def read_snapshot(
     ``files_for`` — superset contract, caller still filters). ``merge_schema=True`` reads a
     snapshot whose commits evolved the schema additively (a later
     append introduced a column): new columns NULL-backfill on old
-    files, same semantics as ``sources/tables.py
-    read_parquet_evolving`` — off by default because schema union
+    files (Spark's ``mergeSchema``) — off by default because schema union
     reads every file's footer up front, a cost a stable-schema table
     shouldn't pay. Empty-file-list snapshots need a schema source
     there is none of: raise instead of guessing.
@@ -1032,14 +1029,14 @@ def compact(
     n_files: int,
     txn_id: str | None = None,
     zorder_by: tuple[str, str] | None = None,
-    zorder_bits: int = 16,
 ) -> int:
     """Rewrite the current snapshot as ``n_files`` files, atomically.
 
     Plain compaction coalesces (never repartitions — it concatenates,
     it must not shuffle). ``zorder_by=(a, b)`` instead rewrites the
     LAYOUT: rows are range-partitioned and sorted by their Morton
-    code (``operators/layout.py zorder_repartition``), so every
+    code over ``MAX_BITS`` bits per column (``operators/layout.py
+    zorder_repartition``), so every
     output file covers a small tile in (a, b) space and the zone maps
     this module records in the manifest become TIGHT on both columns
     — manifest-level file skipping on either predicate, the
@@ -1065,10 +1062,10 @@ def compact(
         # and make the loss permanent at the next vacuum (review r08)
         snapshot = read_snapshot(spark, table, head, merge_schema=True)
         if zorder_by is not None:
-            from ..operators.layout import zorder_repartition
+            from ..operators.layout import MAX_BITS, zorder_repartition
 
             frame = zorder_repartition(
-                snapshot, zorder_by[0], zorder_by[1], zorder_bits, n_files
+                snapshot, zorder_by[0], zorder_by[1], MAX_BITS, n_files
             )
         else:
             frame = snapshot.coalesce(n_files)
@@ -1517,39 +1514,6 @@ def column_null_count(
         else:
             return None
     return total
-
-
-def maybe_compact(
-    spark: SparkSession,
-    table: str,
-    max_files: int,
-    target_files: int = 1,
-    zorder_by: tuple[str, str] | None = None,
-    txn_id: str | None = None,
-) -> int | None:
-    """Compact only when the head snapshot exceeds ``max_files`` live
-    files — the maintenance policy that pairs with the streaming sink.
-
-    Per-epoch appends are the classic small-file generator: a
-    minute-trigger stream writes ~1,440 commits/day, and every one
-    adds files sized by the trigger interval, not by what scans want.
-    An orchestrator calls this after (or alongside) the stream; below
-    the threshold it is a free no-op (one manifest read — no listing
-    of data/, no Spark job), above it it runs one ``compact`` (with
-    optional z-order re-clustering) whose atomic swap resets the file
-    count to ``target_files`` without ever blocking readers or the
-    stream's own commits (a lost race rebases by re-compacting).
-    Returns the committed version or None when below threshold.
-    """
-    head = latest_version(table)
-    if head is None:
-        return None
-    if len(files_for(table, head)) <= max_files:
-        return None
-    return compact(
-        spark, table, n_files=target_files, txn_id=txn_id,
-        zorder_by=zorder_by,
-    )
 
 
 def delete_where(

@@ -106,13 +106,6 @@ def overwrite_partitioned(
     ).partitionBy("year", "month", "day", "hour").parquet(path)
 
 
-def write_orc(df: DataFrame, path: str) -> None:
-    """ORC sink — columnar interchange with Hive-era consumers; same
-    overwrite discipline as the parquet sinks (round-trip + pushdown
-    verified in tests/test_readers.py)."""
-    df.write.mode("overwrite").orc(path)
-
-
 #: Upper bound on the number of distinct scope values collected to the
 #: driver by ``idempotent_append`` — a date-grained scope is O(days per
 #: batch); anything past this is a mis-chosen scope column.

@@ -169,13 +169,3 @@ def read_flat_csv(spark: SparkSession, path: str) -> DataFrame:
     semantics — Spark casts yield null on failure, matching the
     reference's pd.to_numeric(errors='coerce'))."""
     return spark.read.schema(FLAT_CSV_SCHEMA).option("header", True).csv(path)
-
-
-def read_flat_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan of a flat readings table. ORC is the columnar interchange
-    format alongside parquet (S5): self-describing footer schema, column
-    pruning and predicate pushdown both reach the scan (asserted in
-    tests/test_readers.py), so pipelines receiving ORC drops from
-    Hive-era producers ingest them at parquet parity — no declared
-    schema needed, unlike text formats (CSV/JSON always declare)."""
-    return spark.read.orc(path)

@@ -176,16 +176,3 @@ def load_spread(
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
     return df
-
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution scan: ``mergeSchema`` unions the parquet
-    footers across files, so a long-lived lake path whose producer
-    ADDED columns over time reads as one relation — files written
-    before a column existed surface it as null (the additive-evolution
-    contract; renames/retypes are breaking and belong to a rewrite).
-    Spark leaves this off by default because footer merging costs a
-    listing pass over every file; an append-forever path that evolves
-    is exactly where that pass is worth paying, and at 100 TB the cost
-    is bounded by file COUNT (footers only), not data size."""
-    return spark.read.option("mergeSchema", True).parquet(path)

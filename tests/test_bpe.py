@@ -1,8 +1,7 @@
 """Iterative BPE training: oracle parity, run semantics, tie order.
 
-bpe_train_merges is catalog-registered as of r09, in place of the
-retired bpe_merge_candidates (capacity ledger, plans/catalog.py).
-These tests run the exact compare the driver runs.
+bpe_train_merges is catalog-registered; these tests run its exact
+DuckDB oracle compare.
 """
 
 from __future__ import annotations
@@ -27,25 +26,6 @@ def test_bpe_train_matches_iterative_oracle(spark, sf_dir):
         name="bpe_train_merges",
     )
     assert n == BPE_ROUNDS
-
-
-def test_bpe_round1_equals_merge_candidates_top1(spark, sf_dir):
-    # bpe_merge_candidates (retired from the catalog in r09, kept as
-    # the one-round building block) is one round of this loop: its
-    # top pair (same tie order) must be exactly round 1's
-    # merge-table row.
-    from aws_weather_data_pipeline_spark.plans.text import (
-        bpe_merge_candidates,
-    )
-
-    cand = bpe_merge_candidates(spark, sf_dir).limit(1).collect()[0]
-    r1 = (
-        bpe_train_merges(spark, sf_dir)
-        .filter(F.col("merge_round") == 1)
-        .collect()[0]
-    )
-    assert r1["merged"] == cand["pair"]
-    assert r1["n_occurrences"] == cand["n_occurrences"]
 
 
 def _words(spark, rows):

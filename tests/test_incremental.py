@@ -4,6 +4,7 @@ insert-only refusal, crash-resume from the destination alone."""
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 
 import pytest
@@ -340,7 +341,7 @@ def test_aggregate_bootstrap_schema_matches_fold_schema(spark, tmp_path):
 
 def test_stream_compact_aggregate_composition(spark, tmp_path):
     """The full operational loop on one table: stream drains epochs
-    into the log, maybe_compact collapses the small files mid-stream,
+    into the log, compact collapses the small files mid-stream,
     the stream keeps appending, and the aggregate maintainer folds
     across the whole history — compaction is invisible to both the
     feed position and the folded numbers."""
@@ -360,7 +361,7 @@ def test_stream_compact_aggregate_composition(spark, tmp_path):
     q.awaitTermination(120)
     inc.sync_aggregate(spark, log, agg, ["user"], ["value"])
     # maintenance collapses the per-epoch files
-    assert tl.maybe_compact(spark, log, max_files=0) is not None
+    tl.compact(spark, log, n_files=1)
     assert len(tl.files_for(log)) == 1
     # stream continues on the same checkpoint after the compaction
     _events(spark, [(1, 5.0)]).write.mode("append").parquet(landing)
@@ -864,3 +865,29 @@ def test_multi_source_aggregate_fanin_matches_model(
                 folded_upto[s] = head
     if tl.latest_version(dst) is not None:
         assert _folded(spark, dst) == model(), "final fold"
+
+
+def test_moved_source_resumes_after_agg_prefix_migration(spark, tmp_path):
+    """The remediation sync_aggregate's refusal names: a source whose
+    path moved is re-recorded under its new key with
+    ``migrate_consumer_position(prefix=AGG_TXN_PREFIX)``, after which
+    the next fold applies only the new batch, not the whole history."""
+    old, dst = str(tmp_path / "src_a"), str(tmp_path / "agg")
+    tl.append(_events(spark, [(1, 10.0), (2, 1.5)]), old)
+    tl.append(_events(spark, [(1, 2.25)]), old)
+    inc.sync_aggregate(spark, old, dst, ["user"], ["value"])
+    old_key = tl.source_key(old)
+    new = str(tmp_path / "src_b")
+    os.rename(old, new)
+    with pytest.raises(ValueError, match="migrate_consumer_position"):
+        inc.sync_aggregate(spark, new, dst, ["user"], ["value"])
+    tl.migrate_consumer_position(
+        dst, new, old_key=old_key, prefix=inc.AGG_TXN_PREFIX
+    )
+    assert inc.aggregate_position(dst, new) == tl.latest_version(new)
+    tl.append(_events(spark, [(1, 0.5), (3, 4.0)]), new)
+    v = inc.sync_aggregate(spark, new, dst, ["user"], ["value"])
+    assert v == tl.latest_version(dst)
+    assert _folded(spark, dst) == _recompute(spark, new)
+    assert _folded(spark, dst)[(1,)] == (3, Decimal("12.75"))
+    assert inc.aggregate_position(dst, new) == tl.latest_version(new)

@@ -75,12 +75,9 @@ def test_zorder_repartition_tightens_second_dimension(spark, sf_dir):
 
 
 def test_morton_roundtrip_property(spark):
-    """Hypothesis-style roundtrip: demorton(morton(a, b)) == (a, b) for
-    the full 8-bit grid, evaluated by the actual Spark expressions."""
-    from aws_weather_data_pipeline_spark.operators.layout import (
-        demorton_expr_spark,
-    )
-
+    """Over the full 8-bit grid the Spark interleave is a bijection
+    onto [0, 2^16): no two (a, b) share a code and no code is out of
+    range."""
     df = (
         spark.range(0, 1 << 16)
         .select(
@@ -88,12 +85,8 @@ def test_morton_roundtrip_property(spark):
             F.expr("id div 256").alias("y"),
         )
         .withColumn("z", F.expr(morton_expr_spark("x", "y", 8)))
-        .withColumn("x2", F.expr(demorton_expr_spark("z", 0, 8)))
-        .withColumn("y2", F.expr(demorton_expr_spark("z", 1, 8)))
     )
-    bad = df.filter("x2 <> x OR y2 <> y").count()
-    assert bad == 0
-    # codes are a bijection onto [0, 2^16)
+    assert df.filter("z < 0 OR z >= 65536").count() == 0
     assert df.select("z").distinct().count() == 1 << 16
 
 

@@ -227,28 +227,6 @@ def test_payload_and_features_roundtrip(spark):
     assert rows[2]["first_byte"] == ord("z")
 
 
-def test_frame_sampling_expands_rows_with_stride(spark):
-    import hashlib
-
-    from aws_weather_data_pipeline_spark.functions.multimodal import (
-        FRAME_SCHEMA,
-        sample_frames,
-    )
-
-    # 300 bytes → frames of 64: ceil(300/64)=5 frames, stride 4 keeps
-    # indices 0 and 4; the last frame is ragged (300-256=44 bytes).
-    text = "x" * 300
-    df = spark.createDataFrame([Row(doc_id=7, text=text)])
-    frames = sample_frames(with_binary_payload(df))
-    assert frames.schema == FRAME_SCHEMA
-    rows = {r["frame_idx"]: r for r in frames.collect()}
-    assert sorted(rows) == [0, 4]
-    assert rows[0]["n_frame_bytes"] == 64
-    assert rows[4]["n_frame_bytes"] == 44
-    assert rows[0]["frame_md5"] == hashlib.md5(b"x" * 64).hexdigest()
-    assert rows[4]["frame_md5"] == hashlib.md5(b"x" * 44).hexdigest()
-
-
 def test_resize_downsamples_and_updates_metadata(spark):
     from aws_weather_data_pipeline_spark.functions.multimodal import (
         resize_payload,
@@ -828,53 +806,6 @@ def test_jpeg_grayscale_single_scan_ignores_declared_factors():
     patched = bytearray(b)
     patched[samp_at] = 0x22
     assert decode_media(bytes(patched), "image/jpeg") == ref
-
-
-def test_decode_quarantine_splits_bad_rows_without_killing_stage(spark):
-    # the dead-letter twin: corrupt payloads and codec-less content
-    # types become quarantine rows (NULL stats + decode_error);
-    # clean rows match the strict stage's output exactly
-    from pyspark.sql import functions as F
-
-    from aws_weather_data_pipeline_spark.functions.multimodal import (
-        PPM_QUARANTINE_SCHEMA,
-        decode_image_features,
-        decode_image_features_with_quarantine,
-        with_ppm_payload,
-    )
-
-    clean = with_ppm_payload(
-        spark.createDataFrame(
-            [Row(doc_id=9, text="abcd"), Row(doc_id=3, text="zz")]
-        )
-    ).select("doc_id", "payload", "payload_meta")
-    meta = "named_struct('n_bytes', octet_length(payload), 'content_type', {})"
-    corrupt = spark.createDataFrame(
-        [Row(doc_id=99, payload=b"P6 not really a ppm")]
-    ).select(
-        "doc_id", "payload",
-        F.expr(meta.format("'image/x-portable-pixmap'")).alias(
-            "payload_meta"
-        ),
-    )
-    codecless = clean.limit(1).select(
-        F.lit(98).cast("long").alias("doc_id"), "payload",
-        F.expr(meta.format("'audio/mpeg'")).alias("payload_meta"),
-    )
-    out = decode_image_features_with_quarantine(
-        clean.union(corrupt).union(codecless)
-    )
-    assert out.schema == PPM_QUARANTINE_SCHEMA
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows[99]["decode_error"].startswith("ValueError")
-    assert rows[99]["width"] is None
-    assert rows[98]["decode_error"].startswith("NotImplementedError")
-    # clean rows identical to the strict stage
-    strict = {r["doc_id"]: r for r in decode_image_features(clean).collect()}
-    for did in (9, 3):
-        assert rows[did]["decode_error"] is None
-        for col in ("width", "height", "pixel_byte_sum"):
-            assert rows[did][col] == strict[did][col]
 
 
 def test_decode_media_malformed_input_contract_under_fuzz():

@@ -160,82 +160,6 @@ def test_quarantine_empty_when_all_files_clean(spark, tmp_path):
     assert quarantined.count() == 0
 
 
-def test_orc_roundtrip_pushdown_and_pruning(spark, tmp_path):
-    # ORC interchange at parquet parity: schema survives the round
-    # trip, and both predicate pushdown and column pruning reach the
-    # ORC scan (the scan must not read all 16 columns for a
-    # 2-column projection).
-    from pyspark.sql import Row
-
-    from aws_weather_data_pipeline_spark.sinks.writers import write_orc
-    from aws_weather_data_pipeline_spark.sources.readers import (
-        read_flat_orc,
-    )
-
-    out = str(tmp_path / "flat_orc")
-    df = spark.createDataFrame(
-        [Row(**_reading(0)), Row(**_reading(1))]
-    ).select(*FLAT_COLUMNS)
-    write_orc(df, out)
-
-    back = read_flat_orc(spark, out)
-    assert back.columns == FLAT_COLUMNS
-    assert [f.dataType for f in back.schema.fields] == [
-        f.dataType for f in df.schema.fields
-    ]
-    assert sorted(r["station_id"] for r in back.collect()) == [
-        "WS000",
-        "WS001",
-    ]
-
-    q = back.filter("temperature_celsius > 30.5").select(
-        "station_id", "temperature_celsius"
-    )
-    plan = q._sc._jvm.PythonSQLUtils.explainString(
-        q._jdf.queryExecution(), "formatted"
-    )
-    assert "PushedFilters: [" in plan
-    assert "temperature_celsius" in plan.split("PushedFilters")[1].split(
-        "]"
-    )[0], plan
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "humidity_percent" not in read_schema, read_schema
-    assert q.count() == 1
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    # Additive schema evolution on an append-forever path: files
-    # written before a column existed must read as null for it, newer
-    # files keep their values, and predicate pushdown still reaches
-    # the merged scan.
-    from aws_weather_data_pipeline_spark.sources.tables import (
-        read_parquet_evolving,
-    )
-
-    out = str(tmp_path / "evolving")
-    spark.range(0, 3).selectExpr(
-        "id", "id * 2 AS metric"
-    ).write.mode("append").parquet(out)
-    spark.range(3, 6).selectExpr(
-        "id", "id * 2 AS metric", "'v2' AS producer_version"
-    ).write.mode("append").parquet(out)
-
-    back = read_parquet_evolving(spark, out)
-    assert sorted(back.columns) == ["id", "metric", "producer_version"]
-    rows = {r["id"]: r for r in back.collect()}
-    assert len(rows) == 6
-    assert rows[1]["producer_version"] is None
-    assert rows[4]["producer_version"] == "v2"
-    assert all(rows[i]["metric"] == i * 2 for i in range(6))
-
-    q = back.filter("id >= 4").select("id", "producer_version")
-    plan = q._sc._jvm.PythonSQLUtils.explainString(
-        q._jdf.queryExecution(), "formatted"
-    )
-    assert "PushedFilters: [" in plan
-    assert "GreaterThanOrEqual(id" in plan
-
-
 def test_quarantine_captures_partially_corrupt_envelopes(
     spark, tmp_path
 ):

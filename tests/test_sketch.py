@@ -275,37 +275,6 @@ def test_mg_partial_guarantee_and_error_bound(spark):
         assert t - err <= lb <= t, (key, lb, t)
 
 
-def test_mg_merge_keeps_guarantee_and_size(spark):
-    # Merging per-partition summaries (misra_gries_merge) must keep
-    # the global guarantee and the <=k size bound even when no single
-    # partition sees the key as heavy.
-    from pyspark.sql import Row
-
-    from aws_weather_data_pipeline_spark.plans.sketch import (
-        misra_gries_merge,
-        misra_gries_partials,
-    )
-
-    k = 5
-    # 'hot' is spread evenly so each of 8 partitions sees only a
-    # slice of it alongside local noise.
-    stream = ["hot"] * 800 + [f"noise{i % 97}" for i in range(1200)]
-    n = len(stream)
-    df = spark.createDataFrame(
-        [Row(key=x) for x in stream]
-    ).repartition(8)
-    merged = {
-        r["key"]: r["lower_bound"]
-        for r in misra_gries_merge(
-            misra_gries_partials(df, "key", k), k
-        ).collect()
-    }
-    assert len(merged) <= k
-    assert "hot" in merged  # 800 > 2000/6
-    assert merged["hot"] <= 800
-    assert merged["hot"] >= 800 - n / (k + 1)
-
-
 def test_mg_two_pass_equals_exact_on_random_streams(spark):
     # Property: for random skewed streams, any k, any partitioning,
     # the 2-pass plan (candidates from partial summaries + exact

@@ -86,3 +86,26 @@ def test_salting_refuses_preexisting_salt_column(spark):
         salted_join(build, probe, "k", salt_from="d")
     with pytest.raises(ValueError, match="_salt"):
         salted_collect_list(probe, "k", "v", salt_from="v")
+
+
+def test_salting_refuses_non_positive_n_salts(spark):
+    """``pmod(hash, n)`` with n < 1 gives salts the build side never
+    carries (an inner join drops probe rows, a left join loses their
+    match) or a remainder-by-zero inside a task: refuse up front."""
+    import pytest
+
+    probe = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 12)], "k int, id int"
+    )
+    build = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    for n in (0, -2):
+        for how in ("inner", "left"):
+            with pytest.raises(ValueError, match="n_salts"):
+                salted_join(
+                    probe, build, "k", n_salts=n, salt_from="id", how=how
+                )
+        with pytest.raises(ValueError, match="n_salts"):
+            salted_collect_list(probe, "k", "id", n_salts=n, salt_from="id")
+    # n_salts=1 is the unsalted plan and stays allowed
+    one = salted_join(probe, build, "k", n_salts=1, salt_from="id")
+    assert one.count() == 3

@@ -1282,26 +1282,6 @@ def test_delete_where_noop_replay_and_empty_prune(spark, tmp_path):
     assert tl.latest_version(table) == v
 
 
-def test_maybe_compact_triggers_only_above_threshold(spark, tmp_path):
-    """The small-file maintenance policy: no-op below max_files, one
-    atomic compaction above it, trigger resets after, and the change
-    feed / sync positions are untouched (compaction contributes
-    nothing to read_changes)."""
-    table = str(tmp_path / "t")
-    for lo in range(0, 6, 2):  # 3 append commits, >=3 files
-        tl.append(_frame(spark, lo, lo + 2), table)
-    n_live = len(tl.files_for(table))
-    assert tl.maybe_compact(spark, table, max_files=n_live) is None
-    v = tl.maybe_compact(spark, table, max_files=n_live - 1)
-    assert v == tl.latest_version(table)
-    assert len(tl.files_for(table)) == 1
-    assert _values(tl.read_snapshot(spark, table)) == list(range(6))
-    # trigger reset: the compacted table is below threshold again
-    assert tl.maybe_compact(spark, table, max_files=n_live - 1) is None
-    # feed consumers skip the compaction commit entirely
-    assert tl.read_changes(spark, table, v - 1) is None
-
-
 def test_delete_where_null_condition_rows_survive(spark, tmp_path):
     """SQL DELETE three-valued logic: only condition=TRUE rows go;
     a NULL-condition row survives (review r09 — filter(~expr) alone

@@ -1,5 +1,6 @@
 """The measuring and checking scripts (``bench.py``, ``tools/*.py``)
-import cleanly and build their Spark session in one place.
+import cleanly and build their Spark session in one place, and every
+package function has a caller or a documented reason to exist.
 
 No Spark session is started: the no-argument usage paths return before
 any session exists.
@@ -76,3 +77,93 @@ def test_sessions_only_built_by_bench_session_or_driver_sim():
     assert not offenders, (
         "build the session with bench.bench_session: " + "; ".join(offenders)
     )
+
+
+#: Package entry points that no package, tool or bench code calls but
+#: that belong to the documented product surface, with the reason each
+#: stays. Everything else must have a caller outside its own body.
+PRODUCT_SURFACE = {
+    "sources.rest.poll_to_dataframe": "S2: the REST poll as a frame",
+    "sources.rest.poll_to_landing_dir": "S9: the REST poll landed as JSON",
+    "sources.readers.read_flat_csv": "S6: the processed-CSV scan",
+    "sources.readers.read_raw_json_with_quarantine":
+        "S4: the raw-JSON dead letter",
+    "sinks.writers.write_partitioned": "S7: the partitioned parquet sink",
+    "sinks.serving.to_serving_schema": "the reference's Postgres load",
+    "sinks.serving.jdbc_append_missing": "the reference's Postgres load",
+    "sinks.tablelog.compact": "the table log's one atomic compaction",
+    "sinks.tablelog.delete_where": "the table log's row delete",
+    "sinks.tablelog.migrate_consumer_position":
+        "the remedy require_known_source's refusal names",
+    "plans.views.register_catalog_views": "the SURVEY §1 derived views",
+    "plans.text.bpe_encode_corpus": "BPE encoding with its DuckDB oracle",
+    "plans.sketch.hll_estimate": "read side of the catalog's HLL sketch",
+    "plans.sketch.cms_estimate": "read side of the catalog's CMS sketch",
+    "plans.sketch.cms_columns": "read side of the catalog's CMS sketch",
+    "operators.layout.morton_code":
+        "the Python reference the Spark interleave is tested against",
+    "streaming.pipeline.start_quarantine_stream":
+        "S4: the streaming dead letter",
+    "streaming.pipeline.start_tablelog_sink": "the stream into a table log",
+    "streaming.windows.read_stream_events": "stream = batch, pinned by tests",
+    "streaming.windows.windowed_event_counts":
+        "stream = batch, pinned by tests",
+}
+
+PACKAGE = os.path.join(ROOT, "aws_weather_data_pipeline_spark")
+
+
+def _referenced_names(paths: list[str]) -> dict[str, list[tuple[str, int]]]:
+    """Every Name, Attribute and imported name in ``paths``, with the
+    file and line it appears on."""
+    refs: dict[str, list[tuple[str, int]]] = {}
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            refs.setdefault(name, []).append((path, node.lineno))
+    return refs
+
+
+def test_every_package_function_has_a_caller():
+    package = sorted(
+        glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
+    )
+    callers = package + SCRIPTS + [
+        p for p in sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
+        if not os.path.basename(p).startswith("test_")
+    ] + [os.path.join(ROOT, "__spark_entry__.py")]
+    refs = _referenced_names(callers)
+    defined, uncalled = set(), []
+    for path in package:
+        module = os.path.relpath(path, PACKAGE)[:-3].replace(os.sep, ".")
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in tree.body:
+            # catalog queries register by decorator: the catalog calls them
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or node.decorator_list:
+                continue
+            qualified = f"{module}.{node.name}"
+            defined.add(qualified)
+            called = any(
+                p != path or not node.lineno <= line <= node.end_lineno
+                for p, line in refs.get(node.name, ())
+            )
+            if not called and qualified not in PRODUCT_SURFACE:
+                uncalled.append(qualified)
+    assert not uncalled, (
+        "no caller outside tests; delete, or add to PRODUCT_SURFACE "
+        f"with its reason: {uncalled}"
+    )
+    stale = sorted(set(PRODUCT_SURFACE) - defined)
+    assert not stale, f"PRODUCT_SURFACE names what no longer exists: {stale}"

@@ -51,3 +51,18 @@ def test_filters_push_through_views(spark, sf_dir):
     # Catalyst optimizes through the view: the literal predicate
     # reaches the parquet scan as a pushed filter.
     assert "EqualTo(event_id,42)" in plan
+
+
+def test_unknown_view_name_raises_before_registering(spark, sf_dir):
+    import pytest
+
+    for view in ("events", "weather_current_status"):
+        spark.catalog.dropTempView(view)
+    with pytest.raises(ValueError, match="weather_curent_status"):
+        register_catalog_views(
+            spark,
+            sf_dir,
+            names=["weather_current_status", "weather_curent_status"],
+        )
+    assert not spark.catalog.tableExists("events")
+    assert not spark.catalog.tableExists("weather_current_status")
