@@ -18,18 +18,18 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def dec(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
-    """Cast a (double) column to an exact DECIMAL(precision, scale)."""
+def dec(col: Column | str) -> Column:
+    """Cast a (double) column to an exact DECIMAL(18, 2)."""
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({precision},{scale})")
+    return c.cast("decimal(18,2)")
 
 
-def dsum(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
+def dsum(col: Column | str) -> Column:
     """Order-independent SUM of a double column, returned as double."""
-    return F.sum(dec(col, scale, precision)).cast("double")
+    return F.sum(dec(col)).cast("double")
 
 
-def davg(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
+def davg(col: Column | str) -> Column:
     """Order-independent AVG as exact-sum / count, returned as double.
 
     Written as SUM/COUNT (not F.avg) because Spark's decimal AVG widens
@@ -37,7 +37,7 @@ def davg(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
     this form is the one both engines agree on bit-for-bit.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(dec(c, scale, precision)).cast("double") / F.count(c)
+    return F.sum(dec(c)).cast("double") / F.count(c)
 
 
 def cnt_when(pred: Column) -> Column:

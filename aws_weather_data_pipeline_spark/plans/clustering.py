@@ -161,10 +161,8 @@ _FINAL_ASSIGN = f"a{KMEANS_ITERATIONS}"
     "2 rounds keep the oracle CTE chain finite.",
     tags=("similarity", "embedding", "iterative"),
 )
-def kmeans_lloyd_assignments(
-    spark: SparkSession, sf_dir: str, k: int = KMEANS_K
-) -> DataFrame:
-    return _kmeans_assign(spark, sf_dir, k, keep_v=False)
+def kmeans_lloyd_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _kmeans_assign(spark, sf_dir, KMEANS_K, keep_v=False)
 
 
 def _kmeans_assign(

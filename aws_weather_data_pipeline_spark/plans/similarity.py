@@ -507,9 +507,7 @@ EDIT_THRESHOLD = 16
     "metrics costs one extra projection, not a new join.",
     tags=("similarity", "dedup", "join"),
 )
-def near_dup_pairs_editdist(
-    spark: SparkSession, sf_dir: str, max_bucket: int | None = None
-) -> DataFrame:
+def near_dup_pairs_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _with_shingles(_docs(spark, sf_dir))
     # Same recompute hazard as near_dup_pairs_minhash: the band
     # self-join is two branches over the signature pipeline.
@@ -517,22 +515,19 @@ def near_dup_pairs_editdist(
     with cached(sigs) as sigs, ExitStack() as stack:
         sigs.count()
         return detach(
-            near_dup_pairs_editdist_plan(
-                sigs, _docs(spark, sf_dir), max_bucket, stack
-            )
+            near_dup_pairs_editdist_plan(sigs, _docs(spark, sf_dir), stack)
         )
 
 
 def near_dup_pairs_editdist_plan(
     sigs: DataFrame,
     docs: DataFrame,
-    max_bucket: int | None = None,
     stack: ExitStack | None = None,
 ) -> DataFrame:
     """The lazy edit-distance pairs plan over ``sigs`` (doc_id,
     MinHash signature) and ``docs`` (doc_id, text); ``stack`` as in
     ``_minhash_candidates``."""
-    cand = _minhash_candidates(sigs, max_bucket, stack)
+    cand = _minhash_candidates(sigs, stack=stack)
     ta = docs.select(
         F.col("doc_id").alias("doc_a"),
         F.substring("text", 1, EDIT_PREFIX).alias("txt_a"),

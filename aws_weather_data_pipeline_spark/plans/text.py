@@ -49,25 +49,23 @@ QUALITY_MIN_AVG_LEN = 2
 QUALITY_MAX_AVG_LEN = 8
 
 
-def quality_gate_sql(tokens: str = "tokens", text: str = "text") -> str:
-    """DuckDB predicate for the document quality gate, over a
-    tokens-array expression and the raw text column."""
+def quality_gate_sql() -> str:
+    """DuckDB predicate for the document quality gate, over the
+    ``tokens`` array and the raw ``text`` column."""
     return (
-        f"(len({tokens}) BETWEEN {QUALITY_MIN_TOKENS}"
+        f"(len(tokens) BETWEEN {QUALITY_MIN_TOKENS}"
         f" AND {QUALITY_MAX_TOKENS})"
-        f" AND (CAST(length({text}) - (len({tokens}) - 1) AS DOUBLE)"
-        f" / len({tokens}) BETWEEN {QUALITY_MIN_AVG_LEN}"
+        " AND (CAST(length(text) - (len(tokens) - 1) AS DOUBLE)"
+        f" / len(tokens) BETWEEN {QUALITY_MIN_AVG_LEN}"
         f" AND {QUALITY_MAX_AVG_LEN})"
-        f" AND (len(list_filter({tokens}, x -> x IN {_STOP_SQL})) > 0)"
+        f" AND (len(list_filter(tokens, x -> x IN {_STOP_SQL})) > 0)"
     )
 
 
-def quality_signal_cols(
-    tokens: str = "tokens", text: str = "text"
-) -> tuple[F.Column, F.Column, F.Column, F.Column]:
+def quality_signal_cols() -> tuple[F.Column, F.Column, F.Column, F.Column]:
     """The ONE Spark-side definition of the quality-gate inputs —
     ``(n_tokens, stop_hits, avg_token_len, passes_quality)`` Column
-    expressions over a tokens-array column and the raw text column,
+    expressions over the ``tokens`` array and the raw ``text`` column,
     mirroring ``quality_gate_sql`` (the oracle side).
 
     Shared by doc_quality_scores and corpus_build_manifest (ADVICE
@@ -76,9 +74,9 @@ def quality_signal_cols(
     would have silently desynchronized the two Spark sites).
     Expression-level — sharing it adds no plan node.
     """
-    n = F.size(tokens)
-    stop_hits = F.size(F.filter(tokens, lambda x: x.isin(*STOPWORDS)))
-    avg_len = (F.length(text) - (n - 1)).cast("double") / n
+    n = F.size("tokens")
+    stop_hits = F.size(F.filter("tokens", lambda x: x.isin(*STOPWORDS)))
+    avg_len = (F.length("text") - (n - 1)).cast("double") / n
     gate = (
         n.between(QUALITY_MIN_TOKENS, QUALITY_MAX_TOKENS)
         & avg_len.between(QUALITY_MIN_AVG_LEN, QUALITY_MAX_AVG_LEN)
@@ -410,9 +408,7 @@ def doc_winnowing_fingerprints(
     return winnow_fingerprints(_tokens(_docs(spark, sf_dir)))
 
 
-def winnow_fingerprints(
-    d: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_fingerprints(d: DataFrame) -> DataFrame:
     """(doc_id, pos, fp) winnowing fingerprints for any frame with a
     ``tokens`` array column. See the catalog entry's doc.
 
@@ -432,27 +428,26 @@ def winnow_fingerprints(
     other text operator (TF-IDF, n-gram decontamination) already has
     at 100 TB.
     """
-    d = d.filter(F.size("tokens") >= k + w - 1)
+    d = d.filter(F.size("tokens") >= WINNOW_K + WINNOW_W - 1)
     # tokens[] is 0-based in Spark (1-based in the DuckDB twin, hence
     # the index shift in the oracle SQL). The shingle concat is
-    # GENERATED over k tokens — a hard-coded 3-token concat would
-    # silently produce 3-gram hashes under 4-gram window accounting
-    # for any other k (review r06). m (shingle count) is analytic
-    # (size - k + 1), carried through the explode instead of a second
-    # unbounded count window over every doc partition.
-    shingle = ", ".join(f"tokens[i+{j}]" for j in range(k))
+    # GENERATED from WINNOW_K, so the shingle width and the window
+    # accounting cannot disagree. m (shingle count) is analytic
+    # (size - WINNOW_K + 1), carried through the explode instead of a
+    # second unbounded count window over every doc partition.
+    shingle = ", ".join(f"tokens[i+{j}]" for j in range(WINNOW_K))
     sh = d.select(
         "doc_id",
-        (F.size("tokens") - k + 1).alias("m"),
+        (F.size("tokens") - WINNOW_K + 1).alias("m"),
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, size(tokens) - {k}), i -> "
+                f"transform(sequence(0, size(tokens) - {WINNOW_K}), i -> "
                 f"md5(concat_ws(' ', {shingle})))"
             )
         ).alias("p", "h"),
     )
     win = (
-        W.partitionBy("doc_id").orderBy("p").rowsBetween(0, w - 1)
+        W.partitionBy("doc_id").orderBy("p").rowsBetween(0, WINNOW_W - 1)
     )
     sel = sh.withColumn(
         "mn",
@@ -464,7 +459,7 @@ def winnow_fingerprints(
     # shingle index of the selected hash. Row-level distinct (not
     # array_distinct) so the DuckDB twin can mirror it.
     return (
-        sel.filter(F.col("p") <= F.col("m") - w)
+        sel.filter(F.col("p") <= F.col("m") - WINNOW_W)
         .select(
             "doc_id",
             (-F.col("mn.nj") + 1).cast("int").alias("pos"),

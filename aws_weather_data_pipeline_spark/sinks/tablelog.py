@@ -19,11 +19,12 @@ log-structured table idea behind Delta Lake and Iceberg:
 - Commits are ATOMIC and OPTIMISTICALLY CONCURRENT: the manifest is
   written to a temp name and published with ``os.link`` — creating
   version N fails with EEXIST if another writer got there first, and
-  the loser re-reads the new head and rebases (append/compact) or
-  aborts (blind overwrite). On a POSIX filesystem link-if-absent is
-  atomic; on an object store the same protocol needs the store's
-  put-if-absent primitive (S3 conditional PUT, GCS generation
-  preconditions) — the seam is ``_publish``.
+  the loser re-reads the new head and rebases (append, compact,
+  delete_where, merge_changes) or aborts (blind overwrite, restore).
+  On a POSIX filesystem link-if-absent is atomic; on an object store
+  the same protocol needs the store's put-if-absent primitive (S3
+  conditional PUT, GCS generation preconditions) — the seam is
+  ``_publish``, which only ``_commit`` calls.
 - Old manifests are retained, so any historical version is readable
   (``read_snapshot(version=k)`` — time travel) until ``vacuum``
   drops its files.
@@ -103,11 +104,13 @@ def _check_cdc_collisions(cols, where: str, extra: tuple = ()) -> None:
         )
 
 
-#: Retry budget for rebasable commits (append/compact) losing the
-#: publish race. Conflicts are per-table and resolution is one small
-#: JSON read, so a handful of retries rides out realistic contention;
-#: past that, something is misconfigured (e.g. an unbounded writer
-#: fleet on one table) and failing loudly beats spinning.
+#: Retry budget for rebasable commits (append, compact, delete_where,
+#: merge_changes) losing the publish race in ``_commit``, and for
+#: ``sync_changes``' re-read loop. Conflicts are per-table and
+#: resolution is one small JSON read, so a handful of retries rides
+#: out realistic contention; past that, something is misconfigured
+#: (e.g. an unbounded writer fleet on one table) and failing loudly
+#: beats spinning.
 MAX_COMMIT_RETRIES = 10
 
 #: How many newest manifests the txn-id replay scan reads. Scanning
@@ -155,6 +158,16 @@ def latest_version(table: str) -> int | None:
     """Current head version, or None for a not-yet-created table."""
     versions = _list_versions(table)
     return versions[-1] if versions else None
+
+
+def _resolve_version(table: str, version: int | None) -> int:
+    """``version``, or the head when None; a table with no commits
+    raises FileNotFoundError."""
+    if version is None:
+        version = latest_version(table)
+        if version is None:
+            raise FileNotFoundError(f"no commits in table {table}")
+    return version
 
 
 def _read_manifest(table: str, version: int) -> dict:
@@ -642,16 +655,19 @@ def _commit(
     rebase: bool,
     require_head: int | None = None,
 ) -> int:
-    """Run one optimistic commit round: resolve head, build the new
-    (files, stats) from the head manifest, publish head+1; on a lost
-    race either rebase (re-resolve and retry) or raise. Returns the
-    committed version, or the already-committed version for a
-    replayed ``txn_id``. ``require_head`` turns the commit into a
-    compare-and-set: it only lands if the head is still exactly that
-    version (head-sentinel -1 for "table must not exist yet"), else
-    CommitConflict — the primitive for read-modify-write callers
-    whose WRITE depends on what they READ (sync_changes), where a
-    blind rebase would double-apply.
+    """The table log's one optimistic-commit loop; every committing
+    operation passes its ``build(prev)``. Each round resolves the
+    head, builds the new (files, stats[, extra manifest fields]) from
+    the head manifest (None for an empty table), and publishes
+    head+1; on a lost race it either rebases (re-resolves and
+    rebuilds) or raises. Returns the committed version, or the
+    already-committed version for a replayed ``txn_id``.
+    ``require_head`` turns the commit into a compare-and-set: it only
+    lands if the head is still exactly that version (head-sentinel -1
+    for "table must not exist yet"), else CommitConflict — the
+    primitive for read-modify-write callers whose WRITE depends on
+    what they READ (sync_changes), where a blind rebase would
+    double-apply.
     """
     _check_txn_id(txn_id)
     for _ in range(MAX_COMMIT_RETRIES):
@@ -882,10 +898,7 @@ def files_for(
             "where must be (col, lo, hi) for a range prune or "
             f"(col, 'isnull'|'notnull') for a null prune; got {where!r}"
         )
-    if version is None:
-        version = latest_version(table)
-        if version is None:
-            raise FileNotFoundError(f"no commits in table {table}")
+    version = _resolve_version(table, version)
     # Manifest FIRST (review r12 #3): an expired version must get the
     # standard no-manifest error even if a marker briefly outlives it
     # (pre-sweep orphan, or a vacuum racing this read) — a damage
@@ -987,10 +1000,7 @@ def read_snapshot(
     # landing between the two files_for calls would hand the empty
     # frame a DIFFERENT snapshot's schema — breaking the promised
     # "same schema the unpruned read would produce".
-    if version is None:
-        version = latest_version(table)
-        if version is None:
-            raise FileNotFoundError(f"no commits in table {table}")
+    version = _resolve_version(table, version)
     names = files_for(table, version, where)
     if not names and where is not None:
         # Pruning is an OPTIMIZATION: a range that excludes every
@@ -1044,23 +1054,20 @@ def compact(
     shuffles by design (one repartitionByRange); that is the price of
     re-clustering and is paid once per maintenance run, not per
     query. Readers of any in-flight version are untouched: their
-    files are still on disk until vacuum. Lost races rebase by
-    RE-COMPACTING the new head (files appended meanwhile must not be
-    dropped), which re-runs the job — correct first, and rare enough
-    not to matter.
+    files are still on disk until vacuum.
+
+    Concurrency: recompute-on-conflict through ``_commit``.
     """
-    _check_txn_id(txn_id)
-    for _ in range(MAX_COMMIT_RETRIES):
-        head = latest_version(table)
-        if head is None:
+
+    def build(prev):
+        if prev is None:
             raise FileNotFoundError(f"no commits in table {table}")
-        replayed = _replayed_version(table, txn_id)
-        if replayed is not None:
-            return replayed  # orchestrator retry: already committed
         # merge_schema: a rewrite that read only the first file's
         # schema would silently DROP columns a later append introduced
         # and make the loss permanent at the next vacuum (review r08)
-        snapshot = read_snapshot(spark, table, head, merge_schema=True)
+        snapshot = read_snapshot(
+            spark, table, prev["version"], merge_schema=True
+        )
         if zorder_by is not None:
             from ..operators.layout import MAX_BITS, zorder_repartition
 
@@ -1069,24 +1076,15 @@ def compact(
             )
         else:
             frame = snapshot.coalesce(n_files)
-        merged, merged_stats = _write_data_files(frame, table)
-        manifest = {
-            "version": head + 1,
-            "op": "compact",
-            "files": merged,
-            "stats": merged_stats,
-            "txn_id": txn_id,
+        files, stats = _write_data_files(frame, table)
+        return files, stats, {
             "zorder_by": list(zorder_by) if zorder_by else None,
             # a rewrite changes files, never the column contract:
             # carry the declared schema so append keeps enforcing it
-            "schema": _read_manifest(table, head)["schema"],
+            "schema": prev["schema"],
         }
-        try:
-            _publish(table, head + 1, manifest)
-            return head + 1
-        except CommitConflict:
-            continue  # head moved: orphan `merged`, re-compact new head
-    raise CommitConflict(f"compact on {table} kept losing the race")
+
+    return _commit(table, build, "compact", txn_id, rebase=True)
 
 
 def restore(table: str, version: int, txn_id: str | None = None) -> int:
@@ -1419,10 +1417,7 @@ def snapshot_row_count(table: str, version: int | None = None) -> int:
     pruning and ``column_minmax`` on that one column just never
     engage).
     """
-    if version is None:
-        version = latest_version(table)
-        if version is None:
-            raise FileNotFoundError(f"no commits in table {table}")
+    version = _resolve_version(table, version)
     manifest = _read_manifest(table, version)
     return sum(manifest["stats"][n]["__rows"] for n in manifest["files"])
 
@@ -1442,10 +1437,7 @@ def column_minmax(
     the scan-side MIN/MAX differs — it means metadata cannot prove
     it. Empty snapshots return None for the same reason.
     """
-    if version is None:
-        version = latest_version(table)
-        if version is None:
-            raise FileNotFoundError(f"no commits in table {table}")
+    version = _resolve_version(table, version)
     manifest = _read_manifest(table, version)
     stats = manifest["stats"]
     if col in _RESERVED_STATS:
@@ -1487,10 +1479,7 @@ def column_null_count(
     null-backfill on read) counts as all-NULL there via the file's
     row count.
     """
-    if version is None:
-        version = latest_version(table)
-        if version is None:
-            raise FileNotFoundError(f"no commits in table {table}")
+    version = _resolve_version(table, version)
     if col in _RESERVED_STATS:
         return None
     manifest = _read_manifest(table, version)
@@ -1548,27 +1537,20 @@ def delete_where(
     commit is a rewrite whose row-level delta was never recorded and
     the change feed refuses it loudly.
 
-    Concurrency: computed against the head snapshot and recomputed on
-    a lost race (a rewrite must not discard the interleaved commit);
-    replayed ``txn_id`` is a no-op. Old versions stay readable until
-    vacuum — DELETE here is logical removal from the new snapshot,
-    not data destruction, which is exactly what GDPR-style physical
-    erasure needs to follow up with: ``vacuum`` after retention
-    expires the old versions that still contain the rows.
+    Concurrency: recompute-on-conflict through ``_commit``. Old
+    versions stay readable until vacuum — DELETE here is logical
+    removal from the new snapshot, not data destruction, which is
+    exactly what GDPR-style physical erasure needs to follow up with:
+    ``vacuum`` after retention expires the old versions that still
+    contain the rows.
     """
     from pyspark.sql import functions as F
 
-    _check_txn_id(txn_id)
-    for _ in range(MAX_COMMIT_RETRIES):
-        head = latest_version(table)
-        if head is None:
+    def build(prev):
+        if prev is None:
             raise FileNotFoundError(f"no commits in table {table}")
-        replayed = _replayed_version(table, txn_id)
-        if replayed is not None:
-            return replayed
-        manifest_prev = _read_manifest(table, head)
-        all_names = manifest_prev["files"]
-        candidates = set(files_for(table, head, prune))
+        all_names = prev["files"]
+        candidates = set(files_for(table, prev["version"], prune))
         kept = [n for n in all_names if n not in candidates]
         new_files: list[str] = []
         new_stats: dict[str, dict] = {}
@@ -1622,29 +1604,21 @@ def delete_where(
                         w_stats[name]["__rows"] for name in written
                     )
                     cdc_files = written if n_deleted else []
-        prev_stats = manifest_prev["stats"]
         manifest = {
-            "version": head + 1,
-            "op": "delete",
-            "files": kept + new_files,
-            "stats": {
-                **{n: prev_stats[n] for n in kept},
-                **new_stats,
-            },
-            "txn_id": txn_id,
             "condition": condition,
             # deletion changes rows, never columns: carry the schema
             # so enforcement survives the maintenance op
-            "schema": manifest_prev["schema"],
+            "schema": prev["schema"],
         }
         if cdc_files is not None:
             manifest["cdc_files"] = cdc_files
-        try:
-            _publish(table, head + 1, manifest)
-            return head + 1
-        except CommitConflict:
-            continue  # head moved: recompute against the new snapshot
-    raise CommitConflict(f"delete on {table} kept losing the race")
+        return (
+            kept + new_files,
+            {**{n: prev["stats"][n] for n in kept}, **new_stats},
+            manifest,
+        )
+
+    return _commit(table, build, "delete", txn_id, rebase=True)
 
 
 def merge_changes(
@@ -1653,7 +1627,6 @@ def merge_changes(
     changes: DataFrame,
     keys: list[str],
     order_cols: list[str],
-    op_col: str = "op",
     txn_id: str | None = None,
     write_changefeed: bool = False,
     evolve_schema: bool = False,
@@ -1665,8 +1638,8 @@ def merge_changes(
     ``cdc_merge_plan`` — see its oracle-checked catalog entry
     ``cdc_merge_apply``).
 
-    ``changes`` carries the table's data columns plus ``op_col`` in
-    {'U', 'D'} ('U' upserts, 'D' deletes; an insert is a 'U' on an
+    ``changes`` carries the table's data columns plus an ``op`` column
+    in {'U', 'D'} ('U' upserts, 'D' deletes; an insert is a 'U' on an
     absent key, a 'D' on an absent key is a no-op). Multiple changes
     per key collapse to the LAST by ``order_cols`` (last-writer-wins
     — deterministic under feed reordering, the step per-row upserts
@@ -1675,20 +1648,11 @@ def merge_changes(
     either the whole batch or none of it, and the previous version
     remains time-travelable.
 
-    Concurrency: computed against the head snapshot; if another
-    commit lands first, the merge RECOMPUTES against the new head
-    (the rewrite must not discard the interleaved commit) — the
-    orphaned first attempt is vacuum-swept. At 100 TB the rewrite
-    narrows to the files ``files_for`` selects by the batch's key
-    range; the commit protocol is unchanged. ``require_head`` turns
-    the merge into a compare-and-set instead: it only lands on
-    exactly that head, else CommitConflict — for callers whose BATCH
-    was derived from the head they read (the keyed ``sync_changes``
-    path, review r10: without it a stale racer's merge could land
-    after a fresher sync and regress keys to older values until the
-    next poll).
+    Concurrency: recompute-on-conflict through ``_commit``;
+    ``require_head`` makes it a compare-and-set for callers whose
+    batch was derived from the head they read (``sync_changes``).
 
-    ``op_col`` values are validated eagerly: a NULL op or anything
+    ``op`` values are validated eagerly: a NULL op or anything
     outside {'U', 'D'} raises before any rewrite — a lowercase 'd'
     silently upserting rows the feed meant to delete is the bug this
     catches (review r10).
@@ -1717,182 +1681,160 @@ def merge_changes(
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    _check_txn_id(txn_id)
+    _check_txn_id(txn_id)  # before the op probe below runs a Spark job
+
+    def build(prev):
+        if prev is None:
+            raise FileNotFoundError(f"no commits in table {table}")
+        # merge_schema: like compact, the rewrite must carry columns
+        # any append has introduced, or the merge commits their loss
+        base = read_snapshot(
+            spark, table, prev["version"], merge_schema=True
+        )
+        data_cols = base.columns
+        if evolve_schema:
+            meta_cols = {"op", *order_cols}
+            new_cols = [
+                c
+                for c in changes.columns
+                if c not in data_cols and c not in meta_cols
+            ]
+            for cname in new_cols:
+                base = base.withColumn(
+                    cname,
+                    F.lit(None).cast(changes.schema[cname].dataType),
+                )
+            data_cols = data_cols + new_cols
+        missing = [
+            c
+            for c in data_cols + ["op"] + list(order_cols)
+            if c not in changes.columns
+        ]
+        if missing:
+            raise ValueError(f"change batch lacks columns {missing}")
+        if write_changefeed:
+            # the feed fabricates _change_type over the data columns;
+            # a real data column of that name would be clobbered in
+            # the cdc output and double-tagged on read (review r11)
+            _check_cdc_collisions(
+                data_cols, f"merge_changes({table!r} changefeed)"
+            )
+        w = W.partitionBy(*keys).orderBy(
+            *[F.col(c).desc() for c in order_cols]
+        )
+        # order_cols may be change-feed metadata (an LSN, a batch
+        # sequence) that is NOT a table column — keep them through the
+        # dedup window, drop them after (caught by the model-based
+        # property test; the original select dropped them first and
+        # the window failed to resolve).
+        extra = [c for c in order_cols if c not in data_cols]
+        last = (
+            changes.select("op", *data_cols, *extra)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn", *extra)
+        )
+        # a literal marker (not key-null-ness) tells the CDC
+        # classifier whether a base row matched: NULL keys never
+        # equi-join, and a data column could legitimately be NULL
+        b = (
+            base.withColumn("__b", F.lit(True)) if write_changefeed
+            else base
+        ).alias("b")
+        c = last.alias("c")
+        cond = None
+        for k in keys:
+            eq = F.col(f"b.{k}") == F.col(f"c.{k}")
+            cond = eq if cond is None else cond & eq
+        changed = F.col("c.op").isNotNull()
+        # persist + count in EVERY branch: the count MATERIALIZES the
+        # join at its full shuffle parallelism BEFORE the coalesced
+        # writes below — coalesce is a narrow dependency, so without
+        # this the whole reduce stage (join fetch+sort, CDC dedup,
+        # cache fill) would run at n_out tasks, funneling a 10 GB
+        # batch merged into a 50 MB table through ONE task. The count
+        # also gives the exact output row bound the file sizing
+        # needs, and with the changefeed it additionally keeps the
+        # scan-once contract — both outputs read the cache. A retry
+        # recounts: it joins the new head's base.
+        with cached(b.join(c, cond, "full")) as joined:
+            # size both rewrite outputs by estimated bytes, never
+            # core count (see _merge_output_partitions)
+            n_out = _merge_output_partitions(prev, joined.count())
+            merged = joined.filter(
+                ~changed | (F.col("c.op") != "D")
+            ).select(
+                *[
+                    F.when(changed, F.col(f"c.{col}"))
+                    .otherwise(F.col(f"b.{col}"))
+                    .alias(col)
+                    for col in data_cols
+                ]
+            ).coalesce(n_out)
+            files, stats = _write_data_files(merged, table)
+            # the merged frame's schema is the post-merge column union
+            # (base + evolved change columns): record it so enforcement
+            # survives the rewrite
+            manifest = {"schema": merged.schema.jsonValue()}
+            if write_changefeed:
+                # Effective changes only: a 'D' on an absent key
+                # changed nothing and must not be replayed downstream;
+                # a 'U' is an update iff a base row matched.
+                b_present = F.col("b.__b").isNotNull()
+                effective = joined.filter(
+                    changed & ((F.col("c.op") != "D") | b_present)
+                ).select(
+                    *[F.col(f"c.{col}").alias(col) for col in data_cols],
+                    F.when(F.col("c.op") == "D", F.lit("delete"))
+                    .when(b_present, F.lit("update"))
+                    .otherwise(F.lit("insert"))
+                    .alias("_change_type"),
+                )
+                # the effective feed is a subset of the rewrite (plus
+                # the type tag): same sizing
+                cdc_files, cdc_stats = _write_data_files(
+                    effective.coalesce(n_out), table
+                )
+                # a merge whose every change was ineffective (e.g. a
+                # batch of 'D' ops on absent keys — routine under
+                # at-least-once feeds) must record an EMPTY feed, not
+                # 0-row files: read_changes' idle signal (None) is
+                # what stops a downstream keyed sync from a pointless
+                # full rewrite — the delete_where guard, applied here
+                # too (review r11). Counts come from the write's own
+                # stats, no second footer pass.
+                n_changed = sum(
+                    cdc_stats[name]["__rows"] for name in cdc_files
+                )
+                manifest["cdc_files"] = cdc_files if n_changed else []
+        return files, stats, manifest
+
     # persist: the op-validation probe, the window dedup, and the
     # per-retry join otherwise each re-evaluate the batch lineage
     # from scratch — for the sync path that is a re-read of every
     # cdc/added file in the range per evaluation
     with cached(changes) as changes:
-        if op_col in changes.columns:
-            # eager, bounded: one limit(1) probe over the batch — a merge
-            # applying misclassified ops (NULL, 'd', 'delete') must fail
-            # loudly before rewriting anything
+        if "op" in changes.columns:
+            # eager, bounded: one limit(1) probe over the batch — a
+            # merge applying misclassified ops (NULL, 'd', 'delete')
+            # must fail loudly before rewriting anything
             bad = (
                 changes.filter(
-                    F.col(op_col).isNull()
-                    | ~F.col(op_col).isin("U", "D")
+                    F.col("op").isNull() | ~F.col("op").isin("U", "D")
                 )
-                .select(op_col)
+                .select("op")
                 .limit(1)
                 .collect()
             )
             if bad:
                 raise ValueError(
-                    f"change batch has invalid {op_col!r} value "
-                    f"{bad[0][0]!r}: ops must be 'U' or 'D' and non-null"
+                    f"change batch has invalid 'op' value {bad[0][0]!r}: "
+                    "ops must be 'U' or 'D' and non-null"
                 )
-        for _ in range(MAX_COMMIT_RETRIES):
-            head = latest_version(table)
-            if head is None:
-                raise FileNotFoundError(f"no commits in table {table}")
-            # replay first, CAS second — _commit's order: a replayed txn
-            # is a no-op even when the head has legitimately moved on
-            replayed = _replayed_version(table, txn_id)
-            if replayed is not None:
-                return replayed
-            if require_head is not None and head != require_head:
-                raise CommitConflict(
-                    f"merge on {table} required head {require_head} but "
-                    f"found {head}; re-read and retry"
-                )
-            # merge_schema: like compact, the rewrite must carry columns
-            # any append has introduced, or the merge commits their loss
-            base = read_snapshot(spark, table, head, merge_schema=True)
-            data_cols = base.columns
-            if evolve_schema:
-                meta_cols = {op_col, *order_cols}
-                new_cols = [
-                    c
-                    for c in changes.columns
-                    if c not in data_cols and c not in meta_cols
-                ]
-                for cname in new_cols:
-                    base = base.withColumn(
-                        cname,
-                        F.lit(None).cast(changes.schema[cname].dataType),
-                    )
-                data_cols = data_cols + new_cols
-            missing = [
-                c
-                for c in data_cols + [op_col] + list(order_cols)
-                if c not in changes.columns
-            ]
-            if missing:
-                raise ValueError(f"change batch lacks columns {missing}")
-            if write_changefeed:
-                # the feed fabricates _change_type over the data columns;
-                # a real data column of that name would be clobbered in
-                # the cdc output and double-tagged on read (review r11)
-                _check_cdc_collisions(
-                    data_cols, f"merge_changes({table!r} changefeed)"
-                )
-            w = W.partitionBy(*keys).orderBy(
-                *[F.col(c).desc() for c in order_cols]
-            )
-            # order_cols may be change-feed metadata (an LSN, a batch
-            # sequence) that is NOT a table column — keep them through the
-            # dedup window, drop them after (caught by the model-based
-            # property test; the original select dropped them first and
-            # the window failed to resolve).
-            extra = [c for c in order_cols if c not in data_cols]
-            last = (
-                changes.select(op_col, *data_cols, *extra)
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", *extra)
-            )
-            # a literal marker (not key-null-ness) tells the CDC
-            # classifier whether a base row matched: NULL keys never
-            # equi-join, and a data column could legitimately be NULL
-            b = (
-                base.withColumn("__b", F.lit(True)) if write_changefeed
-                else base
-            ).alias("b")
-            c = last.alias("c")
-            cond = None
-            for k in keys:
-                eq = F.col(f"b.{k}") == F.col(f"c.{k}")
-                cond = eq if cond is None else cond & eq
-            changed = F.col(f"c.{op_col}").isNotNull()
-            # persist + count in EVERY branch: the count
-            # MATERIALIZES the join at its full shuffle parallelism
-            # BEFORE the coalesced writes below — coalesce is a narrow
-            # dependency, so without this the whole reduce stage
-            # (join fetch+sort, CDC dedup, cache fill) would run at
-            # n_out tasks, funneling a 10 GB batch merged into a
-            # 50 MB table through ONE task. The count also gives the
-            # exact output row bound the file sizing needs, and with
-            # the changefeed it additionally keeps the scan-once
-            # contract — both outputs read the cache.
-            # A CommitConflict retry recounts instead of reusing the
-            # prior attempt's n_out: the count is the materialization
-            # barrier, and a retry joins the new head's base.
-            with cached(b.join(c, cond, "full")) as joined:
-                joined_rows = joined.count()
-                # size both rewrite outputs by estimated bytes, never
-                # core count (see _merge_output_partitions)
-                n_out = _merge_output_partitions(
-                    _read_manifest(table, head), joined_rows
-                )
-                merged = joined.filter(
-                    ~changed | (F.col(f"c.{op_col}") != "D")
-                ).select(
-                    *[
-                        F.when(changed, F.col(f"c.{col}"))
-                        .otherwise(F.col(f"b.{col}"))
-                        .alias(col)
-                        for col in data_cols
-                    ]
-                ).coalesce(n_out)
-                files, stats = _write_data_files(merged, table)
-                manifest = {
-                    "version": head + 1,
-                    "op": "merge",
-                    "files": files,
-                    "stats": stats,
-                    "txn_id": txn_id,
-                    # the merged frame's schema is the post-merge column
-                    # union (base + evolved change columns): record it so
-                    # enforcement survives the rewrite
-                    "schema": merged.schema.jsonValue(),
-                }
-                if write_changefeed:
-                    # Effective changes only: a 'D' on an absent key
-                    # changed nothing and must not be replayed downstream;
-                    # a 'U' is an update iff a base row matched.
-                    b_present = F.col("b.__b").isNotNull()
-                    effective = joined.filter(
-                        changed
-                        & ((F.col(f"c.{op_col}") != "D") | b_present)
-                    ).select(
-                        *[F.col(f"c.{col}").alias(col) for col in data_cols],
-                        F.when(F.col(f"c.{op_col}") == "D", F.lit("delete"))
-                        .when(b_present, F.lit("update"))
-                        .otherwise(F.lit("insert"))
-                        .alias("_change_type"),
-                    )
-                    # the effective feed is a subset of the rewrite
-                    # (plus the type tag): same sizing
-                    effective = effective.coalesce(n_out)
-                    cdc_files, cdc_stats = _write_data_files(effective, table)
-                    # a merge whose every change was ineffective (e.g. a
-                    # batch of 'D' ops on absent keys — routine under
-                    # at-least-once feeds) must record an EMPTY feed, not
-                    # 0-row files: read_changes' idle signal (None) is
-                    # what stops a downstream keyed sync from a pointless
-                    # full rewrite — the delete_where guard, applied here
-                    # too (review r11). Counts come from the write's own
-                    # stats, no second footer pass.
-                    n_changed = sum(
-                        cdc_stats[name]["__rows"] for name in cdc_files
-                    )
-                    manifest["cdc_files"] = cdc_files if n_changed else []
-            try:
-                _publish(table, head + 1, manifest)
-                return head + 1
-            except CommitConflict:
-                continue  # head moved: recompute the merge against it
-        raise CommitConflict(f"merge on {table} kept losing the race")
+        return _commit(
+            table, build, "merge", txn_id, rebase=True,
+            require_head=require_head,
+        )
 
 
 def read_changes(
@@ -1934,6 +1876,15 @@ def read_changes(
 
     from pyspark.sql import functions as F
 
+    if since_version < -1:
+        # -1 (before version 0) is the lowest position; a lower one is
+        # a caller bug that the walk below would misdiagnose as a
+        # consumer behind the vacuum horizon
+        raise ValueError(
+            f"read_changes since_version={since_version} is below -1, "
+            f"the position before {table}'s first commit; fix the "
+            "caller's bound"
+        )
     head = latest_version(table)
     until = until_version if until_version is not None else head
     if until is None or until <= since_version:

@@ -74,9 +74,7 @@ def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
     )
 
 
-def write_partitioned(
-    df: DataFrame, path: str, ts_col: str = "timestamp_parsed"
-) -> None:
+def write_partitioned(df: DataFrame, path: str) -> None:
     """S7: append Parquet partitioned by derived year/month/day/hour.
 
     Partition pruning on any downstream time-range predicate is then
@@ -84,14 +82,12 @@ def write_partitioned(
     small-file explosion from over-partitioning by high-cardinality
     keys.
     """
-    with_time_partitions(df, ts_col).write.mode("append").partitionBy(
-        "year", "month", "day", "hour"
-    ).parquet(path)
+    with_time_partitions(df, "timestamp_parsed").write.mode(
+        "append"
+    ).partitionBy("year", "month", "day", "hour").parquet(path)
 
 
-def overwrite_partitioned(
-    df: DataFrame, path: str, ts_col: str = "timestamp_parsed"
-) -> None:
+def overwrite_partitioned(df: DataFrame, path: str) -> None:
     """S7, re-runnable form: dynamic-overwrite the touched partitions.
 
     Same layout as ``write_partitioned``, but replaces exactly the
@@ -101,9 +97,11 @@ def overwrite_partitioned(
     Streaming keeps the append form (micro-batches accumulate within
     an hour); batch loads that may re-run should use this one.
     """
-    with_time_partitions(df, ts_col).write.mode("overwrite").option(
-        *DYNAMIC_OVERWRITE
-    ).partitionBy("year", "month", "day", "hour").parquet(path)
+    with_time_partitions(df, "timestamp_parsed").write.mode(
+        "overwrite"
+    ).option(*DYNAMIC_OVERWRITE).partitionBy(
+        "year", "month", "day", "hour"
+    ).parquet(path)
 
 
 #: Upper bound on the number of distinct scope values collected to the

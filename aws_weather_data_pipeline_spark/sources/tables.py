@@ -149,11 +149,9 @@ def load_tables(
     return {name: _read_one(spark, sf_dir, name) for name in names}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
+def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load tables and register each as a temp view for ``spark.sql``."""
-    tables = load_tables(spark, sf_dir, names)
+    tables = load_tables(spark, sf_dir)
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables

@@ -222,11 +222,9 @@ def attributed_purchases(
     )
 
 
-def deduplicated_events(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming exact dedup by event_id, state bounded by watermark.
+def deduplicated_events(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup by event_id, state bounded by a 30-minute
+    watermark.
 
     The streaming head of the dedup cascade (the batch stages are the
     similarity catalog's five variants): an at-least-once source
@@ -241,9 +239,9 @@ def deduplicated_events(
     dedup-within-horizon + idempotence-at-rest — the standard two-layer
     exactly-once story.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
+    return events.withWatermark(
+        "ts", "30 minutes"
+    ).dropDuplicatesWithinWatermark(["event_id"])
 
 
 def sessionized_user_activity(

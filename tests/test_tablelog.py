@@ -242,11 +242,32 @@ def test_merge_changes_applies_iud_batch_atomically(spark, tmp_path):
     assert v3 == v2
 
 
-def test_merge_changes_recomputes_after_interleaved_commit(
-    spark, tmp_path, monkeypatch
+#: The rewrites that read the head snapshot and replace it, each with
+#: the keys its head holds after an append of k=7 lands mid-commit.
+_REWRITES = {
+    "merge_changes": (
+        lambda spark, t: tl.merge_changes(
+            spark, t,
+            spark.createDataFrame(
+                [("U", 2, "new", 9)], "op string, k int, s string, seq int"
+            ),
+            keys=["k"], order_cols=["seq"],
+        ),
+        {1, 2, 7},
+    ),
+    "compact": (lambda spark, t: tl.compact(spark, t, n_files=1), {1, 7}),
+    "delete_where": (
+        lambda spark, t: tl.delete_where(spark, t, "k = 1"), {7}
+    ),
+}
+
+
+@pytest.mark.parametrize("rewrite", sorted(_REWRITES))
+def test_rewrite_recomputes_after_interleaved_commit(
+    spark, tmp_path, monkeypatch, rewrite
 ):
-    """A commit landing between the merge's snapshot read and its
-    publish must not be discarded: the merge recomputes against the
+    """A commit landing between a rewrite's snapshot read and its
+    publish must not be discarded: the rewrite recomputes against the
     new head, so the interleaved append's rows survive."""
     table = str(tmp_path / "t")
     tl.overwrite(
@@ -268,12 +289,10 @@ def test_merge_changes_recomputes_after_interleaved_commit(
         return real_publish(tbl, version, manifest)
 
     monkeypatch.setattr(tl, "_publish", racing_publish)
-    changes = spark.createDataFrame(
-        [("U", 2, "new", 9)], "op string, k int, s string, seq int"
-    )
-    tl.merge_changes(spark, table, changes, keys=["k"], order_cols=["seq"])
+    run, expected = _REWRITES[rewrite]
+    assert run(spark, table) == 2  # v1 is the interleaved append
     got = {r.k for r in tl.read_snapshot(spark, table).collect()}
-    assert got == {1, 2, 7}
+    assert got == expected
 
 
 def test_streaming_sink_is_exactly_once_under_epoch_replay(
@@ -693,6 +712,22 @@ def test_read_changes_refuses_unrecorded_rewrites(spark, tmp_path):
     tl.overwrite(_frame(spark, 50, 52), table)
     with pytest.raises(ValueError, match="no recorded change feed"):
         tl.read_changes(spark, table, since_version=1)
+
+
+def test_change_feed_position_below_minus_one_is_a_caller_bug(
+    spark, tmp_path
+):
+    """-1 (before version 0) is the lowest feed position. A lower one
+    is a bad bound, not a consumer behind the vacuum horizon: it must
+    not send the operator to resync a healthy table."""
+    table = str(tmp_path / "t")
+    tl.append(_frame(spark, 0, 3), table)
+    with pytest.raises(ValueError, match="below -1"):
+        tl.read_changes(spark, table, since_version=-3)
+    with pytest.raises(ValueError, match="below -1"):
+        tl.ChangefeedCursor(table, start_after=-5).poll(spark)
+    feed = tl.read_changes(spark, table, since_version=-1)
+    assert sorted(r.v for r in feed.collect()) == [0, 1, 2]
 
 
 def test_vacuum_retains_cdc_files_of_retained_manifests(spark, tmp_path):
@@ -3234,7 +3269,7 @@ def test_keyed_changefeed_sync_matches_model(
 
     def df_changes(d):
         # seq is pure order_cols metadata (<=1 change per key makes it
-        # moot, but order_cols must not name op_col: merge's dedup
+        # moot, but order_cols must not name op: merge's dedup
         # window drops non-data order columns after collapsing)
         return spark.createDataFrame(
             [(op, k, s, j) for j, (k, (op, s)) in enumerate(d.items())],

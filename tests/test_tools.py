@@ -167,3 +167,39 @@ def test_every_package_function_has_a_caller():
     )
     stale = sorted(set(PRODUCT_SURFACE) - defined)
     assert not stale, f"PRODUCT_SURFACE names what no longer exists: {stale}"
+
+
+#: Who may name the table log's publish primitive and its retry
+#: budget. ``_commit`` is the one optimistic-commit loop; ``sync_changes``
+#: keeps its own because each retry re-reads the source position.
+COMMIT_LOOP_OWNERS = {
+    "_publish": {"sinks.tablelog._commit"},
+    "MAX_COMMIT_RETRIES": {
+        "sinks.tablelog._commit", "sinks.tablelog.sync_changes"
+    },
+}
+
+
+def test_one_commit_loop_in_the_table_log():
+    owners: dict[str, set[str]] = {name: set() for name in COMMIT_LOOP_OWNERS}
+    for path in sorted(
+        glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
+    ):
+        module = os.path.relpath(path, PACKAGE)[:-3].replace(os.sep, ".")
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for top in tree.body:
+            owner = f"{module}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name, ctx = node.id, node.ctx
+                elif isinstance(node, ast.Attribute):
+                    name, ctx = node.attr, node.ctx
+                else:
+                    continue
+                if name in owners and isinstance(ctx, ast.Load):
+                    owners[name].add(owner)
+    assert owners == COMMIT_LOOP_OWNERS, (
+        "commit through tablelog._commit(build, rebase=...) instead of "
+        f"a hand-written publish/retry loop: {owners}"
+    )
