@@ -16,6 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.multimodal import (
+    AUDIO_WINDOW_FRAMES,
+    AVI_SAMPLE_STRIDE,
+    RESIZE_TARGET_BYTES,
+    TILE_H,
+    TILE_W,
     decode_image_features,
     distinct_byte_count_col,
     extract_features,
@@ -140,11 +145,6 @@ def multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_image_features(d)
 
 
-#: Tile grid for the patching stage (pixels per tile, w × h).
-TILE_W = 4
-TILE_H = 2
-
-
 @CATALOG.add(
     "multimodal_image_tiles",
     f"""
@@ -213,7 +213,7 @@ def multimodal_image_tiles(
     from ..functions.multimodal import ppm_tile_stats
 
     d = with_ppm_payload(_docs(spark, sf_dir))
-    return ppm_tile_stats(d, tile_w=TILE_W, tile_h=TILE_H)
+    return ppm_tile_stats(d)
 
 
 @CATALOG.add(
@@ -275,10 +275,6 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the raw-PCM RIFF parse (functions/multimodal.encode_wav /
 # with_wav_payload / _decode_wav) stays unit-pinned by
 # tests/test_multimodal.py.
-
-
-#: Frames per analysis window for the windowed-energy stage.
-AUDIO_WINDOW_FRAMES = 8
 
 
 @CATALOG.add(
@@ -348,7 +344,7 @@ def multimodal_audio_windows(
     from ..functions.multimodal import wav_window_energy, with_wav_payload
 
     d = with_wav_payload(_docs(spark, sf_dir))
-    return wav_window_energy(d, window_frames=AUDIO_WINDOW_FRAMES)
+    return wav_window_energy(d)
 
 
 @CATALOG.add(
@@ -520,12 +516,14 @@ def multimodal_distinct_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @CATALOG.add(
     "multimodal_resize_stats",
-    """
+    f"""
     WITH t AS (
         SELECT doc_id, text,
                octet_length(encode(text)) AS n,
-               CASE WHEN octet_length(encode(text)) <= 128 THEN 1
-                    ELSE CAST(ceil(octet_length(encode(text)) / 128.0)
+               CASE WHEN octet_length(encode(text)) <= {RESIZE_TARGET_BYTES}
+                    THEN 1
+                    ELSE CAST(ceil(octet_length(encode(text))
+                                   / {RESIZE_TARGET_BYTES}.0)
                               AS INTEGER)
                END AS step
         FROM documents
@@ -542,7 +540,8 @@ def multimodal_distinct_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Resize/downsample stage as a catalog query (completes the "
     "multimodal stage set: payload stats, feature extract, frame "
     "sample, scorer slot, decode, and now resize): each payload is "
-    "downsampled to <=128 bytes by keeping every ceil(n/128)-th byte "
+    f"downsampled to <={RESIZE_TARGET_BYTES} bytes by keeping every "
+    f"ceil(n/{RESIZE_TARGET_BYTES})-th byte "
     "inside the Arrow mapInPandas stage (the deterministic stand-in "
     "for decode-resize-reencode; a codec drops into the same body), "
     "and the query emits per-item original size, resized size, and "
@@ -557,7 +556,7 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import resize_payload
 
     d = with_binary_payload(_docs(spark, sf_dir))
-    r = resize_payload(d, target_bytes=128)
+    r = resize_payload(d)
     return r.select(
         "doc_id",
         F.col("orig_bytes").cast("int").alias("orig_bytes"),
@@ -569,9 +568,6 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # AVI video decode + frame sampling (tokenizer: r11 registration)
 # --------------------------------------------------------------------------
-
-#: Frame-sampling stride for the video query (keep every 2nd frame).
-AVI_SAMPLE_STRIDE = 2
 
 #: Exact oracle for multimodal_decode_avi (DuckDB), REGISTERED r11 in
 #: the slot of the retired multimodal_frame_sample (the zero-slack
@@ -689,7 +685,7 @@ def multimodal_decode_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import decode_avi_frames, with_avi_payload
 
     d = with_avi_payload(_docs(spark, sf_dir))
-    return decode_avi_frames(d, stride=AVI_SAMPLE_STRIDE)
+    return decode_avi_frames(d)
 
 
 # --------------------------------------------------------------------------

@@ -128,6 +128,26 @@ def _collect_sink(spark: SparkSession, path, work, columns=None):
     return out
 
 
+def _drain_to_frame(
+    spark: SparkSession, stream_df: DataFrame, work: str
+) -> DataFrame:
+    """Drain ``stream_df`` in append mode into a parquet sink under
+    ``work`` with one availableNow run (``_drain``), then read the sink
+    back eagerly and delete ``work`` (``_collect_sink``)."""
+    outdir = f"{work}/sink"
+    with _stream_shuffle(spark):
+        q = (
+            stream_df.writeStream.outputMode("append")
+            .option("checkpointLocation", f"{work}/ckpt")
+            .format("parquet")
+            .option("path", outdir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q)
+    return _collect_sink(spark, outdir, work)
+
+
 _CITIES = ("Austin", "Boston", "Chicago", "Denver", "Seattle")
 _DIRS = ("N", "NE", "E", "SE", "S", "SW", "W", "NW")
 _CONDS = ("Clear", "Cloudy", "Rain", "Snow", "Fog", "Windy", "Hail")
@@ -410,8 +430,6 @@ def streaming_windowed_alert_counts(
 
     work = _work_dir("spark_graft_stream_window_")
     landing = f"{work}/landing"
-    outdir = f"{work}/windowed"
-    ckpt = f"{work}/ckpt"
 
     write_landing_files(synthesize_readings(spark, sf_dir), landing)
     # One micro-batch for both files: the watermark then gates only
@@ -436,17 +454,7 @@ def streaming_windowed_alert_counts(
             "n_events",
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return _collect_sink(spark, outdir, work)
+    return _drain_to_frame(spark, agg, work)
 
 
 # --------------------------------------------------------------------------
@@ -694,8 +702,6 @@ def streaming_session_windows(
 
     work = _work_dir("spark_graft_stream_sess_")
     landing = f"{work}/landing"
-    outdir = f"{work}/sessions"
-    ckpt = f"{work}/ckpt"
 
     write_event_files(spark, sf_dir, _parity_files(landing))
     # No maxFilesPerTrigger: both files in one micro-batch (see doc).
@@ -704,17 +710,7 @@ def streaming_session_windows(
         gap=_SESSION_GAP,
         watermark=_SESSION_WM,
     )
-    with _stream_shuffle(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return _collect_sink(spark, outdir, work)
+    return _drain_to_frame(spark, sessions, work)
 
 
 # --------------------------------------------------------------------------
@@ -778,8 +774,6 @@ def streaming_attributed_purchases(
     work = _work_dir("spark_graft_stream_join_")
     clicks_dir = f"{work}/clicks"
     purchases_dir = f"{work}/purchases"
-    outdir = f"{work}/attributed"
-    ckpt = f"{work}/ckpt"
 
     write_event_files(
         spark, sf_dir, _typed_files(clicks_dir, purchases_dir)
@@ -793,17 +787,7 @@ def streaming_attributed_purchases(
         horizon=ATTRIBUTION_HORIZON,
         watermark=ATTRIBUTION_WATERMARK,
     )
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return _collect_sink(spark, outdir, work)
+    return _drain_to_frame(spark, joined, work)
 
 
 # --------------------------------------------------------------------------
@@ -843,8 +827,6 @@ def streaming_static_enrichment(
 ) -> DataFrame:
     work = _work_dir("spark_graft_stream_enrich_")
     landing = f"{work}/landing"
-    outdir = f"{work}/enriched"
-    ckpt = f"{work}/ckpt"
 
     write_event_files(spark, sf_dir, _parity_files(landing))
     customer = load_tables(spark, sf_dir, ("customer",))["customer"]
@@ -862,17 +844,7 @@ def streaming_static_enrichment(
             F.col("c_acctbal").alias("acctbal"),
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            enriched.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return _collect_sink(spark, outdir, work)
+    return _drain_to_frame(spark, enriched, work)
 
 
 # --------------------------------------------------------------------------
@@ -961,8 +933,6 @@ def streaming_attribution_with_timeouts(
     work = _work_dir("spark_graft_stream_outer_")
     clicks_dir = f"{work}/clicks"
     purchases_dir = f"{work}/purchases"
-    outdir = f"{work}/attributed"
-    ckpt = f"{work}/ckpt"
 
     write_event_files(
         spark, sf_dir, _typed_files(clicks_dir, purchases_dir)
@@ -975,17 +945,7 @@ def streaming_attribution_with_timeouts(
         watermark=ATTRIBUTION_WATERMARK,
         how="left_outer",
     )
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return _collect_sink(spark, outdir, work)
+    return _drain_to_frame(spark, joined, work)
 
 
 # --------------------------------------------------------------------------
@@ -1025,8 +985,6 @@ def streaming_dedup_replay(
 
     work = _work_dir("spark_graft_stream_dedup_")
     landing = f"{work}/landing"
-    outdir = f"{work}/deduped"
-    ckpt = f"{work}/ckpt"
 
     # File 1: every event. File 2: the replayed duplicates. The
     # micro-batch ORDER is load-bearing: if the replay file were
@@ -1042,14 +1000,4 @@ def streaming_dedup_replay(
     deduped = deduplicated_events(
         _typed_stream(spark, landing, max_files_per_trigger=1)
     )
-    with _stream_shuffle(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return _collect_sink(spark, outdir, work)
+    return _drain_to_frame(spark, deduped, work)

@@ -224,7 +224,8 @@ def sync_aggregate(
     dst_head = tablelog.latest_version(dst_table)
     position = aggregate_position(dst_table, src_table, upto=dst_head)
     head = tablelog.latest_version(src_table)
-    if head is None or head <= position:
+    tablelog.require_position_within_head(src_table, position, head)
+    if head is None or head == position:
         return None
     # never-seen source vs a destination with existing fold history:
     # refuse before any data moves (docstring; shared check)

@@ -1837,6 +1837,24 @@ def merge_changes(
         )
 
 
+def require_position_within_head(
+    table: str, position: int, head: int | None
+) -> None:
+    """Refuse a change-feed consumer whose ``position`` is past the
+    ``head`` of ``table`` (-1 for a table with no commits). Such a
+    position can only come from a table that was recreated or rebuilt
+    with fewer versions than the consumer applied; treating it as
+    idle would silence the consumer for good."""
+    h = -1 if head is None else head
+    if position > h:
+        raise ValueError(
+            f"change-feed position {position} is past the head of "
+            f"{table} ({h}): the table has fewer versions than the "
+            "consumer applied (recreated or rebuilt?) — resync the "
+            "consumer from a snapshot"
+        )
+
+
 def read_changes(
     spark: SparkSession,
     table: str,
@@ -1848,7 +1866,9 @@ def read_changes(
     ``_change_type`` ('insert'/'update'/'delete') and
     ``_commit_version``. Returns None when no commit in the range
     changed any data (the poll-loop idle signal — there is no schema
-    to fabricate an empty frame from without reading a snapshot).
+    to fabricate an empty frame from without reading a snapshot). A
+    ``since_version`` past the head raises ValueError
+    (``require_position_within_head``).
 
     Cost is O(changed rows), never O(table): an ``append`` commit is
     served from exactly the files that commit added — recorded in the
@@ -1886,6 +1906,7 @@ def read_changes(
             "caller's bound"
         )
     head = latest_version(table)
+    require_position_within_head(table, since_version, head)
     until = until_version if until_version is not None else head
     if until is None or until <= since_version:
         return None
@@ -2304,7 +2325,8 @@ def sync_changes(
         dst_head = latest_version(dst_table)
         position = sync_position(dst_table, src_table, upto=dst_head)
         head = latest_version(src_table)
-        if head is None or head <= position:
+        require_position_within_head(src_table, position, head)
+        if head is None or head == position:
             return None
         require_known_source(
             dst_table, SYNC_TXN_PREFIX, position, dst_head,
@@ -2379,7 +2401,8 @@ class ChangefeedCursor:
     """Incremental consumer position over a table's change feed.
 
     ``poll`` returns ``(changes, until)`` — the batch since the last
-    ACKED position — or None when idle; the cursor advances only on
+    ACKED position — or None when idle (a position past the head
+    raises ValueError); the cursor advances only on
     ``ack(until)``, which the caller invokes AFTER its downstream
     commit succeeds. A failed downstream write therefore re-serves
     the same batch on the next poll (at-least-once), and pairing
@@ -2400,7 +2423,8 @@ class ChangefeedCursor:
         self, spark: SparkSession
     ) -> tuple[DataFrame, int] | None:
         head = latest_version(self.table)
-        if head is None or head <= self.position:
+        require_position_within_head(self.table, self.position, head)
+        if head is None or head == self.position:
             return None
         changes = read_changes(spark, self.table, self.position, head)
         if changes is None:

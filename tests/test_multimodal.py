@@ -239,9 +239,7 @@ def test_resize_downsamples_and_updates_metadata(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in resize_payload(
-            with_binary_payload(df), target_bytes=128
-        ).collect()
+        for r in resize_payload(with_binary_payload(df)).collect()
     }
     assert out[1]["orig_bytes"] == 600
     assert len(out[1]["payload"]) == 120
@@ -250,6 +248,49 @@ def test_resize_downsamples_and_updates_metadata(spark):
     # deterministic: every 5th byte of "abab..." is always 'a'
     assert bytes(out[1]["payload"]) == bytes(("ab" * 300).encode()[::5])
     assert bytes(out[2]["payload"]) == b"tiny"
+
+
+def _silent_wavs(spark):
+    """Two zero-sample WAV payloads (mono and stereo) with metadata."""
+    from aws_weather_data_pipeline_spark.functions.multimodal import (
+        _with_meta,
+        encode_wav,
+    )
+
+    df = spark.createDataFrame(
+        [
+            Row(doc_id=1, payload=bytearray(encode_wav([], 8000, 1))),
+            Row(doc_id=2, payload=bytearray(encode_wav([], 9000, 2))),
+        ]
+    )
+    return _with_meta(df, "audio/wav")
+
+
+def test_decode_stage_with_no_rows_returns_the_declared_schema(spark):
+    """A batch where every payload yields zero rows (zero-frame WAVs
+    have no windows) is an empty frame, not a schema error."""
+    from aws_weather_data_pipeline_spark.functions.multimodal import (
+        WAV_WINDOW_SCHEMA,
+        wav_window_energy,
+    )
+
+    windows = wav_window_energy(_silent_wavs(spark))
+    assert windows.schema == WAV_WINDOW_SCHEMA
+    assert windows.collect() == []
+
+
+def test_zero_sample_wav_has_null_peak_and_mean(spark):
+    from aws_weather_data_pipeline_spark.functions.multimodal import (
+        WAV_SCHEMA,
+        decode_wav_features,
+    )
+
+    feats = decode_wav_features(_silent_wavs(spark))
+    assert feats.schema == WAV_SCHEMA
+    assert sorted(tuple(r) for r in feats.collect()) == [
+        (1, 1, 8000, 0, 0, None, None),
+        (2, 2, 9000, 0, 0, None, None),
+    ]
 
 
 def test_wav_roundtrip_property():

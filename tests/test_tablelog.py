@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 import pytest
@@ -728,6 +729,36 @@ def test_change_feed_position_below_minus_one_is_a_caller_bug(
         tl.ChangefeedCursor(table, start_after=-5).poll(spark)
     feed = tl.read_changes(spark, table, since_version=-1)
     assert sorted(r.v for r in feed.collect()) == [0, 1, 2]
+
+
+@pytest.mark.parametrize(
+    "consumer", ["read_changes", "ChangefeedCursor.poll", "sync_changes"]
+)
+def test_change_feed_position_past_the_head_is_refused(
+    spark, tmp_path, consumer
+):
+    """A position past the head means the table has fewer versions
+    than the consumer applied (it was recreated). Reading that as idle
+    would silence the consumer for good; it must fail loudly."""
+    src = str(tmp_path / "src")
+    tl.append(_frame(spark, 0, 3), src)
+    tl.append(_frame(spark, 3, 6), src)  # head 1
+    if consumer == "read_changes":
+        def call():
+            return tl.read_changes(spark, src, since_version=7)
+    elif consumer == "ChangefeedCursor.poll":
+        def call():
+            return tl.ChangefeedCursor(src, start_after=7).poll(spark)
+    else:
+        dst = str(tmp_path / "dst")
+        assert tl.sync_changes(spark, src, dst) == 0  # position 1
+        shutil.rmtree(src)
+        tl.append(_frame(spark, 0, 3), src)  # recreated: head 0
+
+        def call():
+            return tl.sync_changes(spark, src, dst)
+    with pytest.raises(ValueError, match="past the head"):
+        call()
 
 
 def test_vacuum_retains_cdc_files_of_retained_manifests(spark, tmp_path):

@@ -169,19 +169,10 @@ def test_every_package_function_has_a_caller():
     assert not stale, f"PRODUCT_SURFACE names what no longer exists: {stale}"
 
 
-#: Who may name the table log's publish primitive and its retry
-#: budget. ``_commit`` is the one optimistic-commit loop; ``sync_changes``
-#: keeps its own because each retry re-reads the source position.
-COMMIT_LOOP_OWNERS = {
-    "_publish": {"sinks.tablelog._commit"},
-    "MAX_COMMIT_RETRIES": {
-        "sinks.tablelog._commit", "sinks.tablelog.sync_changes"
-    },
-}
-
-
-def test_one_commit_loop_in_the_table_log():
-    owners: dict[str, set[str]] = {name: set() for name in COMMIT_LOOP_OWNERS}
+def _owners(names) -> dict[str, set[str]]:
+    """For each of ``names``, the top-level package definitions
+    (``module.function``) whose body loads it."""
+    owners: dict[str, set[str]] = {name: set() for name in names}
     for path in sorted(
         glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
     ):
@@ -199,7 +190,45 @@ def test_one_commit_loop_in_the_table_log():
                     continue
                 if name in owners and isinstance(ctx, ast.Load):
                     owners[name].add(owner)
+    return owners
+
+
+#: Who may name the table log's publish primitive and its retry
+#: budget. ``_commit`` is the one optimistic-commit loop; ``sync_changes``
+#: keeps its own because each retry re-reads the source position.
+COMMIT_LOOP_OWNERS = {
+    "_publish": {"sinks.tablelog._commit"},
+    "MAX_COMMIT_RETRIES": {
+        "sinks.tablelog._commit", "sinks.tablelog.sync_changes"
+    },
+}
+
+
+def test_one_commit_loop_in_the_table_log():
+    owners = _owners(COMMIT_LOOP_OWNERS)
     assert owners == COMMIT_LOOP_OWNERS, (
         "commit through tablelog._commit(build, rebase=...) instead of "
         f"a hand-written publish/retry loop: {owners}"
+    )
+
+
+#: Who may call the media decoder and build a pandas UDF. A codec adds
+#: a ``_<codec>_fixture`` for ``_with_encoded_payload`` and a row rule
+#: for ``_decode_stage``; ``distinct_byte_count_col`` is the one scalar
+#: scorer column.
+MEDIA_STAGE_OWNERS = {
+    "decode_media": {"functions.multimodal._decode_stage"},
+    "pandas_udf": {
+        "functions.multimodal._with_encoded_payload",
+        "functions.multimodal.distinct_byte_count_col",
+    },
+}
+
+
+def test_one_payload_encoder_and_one_decode_stage():
+    owners = _owners(MEDIA_STAGE_OWNERS)
+    assert owners == MEDIA_STAGE_OWNERS, (
+        "build payloads through _with_encoded_payload(df, content_type, "
+        "fixture) and decode through _decode_stage(df, schema, rows) "
+        f"instead of a hand-written Arrow loop: {owners}"
     )
