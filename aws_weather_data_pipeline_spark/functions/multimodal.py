@@ -2115,8 +2115,9 @@ def fake_byte_features(pdf_iter: Iterator) -> Iterator:
             "byte_sum_mod": [],
         }
         for payload in pdf["payload"]:
-            b = bytes(payload)
-            out["n_bytes"].append(len(b))
+            # a NULL payload has NULL features, an empty one zero bytes
+            b = b"" if payload is None else bytes(payload)
+            out["n_bytes"].append(None if payload is None else len(b))
             out["first_byte"].append(b[0] if b else None)
             out["last_byte"].append(b[-1] if b else None)
             out["byte_sum_mod"].append(
@@ -2193,9 +2194,13 @@ def resize_payload(df: DataFrame) -> DataFrame:
         for pdf in pdf_iter:
             rows = {"doc_id": [], "payload": [], "orig_bytes": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                rows["doc_id"].append(doc_id)
+                if payload is None:
+                    rows["payload"].append(None)
+                    rows["orig_bytes"].append(None)
+                    continue
                 b = bytes(payload)
                 step = max(1, -(-len(b) // RESIZE_TARGET_BYTES))
-                rows["doc_id"].append(doc_id)
                 rows["payload"].append(b[::step])
                 rows["orig_bytes"].append(len(b))
             yield pd.DataFrame(rows)

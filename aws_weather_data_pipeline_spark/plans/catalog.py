@@ -6,15 +6,14 @@
 from __future__ import annotations
 
 import importlib
-import importlib.util
 
 from .registry import QueryCatalog
 
-# Every operator module that contributes catalog queries. A module listed
-# here but absent on disk is skipped (feature not built yet); a module
-# that EXISTS but fails to import raises — a typo inside an operator
-# module must never silently shrink driver coverage.
+# Every operator module that contributes catalog queries, in merge
+# order. Each one must import: a missing or broken module raises
+# instead of silently dropping its queries from the catalog.
 OPERATOR_MODULES = (
+    "relational",
     "weatherlike",
     "temporal",
     "text",
@@ -103,15 +102,9 @@ DRIVER_WINDOW = (
 
 
 def build_catalog() -> QueryCatalog:
-    from . import relational
-
     cat = QueryCatalog()
-    cat.merge(relational.CATALOG)
     for modname in OPERATOR_MODULES:
-        if importlib.util.find_spec(f".{modname}", __package__) is None:
-            continue
-        mod = importlib.import_module(f".{modname}", __package__)
-        cat.merge(mod.CATALOG)
+        cat.merge(importlib.import_module(f".{modname}", __package__).CATALOG)
 
     missing = [n for n in DRIVER_WINDOW if n not in cat.queries]
     if missing:

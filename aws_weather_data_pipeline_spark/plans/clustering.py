@@ -7,7 +7,8 @@ vectors). Two full iterations run here, unrolled identically in the
 DuckDB oracle, with every step engine-exact:
 
 - components scalar-quantized to integers (floor(x·1000) — float→double
-  is exact, the module-wide convention from plans/similarity.py);
+  is exact; ``functions/exact.quantized``, shared with the whole
+  embedding family);
 - distances are exact int64 sums of squared differences (|q| ≤ ~1000 ⇒
   per-dim ≤ 4e6, ×64 dims ≪ 2^63);
 - argmin breaks ties on cluster id (lexicographic (dist, cluster) min);
@@ -33,23 +34,20 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.exact import QUANT_SCALE, int_sq_dist, quantized, sq_norm
 from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
+from .similarity import _cosine_pairs
 
 CATALOG = QueryCatalog()
 
 KMEANS_K = 8
 KMEANS_ITERATIONS = 2
 
-_QUANT = (
-    "transform(embedding, x -> cast(floor(cast(x as double) * 1000)"
-    " as bigint))"
-)
-
 _QUANT_SQL = (
     "list_transform(embedding,"
-    " x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
+    f" x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT))"
 )
 
 #: DuckDB: squared-L2 between two quantized list columns a and b.
@@ -166,10 +164,7 @@ def kmeans_lloyd_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_assign(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    keep_v: bool = False,
+    spark: SparkSession, sf_dir: str, k: int, keep_v: bool
 ) -> DataFrame:
     """Final Lloyd assignment, eagerly materialized.
 
@@ -185,7 +180,7 @@ def _kmeans_assign(
     # update join (~5 branches at 2 iterations); Spark does not
     # dedupe common subplans, so persist the quantized frame once
     # (similarity.py documents this exact trap).
-    with cached(e.select("vec_id", F.expr(_QUANT).alias("v"))) as q:
+    with cached(e.select("vec_id", quantized().alias("v"))) as q:
         q.count()
 
         from pyspark.sql import Window
@@ -225,13 +220,7 @@ def _kmeans_assign(
                 F.transform(
                     "cents",
                     lambda c: F.struct(
-                        F.aggregate(
-                            F.zip_with(
-                                "v", c["v"], lambda x, y: (x - y) * (x - y)
-                            ),
-                            F.lit(0).cast("long"),
-                            lambda acc, x: acc + x,
-                        ).alias("dist"),
+                        int_sq_dist("v", c["v"]).alias("dist"),
                         c["cluster"].alias("cluster"),
                     ),
                 )
@@ -385,39 +374,16 @@ def semantic_dedup_keep_list(
     assigned = _kmeans_assign(spark, sf_dir, k, keep_v=True).select(
         "vec_id", "cluster", "v"
     )
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
     # The assignment frame is referenced by THREE branches below (pair
     # sides a/b + the final keep-list join); Spark does not dedupe
     # common subplans across join inputs, so persist + fill it once
     # (the frame is O(corpus) rows of quantized vectors — the same
     # footprint the signature cache carries in plans/similarity.py,
     # and the same recompute trap documented there).
-    with cached(assigned.withColumn("nrm", sq_norm)) as n:
+    with cached(assigned.withColumn("nrm", sq_norm("v"))) as n:
         n.count()
-        a = n.select(
-            F.col("vec_id").alias("vec_a"),
-            "cluster",
-            F.col("v").alias("va"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        b = n.select(
-            F.col("vec_id").alias("vec_b"),
-            "cluster",
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nrm_b"),
-        )
-        dot = F.expr(
-            "aggregate(zip_with(va, vb, (x, y) -> x * y),"
-            " 0L, (acc, x) -> acc + x)"
-        )
         dups = (
-            a.join(b, "cluster")
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .filter((F.col("nrm_a") > 0) & (F.col("nrm_b") > 0))
-            .filter(
-                dot / F.sqrt(F.col("nrm_a") * F.col("nrm_b"))
-                >= SEMDEDUP_THRESHOLD
-            )
+            _cosine_pairs(n, "cluster", SEMDEDUP_THRESHOLD)
             .select(F.col("vec_b").alias("dup_id"))
             .distinct()
         )

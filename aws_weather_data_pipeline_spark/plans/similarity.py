@@ -17,7 +17,10 @@ search over an embedding column — each built in the shape that survives
   exact integer sums valid in ANY summation order, and the final cosine
   is a single identical-expression double division. This sidesteps the
   FP-reassociation trap that makes naive float dot products
-  hash-unstable across engines and cluster sizes.
+  hash-unstable across engines and cluster sizes. The arithmetic is
+  ``functions/exact.py``'s; every embedding query here (and SemDeDup
+  in ``plans/clustering.py``) ranks through one of three stages:
+  ``_cosine_topk``, ``_cosine_pairs`` or ``_adc_topk``.
 
 Reference parity: the reference has no similarity surface at all — this
 module is pure north-star extension (SURVEY §7.2 step 9).
@@ -26,11 +29,20 @@ module is pure north-star extension (SURVEY §7.2 step 9).
 from __future__ import annotations
 
 import logging
+import operator
 import random
 from contextlib import ExitStack
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from ..functions.exact import (
+    QUANT_SCALE,
+    int_dot,
+    int_sq_dist,
+    quantized,
+    sq_norm,
+)
 from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
@@ -73,6 +85,49 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Dot products are CPU-bound: spread under-split scans (no-op at
     # scale — sources.tables.load_spread).
     return load_spread(spark, sf_dir, "embeddings")
+
+
+def _vectors(e: DataFrame, *cols) -> DataFrame:
+    """``cols`` of the embeddings frame ``e`` plus the quantized
+    vector ``v`` and its squared norm ``nrm``: the row every
+    exact-cosine stage below reads."""
+    return e.select(*cols, quantized().alias("v")).withColumn(
+        "nrm", sq_norm("v")
+    )
+
+
+def _cosine(a: str, b: str) -> Column:
+    """Exact cosine between the vector columns ``v<a>``/``v<b>`` with
+    squared norms ``nrm_<a>``/``nrm_<b>``."""
+    return int_dot(f"v{a}", f"v{b}") / F.sqrt(
+        F.col(f"nrm_{a}") * F.col(f"nrm_{b}")
+    )
+
+
+def _cosine_pairs(
+    frame: DataFrame, key: str, threshold: float
+) -> DataFrame:
+    """(vec_a, vec_b, ``key``, cosine): the pairs of ``_vectors`` rows
+    with vec_a < vec_b that share ``key`` and whose exact cosine is at
+    least ``threshold``. The equi-join on ``key`` keeps pair generation
+    at Σ|group|² instead of n²; zero vectors have no cosine."""
+    a, b = (
+        frame.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            key,
+            F.col("v").alias(f"v{s}"),
+            F.col("nrm").alias(f"nrm_{s}"),
+        )
+        for s in "ab"
+    )
+    return (
+        a.join(b, key)
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .filter((F.col("nrm_a") > 0) & (F.col("nrm_b") > 0))
+        .withColumn("cosine", _cosine("a", "b"))
+        .filter(F.col("cosine") >= threshold)
+        .select("vec_a", "vec_b", key, "cosine")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -976,7 +1031,7 @@ def _cluster_map(
 COSINE_NEAR_DUP_THRESHOLD = 0.3
 
 _QUANT_SQL = (
-    "list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000))"
+    f"list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * {QUANT_SCALE}))"
 )
 
 
@@ -1013,37 +1068,10 @@ _QUANT_SQL = (
     tags=("similarity", "dedup", "embedding", "join"),
 )
 def near_dup_pairs_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    quant = F.expr(
-        "transform(embedding, x -> floor(cast(x as double) * 1000))"
+    base = _vectors(
+        _emb(spark, sf_dir), "vec_id", F.col("label").alias("cell")
     )
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
-    base = e.select(
-        "vec_id", F.col("label").alias("cell"), quant.alias("v")
-    ).withColumn("nrm", sq_norm)
-    a = base.select(
-        F.col("vec_id").alias("vec_a"),
-        "cell",
-        F.col("v").alias("va"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"),
-        "cell",
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
-    return (
-        a.join(b, "cell")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter((F.col("nrm_a") > 0) & (F.col("nrm_b") > 0))
-        .withColumn("cosine", dot / F.sqrt(F.col("nrm_a") * F.col("nrm_b")))
-        .filter(F.col("cosine") >= COSINE_NEAR_DUP_THRESHOLD)
-        .select("vec_a", "vec_b", "cell", "cosine")
-    )
+    return _cosine_pairs(base, "cell", COSINE_NEAR_DUP_THRESHOLD)
 
 
 # --------------------------------------------------------------------------
@@ -1082,6 +1110,59 @@ _DOT_SQL = (
 )
 
 
+def _query_split(base: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """``_vectors`` frame ``base`` split into the first N_QUERY vectors
+    (``query_id``) and the corpus (``neighbor_id``), each side keeping
+    ``cols`` and its vector."""
+    rest = (*cols, "v", "nrm")
+    return (
+        base.filter(F.col("vec_id") < N_QUERY).select(
+            F.col("vec_id").alias("query_id"), *rest
+        ),
+        base.filter(F.col("vec_id") >= N_QUERY).select(
+            F.col("vec_id").alias("neighbor_id"), *rest
+        ),
+    )
+
+
+def _cosine_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    on: str | Column | None = None,
+) -> DataFrame:
+    """Per query, the ``k`` corpus vectors of highest exact cosine (ties
+    broken on the corpus id), numbered ``rnk`` 1..k.
+
+    Both sides are ``_vectors`` frames whose first column is their id.
+    The small query side is broadcast: paired with the corpus on the
+    equi-key ``on`` when it is a column name, else with every corpus
+    row that satisfies the predicate ``on`` (all of them when None) —
+    linear in corpus size, no shuffle until the per-query rank. Zero
+    vectors have no cosine. Returns the query then the corpus columns
+    (``on``, ``v`` and ``nrm`` excluded), ``rnk`` and ``cosine``."""
+    q = queries.withColumnsRenamed({"v": "vq", "nrm": "nrm_q"})
+    n = corpus.withColumnsRenamed({"v": "vn", "nrm": "nrm_n"})
+    drop = ("v", "nrm", on) if isinstance(on, str) else ("v", "nrm")
+    out = [c for c in queries.columns + corpus.columns if c not in drop]
+    if isinstance(on, str):
+        pairs = n.join(F.broadcast(q), on)
+    else:
+        pairs = n.crossJoin(F.broadcast(q))
+        if on is not None:
+            pairs = pairs.filter(on)
+    w = Window.partitionBy(queries.columns[0]).orderBy(
+        F.col("cosine").desc(), F.col(corpus.columns[0])
+    )
+    return (
+        pairs.filter((F.col("nrm_q") > 0) & (F.col("nrm_n") > 0))
+        .withColumn("cosine", _cosine("q", "n"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(*out, "rnk", "cosine")
+    )
+
+
 @CATALOG.add(
     "knn_cosine_topk",
     _KNN_BASE_SQL
@@ -1112,39 +1193,8 @@ _DOT_SQL = (
     tags=("similarity", "embedding", "join"),
 )
 def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    quant = F.expr("transform(embedding, x -> floor(cast(x as double) * 1000))")
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
-    q = (
-        e.filter(F.col("vec_id") < N_QUERY)
-        .select(F.col("vec_id").alias("query_id"), quant.alias("v"))
-        .withColumn("nrm", sq_norm)
-        .withColumnRenamed("v", "qv")
-        .withColumnRenamed("nrm", "q_nrm")
-    )
-    n = (
-        e.filter(F.col("vec_id") >= N_QUERY)
-        .select(F.col("vec_id").alias("neighbor_id"), quant.alias("v"))
-        .withColumn("nrm", sq_norm)
-        .withColumnRenamed("v", "nv")
-        .withColumnRenamed("nrm", "n_nrm")
-    )
-    dot = F.expr("aggregate(zip_with(qv, nv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-    pairs = (
-        n.crossJoin(F.broadcast(q))
-        .filter((F.col("q_nrm") > 0) & (F.col("n_nrm") > 0))
-        .withColumn(
-            "cosine", dot / F.sqrt(F.col("q_nrm") * F.col("n_nrm"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    base = _vectors(_emb(spark, sf_dir), "vec_id")
+    return _cosine_topk(*_query_split(base), TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -1205,54 +1255,17 @@ HARD_NEG_K = 5
     tags=("similarity", "embedding", "join"),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    quant = F.expr(
-        "transform(embedding, x -> floor(cast(x as double) * 1000))"
-    )
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
-    q = (
-        e.filter(F.col("vec_id") < N_QUERY)
-        .select(
-            F.col("vec_id").alias("anchor_id"),
-            F.col("label").alias("anchor_label"),
-            quant.alias("v"),
-        )
-        .withColumn("q_nrm", sq_norm)
-        .withColumnRenamed("v", "qv")
-    )
-    n = (
-        e.filter(F.col("vec_id") >= N_QUERY)
-        .select(
-            F.col("vec_id").alias("negative_id"),
-            F.col("label").alias("negative_label"),
-            quant.alias("v"),
-        )
-        .withColumn("n_nrm", sq_norm)
-        .withColumnRenamed("v", "nv")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(qv, nv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
-    pairs = (
-        n.crossJoin(F.broadcast(q))
-        .filter((F.col("q_nrm") > 0) & (F.col("n_nrm") > 0))
-        .filter(F.col("negative_label") != F.col("anchor_label"))
-        .withColumn("cosine", dot / F.sqrt(F.col("q_nrm") * F.col("n_nrm")))
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= HARD_NEG_K)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            "rnk",
-            "cosine",
-        )
+    base = _vectors(_emb(spark, sf_dir), "vec_id", "label")
+    q, n = _query_split(base, "label")
+    return _cosine_topk(
+        q.withColumnsRenamed(
+            {"query_id": "anchor_id", "label": "anchor_label"}
+        ),
+        n.withColumnsRenamed(
+            {"neighbor_id": "negative_id", "label": "negative_label"}
+        ),
+        HARD_NEG_K,
+        on=F.col("negative_label") != F.col("anchor_label"),
     )
 
 
@@ -1284,16 +1297,23 @@ def _bucket_sql() -> str:
     return " + ".join(bits)
 
 
-def _bucket_col() -> F.Column:
-    bits = []
-    for k, w in enumerate(HYPERPLANES):
-        lit = ",".join(str(x) for x in w)
-        bits.append(
-            f"(CASE WHEN aggregate(zip_with(v, array({lit}),"
-            f" (x, y) -> x * y), 0L, (acc, x) -> acc + x) >= 0"
-            f" THEN 1 ELSE 0 END) * {1 << k}"
-        )
-    return F.expr(" + ".join(bits))
+def _bucket_col() -> Column:
+    return reduce(
+        operator.add,
+        (
+            F.when(int_dot("v", F.array(*map(F.lit, w))) >= 0, 1).otherwise(0)
+            * (1 << k)
+            for k, w in enumerate(HYPERPLANES)
+        ),
+    )
+
+
+def _lsh_split(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Queries and corpus, each vector tagged with its ``bucket``."""
+    base = _vectors(_emb(spark, sf_dir), "vec_id")
+    return _query_split(base.withColumn("bucket", _bucket_col()), "bucket")
 
 
 @CATALOG.add(
@@ -1329,41 +1349,7 @@ def _bucket_col() -> F.Column:
     tags=("similarity", "embedding", "join"),
 )
 def ann_hyperplane_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    quant = F.expr(
-        "transform(embedding, x -> floor(cast(x as double) * 1000))"
-    )
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
-    base = e.select("vec_id", quant.alias("v")).withColumn("nrm", sq_norm)
-    base = base.withColumn("bucket", _bucket_col())
-    q = base.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"),
-        "bucket",
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    n = base.filter(F.col("vec_id") >= N_QUERY).select(
-        F.col("vec_id").alias("neighbor_id"),
-        "bucket",
-        F.col("v").alias("nv"),
-        F.col("nrm").alias("n_nrm"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(qv, nv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
-    pairs = (
-        n.join(F.broadcast(q), on="bucket")
-        .filter((F.col("q_nrm") > 0) & (F.col("n_nrm") > 0))
-        .withColumn("cosine", dot / F.sqrt(F.col("q_nrm") * F.col("n_nrm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= PROBE_TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _cosine_topk(*_lsh_split(spark, sf_dir), PROBE_TOP_K, on="bucket")
 
 
 # --------------------------------------------------------------------------
@@ -1420,47 +1406,12 @@ _PROBE_XORS = [0] + [1 << k for k in range(N_PLANES)]
 def ann_multiprobe_lsh_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    quant = F.expr(
-        "transform(embedding, x -> floor(cast(x as double) * 1000))"
-    )
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
-    base = e.select("vec_id", quant.alias("v")).withColumn("nrm", sq_norm)
-    base = base.withColumn("bucket", _bucket_col())
+    q, n = _lsh_split(spark, sf_dir)
     probes = F.explode(
-        F.expr(
-            "array("
-            + ", ".join(f"bucket ^ {x}" for x in _PROBE_XORS)
-            + ")"
-        )
+        F.array(*(F.col("bucket").bitwiseXOR(x) for x in _PROBE_XORS))
     )
-    q = base.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"),
-        probes.alias("bucket"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    n = base.filter(F.col("vec_id") >= N_QUERY).select(
-        F.col("vec_id").alias("neighbor_id"),
-        "bucket",
-        F.col("v").alias("nv"),
-        F.col("nrm").alias("n_nrm"),
-    )
-    dot = F.expr(
-        "aggregate(zip_with(qv, nv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
-    pairs = (
-        n.join(F.broadcast(q), on="bucket")
-        .filter((F.col("q_nrm") > 0) & (F.col("n_nrm") > 0))
-        .withColumn("cosine", dot / F.sqrt(F.col("q_nrm") * F.col("n_nrm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= PROBE_TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
+    return _cosine_topk(
+        q.withColumn("bucket", probes), n, PROBE_TOP_K, on="bucket"
     )
 
 
@@ -1502,47 +1453,10 @@ def ann_multiprobe_lsh_topk(
     tags=("similarity", "embedding", "join"),
 )
 def ann_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
-    quant = F.expr("transform(embedding, x -> floor(cast(x as double) * 1000))")
-    sq_norm = F.expr("aggregate(v, 0L, (acc, x) -> acc + x * x)")
-    q = (
-        e.filter(F.col("vec_id") < N_QUERY)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("cell"),
-            quant.alias("v"),
-        )
-        .withColumn("nrm", sq_norm)
-        .withColumnRenamed("v", "qv")
-        .withColumnRenamed("nrm", "q_nrm")
+    base = _vectors(
+        _emb(spark, sf_dir), "vec_id", F.col("label").alias("cell")
     )
-    n = (
-        e.filter(F.col("vec_id") >= N_QUERY)
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("cell"),
-            quant.alias("v"),
-        )
-        .withColumn("nrm", sq_norm)
-        .withColumnRenamed("v", "nv")
-        .withColumnRenamed("nrm", "n_nrm")
-    )
-    dot = F.expr("aggregate(zip_with(qv, nv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-    pairs = (
-        n.join(F.broadcast(q), on="cell")
-        .filter((F.col("q_nrm") > 0) & (F.col("n_nrm") > 0))
-        .withColumn(
-            "cosine", dot / F.sqrt(F.col("q_nrm") * F.col("n_nrm"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= PROBE_TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _cosine_topk(*_query_split(base, "cell"), PROBE_TOP_K, on="cell")
 
 
 # --------------------------------------------------------------------------
@@ -1673,11 +1587,8 @@ def _pq_subvectors(
     callers never re-join the embeddings table just to re-attach a
     column they dropped here — at 100 TB that re-join is a full
     n-row shuffle (r08 scan audit)."""
-    quant = F.expr(
-        "transform(embedding, x -> floor(cast(x as double) * 1000))"
-    )
     return e.select(
-        F.col("vec_id"), *extra_cols, quant.alias("v")
+        F.col("vec_id"), *extra_cols, quantized().alias("v")
     ).select(
         "vec_id",
         *extra_cols,
@@ -1705,23 +1616,13 @@ def _pq_codebook(sub: DataFrame) -> DataFrame:
     )
 
 
-def _pq_dist() -> F.Column:
-    """Exact integer L2 between the subvec/cvec column pair (built
-    lazily — F.expr needs an active session, so no module-level
-    Column)."""
-    return F.expr(
-        "aggregate(zip_with(subvec, cvec, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
-
-
 def _pq_codes(
     sub: DataFrame, cb: DataFrame, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """(vec_id, subspace, code, sq_dist): nearest-codeword argmin.
     ``extra_cols`` carried from ``sub`` (constant per vec_id)."""
     d = sub.join(F.broadcast(cb), "subspace").withColumn(
-        "sq_dist", _pq_dist()
+        "sq_dist", int_sq_dist("subvec", "cvec")
     )
     w = Window.partitionBy("vec_id", "subspace").orderBy("sq_dist", "cid")
     return (
@@ -1734,6 +1635,38 @@ def _pq_codes(
             F.col("cid").alias("code"),
             F.col("sq_dist").cast("bigint").alias("sq_dist"),
         )
+    )
+
+
+def _adc_topk(sub: DataFrame, k: int, cell: str | None = None) -> DataFrame:
+    """(query_id, neighbor_id, rnk, adc_dist): per query among the
+    first N_QUERY vectors of ``sub``, the ``k`` corpus vectors of least
+    ADC distance (ties broken on neighbor id). Each query's lookup
+    table (its partial distance to every codeword) broadcasts and joins
+    the corpus codes on (subspace, code), plus the ``sub`` column
+    ``cell`` when given: the IVF probe of a query's own cell."""
+    cb = _pq_codebook(sub)
+    carry = (cell,) if cell else ()
+    codes = _pq_codes(sub, cb, carry).filter(F.col("vec_id") >= N_QUERY)
+    q = sub.filter(F.col("vec_id") < N_QUERY).select(
+        F.col("vec_id").alias("query_id"), *carry, "subspace", "subvec"
+    )
+    ltab = (
+        q.join(F.broadcast(cb), "subspace")
+        .withColumn("pdist", int_sq_dist("subvec", "cvec"))
+        .select("query_id", *carry, "subspace", "cid", "pdist")
+    )
+    keys = [codes[c] == ltab[c] for c in (*carry, "subspace")]
+    agg = (
+        codes.join(F.broadcast(ltab), [*keys, codes.code == ltab.cid])
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("pdist").cast("bigint").alias("adc_dist"))
+    )
+    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
+    return (
+        agg.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "rnk", "adc_dist")
     )
 
 
@@ -1887,36 +1820,7 @@ _PQ_BASE_SQL = f"""
     tags=("similarity", "embedding", "join"),
 )
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sub = _pq_subvectors(_emb(spark, sf_dir))
-    cb = _pq_codebook(sub)
-    codes = _pq_codes(sub, cb).filter(F.col("vec_id") >= N_QUERY)
-    q = sub.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"), "subspace", "subvec"
-    )
-    ltab = (
-        q.join(F.broadcast(cb), "subspace")
-        .withColumn("pdist", _pq_dist())
-        .select("query_id", "subspace", "cid", "pdist")
-    )
-    agg = (
-        codes.join(
-            F.broadcast(ltab),
-            (codes.subspace == ltab.subspace) & (codes.code == ltab.cid),
-        )
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdist").cast("bigint").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        agg.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_ADC_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rn").alias("rnk"),
-            "adc_dist",
-        )
-    )
+    return _adc_topk(_pq_subvectors(_emb(spark, sf_dir)), PQ_ADC_K)
 
 
 # --------------------------------------------------------------------------
@@ -1989,50 +1893,12 @@ IVF_PQ_K = 5
     tags=("similarity", "embedding", "join"),
 )
 def ivf_pq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
     # The cell label rides THROUGH the subvector explode instead of
-    # being re-joined from the embeddings table afterwards — the old
-    # shape paid a second full scan plus an n-row shuffle join on
-    # vec_id for a column it had just dropped (r08 scan audit).
-    sub = _pq_subvectors(e, extra_cols=("label",))
-    cb = _pq_codebook(sub)
-    codes = (
-        _pq_codes(sub, cb, extra_cols=("label",))
-        .filter(F.col("vec_id") >= N_QUERY)
-        .withColumnRenamed("label", "cell")
-    )
-    q = sub.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("cell"),
-        "subspace",
-        "subvec",
-    )
-    ltab = (
-        q.join(F.broadcast(cb), "subspace")
-        .withColumn("pdist", _pq_dist())
-        .select("query_id", "cell", "subspace", "cid", "pdist")
-    )
-    agg = (
-        codes.join(
-            F.broadcast(ltab),
-            (codes.cell == ltab.cell)
-            & (codes.subspace == ltab.subspace)
-            & (codes.code == ltab.cid),
-        )
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdist").cast("bigint").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        agg.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVF_PQ_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rn").alias("rnk"),
-            "adc_dist",
-        )
-    )
+    # being re-joined from the embeddings table afterwards: a re-join
+    # pays a second full scan plus an n-row shuffle join on vec_id for
+    # a column the explode just dropped.
+    sub = _pq_subvectors(_emb(spark, sf_dir), extra_cols=("label",))
+    return _adc_topk(sub, IVF_PQ_K, cell="label")
 
 
 # --------------------------------------------------------------------------
@@ -2179,11 +2045,7 @@ CATALOG.queries["dedup_cascade_keep_list"].oracle = _CASCADE_SQL.format(
 )
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
-    quant = F.expr(
-        "transform(embedding,"
-        " x -> cast(floor(cast(x as double) * 1000) as bigint))"
-    )
-    ex = e.select("label", F.posexplode(quant).alias("dim", "val"))
+    ex = e.select("label", F.posexplode(quantized()).alias("dim", "val"))
     return ex.groupBy("label", "dim").agg(
         F.sum("val").alias("sum_q"),
         F.count(F.lit(1)).alias("n_vecs"),

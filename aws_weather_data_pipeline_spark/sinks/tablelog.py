@@ -1840,11 +1840,19 @@ def merge_changes(
 def require_position_within_head(
     table: str, position: int, head: int | None
 ) -> None:
-    """Refuse a change-feed consumer whose ``position`` is past the
-    ``head`` of ``table`` (-1 for a table with no commits). Such a
-    position can only come from a table that was recreated or rebuilt
-    with fewer versions than the consumer applied; treating it as
-    idle would silence the consumer for good."""
+    """Refuse a change-feed consumer whose ``position`` is below -1
+    or past the ``head`` of ``table`` (-1 for a table with no commits).
+    -1 (before version 0) is the lowest position, so a lower one is a
+    bad bound, not a consumer behind the vacuum horizon. A position
+    past the head can only come from a table that was recreated or
+    rebuilt with fewer versions than the consumer applied; treating
+    it as idle would silence the consumer for good."""
+    if position < -1:
+        raise ValueError(
+            f"change-feed position {position} is below -1, the "
+            f"position before {table}'s first commit; fix the "
+            "caller's bound"
+        )
     h = -1 if head is None else head
     if position > h:
         raise ValueError(
@@ -1867,7 +1875,7 @@ def read_changes(
     ``_commit_version``. Returns None when no commit in the range
     changed any data (the poll-loop idle signal — there is no schema
     to fabricate an empty frame from without reading a snapshot). A
-    ``since_version`` past the head raises ValueError
+    ``since_version`` below -1 or past the head raises ValueError
     (``require_position_within_head``).
 
     Cost is O(changed rows), never O(table): an ``append`` commit is
@@ -1896,15 +1904,6 @@ def read_changes(
 
     from pyspark.sql import functions as F
 
-    if since_version < -1:
-        # -1 (before version 0) is the lowest position; a lower one is
-        # a caller bug that the walk below would misdiagnose as a
-        # consumer behind the vacuum horizon
-        raise ValueError(
-            f"read_changes since_version={since_version} is below -1, "
-            f"the position before {table}'s first commit; fix the "
-            "caller's bound"
-        )
     head = latest_version(table)
     require_position_within_head(table, since_version, head)
     until = until_version if until_version is not None else head

@@ -33,12 +33,12 @@ def test_every_query_has_an_oracle():
 
 
 def test_catalog_never_shrinks():
-    """build_catalog deliberately SKIPS operator modules that are
-    absent on disk (feature-gating), which means a module rename or a
-    packaging mistake would silently drop its queries from driver
-    coverage. Pin the floor: every operator module imports, and the
-    catalog holds at least the round-4 count. Raise the floor when
-    adding queries; never lower it.
+    """build_catalog imports every module in OPERATOR_MODULES and
+    raises on one that is missing, so a module rename or a packaging
+    mistake fails the build instead of dropping queries. Pin that list
+    and the floor: every operator module imports, and the catalog
+    holds at least the round-4 count. Raise the floor when adding
+    queries; never lower it.
     """
     import importlib.util
 

@@ -250,6 +250,43 @@ def test_resize_downsamples_and_updates_metadata(spark):
     assert bytes(out[2]["payload"]) == b"tiny"
 
 
+def test_null_payload_has_null_features():
+    """with_binary_payload turns NULL text into a NULL payload; the
+    feature stage must emit NULL features for it, not crash."""
+    import pandas as pd
+
+    from aws_weather_data_pipeline_spark.functions.multimodal import (
+        fake_byte_features,
+    )
+
+    batch = pd.DataFrame({"doc_id": [1, 2, 3], "payload": [b"ab", None, b""]})
+    (out,) = list(fake_byte_features(iter([batch])))
+    feats = ["n_bytes", "first_byte", "last_byte", "byte_sum_mod"]
+    assert out.loc[0, feats].tolist() == [2, ord("a"), ord("b"), 195]
+    assert out.loc[1, feats].isna().all()
+    assert out.loc[2, "n_bytes"] == 0
+    assert out.loc[2, feats[1:]].isna().all()
+
+
+def test_resize_keeps_a_null_payload_null(spark):
+    from aws_weather_data_pipeline_spark.functions.multimodal import (
+        resize_payload,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "tiny"), (2, None)], "doc_id long, text string"
+    )
+    out = {
+        r["doc_id"]: r
+        for r in resize_payload(with_binary_payload(df)).collect()
+    }
+    assert bytes(out[1]["payload"]) == b"tiny"
+    assert out[1]["orig_bytes"] == 4
+    assert out[2]["payload"] is None
+    assert out[2]["orig_bytes"] is None
+    assert out[2]["payload_meta"]["n_bytes"] is None
+
+
 def _silent_wavs(spark):
     """Two zero-sample WAV payloads (mono and stereo) with metadata."""
     from aws_weather_data_pipeline_spark.functions.multimodal import (

@@ -729,6 +729,13 @@ def test_change_feed_position_below_minus_one_is_a_caller_bug(
         tl.ChangefeedCursor(table, start_after=-5).poll(spark)
     feed = tl.read_changes(spark, table, since_version=-1)
     assert sorted(r.v for r in feed.collect()) == [0, 1, 2]
+    # The same bound on a table with no commits yet must not idle
+    # until the first commit arrives.
+    empty = str(tmp_path / "empty")
+    with pytest.raises(ValueError, match="below -1"):
+        tl.ChangefeedCursor(empty, start_after=-5).poll(spark)
+    with pytest.raises(ValueError, match="below -1"):
+        tl.read_changes(spark, empty, since_version=-5)
 
 
 @pytest.mark.parametrize(

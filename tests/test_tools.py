@@ -169,10 +169,9 @@ def test_every_package_function_has_a_caller():
     assert not stale, f"PRODUCT_SURFACE names what no longer exists: {stale}"
 
 
-def _owners(names) -> dict[str, set[str]]:
-    """For each of ``names``, the top-level package definitions
-    (``module.function``) whose body loads it."""
-    owners: dict[str, set[str]] = {name: set() for name in names}
+def _definitions():
+    """``(module.function, node)`` for every top-level package
+    definition."""
     for path in sorted(
         glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
     ):
@@ -180,16 +179,23 @@ def _owners(names) -> dict[str, set[str]]:
         with open(path) as fh:
             tree = ast.parse(fh.read())
         for top in tree.body:
-            owner = f"{module}.{getattr(top, 'name', '<module>')}"
-            for node in ast.walk(top):
-                if isinstance(node, ast.Name):
-                    name, ctx = node.id, node.ctx
-                elif isinstance(node, ast.Attribute):
-                    name, ctx = node.attr, node.ctx
-                else:
-                    continue
-                if name in owners and isinstance(ctx, ast.Load):
-                    owners[name].add(owner)
+            yield f"{module}.{getattr(top, 'name', '<module>')}", top
+
+
+def _owners(names) -> dict[str, set[str]]:
+    """For each of ``names``, the top-level package definitions
+    (``module.function``) whose body loads it."""
+    owners: dict[str, set[str]] = {name: set() for name in names}
+    for owner, top in _definitions():
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                name, ctx = node.id, node.ctx
+            elif isinstance(node, ast.Attribute):
+                name, ctx = node.attr, node.ctx
+            else:
+                continue
+            if name in owners and isinstance(ctx, ast.Load):
+                owners[name].add(owner)
     return owners
 
 
@@ -231,4 +237,37 @@ def test_one_payload_encoder_and_one_decode_stage():
         "build payloads through _with_encoded_payload(df, content_type, "
         "fixture) and decode through _decode_stage(df, schema, rows) "
         f"instead of a hand-written Arrow loop: {owners}"
+    )
+
+
+#: Who may write the quantized-embedding arithmetic: every kNN, ANN,
+#: PQ, k-means and SemDeDup stage calls ``functions.exact``'s helpers
+#: instead of copying the Spark expression. The DuckDB oracles'
+#: ``list_transform(embedding`` is reference SQL and not counted.
+COSINE_KERNEL_OWNERS = {
+    "zip_with": {"functions.exact.int_dot", "functions.exact.int_sq_dist"},
+    "transform(embedding": {"functions.exact.quantized"},
+}
+
+
+def test_one_cosine_kernel():
+    owners = {"zip_with": _owners({"zip_with"})["zip_with"]}
+    owners["transform(embedding"] = set()
+    spark_sql = re.compile(r"zip_with|(?<!list_)transform\(embedding")
+    for owner, top in _definitions():
+        for node in ast.walk(top):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                for hit in spark_sql.findall(node.value):
+                    owners[hit].add(owner)
+            elif (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "transform"
+                and node.args
+                and getattr(node.args[0], "value", None) == "embedding"
+            ):
+                owners["transform(embedding"].add(owner)
+    assert owners == COSINE_KERNEL_OWNERS, (
+        "quantize with functions.exact.quantized() and take dot products "
+        "and distances with int_dot / int_sq_dist instead of a "
+        f"hand-written copy: {owners}"
     )
