@@ -67,7 +67,14 @@ def connected_components(
     Runs Spark ACTIONS to convergence (this is an algorithm, not a
     lazy plan); the returned frame is small and checkpoint-backed, so
     it outlives the edge and seed-label caches released here.
+    ``max_iters`` and ``checkpoint_every`` below 1 are refused before
+    any Spark job runs.
     """
+    if max_iters < 1 or checkpoint_every < 1:
+        raise ValueError(
+            f"connected_components: max_iters={max_iters} and "
+            f"checkpoint_every={checkpoint_every} must both be at least 1"
+        )
     sc = edges.sparkSession.sparkContext
     can_reliable = sc.getCheckpointDir() is not None
     n_reliable = 0

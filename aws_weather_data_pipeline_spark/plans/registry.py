@@ -34,7 +34,7 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class CatalogQuery:
     name: str
     builder: Builder
-    oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
+    oracle: str  # ANSI SQL for DuckDB
     doc: str = ""
     tags: tuple[str, ...] = ()
 
@@ -46,11 +46,14 @@ class QueryCatalog:
     def add(
         self,
         name: str,
-        oracle: str | None,
+        oracle: str,
         doc: str = "",
         tags: tuple[str, ...] = (),
     ) -> Callable[[Builder], Builder]:
-        """Decorator: register ``fn(spark, sf_dir) -> DataFrame``."""
+        """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` with
+        its DuckDB twin ``oracle``."""
+        if not oracle:
+            raise ValueError(f"catalog query {name} has no oracle SQL")
 
         def wrap(fn: Builder) -> Builder:
             if name in self.queries:
@@ -70,4 +73,4 @@ class QueryCatalog:
         return {n: q.builder for n, q in self.queries.items()}
 
     def oracles(self) -> dict[str, str]:
-        return {n: q.oracle for n, q in self.queries.items() if q.oracle}
+        return {n: q.oracle for n, q in self.queries.items()}

@@ -21,6 +21,13 @@ search over an embedding column — each built in the shape that survives
   ``functions/exact.py``'s; every embedding query here (and SemDeDup
   in ``plans/clustering.py``) ranks through one of three stages:
   ``_cosine_topk``, ``_cosine_pairs`` or ``_adc_topk``.
+- **One pair stage for the near-dup family.** Every document-pair
+  detector pairs rows through ``_self_pairs`` (the ordered equi-key
+  self-join), joins side columns back on through ``_with_sides`` and
+  verifies shingle overlap through ``_jaccard_verified``; every cluster
+  consumer reads ``_cluster_map``, the one connected-components run.
+  Oracles that embed the MinHash pairs SQL compose it at registration
+  from ``_MINHASH_PAIRS_SQL``.
 
 Reference parity: the reference has no similarity surface at all — this
 module is pure north-star extension (SURVEY §7.2 step 9).
@@ -43,10 +50,26 @@ from ..functions.exact import (
     quantized,
     sq_norm,
 )
+from ..operators.graph import connected_components
 from ..session import cached, detach
 from ..sources.tables import load_spread
 from .registry import QueryCatalog
-from .text import SIMHASH_CTE_SQL
+from .sampling import (
+    _KEYHASH_SQL,
+    N_PACK_SHARDS,
+    PACK_BUDGET,
+    TRAIN_HI,
+    VAL_HI,
+    split_expr,
+)
+from .text import (
+    SIMHASH_CTE_SQL,
+    WINNOW_FPS_SQL,
+    quality_gate_sql,
+    quality_signal_cols,
+    simhash_frame,
+    winnow_fingerprints,
+)
 
 _LOG = logging.getLogger(__name__)
 
@@ -127,6 +150,52 @@ def _cosine_pairs(
         .withColumn("cosine", _cosine("a", "b"))
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", key, "cosine")
+    )
+
+
+def _self_pairs(frame: DataFrame, on: list[str], *carry: str) -> DataFrame:
+    """Each pair of ``frame`` rows that share the ``on`` keys, once, as
+    doc_a < doc_b; each side's ``carry`` columns are suffixed
+    ``_a``/``_b``. The equi-join on the keys is what keeps every
+    near-dup detector off an all-pairs stage. A pair that matches on
+    several key values comes out once per value."""
+    a, b = (
+        frame.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *(F.col(c).alias(f"{c}_{s}") for c in carry),
+            *on,
+        )
+        for s in "ab"
+    )
+    return a.join(b, on).filter(F.col("doc_a") < F.col("doc_b"))
+
+
+def _with_sides(pairs: DataFrame, frame: DataFrame, *cols: str) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, ...) with ``frame``'s ``cols`` joined on
+    for each side by doc_id, suffixed ``_a``/``_b``."""
+    for s in "ab":
+        pairs = pairs.join(
+            frame.select(
+                F.col("doc_id").alias(f"doc_{s}"),
+                *(F.col(c).alias(f"{c}_{s}") for c in cols),
+            ),
+            f"doc_{s}",
+        )
+    return pairs
+
+
+def _jaccard_verified(cand: DataFrame, sets: DataFrame, col: str) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the ``cand`` pairs whose exact Jaccard
+    similarity over the array column ``col`` of ``sets`` is at least
+    JACCARD_THRESHOLD."""
+    a, b = f"{col}_a", f"{col}_b"
+    inter = F.size(F.array_intersect(a, b))
+    jaccard = inter.cast("double") / (F.size(a) + F.size(b) - inter)
+    return (
+        _with_sides(cand, sets, col)
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -237,7 +306,7 @@ def _minhash_candidates(
     max_bucket: int | None = None,
     stack: ExitStack | None = None,
 ) -> DataFrame:
-    """Distinct (doc_a < doc_b) candidates from the LSH band join.
+    """Distinct candidate pairs from the LSH band join.
 
     ``sigs`` MUST be persisted and materialized by the caller: the
     band self-join evaluates its input once per side, and an unfilled
@@ -292,7 +361,8 @@ def _minhash_candidates(
     every planted near-dup while cutting the 10× synthetic corpus's
     shuffle from 1.1 GB to ~5 MB (SCALE_PROBE.json); buckets at the
     natural (un-templated) near-dup scale are ≤ a few dozen rows,
-    so caps in the 50–500 range only shave pathological buckets.
+    so caps in the 50–500 range only shave pathological buckets. A
+    cap below 2 is refused: it keeps no bucket that can hold a pair.
 
     ``stack``: when the caller passes one (the executing path), the
     CAPPED bands frame is cached and filled for the stack's lifetime.
@@ -302,6 +372,11 @@ def _minhash_candidates(
     read the cache. Plan inspection passes none, since a persist would
     truncate the inspectable plan.
     """
+    if max_bucket is not None and max_bucket < 2:
+        raise ValueError(
+            f"max_bucket={max_bucket}: a hot-bucket cap below 2 keeps no "
+            "bucket that can hold a pair, so no candidate would survive"
+        )
     bands = _minhash_bands(sigs)
     if max_bucket is not None:
         # Audit the cap's recall effect before applying it (ADVICE
@@ -330,8 +405,6 @@ def _minhash_candidates(
                 excl["rows"],
                 excl["buckets"],
             )
-        from pyspark.sql import Window
-
         # Cost of the cap, measured (r15 .explain audit): the window
         # count adds one exchange + partition-local sort of the
         # O(docs×bands) bands frame PER JOIN SIDE (Spark does not
@@ -357,11 +430,8 @@ def _minhash_candidates(
             # self-join's branches race to compute it.
             bands = stack.enter_context(cached(bands))
             bands.count()
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "k1", "k2")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "k1", "k2")
     return (
-        a.join(b, on=["band", "k1", "k2"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _self_pairs(bands, ["band", "k1", "k2"])
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -439,10 +509,10 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", *minhash_signature_cols())
 
 
-@CATALOG.add(
-    "near_dup_pairs_minhash",
-    _shingle_sql(
-        f""",
+#: The MinHash near-dup pairs oracle: its own query's, and the edge set
+#: every cluster consumer's oracle embeds.
+_MINHASH_PAIRS_SQL = _shingle_sql(
+    f""",
     sigs AS (SELECT doc_id, {_SIG_SQL} FROM sets),
     bands AS ({_BANDS_SQL}),
     cand AS (
@@ -466,7 +536,12 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
              - len(list_filter(sa.shingles,
                    x -> list_contains(sb.shingles, x))))
           >= {JACCARD_THRESHOLD}"""
-    ),
+)
+
+
+@CATALOG.add(
+    "near_dup_pairs_minhash",
+    _MINHASH_PAIRS_SQL,
     doc="Near-duplicate pairs via MinHash-LSH: shingle → signature → "
     f"band-bucket self-join ({N_BANDS} bands × r={ROWS_PER_BAND}) → "
     "exact n-gram "
@@ -501,21 +576,7 @@ def near_dup_pairs_minhash_plan(
     """The lazy near-dup pairs plan over ``sigs`` (doc_id, shingles,
     MinHash signature); ``stack`` as in ``_minhash_candidates``."""
     cand = _minhash_candidates(sigs, max_bucket, stack)
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verified(cand, sigs, "shingles")
 
 
 # --------------------------------------------------------------------------
@@ -583,13 +644,8 @@ def near_dup_pairs_editdist_plan(
     MinHash signature) and ``docs`` (doc_id, text); ``stack`` as in
     ``_minhash_candidates``."""
     cand = _minhash_candidates(sigs, stack=stack)
-    ta = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.substring("text", 1, EDIT_PREFIX).alias("txt_a"),
-    )
-    tb = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.substring("text", 1, EDIT_PREFIX).alias("txt_b"),
+    txt = docs.select(
+        "doc_id", F.substring("text", 1, EDIT_PREFIX).alias("txt")
     )
     # Two exact-result-preserving prunes before the quadratic DP:
     # (1) |len_a - len_b| > k implies distance > k (length is a
@@ -599,8 +655,7 @@ def near_dup_pairs_editdist_plan(
     #     per surviving pair at k=16, len=256. Same result set as
     #     the oracle's unbounded levenshtein ≤ k.
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
+        _with_sides(cand, txt, "txt")
         .filter(
             F.abs(F.length("txt_a") - F.length("txt_b")) <= EDIT_THRESHOLD
         )
@@ -663,8 +718,6 @@ _SIMHASH_BANDS_SQL = "\nUNION ALL\n".join(
     tags=("similarity", "dedup", "join"),
 )
 def near_dup_pairs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text import simhash_frame
-
     # band self-join = two branches over the signature scan
     with cached(simhash_frame(spark, sf_dir)) as sigs:
         sigs.count()
@@ -690,25 +743,12 @@ def near_dup_pairs_simhash_plan(sigs: DataFrame) -> DataFrame:
             )
         ).alias("band", "bucket"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("sig_a"),
-        "band",
-        "bucket",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sig_b"),
-        "band",
-        "bucket",
-    )
     cand = (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
+        _self_pairs(bands, ["band", "bucket"], "simhash")
+        .select("doc_a", "doc_b", "simhash_a", "simhash_b")
         .distinct()
     )
-    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
+    hamming = F.bit_count(F.expr("simhash_a ^ simhash_b"))
     return (
         cand.withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= HAMMING_THRESHOLD)
@@ -729,7 +769,15 @@ WINNOW_SHARED_THRESHOLD = 8
 
 @CATALOG.add(
     "near_dup_pairs_winnow",
-    None,  # oracle attached below (embeds WINNOW_FPS_SQL)
+    f"""
+    WITH w_out AS ({WINNOW_FPS_SQL}),
+    d AS (SELECT DISTINCT doc_id, fp FROM w_out)
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(COUNT(*) AS BIGINT) AS n_shared_fps
+    FROM d a JOIN d b ON a.fp = b.fp AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+    HAVING COUNT(*) >= {WINNOW_SHARED_THRESHOLD}
+    """,
     doc="Near-dup / overlap pairs from winnowing fingerprints: distinct "
     "(doc_id, fp) per document, self-join on fp, keep pairs sharing "
     f">= {WINNOW_SHARED_THRESHOLD} fingerprints. Winnowing guarantees "
@@ -737,8 +785,8 @@ WINNOW_SHARED_THRESHOLD = 8
     "fingerprint, so this detector surfaces LOCAL overlap — long "
     "quotations, shared boilerplate, template reuse — that "
     "whole-document signatures (MinHash/SimHash) dilute away when the "
-    "rest of the text differs; it feeds leakage_audit(pairs=) and the "
-    "dedup cascade like every other pairs pipeline. Scale shape: the "
+    "rest of the text differs; leakage_audit takes its pairs like any "
+    "other pairs pipeline's. Scale shape: the "
     "fingerprint frame is ~2/(w+1) of the shingle count, the self-join "
     "is a hash join on fp (bucket-able exactly like the band joins; a "
     "stop-fingerprint cut on document frequency caps hot keys the "
@@ -747,8 +795,6 @@ WINNOW_SHARED_THRESHOLD = 8
     tags=("similarity", "dedup", "text", "join"),
 )
 def near_dup_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text import winnow_fingerprints
-
     fps = (
         winnow_fingerprints(
             _docs(spark, sf_dir).withColumn(
@@ -763,32 +809,12 @@ def near_dup_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not once per side — Spark does not dedupe common subplans.
     with cached(fps) as fps:
         fps.count()
-        a = fps.select(F.col("doc_id").alias("doc_a"), "fp")
-        b = fps.select(F.col("doc_id").alias("doc_b"), "fp")
         return detach(
-            a.join(b, "fp")
-            .filter(F.col("doc_a") < F.col("doc_b"))
+            _self_pairs(fps, ["fp"])
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("n_shared_fps"))
             .filter(F.col("n_shared_fps") >= WINNOW_SHARED_THRESHOLD)
         )
-
-
-def _attach_winnow_pairs_oracle() -> None:
-    from .text import WINNOW_FPS_SQL
-
-    CATALOG.queries["near_dup_pairs_winnow"].oracle = f"""
-    WITH w_out AS ({WINNOW_FPS_SQL}),
-    d AS (SELECT DISTINCT doc_id, fp FROM w_out)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(COUNT(*) AS BIGINT) AS n_shared_fps
-    FROM d a JOIN d b ON a.fp = b.fp AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-    HAVING COUNT(*) >= {WINNOW_SHARED_THRESHOLD}
-    """
-
-
-_attach_winnow_pairs_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -822,32 +848,14 @@ def _ngram_candidates(srt: DataFrame, filters: bool = True) -> DataFrame:
             F.expr("slice(sh, 1, size(sh) - (3 * size(sh) + 4) div 5 + 1)")
         ).alias("p", "h"),
     )
-    a = pre.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sz_a"),
-        F.col("p").alias("p_a"),
-        "h",
-    )
-    b = pre.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("sz_b"),
-        F.col("p").alias("p_b"),
-        "h",
-    )
-    cond = "doc_a < doc_b"
+    cand = _self_pairs(pre, ["h"], "sz", "p")
     if filters:
-        cond += (
-            " AND least(sz_a, sz_b) * 5 >= greatest(sz_a, sz_b) * 3"
+        cand = cand.filter(
+            "least(sz_a, sz_b) * 5 >= greatest(sz_a, sz_b) * 3"
             " AND least(sz_a - p_a, sz_b - p_b)"
             "     >= (3 * (sz_a + sz_b) + 7) div 8"
         )
-    return (
-        a.join(b, "h")
-        .filter(F.expr(cond))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
+    return cand.select("doc_a", "doc_b").distinct()
 
 
 @CATALOG.add(
@@ -904,31 +912,20 @@ def near_dup_pairs_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def near_dup_pairs_ngram_plan(srt: DataFrame) -> DataFrame:
     """The lazy exact n-gram pairs plan over ``srt`` (doc_id, sorted
     shingle hashes ``sh``)."""
-    cand = _ngram_candidates(srt)
-    sa = srt.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = srt.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verified(_ngram_candidates(srt), srt, "sh")
 
 
 # --------------------------------------------------------------------------
 # Near-dup clusters: connected components + keeper assignment
 # --------------------------------------------------------------------------
 
-#: Shared recursive transitive-closure fragment: symmetrized edges ->
-#: full reachability -> (used by all four cluster-consuming oracles).
-#: ONE definition so a change to the closure (seeding, symmetrization,
-#: keeper rule) can never desynchronize the clusters / cascade /
-#: group-split / manifest oracles (review r06: it was pasted 4x).
-#: Keeps the literal {pairs} placeholder for the attach-time .format.
-_REACH_SQL = """WITH RECURSIVE p AS ({pairs}),
+#: Shared recursive transitive-closure fragment over the MinHash pairs:
+#: symmetrized edges -> full reachability (used by all four
+#: cluster-consuming oracles). ONE definition so a change to the
+#: closure (seeding, symmetrization, keeper rule) can never
+#: desynchronize the clusters / cascade / group-split / manifest
+#: oracles.
+_REACH_SQL = f"""WITH RECURSIVE p AS ({_MINHASH_PAIRS_SQL}),
 e AS (
     SELECT doc_a AS u, doc_b AS v FROM p
     UNION
@@ -944,17 +941,31 @@ reach(u, v) AS (
 _CLUSTER_MAP_SQL = _REACH_SQL + """,
 cl AS (SELECT u AS doc_id, MIN(v) AS cluster_id FROM reach GROUP BY u)"""
 
-_CLUSTERS_SQL = _REACH_SQL + """
-SELECT u AS doc_id, MIN(v) AS cluster_id,
-       CAST(COUNT(*) AS BIGINT) AS n_component,
-       u = MIN(v) AS is_keeper
-FROM reach GROUP BY u
-"""
+
+def _cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cluster_id): every document in a MinHash near-dup pair
+    with its connected component, named by the component's least
+    doc_id. The near-dup family's one connected-components run."""
+    # near_dup_pairs_minhash returns an eagerly-materialized frame
+    # (localCheckpoint inside), so the operator's symmetrizing union
+    # reads checkpointed partitions — no recompute, no extra persist.
+    pairs = near_dup_pairs_minhash(spark, sf_dir)
+    return connected_components(
+        pairs.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        )
+    ).withColumnRenamed("node", "doc_id")
 
 
 @CATALOG.add(
     "near_dup_clusters",
-    None,  # oracle attached at module bottom (needs the pairs SQL)
+    _REACH_SQL
+    + """
+SELECT u AS doc_id, MIN(v) AS cluster_id,
+       CAST(COUNT(*) AS BIGINT) AS n_component,
+       u = MIN(v) AS is_keeper
+FROM reach GROUP BY u
+""",
     doc="Dedup-cascade completion: near-dup PAIRS group into connected "
     "COMPONENTS and each component elects min(doc_id) as keeper — the "
     "step that turns pairwise similarity into delete decisions "
@@ -973,15 +984,6 @@ FROM reach GROUP BY u
     tags=("similarity", "dedup", "iterative"),
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import connected_components
-
-    # near_dup_pairs_minhash returns an eagerly-materialized frame
-    # (localCheckpoint inside), so the operator's symmetrizing union
-    # reads checkpointed partitions — no recompute, no extra persist.
-    pairs = near_dup_pairs_minhash(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    labels = connected_components(pairs)
     # n_component as a window count over the label frame, not a
     # groupBy+join-back: the former sizes aggregate paid one exchange
     # for the aggregate and a second for the join; the window pays
@@ -990,7 +992,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization, oracle-pinned). The label frame is O(near-dup
     # participants) — minuscule vs the corpus at any scale — so the
     # win is the removed exchange+join, not bytes.
-    return labels.withColumnRenamed("node", "doc_id").select(
+    return _cluster_map(spark, sf_dir).select(
         "doc_id",
         "cluster_id",
         F.count(F.lit(1))
@@ -998,30 +1000,6 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_component"),
         (F.col("doc_id") == F.col("cluster_id")).alias("is_keeper"),
     )
-
-
-def _cluster_map(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, cluster_id) near-dup cluster map — no sizes join.
-
-    Compositions that only need the membership map (the manifest, the
-    leakage-safe split) previously called ``near_dup_clusters`` and
-    dropped ``n_component``/``is_keeper`` — but Spark cannot prune the
-    sizes aggregate + inner join behind a dropped column (it can't
-    prove the join preserves rows), so every reference paid an extra
-    shuffle+aggregate+join over the label frame (guide §2.4; r16
-    optimization). This helper returns the CC labels directly —
-    bit-identical membership, none of the sizes machinery."""
-    from ..operators.graph import connected_components
-
-    if pairs is None:
-        pairs = near_dup_pairs_minhash(spark, sf_dir)
-    return connected_components(
-        pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-    ).withColumnRenamed("node", "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -1518,7 +1496,7 @@ RECALL_K = PROBE_TOP_K
     "builders as-is, so each scans and quantizes the embeddings "
     "independently (Spark does not dedupe common subplans — at a "
     "scale where the scan dominates, persist one shared quantized "
-    "base frame and thread it through both, the pairs= pattern). "
+    "base frame and thread it through both). "
     "Then a LEFT join on (query_id, neighbor_id) counts matches — "
     "COUNT(non-null) over the left join keeps 0-recall queries in "
     "the output (an inner-join recall metric silently drops exactly "
@@ -1555,13 +1533,6 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("recall_permille"),
         )
     )
-
-
-# The clusters oracle embeds the near-dup pairs oracle as its edge set —
-# attached post-registration so the two can never drift apart.
-CATALOG.queries["near_dup_clusters"].oracle = _CLUSTERS_SQL.format(
-    pairs=CATALOG.queries["near_dup_pairs_minhash"].oracle
-)
 
 
 # --------------------------------------------------------------------------
@@ -1905,6 +1876,33 @@ def ivf_pq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Full dedup cascade: exact + near-dup → one keep decision per document
 # --------------------------------------------------------------------------
 
+
+def _with_exact_keeper(docs: DataFrame) -> DataFrame:
+    """``docs`` (doc_id, content hash ``ch``, ...) plus ``exact_keeper``,
+    the least doc_id sharing its hash.
+
+    A window over one scan, not a groupBy and self-join: the self-join
+    scanned documents (and ran md5 over the full text) TWICE — Spark
+    does not dedupe common subplans across join inputs — and paid an
+    aggregate shuffle plus a join shuffle on ch. The window pays ONE
+    corpus scan and ONE ch shuffle, and min-over-partition is
+    order-insensitive so the keeper election is unchanged."""
+    return docs.withColumn(
+        "exact_keeper", F.min("doc_id").over(Window.partitionBy("ch"))
+    )
+
+
+def _group_key() -> Column:
+    """``group_key`` of a document left-joined to ``_cluster_map``: its
+    near-dup cluster id, or its own doc_id outside every cluster."""
+    return (
+        F.coalesce(F.col("cluster_id"), F.col("doc_id"))
+        .cast("bigint")
+        .alias("group_key")
+    )
+
+
+#: The cascade's keep decision, embedded again by the attrition oracle.
 _CASCADE_SQL = _CLUSTER_MAP_SQL + """,
 h AS (SELECT doc_id, md5(text) AS ch FROM documents),
 ek AS (SELECT ch, MIN(doc_id) AS exact_keeper FROM h GROUP BY ch),
@@ -1924,7 +1922,7 @@ SELECT doc_id, reason, reason = 'kept' AS keep FROM r
 
 @CATALOG.add(
     "dedup_cascade_keep_list",
-    None,  # oracle attached below (embeds the pairs SQL, like clusters)
+    _CASCADE_SQL,
     doc="The production dedup artifact: ONE row per document with its "
     "keep/drop decision and reason. Stage 1 drops exact duplicates "
     "(md5 group, min-doc_id keeper); stage 2 drops near-duplicate "
@@ -1939,48 +1937,18 @@ SELECT doc_id, reason, reason = 'kept' AS keep FROM r
     tags=("similarity", "dedup", "iterative"),
 )
 def dedup_cascade_keep_list(
-    spark: SparkSession,
-    sf_dir: str,
-    pairs: DataFrame | None = None,
-    carry: tuple[str, ...] = (),
+    spark: SparkSession, sf_dir: str, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.graph import connected_components
-
-    d = _docs(spark, sf_dir)
-    # exact_keeper = min(doc_id) per content hash as a WINDOW over one
-    # scan, not groupBy+self-join: the former hashed⋈ek plan scanned
-    # documents (and ran md5 over the full text) TWICE — Spark does
-    # not dedupe common subplans across join inputs — and paid an
-    # aggregate shuffle plus a join shuffle on ch. The window pays ONE
-    # corpus scan and ONE ch shuffle, and min-over-partition is
-    # order-insensitive so the keeper election is unchanged (guide
-    # §2.4/§3.4; r16 optimization — oracle-pinned).
     # ``carry`` threads extra document columns (e.g. ``source`` for
     # the attrition rollup) through the same scan so compositions
     # don't re-scan + re-join the corpus for columns this scan already
     # touched; the catalog entry passes none, keeping its schema.
-    exact = d.select(
-        "doc_id", *carry, F.md5("text").alias("ch")
-    ).withColumn(
-        "exact_keeper",
-        F.min("doc_id").over(Window.partitionBy("ch")),
+    exact = _with_exact_keeper(
+        _docs(spark, sf_dir).select(
+            "doc_id", *carry, F.md5("text").alias("ch")
+        )
     )
-    # Share the pairs pipeline (VERDICT r03 #4): the near-dup stage is
-    # the expensive half of the cascade, and any pipeline that already
-    # ran near_dup_pairs_minhash (or near_dup_clusters) holds exactly
-    # the frame this stage needs — thread it via ``pairs=`` and the
-    # cascade costs one extra hash-shuffle (exact dedup) plus joins.
-    if pairs is None:
-        pairs = near_dup_pairs_minhash(spark, sf_dir)
-    pairs = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    labels = connected_components(pairs).withColumnRenamed(
-        "node", "doc_id"
-    )
-    out = exact.join(labels, "doc_id", "left")
+    out = exact.join(_cluster_map(spark, sf_dir), "doc_id", "left")
     reason = (
         F.when(F.col("exact_keeper") != F.col("doc_id"), "exact_dup")
         .when(
@@ -1996,11 +1964,6 @@ def dedup_cascade_keep_list(
         reason.alias("reason"),
         (reason == F.lit("kept")).alias("keep"),
     )
-
-
-CATALOG.queries["dedup_cascade_keep_list"].oracle = _CASCADE_SQL.format(
-    pairs=CATALOG.queries["near_dup_pairs_minhash"].oracle
-)
 
 
 # --------------------------------------------------------------------------
@@ -2171,31 +2134,21 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cached(sigs) as sigs:
         sigs.count()
         bands = _minhash_bands(sigs)
+        # Asymmetric band join: batch docs (doc_a) probe corpus docs
+        # (doc_b), never corpus against corpus.
         bb = bands.filter(
             F.col("doc_id") % BATCH_MOD == BATCH_REMAINDER
-        )
+        ).withColumnRenamed("doc_id", "doc_a")
         cb = bands.filter(
             F.col("doc_id") % BATCH_MOD != BATCH_REMAINDER
-        ).withColumnRenamed("doc_id", "dup_of")
+        ).withColumnRenamed("doc_id", "doc_b")
         cand = (
             bb.join(cb, ["band", "k1", "k2"])
-            .select("doc_id", "dup_of")
+            .select("doc_a", "doc_b")
             .distinct()
         )
-        sa = sigs.select("doc_id", F.col("shingles").alias("sh_a"))
-        sb = sigs.select(
-            F.col("doc_id").alias("dup_of"),
-            F.col("shingles").alias("sh_b"),
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        jaccard = inter.cast("double") / (
-            F.size("sh_a") + F.size("sh_b") - inter
-        )
-        ver = (
-            cand.join(sa, "doc_id")
-            .join(sb, "dup_of")
-            .filter(jaccard >= JACCARD_THRESHOLD)
-            .select("doc_id", "dup_of")
+        ver = _jaccard_verified(cand, sigs, "shingles").select(
+            F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("dup_of")
         )
         # Keep-list base = ALL batch docs from the source table, not
         # the shingle frame: _with_shingles drops docs under 3 tokens,
@@ -2223,49 +2176,21 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Split-leakage audit: near-dup pairs that straddle train/val/test
 # --------------------------------------------------------------------------
 
-_SPLIT_LEAKAGE_SQL = """
-WITH p AS ({pairs}),
-s AS (
-    SELECT doc_id,
-           CASE WHEN {keyhash} % 100 < {train_hi} THEN 'train'
-                WHEN {keyhash} % 100 < {val_hi} THEN 'val'
-                ELSE 'test' END AS split
-    FROM documents
-)
-SELECT sa.split AS split_a, sb.split AS split_b,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       sa.split <> sb.split AS crosses_split
-FROM p
-JOIN s sa ON sa.doc_id = p.doc_a
-JOIN s sb ON sb.doc_id = p.doc_b
-GROUP BY sa.split, sb.split
-"""
-
 
 def leakage_audit(
     spark: SparkSession, sf_dir: str, pairs: DataFrame
 ) -> DataFrame:
     """Core audit over ANY candidate-pairs frame with (doc_a, doc_b).
 
-    Parameterized like dedup_cascade_keep_list's ``pairs=``: the split
-    join + cell aggregation is detector-agnostic, so MinHash, SimHash,
-    edit-distance, or n-gram pair pipelines all audit for free — pass
-    whichever pairs frame the corpus already computes.
+    The split join + cell aggregation is detector-agnostic, so MinHash,
+    SimHash, edit-distance, or n-gram pair pipelines all audit for free
+    — pass whichever pairs frame the corpus already computes.
     """
-    from .sampling import split_expr
-
     s = _docs(spark, sf_dir).select(
         "doc_id", split_expr("doc_id").alias("split")
     )
-    sa = s.select(
-        F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
-    )
-    sb = s.select(
-        F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b")
-    )
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _with_sides(pairs, s, "split")
         .groupBy("split_a", "split_b")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -2276,7 +2201,23 @@ def leakage_audit(
 
 @CATALOG.add(
     "split_leakage_audit",
-    None,  # oracle attached below (embeds the pairs SQL, like clusters)
+    f"""
+WITH p AS ({_MINHASH_PAIRS_SQL}),
+s AS (
+    SELECT doc_id,
+           CASE WHEN {_KEYHASH_SQL} % 100 < {TRAIN_HI} THEN 'train'
+                WHEN {_KEYHASH_SQL} % 100 < {VAL_HI} THEN 'val'
+                ELSE 'test' END AS split
+    FROM documents
+)
+SELECT sa.split AS split_a, sb.split AS split_b,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       sa.split <> sb.split AS crosses_split
+FROM p
+JOIN s sa ON sa.doc_id = p.doc_a
+JOIN s sb ON sb.doc_id = p.doc_b
+GROUP BY sa.split, sb.split
+""",
     doc="Near-duplicate leakage audit across dataset splits: the "
     "hash-keyed train/val/test assignment (dataset_split_assignment) "
     "makes a document's split immutable, but near-DUPLICATES of a "
@@ -2300,33 +2241,23 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _attach_split_leakage_oracle() -> None:
-    from .sampling import TRAIN_HI, VAL_HI, _KEYHASH_SQL
-
-    CATALOG.queries["split_leakage_audit"].oracle = _SPLIT_LEAKAGE_SQL.format(
-        pairs=CATALOG.queries["near_dup_pairs_minhash"].oracle,
-        keyhash=_KEYHASH_SQL,
-        train_hi=TRAIN_HI,
-        val_hi=VAL_HI,
-    )
-
-
-_attach_split_leakage_oracle()
-
-
 # --------------------------------------------------------------------------
 # Leakage-safe split assignment (split by near-dup GROUP, not by doc)
 # --------------------------------------------------------------------------
 
-_GROUP_SPLIT_SQL = _CLUSTER_MAP_SQL + """,
+
+@CATALOG.add(
+    "leakage_safe_split_assignment",
+    _CLUSTER_MAP_SQL
+    + f""",
 g AS (
     SELECT d.doc_id,
            COALESCE(cl.cluster_id, d.doc_id) AS group_key
     FROM documents d LEFT JOIN cl USING (doc_id)
 )
 SELECT doc_id, CAST(group_key AS BIGINT) AS group_key,
-       CASE WHEN b < {train_hi} THEN 'train'
-            WHEN b < {val_hi} THEN 'val'
+       CASE WHEN b < {TRAIN_HI} THEN 'train'
+            WHEN b < {VAL_HI} THEN 'val'
             ELSE 'test' END AS split
 FROM (
     SELECT *,
@@ -2334,12 +2265,7 @@ FROM (
                % 100 AS b
     FROM g
 )
-"""
-
-
-@CATALOG.add(
-    "leakage_safe_split_assignment",
-    None,  # oracle attached below (embeds the pairs SQL)
+""",
     doc="The FIX for what split_leakage_audit detects: train/val/test "
     "assignment keyed on the near-dup CLUSTER id (connected components "
     "over the MinHash pair graph; singletons key on their own doc_id), "
@@ -2357,54 +2283,27 @@ FROM (
     tags=("similarity", "sampling", "dedup"),
 )
 def leakage_safe_split_assignment(
-    spark: SparkSession,
-    sf_dir: str,
-    pairs: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .sampling import split_expr
-
-    # The map comes from _cluster_map (labels only): the former
-    # near_dup_clusters call dragged the sizes aggregate+join into the
-    # plan behind columns this query drops (r16 optimization — see
-    # _cluster_map).
-    clusters = _cluster_map(spark, sf_dir, pairs=pairs).select(
-        "doc_id", "cluster_id"
-    )
     d = _docs(spark, sf_dir).select("doc_id").join(
-        clusters, "doc_id", "left"
+        _cluster_map(spark, sf_dir), "doc_id", "left"
     )
-    group_key = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    return (
-        d.select(
-            "doc_id", group_key.cast("bigint").alias("group_key")
-        )
-        .select(
-            "doc_id", "group_key",
-            split_expr("group_key").alias("split"),
-        )
+    return d.select("doc_id", _group_key()).select(
+        "doc_id", "group_key", split_expr("group_key").alias("split")
     )
-
-
-def _attach_group_split_oracle() -> None:
-    from .sampling import TRAIN_HI, VAL_HI
-
-    CATALOG.queries[
-        "leakage_safe_split_assignment"
-    ].oracle = _GROUP_SPLIT_SQL.format(
-        pairs=CATALOG.queries["near_dup_pairs_minhash"].oracle,
-        train_hi=TRAIN_HI,
-        val_hi=VAL_HI,
-    )
-
-
-_attach_group_split_oracle()
 
 
 # --------------------------------------------------------------------------
 # Capstone: the full corpus-build manifest in ONE composed plan
 # --------------------------------------------------------------------------
 
-_MANIFEST_SQL = _CLUSTER_MAP_SQL + """,
+
+@CATALOG.add(
+    "corpus_build_manifest",
+    # the quality gate is text.py's single definition on both sides:
+    # quality_gate_sql here, quality_signal_cols in the Spark plan
+    _CLUSTER_MAP_SQL
+    + f""",
 h AS (SELECT doc_id, md5(text) AS ch FROM documents),
 ek AS (SELECT ch, MIN(doc_id) AS exact_keeper FROM h GROUP BY ch),
 keepers AS (
@@ -2417,7 +2316,7 @@ q AS (
     SELECT doc_id, CAST(len(tokens) AS BIGINT) AS n_tokens
     FROM (SELECT doc_id, text, string_split(text, ' ') AS tokens
           FROM documents)
-    WHERE {quality_gate}
+    WHERE {quality_gate_sql()}
 ),
 g AS (
     SELECT d.doc_id, COALESCE(cl.cluster_id, d.doc_id) AS gk
@@ -2426,9 +2325,9 @@ g AS (
 s AS (
     SELECT doc_id,
            CASE WHEN ('0x' || substr(md5(CAST(gk AS VARCHAR)), 1, 15))
-                         ::BIGINT % 100 < {train_hi} THEN 'train'
+                         ::BIGINT % 100 < {TRAIN_HI} THEN 'train'
                 WHEN ('0x' || substr(md5(CAST(gk AS VARCHAR)), 1, 15))
-                         ::BIGINT % 100 < {val_hi} THEN 'val'
+                         ::BIGINT % 100 < {VAL_HI} THEN 'val'
                 ELSE 'test' END AS split
     FROM g
 ),
@@ -2437,26 +2336,21 @@ surv AS (
     FROM keepers k JOIN q USING (doc_id) JOIN s USING (doc_id)
 ),
 c AS (
-    SELECT *, doc_id % {shards} AS shard,
+    SELECT *, doc_id % {N_PACK_SHARDS} AS shard,
            SUM(n_tokens) OVER (
-               PARTITION BY split, doc_id % {shards} ORDER BY doc_id
+               PARTITION BY split, doc_id % {N_PACK_SHARDS} ORDER BY doc_id
                ROWS UNBOUNDED PRECEDING) AS cum
     FROM surv
 )
 SELECT doc_id, split, n_tokens,
        CAST(shard AS BIGINT) AS shard,
-       CAST((cum - n_tokens) // {budget} AS BIGINT) AS pack_index
+       CAST((cum - n_tokens) // {PACK_BUDGET} AS BIGINT) AS pack_index
 FROM c
-"""
-
-
-@CATALOG.add(
-    "corpus_build_manifest",
-    None,  # oracle attached below (embeds the pairs SQL)
+""",
     doc="The CAPSTONE composition — a full pretraining corpus build as "
     "ONE declarative plan: dedup-cascade keep decision (exact hash + "
-    "MinHash-LSH near-dup clusters, pairs pipeline materialized ONCE "
-    "and threaded through both the cascade and the split) ∧ "
+    "MinHash-LSH near-dup clusters, one pairs pipeline and one "
+    "cluster map feeding both the keep decision and the split) ∧ "
     "Gopher-quality gate → leakage-safe cluster-keyed split → "
     "per-(split, shard) sequence packing of the SURVIVORS into "
     "256-token packs. The output is the training manifest a loader "
@@ -2480,22 +2374,9 @@ FROM c
 def corpus_build_manifest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .sampling import N_PACK_SHARDS, PACK_BUDGET, split_expr
-    from .text import quality_signal_cols
-
-    pairs = near_dup_pairs_minhash(spark, sf_dir)
     # ONE connected-components run feeds both the keep decision and
-    # the split (the loop is the manifest's expensive stage; without
-    # threading, the cascade and the split would each run their own).
-    # _cluster_map, not near_dup_clusters: the manifest drops
-    # n_component, and the sizes aggregate+join it rode in on was
-    # re-run for BOTH references of this frame (r16 scan audit — the
-    # keep branch and the split branch each rebuilt labels⋈sizes).
-    clusters = _cluster_map(spark, sf_dir, pairs=pairs).select(
-        "doc_id", "cluster_id"
-    )
+    # the split (the loop is the manifest's expensive stage).
+    clusters = _cluster_map(spark, sf_dir)
     # ONE corpus scan computes every per-document input the manifest
     # needs — content hash, token count, the quality gate — and the
     # exact-keeper election rides the same rows as a window over ch
@@ -2515,19 +2396,15 @@ def corpus_build_manifest(
     # (text.quality_signal_cols / sampling.split_expr — ADVICE r16):
     # Column-level sharing, so the fused one-scan plan is unchanged.
     n, _stop_hits, _avg_len, gate = quality_signal_cols()
-    base = t.select(
-        "doc_id",
-        F.md5("text").alias("ch"),
-        n.cast("bigint").alias("n_tokens"),
-        gate.alias("passes_quality"),
-    ).withColumn(
-        "exact_keeper",
-        F.min("doc_id").over(Window.partitionBy("ch")),
+    base = _with_exact_keeper(
+        t.select(
+            "doc_id",
+            F.md5("text").alias("ch"),
+            n.cast("bigint").alias("n_tokens"),
+            gate.alias("passes_quality"),
+        )
     )
     j = base.join(clusters, "doc_id", "left")
-    group_key = F.coalesce(F.col("cluster_id"), F.col("doc_id")).cast(
-        "bigint"
-    )
     surv = j.filter(
         (F.col("doc_id") == F.col("exact_keeper"))
         & (
@@ -2535,7 +2412,7 @@ def corpus_build_manifest(
             | (F.col("cluster_id") == F.col("doc_id"))
         )
         & F.col("passes_quality")
-    ).select("doc_id", "n_tokens", group_key.alias("group_key"))
+    ).select("doc_id", "n_tokens", _group_key())
     split = split_expr("group_key")
     shard = (F.col("doc_id") % N_PACK_SHARDS).alias("shard")
     w = (
@@ -2557,48 +2434,22 @@ def corpus_build_manifest(
     )
 
 
-def _attach_manifest_oracle() -> None:
-    from .sampling import N_PACK_SHARDS, PACK_BUDGET, TRAIN_HI, VAL_HI
-
-    from .text import quality_gate_sql
-
-    CATALOG.queries["corpus_build_manifest"].oracle = _MANIFEST_SQL.format(
-        pairs=CATALOG.queries["near_dup_pairs_minhash"].oracle,
-        train_hi=TRAIN_HI,
-        val_hi=VAL_HI,
-        shards=N_PACK_SHARDS,
-        budget=PACK_BUDGET,
-        # the gate is text.py's single definition on BOTH sides:
-        # the oracle through quality_gate_sql here, the Spark plan
-        # through quality_signal_cols (the r16 fusion inlined the
-        # expressions; r17 re-factored them into that shared helper
-        # per ADVICE r16) — so a structural retune lands in one place
-        # and both engines move together (review r06)
-        quality_gate=quality_gate_sql(),
-    )
-
-
-_attach_manifest_oracle()
-
-
 # --------------------------------------------------------------------------
 # Dedup attrition by source (the curation dashboard rollup)
 # --------------------------------------------------------------------------
 
-_ATTRITION_SQL = """
-WITH cascade AS ({cascade})
+
+@CATALOG.add(
+    "dedup_attrition_by_source",
+    f"""
+WITH cascade AS ({_CASCADE_SQL})
 SELECT d.source, c.reason,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(COUNT(*) AS DOUBLE) * 100
            / SUM(COUNT(*)) OVER (PARTITION BY d.source) AS pct_of_source
 FROM cascade c JOIN documents d USING (doc_id)
 GROUP BY d.source, c.reason
-"""
-
-
-@CATALOG.add(
-    "dedup_attrition_by_source",
-    None,  # oracle attached below (embeds the cascade SQL)
+""",
     doc="Dedup attrition BY SOURCE — the dashboard that decides which "
     "feeds are worth their ingest cost: every document's cascade "
     "verdict (kept / exact_dup / near_dup) rolls up per source with "
@@ -2607,14 +2458,12 @@ GROUP BY d.source, c.reason
     "event_type_share discipline). A source shipping 40% duplicates "
     "is a crawler bug or a mirror; this is the number that finds it "
     "before a 100 TB run pays for it. Plan: the cascade's one pairs "
-    "pipeline + cluster map (shared via pairs=), one broadcast-sized "
+    "pipeline + cluster map, one broadcast-sized "
     "join back to doc metadata, one hash-shuffle on (source, "
     "reason).",
     tags=("similarity", "dedup", "agg"),
 )
 def dedup_attrition_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     # ``source`` rides the cascade's own document scan (carry=) — the
     # former plan re-scanned documents for (doc_id, source) and paid a
     # corpus-wide doc_id shuffle join to attach one column the
@@ -2634,14 +2483,3 @@ def dedup_attrition_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("n_docs").over(w)
         ).alias("pct_of_source"),
     )
-
-
-def _attach_attrition_oracle() -> None:
-    CATALOG.queries[
-        "dedup_attrition_by_source"
-    ].oracle = _ATTRITION_SQL.format(
-        cascade=CATALOG.queries["dedup_cascade_keep_list"].oracle
-    )
-
-
-_attach_attrition_oracle()

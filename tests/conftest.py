@@ -36,3 +36,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+def count_jobs(spark, group: str, fn) -> int:
+    """Run ``fn()`` under the Spark job group ``group`` and return how
+    many jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is filled from the listener bus: drain it
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

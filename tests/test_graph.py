@@ -58,6 +58,26 @@ def test_nonconvergence_raises_not_returns(spark):
         ).collect()
 
 
+@pytest.mark.parametrize(
+    "knob, value",
+    [("max_iters", 0), ("max_iters", -1),
+     ("checkpoint_every", 0), ("checkpoint_every", -2)],
+)
+def test_round_bounds_below_one_are_refused_before_any_job(
+    spark, knob, value
+):
+    # max_iters=0 would fill the caches and then report non-convergence;
+    # checkpoint_every=0 would pass silently without a checkpoint dir and
+    # divide by zero in round 1 with one.
+    from tests.conftest import count_jobs
+
+    def refuse():
+        with pytest.raises(ValueError, match=knob):
+            connected_components(_edges(spark, [(1, 2)]), **{knob: value})
+
+    assert count_jobs(spark, f"test-cc-{knob}{value}", refuse) == 0
+
+
 def test_reliable_checkpoint_cadence_on_deep_chain(spark, tmp_path):
     """checkpoint_every: a >10-round chain takes a reliable checkpoint
     every N rounds once a checkpoint dir is configured — the 100×

@@ -13,6 +13,8 @@ from __future__ import annotations
 import io
 import contextlib
 
+import pytest
+
 from aws_weather_data_pipeline_spark.session import cached
 
 from aws_weather_data_pipeline_spark.plans.catalog import build_catalog
@@ -354,28 +356,6 @@ def test_ppjoin_filter_bounds_are_lossless_property():
         ), f"qualifying pair escaped the filters: {a} vs {b}"
 
     check()
-
-
-def test_cascade_threads_precomputed_pairs(spark):
-    """The ``pairs=`` parameter (VERDICT r03 #4) must be a pure reuse:
-    threading the materialized MinHash pairs into the cascade yields
-    row-identical output to letting the cascade rebuild them itself.
-    """
-    from aws_weather_data_pipeline_spark.plans import similarity as sim
-    from tests.conftest import SF_SMOKE
-
-    pairs = sim.near_dup_pairs_minhash(spark, SF_SMOKE)
-    shared = {
-        tuple(r)
-        for r in sim.dedup_cascade_keep_list(
-            spark, SF_SMOKE, pairs=pairs
-        ).collect()
-    }
-    rebuilt = {
-        tuple(r)
-        for r in sim.dedup_cascade_keep_list(spark, SF_SMOKE).collect()
-    }
-    assert shared == rebuilt
 
 
 def test_pii_redaction_stays_in_scan_stage(spark, sf_dir):
@@ -921,9 +901,7 @@ def test_group_split_has_zero_leakage_and_respects_boundaries(
     )
 
     pairs = sim.near_dup_pairs_minhash(spark, sf_dir)
-    split_df = sim.leakage_safe_split_assignment(
-        spark, sf_dir, pairs=pairs
-    )
+    split_df = sim.leakage_safe_split_assignment(spark, sf_dir)
     rows = split_df.collect()
     assert len(rows) == len({r["doc_id"] for r in rows})
 
@@ -1451,6 +1429,82 @@ def test_minhash_capped_bands_persist_single_window(spark, tmp_path):
             assert plan.count("InMemoryTableScan") >= 2, plan
         assert cache_manager.cachedData().size() == 1  # sigs only
     assert cache_manager.isEmpty()
+
+
+@pytest.mark.parametrize("cap", [1, 0, -1])
+def test_minhash_bucket_cap_below_two_is_refused(spark, cap):
+    """A cap below 2 keeps no bucket that can hold a pair, so the band
+    join would return no candidates with only a log warning; it is
+    refused before the cap's audit job runs."""
+    from aws_weather_data_pipeline_spark.plans import similarity as sim
+    from tests.conftest import count_jobs
+
+    d = sim._with_shingles(
+        spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    )
+    sigs = d.select("doc_id", *sim.minhash_signature_cols())
+
+    def refuse():
+        with pytest.raises(ValueError, match="max_bucket"):
+            sim._minhash_candidates(sigs, max_bucket=cap)
+
+    assert count_jobs(spark, f"test-minhash-cap-{cap}", refuse) == 0
+
+
+#: Spark jobs each near-dup cluster consumer starts, builder plus noop
+#: write, on the ``sf_dir`` corpus. Most of them are the cluster map's
+#: connected-components rounds, all run by ``_cluster_map``.
+NEAR_DUP_MAX_JOBS = {
+    "near_dup_pairs_minhash": 11,
+    "near_dup_clusters": 33,
+    "dedup_cascade_keep_list": 37,
+    "leakage_safe_split_assignment": 36,
+    "corpus_build_manifest": 38,
+    "dedup_attrition_by_source": 39,
+}
+
+
+def test_near_dup_cluster_consumer_job_counts(spark, sf_dir):
+    from tests.conftest import count_jobs
+
+    def run(name):
+        df = CATALOG.queries[name].builder(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+
+    counts = {
+        name: count_jobs(spark, f"test-near-dup-{name}", lambda: run(name))
+        for name in NEAR_DUP_MAX_JOBS
+    }
+    assert all(
+        counts[n] <= most for n, most in NEAR_DUP_MAX_JOBS.items()
+    ), counts
+
+
+def test_explain_dump_shows_the_plans_behind_a_detached_frame(spark):
+    """A builder that detaches its result returns a one-node ``Scan
+    ExistingRDD`` plan; the dump adds the plan of every frame the
+    builder checkpointed, and puts the checkpoint methods back."""
+    import importlib.util
+    import os
+
+    from tests.conftest import SF_SMOKE
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "explain_dump.py",
+    )
+    spec = importlib.util.spec_from_file_location("_explain_dump", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    cls = type(spark.range(0))
+    before = (cls.localCheckpoint, cls.checkpoint)
+
+    text = tool.dump(spark, CATALOG, "near_dup_pairs_winnow", SF_SMOKE)
+    returned, _, checkpointed = text.partition("== checkpointed frame 1 ==")
+    assert "Scan ExistingRDD" in returned and "Join" not in returned
+    assert "Scan parquet" in checkpointed and "Join" in checkpointed
+    assert (cls.localCheckpoint, cls.checkpoint) == before
 
 
 def test_semantic_dedup_k_scales_cells_and_keeps_exact_dups(

@@ -271,3 +271,61 @@ def test_one_cosine_kernel():
         "and distances with int_dot / int_sq_dist instead of a "
         f"hand-written copy: {owners}"
     )
+
+
+#: Who may write each step of the near-dup family: the ordered self-join
+#: (a ``doc_a < doc_b`` Column comparison or SQL string), the Jaccard
+#: verify and the connected-components run each have one owner, and no
+#: package code outside ``plans.registry`` stores a catalog ``oracle``
+#: after registration. The DuckDB oracles' ``a.doc_id < b.doc_id`` is
+#: reference SQL and not counted.
+NEAR_DUP_STAGE_OWNERS = {
+    "connected_components": {"plans.similarity._cluster_map"},
+    "array_intersect": {"plans.similarity._jaccard_verified"},
+    "doc_a < doc_b": {"plans.similarity._self_pairs"},
+    ".oracle =": set(),
+}
+
+
+def _column_name(node) -> str | None:
+    """``x`` for a column reference ``F.col("x")``, ``df.x`` or
+    ``df["x"]``."""
+    if isinstance(node, ast.Call) and node.args:
+        if getattr(node.func, "attr", getattr(node.func, "id", None)) == "col":
+            return getattr(node.args[0], "value", None)
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.Subscript):
+        return getattr(node.slice, "value", None)
+    return None
+
+
+def test_one_pair_stage_for_the_near_dup_family():
+    owners = _owners({"connected_components", "array_intersect"})
+    owners["doc_a < doc_b"] = set()
+    owners[".oracle ="] = set()
+    ordered_sql = re.compile(r"\bdoc_a\s*<\s*doc_b\b")
+    for owner, top in _definitions():
+        for node in ast.walk(top):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if ordered_sql.search(node.value):
+                    owners["doc_a < doc_b"].add(owner)
+            elif isinstance(node, ast.Compare) and len(node.ops) == 1:
+                sides = {_column_name(node.left),
+                         _column_name(node.comparators[0])}
+                if sides == {"doc_a", "doc_b"} and isinstance(
+                    node.ops[0], (ast.Lt, ast.Gt)
+                ):
+                    owners["doc_a < doc_b"].add(owner)
+            elif (
+                isinstance(node, ast.Attribute)
+                and node.attr == "oracle"
+                and isinstance(node.ctx, ast.Store)
+                and not owner.startswith("plans.registry.")
+            ):
+                owners[".oracle ="].add(owner)
+    assert owners == NEAR_DUP_STAGE_OWNERS, (
+        "pair documents with plans.similarity._self_pairs, verify with "
+        "_jaccard_verified, cluster with _cluster_map, and pass a "
+        f"composed oracle to CATALOG.add: {owners}"
+    )

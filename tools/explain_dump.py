@@ -8,6 +8,13 @@ algorithms run their loops — the returned frame's plan is what the
 bench times via the noop sink), then the formatted physical plan of
 the returned DataFrame is written to ``OUTDIR/<name>.txt``.
 
+A builder that detaches its result (``localCheckpoint``) or
+checkpoints inside a loop returns a frame whose plan is one
+``Scan ExistingRDD``. So while a builder runs, every frame handed to
+``localCheckpoint`` or ``checkpoint`` has its plan captured too, and
+those plans follow the returned frame's as numbered sections, in call
+order.
+
 Runs under bench.py's ``bench_session`` so the captured plans are the
 bench's plans (shuffle partitions, split size, AQE flags).
 """
@@ -21,6 +28,40 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import bench_session  # noqa: E402
+
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump(spark, catalog, name: str, sf_dir: str) -> str:
+    """Run ``name``'s builder and return its formatted plan followed by
+    the plan of every frame the builder checkpointed."""
+    cls = type(spark.range(0))
+    saved = {m: getattr(cls, m) for m in ("localCheckpoint", "checkpoint")}
+    handed = []
+
+    def capture(method):
+        def wrapped(df, *args, **kwargs):
+            handed.append(_formatted(df))
+            return method(df, *args, **kwargs)
+
+        return wrapped
+
+    for m, method in saved.items():
+        setattr(cls, m, capture(method))
+    try:
+        df = catalog.queries[name].builder(spark, sf_dir)
+    finally:
+        for m, method in saved.items():
+            setattr(cls, m, method)
+    sections = [_formatted(df)] + [
+        f"== checkpointed frame {i} ==\n{plan}"
+        for i, plan in enumerate(handed, 1)
+    ]
+    return "\n".join(sections)
 
 
 def main() -> int:
@@ -46,13 +87,9 @@ def main() -> int:
 
     failed = []
     for name in targets:
-        q = catalog.queries[name]
         t0 = time.perf_counter()
         try:
-            df = q.builder(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = dump(spark, catalog, name, sf_dir)
             with open(os.path.join(outdir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
             print(
