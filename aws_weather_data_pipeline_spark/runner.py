@@ -11,6 +11,13 @@ lineage: raw JSON → flatten → transforms → hive-partitioned lake AND
 idempotent serving append (the Postgres INSERT ON CONFLICT,
 load_to_postgres.py:275-382) AND daily-summary partition upsert
 (:395-445) — all from a single scan.
+
+The daily run's Spark jobs are small, so each one costs scheduling
+latency, not data. Jobs that do not depend on each other therefore run
+at the same time (``session.concurrently``): in ``load``, the serving
+append and the summary upsert, after the lake write has filled the
+shared cache; in ``validate``, the rollup pass and the duplicate-key
+pass over the serving table.
 """
 
 from __future__ import annotations
@@ -22,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.summary import daily_weather_summary
 from .functions.weather import apply_transformations
-from .session import cached
+from .schemas import SERVING_SCHEMA, SUMMARY_SCHEMA
+from .session import cached, concurrently
 from .sinks.writers import (
     idempotent_append,
     overwrite_partitioned,
@@ -33,6 +41,10 @@ from .sources.readers import read_raw_json
 #: P7: rows missing any of these cannot be keyed or located — drop them
 #: (reference dropna subset, load_to_postgres.py:264-266).
 CRITICAL_FIELDS = ("station_id", "city", "timestamp")
+
+#: The serving table's key (reference ON CONFLICT (station_id,
+#: reading_timestamp), load_to_postgres.py:294-321).
+SERVING_KEY = ["station_id", "timestamp"]
 
 #: X3 thresholds (weather_dag.py:186-236).
 MIN_AVG_QUALITY = 90.0
@@ -83,7 +95,18 @@ def check_prerequisites(spark: SparkSession, paths: PipelinePaths) -> None:
 
 
 def load(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
-    """Load task: ingest → clean → transform → three sinks, one scan."""
+    """Load task: ingest → clean → transform → three sinks, one scan.
+
+    The lake write runs first, alone: it is the first action over the
+    cached frame, so it fills the cache; started together, the three
+    sinks race to fill it and start more jobs. The serving
+    append and the summary upsert then run concurrently over the filled
+    cache; neither reads what the other writes.
+
+    The summary aggregates the batch deduplicated on the serving key,
+    as the reference summarises the keyed table (load_to_postgres.py:231):
+    an exact replay of a reading is counted once.
+    """
     raw = read_raw_json(spark, paths.raw_dir)
     # P7 null-drop on critical fields; P9 coercion is implicit in the
     # declared read schema (bad cells are already null, not poison).
@@ -97,16 +120,19 @@ def load(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
         # rewrites the same hour partitions instead of duplicating them
         # — every sink in this load is idempotent.
         overwrite_partitioned(processed, paths.lake_dir)
-        idempotent_append(
-            spark,
-            processed,
-            paths.serving_dir,
-            keys=["station_id", "timestamp"],
-            scope_col="reading_date",
-        )
-        summary = daily_weather_summary(processed)
-        upsert_summary_by_partition(
-            summary, paths.summary_dir, "summary_date"
+        concurrently(
+            lambda: idempotent_append(
+                spark,
+                processed,
+                paths.serving_dir,
+                keys=SERVING_KEY,
+                scope_col="reading_date",
+            ),
+            lambda: upsert_summary_by_partition(
+                daily_weather_summary(processed.dropDuplicates(SERVING_KEY)),
+                paths.summary_dir,
+                "summary_date",
+            ),
         )
     return processed
 
@@ -121,6 +147,10 @@ def validate(
     ``now`` anchors the freshness check (reference README.md:750-755);
     callers pass a fixed instant for deterministic replay, ``None``
     means wall-clock UTC.
+
+    The checks read two aggregate passes over the serving table, which
+    run concurrently: neither depends on the other, and each is a few
+    small jobs whose latency, not data, sets the step's wall time.
     """
     import datetime
 
@@ -129,14 +159,13 @@ def validate(
     if now.tzinfo is None:
         now = now.replace(tzinfo=datetime.timezone.utc)
     res = ValidationResult()
-    # Two aggregate passes over one read (one file listing): a rollup
-    # whose per-level rows are the alert distribution and whose total
-    # row carries every table-wide figure, then the duplicate-key
-    # count, which needs its own (station_id, timestamp) grouping.
-    # Each Spark action costs scheduling latency that dwarfs the scan
-    # at a daily load's size, so the checks share passes, not a cache.
-    serving = spark.read.parquet(paths.serving_dir)
-    groups = (
+    # Two aggregate passes over one read (one file listing, declared
+    # schema): a rollup whose per-level rows are the alert distribution
+    # and whose total row carries every table-wide figure, and the
+    # duplicate-key count, which needs its own key grouping. The checks
+    # share these passes, not a cache; the passes overlap.
+    serving = spark.read.schema(SERVING_SCHEMA).parquet(paths.serving_dir)
+    rollup = (
         serving.rollup("alert_level")
         .agg(
             F.grouping("alert_level").alias("is_total"),
@@ -157,8 +186,9 @@ def validate(
             # bound). Epoch arithmetic has no zone.
             F.max(F.unix_micros("timestamp_parsed")).alias("latest_us"),
         )
-        .collect()
     )
+    dup_keys = serving.groupBy(*SERVING_KEY).count().filter("count > 1")
+    groups, dup = concurrently(rollup.collect, dup_keys.count)
     # A rollup over an empty table returns no rows, not even the total.
     empty = {"n": 0, "nulls": 0, "avg_q": None, "latest_us": None}
     totals = next((r for r in groups if r["is_total"]), empty)
@@ -184,12 +214,6 @@ def validate(
         "CRITICAL",
     }
 
-    dup = (
-        serving.groupBy("station_id", "timestamp")
-        .count()
-        .filter("count > 1")
-        .count()
-    )
     res.stats["duplicate_keys"] = dup
     res.checks["unique_key"] = dup == 0
 
@@ -221,7 +245,8 @@ def report(spark: SparkSession, paths: PipelinePaths) -> str:
     """X4: human-readable report from the summary table
     (weather_dag.py:243-330)."""
     rows = (
-        spark.read.parquet(paths.summary_dir)
+        spark.read.schema(SUMMARY_SCHEMA)
+        .parquet(paths.summary_dir)
         .orderBy(F.col("summary_date").desc(), "city")
         .limit(50)
         .collect()

@@ -44,23 +44,27 @@ FLAT_COLUMNS = [f.name for f in WEATHER_READING_SCHEMA.fields]
 
 #: Columns added by the six transform families F1-F12 (SURVEY §2.8),
 #: in the order apply_transformations emits them.
-DERIVED_COLUMNS = [
-    "temperature_fahrenheit",
-    "temperature_kelvin",
-    "comfort_level",
-    "weather_severity",
-    "alert_level",
-    "timestamp_parsed",
-    "hour_of_day",
-    "day_of_week",
-    "is_weekend",
-    "time_of_day",
-    "season",
-    "is_valid_temperature",
-    "is_valid_humidity",
-    "is_valid_pressure",
-    "data_quality_score",
+DERIVED_FIELDS = [
+    T.StructField(name, dtype, True)
+    for name, dtype in [
+        ("temperature_fahrenheit", T.DoubleType()),
+        ("temperature_kelvin", T.DoubleType()),
+        ("comfort_level", T.StringType()),
+        ("weather_severity", T.StringType()),
+        ("alert_level", T.StringType()),
+        ("timestamp_parsed", T.TimestampType()),
+        ("hour_of_day", T.IntegerType()),
+        ("day_of_week", T.IntegerType()),
+        ("is_weekend", T.BooleanType()),
+        ("time_of_day", T.StringType()),
+        ("season", T.StringType()),
+        ("is_valid_temperature", T.BooleanType()),
+        ("is_valid_humidity", T.BooleanType()),
+        ("is_valid_pressure", T.BooleanType()),
+        ("data_quality_score", T.DoubleType()),
+    ]
 ]
+DERIVED_COLUMNS = [f.name for f in DERIVED_FIELDS]
 
 #: Full processed-table surface (31 columns, mirroring the reference's
 #: processed CSV header local_data/processed/processed_weather_*.csv).
@@ -84,3 +88,43 @@ ALERT_COLUMNS = [
     "alert_level",
     "comfort_level",
 ]
+
+#: The serving table as ``runner.load`` appends it: every processed
+#: column, then the ``reading_date`` conflict-scope column.
+SERVING_SCHEMA = T.StructType(
+    WEATHER_READING_SCHEMA.fields
+    + DERIVED_FIELDS
+    + [T.StructField("reading_date", T.DateType(), True)]
+)
+
+#: The daily summary table as ``runner.load`` upserts it (one row per
+#: city and day, ``functions.summary.daily_weather_summary``). The
+#: partition column ``summary_date`` comes last, where a read of the
+#: partitioned directory puts it.
+SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField(name, dtype, True)
+        for name, dtype in [
+            ("city", T.StringType()),
+            ("avg_temperature", T.DoubleType()),
+            ("min_temperature", T.DoubleType()),
+            ("max_temperature", T.DoubleType()),
+            ("avg_heat_index", T.DoubleType()),
+            ("avg_humidity", T.DoubleType()),
+            ("avg_pressure", T.DoubleType()),
+            ("avg_wind_speed", T.DoubleType()),
+            ("total_precipitation", T.DoubleType()),
+            ("max_precipitation", T.DoubleType()),
+            ("reading_count", T.LongType()),
+            ("normal_count", T.LongType()),
+            ("watch_count", T.LongType()),
+            ("warning_count", T.LongType()),
+            ("critical_count", T.LongType()),
+            ("alert_percentage", T.DoubleType()),
+            ("avg_quality_score", T.DoubleType()),
+            ("dominant_condition", T.StringType()),
+            ("dominant_comfort", T.StringType()),
+            ("summary_date", T.DateType()),
+        ]
+    ]
+)

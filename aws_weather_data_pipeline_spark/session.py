@@ -16,9 +16,11 @@ One place to encode the scale-aware defaults:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
+from typing import Any
 
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 
 _DEF_SHUFFLE = max(4, os.cpu_count() or 4)
@@ -101,3 +103,38 @@ def detach(df: DataFrame) -> DataFrame:
     the caches it was computed from can be released before it is
     read."""
     return df.localCheckpoint(eager=True)
+
+
+def concurrently(*calls: Callable[[], Any]) -> list:
+    """Run each zero-argument call on its own thread and return their
+    results in call order.
+
+    Each thread inherits the caller's Spark local properties (job
+    group, description, scheduler pool) and tags, so its jobs are
+    counted and cancelled with the caller's. Every call runs to its
+    end before anything is returned or raised: a failure re-raises the
+    first exception in call order only after all calls have returned,
+    so no job outlives a ``cached`` block around the call.
+    """
+    session = SparkSession.active()
+    results: list = [None] * len(calls)
+    errors: list[BaseException | None] = [None] * len(calls)
+
+    def run(i: int, call: Callable[[], Any]) -> None:
+        try:
+            results[i] = call()
+        except BaseException as exc:  # re-raised below, in call order
+            errors[i] = exc
+
+    threads = [
+        pyspark.InheritableThread(run, args=(i, call), session=session)
+        for i, call in enumerate(calls)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results

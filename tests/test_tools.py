@@ -329,3 +329,27 @@ def test_one_pair_stage_for_the_near_dup_family():
         "_jaccard_verified, cluster with _cluster_map, and pass a "
         f"composed oracle to CATALOG.add: {owners}"
     )
+
+
+#: Who may start a thread: ``session.concurrently`` is the one place the
+#: package runs calls on threads, each wrapped so it inherits the
+#: caller's Spark job group. ``plans.fixtures``' ``threading.Lock`` starts
+#: no thread and is not counted.
+THREAD_OWNERS = {
+    "Thread": set(),
+    "ThreadPoolExecutor": set(),
+    "InheritableThread": {"session.concurrently"},
+    "inheritable_thread_target": set(),
+}
+
+
+def test_threads_start_only_in_session_concurrently():
+    owners = _owners(THREAD_OWNERS)
+    for owner, top in _definitions():
+        for node in ast.walk(top):
+            if isinstance(node, ast.alias) and node.name in owners:
+                owners[node.name].add(owner)
+    assert owners == THREAD_OWNERS, (
+        "run independent calls through session.concurrently(*calls) "
+        f"instead of a thread of their own: {owners}"
+    )
