@@ -32,9 +32,10 @@ from .functions.weather import apply_transformations
 from .schemas import SERVING_SCHEMA, SUMMARY_SCHEMA
 from .session import cached, concurrently
 from .sinks.writers import (
+    TIME_PARTITIONS,
     idempotent_append,
-    overwrite_partitioned,
-    upsert_summary_by_partition,
+    overwrite_partitions,
+    with_time_partitions,
 )
 from .sources.readers import read_raw_json
 
@@ -116,19 +117,19 @@ def load(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
     )
     # three sinks read this one frame: scan and transform once
     with cached(processed):
-        # Dynamic partition overwrite, not append: a re-run (retry)
-        # rewrites the same hour partitions instead of duplicating them
-        # — every sink in this load is idempotent.
-        overwrite_partitioned(processed, paths.lake_dir)
+        # Partition overwrite, not append: a re-run (retry) rewrites
+        # the same hour partitions instead of duplicating them — every
+        # sink in this load is idempotent.
+        overwrite_partitions(
+            with_time_partitions(processed, "timestamp_parsed"),
+            paths.lake_dir,
+            *TIME_PARTITIONS,
+        )
         concurrently(
             lambda: idempotent_append(
-                spark,
-                processed,
-                paths.serving_dir,
-                keys=SERVING_KEY,
-                scope_col="reading_date",
+                spark, processed, paths.serving_dir, keys=SERVING_KEY
             ),
-            lambda: upsert_summary_by_partition(
+            lambda: overwrite_partitions(
                 daily_weather_summary(processed.dropDuplicates(SERVING_KEY)),
                 paths.summary_dir,
                 "summary_date",

@@ -21,11 +21,11 @@ boundary Spark-first:
   summaries, current-status rows), so ``coalesce`` to a handful of
   partitions first rather than hammering the DB with one connection per
   shuffle partition;
-- ``jdbc_append_missing`` is ON CONFLICT DO NOTHING as a Spark plan:
-  read back only the key columns (JDBC source prunes the projection
-  server-side), LEFT ANTI join, append the remainder. Unlike the row-
-  at-a-time upsert loop in the reference, conflict detection is one
-  distributed join.
+- ``jdbc_append_missing`` is ON CONFLICT DO NOTHING as a Spark plan,
+  the parquet sink's ``writers.append_missing``: read back only the key
+  columns (JDBC source prunes the projection server-side), LEFT ANTI
+  join, append the remainder. Unlike the row-at-a-time upsert loop in
+  the reference, conflict detection is one distributed join.
 
 Tests run the whole path against Spark's bundled embedded Derby — a
 real JDBC driver and database, no external service.
@@ -35,8 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import cached
-from .writers import missing_keys
+from .writers import append_missing
 
 #: The serving-table fixed-point declarations, straight from
 #: sql/create_tables.sql:15-66 (weather_readings + daily_weather_summary
@@ -79,17 +78,18 @@ def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    mode: str = "append",
     properties: dict[str, str] | None = None,
     max_connections: int = 8,
     column_types: str | None = None,
 ) -> None:
-    """S11's named target: ``df.write.jdbc`` to the serving database.
+    """S11's named target: append ``df`` to the serving database with
+    ``df.write.jdbc``, creating the table if it does not exist.
 
     ``max_connections`` caps writer parallelism: each partition opens
     one connection, and a serving RDBMS melts under one-per-shuffle-
     partition (32 here, 1000s on a cluster). Serving extracts are tiny
-    relative to the corpus, so the coalesce costs nothing.
+    relative to the corpus, so the coalesce costs nothing; it never
+    raises the partition count, so it needs no job to look first.
 
     ``column_types`` (``createTableColumnTypes``) declares DDL types
     for table creation, e.g. ``"station_id VARCHAR(50), city
@@ -97,13 +97,10 @@ def write_jdbc(
     StringType to the dialect's unbounded text type (CLOB on Derby),
     which many databases can't index or even compare in a predicate.
     """
-    out = df
-    if df.rdd.getNumPartitions() > max_connections:
-        out = df.coalesce(max_connections)
-    writer = out.write
+    writer = df.coalesce(max_connections).write
     if column_types:
         writer = writer.option("createTableColumnTypes", column_types)
-    writer.jdbc(url, table, mode=mode, properties=properties or {})
+    writer.jdbc(url, table, mode="append", properties=properties or {})
 
 
 def jdbc_append_missing(
@@ -115,53 +112,22 @@ def jdbc_append_missing(
     properties: dict[str, str] | None = None,
 ) -> int:
     """ON CONFLICT (keys) DO NOTHING, Spark-first
-    (load_to_postgres.py:294-321): dedup the batch on the key, LEFT
-    ANTI join against the key columns read back from the serving table,
-    append only the rows whose key is absent. Returns rows appended.
+    (load_to_postgres.py:294-321): ``writers.append_missing`` against
+    the key columns read back from the serving table. Returns rows
+    appended.
 
-    The read-back selects ONLY the key columns — the JDBC source pushes
-    the projection to the database, so conflict detection transfers
-    O(existing keys), not the table. Same shape at any scale; for a
-    huge serving table, add a WHERE pushdown on the batch's date scope
-    exactly like writers.idempotent_append scopes its anti-join.
+    An empty append first creates the table if it does not exist (the
+    dialect's own existence check), so a first load reads back an
+    empty table instead of failing. The read-back selects ONLY the key
+    columns — the JDBC source pushes the projection to the database,
+    so conflict detection transfers O(existing keys), not the table.
     """
     props = properties or {}
-    deduped = new_rows.dropDuplicates(keys)
-    try:
-        existing = spark.read.jdbc(url, table, properties=props).select(
-            *keys
-        )
-    except Exception as exc:
-        # first load against a fresh database: the serving table does
-        # not exist yet, so there is nothing to conflict with and the
-        # append below creates it — the parquet twin's PATH_NOT_FOUND
-        # case. Matched conservatively on the driver's own "missing
-        # table" wording; anything else (connection refused,
-        # permissions) still propagates.
-        msg = str(exc).lower()
-        if not (
-            table.lower() in msg
-            and ("not exist" in msg or "not found" in msg)
-        ):
-            raise
-        existing = None
-    if existing is None:
-        with cached(deduped) as to_insert:
-            n = to_insert.count()
-            if n:
-                write_jdbc(
-                    to_insert, url, table, mode="append",
-                    properties=props,
-                )
-        return n
-    # persist: count-then-write would otherwise run the anti-join —
-    # including the DATABASE read — twice, and rows inserted by a
-    # concurrent writer between the two executions would make the
-    # returned n disagree with what was actually appended.
-    with cached(missing_keys(deduped, existing, keys)) as to_insert:
-        n = to_insert.count()
-        if n:
-            write_jdbc(
-                to_insert, url, table, mode="append", properties=props
-            )
-    return n
+    write_jdbc(new_rows.limit(0), url, table, properties=props)
+    existing = spark.read.jdbc(url, table, properties=props).select(*keys)
+    return append_missing(
+        new_rows,
+        existing,
+        keys,
+        lambda df: write_jdbc(df, url, table, properties=props),
+    )

@@ -12,18 +12,18 @@ The reference's sink surface, re-expressed Spark-first:
 - S11 idempotent append — the reference's ``INSERT ... ON CONFLICT
   (station_id, reading_timestamp) DO NOTHING``
   (airflow/src/load_to_postgres.py:294-321) becomes dedup + left-anti
-  join against the existing table, PARTITION-SCOPED: only the target's
-  date partitions are scanned for conflicts, not the whole table
-  (SURVEY §7.4-7 — at 100 TB a full-table anti-join per load is the
-  difference between minutes and hours).
+  join against the key columns of the existing table
+  (``append_missing``, shared by the parquet and JDBC targets).
 - S12 aggregate upsert — ``ON CONFLICT DO UPDATE``
   (airflow/src/load_to_postgres.py:395-445) becomes dynamic partition
-  overwrite: recompute the affected (summary_date) partitions and
-  replace exactly those.
+  overwrite (``overwrite_partitions``): recompute the affected
+  (summary_date) partitions and replace exactly those.
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
 from functools import reduce
 from operator import and_
 
@@ -31,14 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..session import cached
 
-
-#: DataFrameWriter option for per-WRITE dynamic partition overwrite.
-#: Per-write, not the session conf: a session-GLOBAL toggle would let
-#: a concurrent writer in the same SparkSession run its overwrite in
-#: STATIC mode while another held the toggle — deleting every
-#: partition of its table, not just the batch's. The writer option
-#: scopes the mode to exactly one write with no shared state.
-DYNAMIC_OVERWRITE = ("partitionOverwriteMode", "dynamic")
+#: Hive partition columns ``with_time_partitions`` derives.
+TIME_PARTITIONS = ("year", "month", "day", "hour")
 
 
 def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
@@ -57,7 +51,7 @@ def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
     partition columns here are always derived, never trusted from
     the input (the reference's bug was the reverse).
     """
-    clash = [c for c in ("year", "month", "day", "hour") if c in df.columns]
+    clash = [c for c in TIME_PARTITIONS if c in df.columns]
     if clash:
         raise ValueError(
             f"with_time_partitions derives {clash} but the frame "
@@ -66,11 +60,9 @@ def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
             "the input"
         )
     ts = F.col(ts_col)
-    return (
-        df.withColumn("year", F.date_format(ts, "yyyy"))
-        .withColumn("month", F.date_format(ts, "MM"))
-        .withColumn("day", F.date_format(ts, "dd"))
-        .withColumn("hour", F.date_format(ts, "HH"))
+    patterns = ("yyyy", "MM", "dd", "HH")
+    return df.withColumns(
+        {c: F.date_format(ts, p) for c, p in zip(TIME_PARTITIONS, patterns)}
     )
 
 
@@ -84,30 +76,28 @@ def write_partitioned(df: DataFrame, path: str) -> None:
     """
     with_time_partitions(df, "timestamp_parsed").write.mode(
         "append"
-    ).partitionBy("year", "month", "day", "hour").parquet(path)
+    ).partitionBy(*TIME_PARTITIONS).parquet(path)
 
 
-def overwrite_partitioned(df: DataFrame, path: str) -> None:
-    """S7, re-runnable form: dynamic-overwrite the touched partitions.
+def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
+    """S12: replace exactly the ``cols`` partitions present in ``df``.
 
-    Same layout as ``write_partitioned``, but replaces exactly the
-    year/month/day/hour partitions present in ``df`` instead of
-    appending — so replaying a batch load (Airflow retry semantics)
-    rewrites the same partitions rather than duplicating rows.
-    Streaming keeps the append form (micro-batches accumulate within
-    an hour); batch loads that may re-run should use this one.
+    Spark's dynamic partition overwrite leaves every other partition
+    untouched, so the reference's ``ON CONFLICT DO UPDATE`` per
+    (city, summary_date) becomes "recompute the day, replace the day",
+    and replaying a load (the Airflow retry semantics,
+    weather_dag.py:376-457) rewrites the same partitions instead of
+    duplicating rows.
+
+    The mode is a per-WRITE option, not the session conf: a
+    session-global toggle would let a concurrent writer in the same
+    SparkSession run its overwrite in STATIC mode while another held
+    the toggle — deleting every partition of its table, not just the
+    batch's.
     """
-    with_time_partitions(df, "timestamp_parsed").write.mode(
-        "overwrite"
-    ).option(*DYNAMIC_OVERWRITE).partitionBy(
-        "year", "month", "day", "hour"
-    ).parquet(path)
-
-
-#: Upper bound on the number of distinct scope values collected to the
-#: driver by ``idempotent_append`` — a date-grained scope is O(days per
-#: batch); anything past this is a mis-chosen scope column.
-MAX_SCOPE_VALUES = 10_000
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*cols).parquet(path)
 
 
 def missing_keys(
@@ -125,109 +115,54 @@ def missing_keys(
     return rows.join(ex, on=cond, how="left_anti")
 
 
+def append_missing(
+    new_rows: DataFrame,
+    existing: DataFrame | None,
+    keys: list[str],
+    append: Callable[[DataFrame], None],
+) -> int:
+    """S11's one body: dedup ``new_rows`` on ``keys`` (the reference's
+    A1 dedup, load_to_postgres.py:229-236), drop the rows whose key is
+    in ``existing`` (``None``: the target holds no rows), and pass the
+    remainder to ``append``. Returns the number of rows appended.
+
+    The remainder is cached: count-then-write would otherwise run the
+    dedup, the anti-join and the read of the target twice, and rows a
+    concurrent writer added between the two runs would make the
+    returned count disagree with what was appended.
+    """
+    to_insert = new_rows.dropDuplicates(keys)
+    if existing is not None:
+        to_insert = missing_keys(to_insert, existing, keys)
+    with cached(to_insert) as to_insert:
+        n = to_insert.count()
+        if n:
+            append(to_insert)
+    return n
+
+
 def idempotent_append(
     spark: SparkSession,
     new_rows: DataFrame,
     path: str,
     keys: list[str],
-    scope_col: str | None = None,
 ) -> int:
-    """S11: append only rows whose key is not already present.
+    """S11 into a parquet directory: append only the rows whose key is
+    not already present. Returns the number of rows appended.
 
-    dropDuplicates on the key (the reference's A1 dedup,
-    load_to_postgres.py:229-236) then a LEFT ANTI join against the
-    existing table. When ``scope_col`` is given (a partition column or
-    a low-cardinality date column), the existing side is filtered to
-    the incoming batch's scope values first — the partition-scoped
-    anti-join: conflict detection reads only the partitions the batch
-    can possibly collide with. Returns the number of rows appended.
-
-    The anti-join shuffles on the key — same shape at any scale; the
-    existing side after scoping is one day's partitions, so AQE will
-    typically broadcast it.
+    The existing table is read with a declared schema of the key
+    columns alone, so the anti-join scans only those columns and no
+    job infers a schema. ``path`` is a local directory; a missing one
+    is created first, so a first load reads an empty table like a
+    pre-provisioned empty directory, and with no files to read the
+    anti-join is skipped. A table that exists but cannot be read
+    raises from the scan.
     """
-    from pyspark.errors import AnalysisException
-
-    deduped = new_rows.dropDuplicates(keys)
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException as exc:
-        # ONLY PATH_NOT_FOUND means "first load, nothing to conflict
-        # with". Any other failure — unreadable schema, permissions, a
-        # corrupt-but-existing table — must propagate: treating it as
-        # "table absent" would skip conflict detection and append
-        # duplicate keys into a table that very much exists.
-        cond = (
-            exc.getCondition()
-            if hasattr(exc, "getCondition")
-            else exc.getErrorClass()
-        )
-        if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        # PATH_NOT_FOUND: first load. UNABLE_TO_INFER_SCHEMA: the
-        # directory exists but is EMPTY (infra pre-provisioning) —
-        # semantically the same "nothing to conflict with" state;
-        # any other condition still propagates.
-        existing = None
-    if existing is not None:
-        if scope_col is not None:
-            # The scope list is collected to the driver to become an
-            # isin() partition-pruning predicate — correct only for
-            # low-cardinality scopes (dates, hours). Cap it so a caller
-            # passing a high-cardinality column (an id, a timestamp)
-            # fails with a clear message instead of OOMing the driver
-            # at scale; such callers should use the plain (scope-less)
-            # anti-join, which never leaves the executors.
-            scope_rows = (
-                deduped.select(scope_col)
-                .distinct()
-                .limit(MAX_SCOPE_VALUES + 1)
-                .collect()
-            )
-            if len(scope_rows) > MAX_SCOPE_VALUES:
-                raise ValueError(
-                    f"idempotent_append scope_col={scope_col!r} has more "
-                    f"than {MAX_SCOPE_VALUES} distinct values in the "
-                    "incoming batch; use a coarser scope column (e.g. a "
-                    "date) or scope_col=None"
-                )
-            scopes = [r[0] for r in scope_rows]
-            # isin() never matches NULL (null-vs-null compares to
-            # null), so a batch containing null-scope rows — e.g. an
-            # unparseable timestamp surviving to a null reading_date —
-            # would exclude the matching EXISTING rows from conflict
-            # detection and re-append duplicates on retry. Null
-            # scopes need an explicit isNull arm.
-            pred = F.col(scope_col).isin(
-                [v for v in scopes if v is not None]
-            )
-            if any(v is None for v in scopes):
-                pred = pred | F.col(scope_col).isNull()
-            existing = existing.filter(pred)
-        to_insert = missing_keys(deduped, existing, keys)
-    else:
-        to_insert = deduped
-    # persist: count-then-write would otherwise execute the dedup +
-    # anti-join (and the existing-table scan) twice per load
-    with cached(to_insert) as to_insert:
-        n = to_insert.count()
-        if n:
-            to_insert.write.mode("append").parquet(path)
-    return n
-
-
-def upsert_summary_by_partition(
-    summary: DataFrame, path: str, partition_col: str
-) -> None:
-    """S12: overwrite exactly the partitions present in ``summary``.
-
-    Spark's dynamic partition overwrite replaces only the partitions
-    the incoming frame contains — the reference's ``ON CONFLICT DO
-    UPDATE`` per (city, summary_date) becomes "recompute the day,
-    replace the day". Unaffected history is untouched, so the operation
-    is idempotent and safely re-runnable (the Airflow retry semantics,
-    weather_dag.py:376-457, for free).
-    """
-    summary.write.mode("overwrite").option(
-        *DYNAMIC_OVERWRITE
-    ).partitionBy(partition_col).parquet(path)
+    os.makedirs(path, exist_ok=True)
+    existing = spark.read.schema(new_rows.select(*keys).schema).parquet(path)
+    return append_missing(
+        new_rows,
+        existing if existing.inputFiles() else None,
+        keys,
+        lambda df: df.write.mode("append").parquet(path),
+    )

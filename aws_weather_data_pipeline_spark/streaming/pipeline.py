@@ -39,7 +39,11 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions.weather import apply_transformations
 from ..schemas import ALERT_COLUMNS
 from ..session import cached
-from ..sinks.writers import DYNAMIC_OVERWRITE, with_time_partitions
+from ..sinks.writers import (
+    TIME_PARTITIONS,
+    overwrite_partitions,
+    with_time_partitions,
+)
 from ..sources.readers import (
     flatten_readings,
     quarantine_frame,
@@ -112,8 +116,8 @@ def write_both_sinks(
     After a crash between the two writes, the checkpoint replays the
     whole micro-batch. Plain parquet append would then duplicate rows
     in whichever sink already committed, so each sink partitions by
-    ``epoch_id`` and uses DYNAMIC partition overwrite: a replay
-    rewrites exactly its own epoch partitions, converging both sinks
+    ``epoch_id`` and is written through ``overwrite_partitions``: a
+    replay rewrites exactly its own epoch partitions, converging both sinks
     to one copy of the batch. (This also removes the cross-sink
     divergence the reference's two independent queries have — both
     writes share one batch and one checkpoint.)
@@ -150,14 +154,12 @@ def write_both_sinks(
     batch_df = batch_df.withColumn("epoch_id", F.lit(epoch_val))
     # two sinks read the batch: compute it once
     with cached(batch_df):
-        # per-WRITE dynamic overwrite: a session-conf toggle would be
-        # shared mutable state — a concurrent writer could run its
-        # overwrite in static mode and drop every partition of its sink
-        with_time_partitions(batch_df, "timestamp_parsed").write.mode(
-            "overwrite"
-        ).option(*DYNAMIC_OVERWRITE).partitionBy(
-            "year", "month", "day", "hour", "epoch_id"
-        ).parquet(processed_path)
+        overwrite_partitions(
+            with_time_partitions(batch_df, "timestamp_parsed"),
+            processed_path,
+            *TIME_PARTITIONS,
+            "epoch_id",
+        )
         # alerts_view projects the fixed ALERT_COLUMNS (no epoch_id),
         # so the fabricated column is re-added for the sink partition
         alerts = alerts_view(batch_df).withColumn(
@@ -165,10 +167,8 @@ def write_both_sinks(
         )
         # T6: cluster alert files by station like the Kinesis
         # partition key.
-        alerts.repartition(F.col("station_id")).write.mode(
-            "overwrite"
-        ).option(*DYNAMIC_OVERWRITE).partitionBy("epoch_id").parquet(
-            alerts_path
+        overwrite_partitions(
+            alerts.repartition(F.col("station_id")), alerts_path, "epoch_id"
         )
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 from pathlib import Path
 
@@ -25,6 +26,7 @@ from aws_weather_data_pipeline_spark.schemas import (
     SERVING_SCHEMA,
     SUMMARY_SCHEMA,
 )
+from tests.conftest import count_jobs
 from tests.weather_fixtures import make_reading, write_batch_file
 
 #: Fixture readings are stamped 2024-01-15; this "now" is the same
@@ -352,3 +354,22 @@ def test_daily_run_job_counts(spark, paths):
     assert all(
         counts[s] <= n for s, n in DAILY_RUN_MAX_JOBS.items()
     ), counts
+
+
+#: Spark jobs a second ``load`` of the same day may start, on top of the
+#: first load's 9: the serving append now reads back the keys it holds.
+REPEAT_LOAD_MAX_JOBS = 10
+
+
+def test_repeat_load_job_count(spark, paths, tmp_path):
+    load(spark, paths)
+    raw = tmp_path / "raw2"
+    raw.mkdir()
+    write_batch_file(
+        raw / "batch_001.json",
+        [make_reading(i, hour=16) for i in range(35, 51)],
+    )
+    again = dataclasses.replace(paths, raw_dir=str(raw))
+    jobs = count_jobs(spark, "test-repeat-load", lambda: load(spark, again))
+    assert jobs <= REPEAT_LOAD_MAX_JOBS
+    assert spark.read.parquet(paths.serving_dir).count() == 51

@@ -18,6 +18,7 @@ from aws_weather_data_pipeline_spark.sinks.serving import (
     to_serving_schema,
     write_jdbc,
 )
+from tests.conftest import count_jobs
 
 DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
@@ -76,6 +77,26 @@ def test_write_jdbc_caps_connections(spark, tmp_path):
     )
     back = spark.read.jdbc(url, "capped", properties=DERBY_PROPS)
     assert back.count() == 40
+
+
+#: Spark jobs ``write_jdbc`` starts on a shuffled frame: the shuffle and
+#: the write.
+WRITE_JDBC_MAX_JOBS = 2
+
+
+def test_write_jdbc_runs_a_shuffled_frame_once(spark, tmp_path):
+    """Capping the connections must not run the frame's shuffle as a
+    job of its own before the write runs it again."""
+    url = _url(tmp_path)
+    df = to_serving_schema(_readings(spark, n=40)).repartition(32)
+    jobs = count_jobs(
+        spark,
+        "test-write-jdbc-shuffle",
+        lambda: write_jdbc(
+            df, url, "shuffled", properties=DERBY_PROPS, max_connections=4
+        ),
+    )
+    assert jobs <= WRITE_JDBC_MAX_JOBS
 
 
 def test_jdbc_append_missing_is_on_conflict_do_nothing(spark, tmp_path):

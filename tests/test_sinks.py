@@ -7,8 +7,9 @@ import os
 from pyspark.sql import Row, functions as F
 
 from aws_weather_data_pipeline_spark.sinks.writers import (
+    TIME_PARTITIONS,
     idempotent_append,
-    upsert_summary_by_partition,
+    overwrite_partitions,
     with_time_partitions,
     write_partitioned,
 )
@@ -74,37 +75,19 @@ def test_idempotent_append_is_noop_on_replay(spark, tmp_path):
 
 
 def test_idempotent_append_partition_scoped(spark, tmp_path):
-    # Scoped variant: conflicts checked only within the batch's dates.
+    # Loads of two dates into one table: conflicts only within a date.
     out = str(tmp_path / "serving")
     keys = ["station_id", "timestamp_parsed"]
     day1, day2 = _frame(spark, day=15), _frame(spark, day=16)
-    assert idempotent_append(spark, day1, out, keys, "reading_date") == 6
+    assert idempotent_append(spark, day1, out, keys) == 6
     # Day-2 rows share station_ids but not timestamps — all append.
-    assert idempotent_append(spark, day2, out, keys, "reading_date") == 6
+    assert idempotent_append(spark, day2, out, keys) == 6
     # Replay day 2 with overlap plus one new row.
     day2_plus = day2.unionByName(
         _frame(spark, n=7, day=16).filter("station_id = 'WS006'")
     )
-    assert idempotent_append(spark, day2_plus, out, keys, "reading_date") == 1
+    assert idempotent_append(spark, day2_plus, out, keys) == 1
     assert spark.read.parquet(out).count() == 13
-
-
-def test_idempotent_append_rejects_high_cardinality_scope(
-    spark, tmp_path, monkeypatch
-):
-    # The scope list is collected to the driver; a caller passing an
-    # id-like column must fail loudly, not OOM the driver at scale.
-    # Shrink the cap so the test doesn't need 10k+1 distinct values.
-    import aws_weather_data_pipeline_spark.sinks.writers as w
-    import pytest
-
-    monkeypatch.setattr(w, "MAX_SCOPE_VALUES", 4)
-    out = str(tmp_path / "serving")
-    keys = ["station_id", "timestamp_parsed"]
-    df = _frame(spark)  # station_id has 6 distinct values > cap of 4
-    idempotent_append(spark, df, out, keys)  # table must exist first
-    with pytest.raises(ValueError, match="station_id.*distinct"):
-        idempotent_append(spark, df, out, keys, scope_col="station_id")
 
 
 def test_idempotent_append_dedups_within_batch(spark, tmp_path):
@@ -126,12 +109,12 @@ def test_upsert_summary_overwrites_only_target_partitions(spark, tmp_path):
             Row(city="Delhi", summary_date="2024-01-16", avg_t=20.0),
         ]
     )
-    upsert_summary_by_partition(v1, out, "summary_date")
+    overwrite_partitions(v1, out, "summary_date")
     # Recompute day 16 with a corrected value; day 15 must survive.
     v2 = spark.createDataFrame(
         [Row(city="Delhi", summary_date="2024-01-16", avg_t=21.5)]
     )
-    upsert_summary_by_partition(v2, out, "summary_date")
+    overwrite_partitions(v2, out, "summary_date")
     # Partition-column type inference reads the date partition back as
     # DateType; stringify for comparison.
     got = {
@@ -147,28 +130,19 @@ def test_upsert_summary_overwrites_only_target_partitions(spark, tmp_path):
 def test_idempotent_append_replay_safe_with_null_scope(
     spark, tmp_path
 ):
-    """Review r06: isin() never matches NULL, so existing rows with a
-    null scope value were invisible to conflict detection and a
-    replayed batch re-appended them — the exact duplicate the
-    function exists to prevent."""
-    from aws_weather_data_pipeline_spark.sinks.writers import (
-        idempotent_append,
-    )
-
+    """A replayed batch whose non-key column is NULL appends nothing:
+    conflict detection reads every existing key, whatever its row's
+    other values."""
     path = str(tmp_path / "serving")
     batch = spark.createDataFrame(
         [(1, None), (2, "2024-01-01")],
         "k LONG, scope STRING",
     )
-    n1 = idempotent_append(
-        spark, batch, path, keys=["k"], scope_col="scope"
-    )
+    n1 = idempotent_append(spark, batch, path, keys=["k"])
     assert n1 == 2
     # replay the identical batch: nothing may append, including the
     # null-scope row
-    n2 = idempotent_append(
-        spark, batch, path, keys=["k"], scope_col="scope"
-    )
+    n2 = idempotent_append(spark, batch, path, keys=["k"])
     assert n2 == 0
     assert spark.read.parquet(path).count() == 2
 
@@ -220,10 +194,6 @@ def test_concurrent_dynamic_overwrites_do_not_interfere(
     deleting every partition of its table)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from aws_weather_data_pipeline_spark.sinks.writers import (
-        overwrite_partitioned,
-    )
-
     paths = [str(tmp_path / f"t{i}") for i in range(2)]
     # seed both tables with an hour-10 partition
     for p in paths:
@@ -237,7 +207,9 @@ def test_concurrent_dynamic_overwrites_do_not_interfere(
             "timestamp_parsed",
             F.col("timestamp_parsed") + F.expr("INTERVAL 3 HOURS"),
         )
-        overwrite_partitioned(df, p)
+        overwrite_partitions(
+            with_time_partitions(df, "timestamp_parsed"), p, *TIME_PARTITIONS
+        )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         list(pool.map(overwrite_other_hour, paths))

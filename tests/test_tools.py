@@ -353,3 +353,50 @@ def test_threads_start_only_in_session_concurrently():
         "run independent calls through session.concurrently(*calls) "
         f"instead of a thread of their own: {owners}"
     )
+
+
+#: Who may name each sink rule: the per-write dynamic partition overwrite
+#: (``ON CONFLICT DO UPDATE`` per partition) and the keyed anti-join
+#: (``ON CONFLICT DO NOTHING``) each have one body, which every sink
+#: calls. No sink probes an exception to detect a first load: an empty
+#: target answers "absent" for every key, and a failure propagates.
+SINK_RULE_OWNERS = {
+    "partitionOverwriteMode": {"sinks.writers.overwrite_partitions"},
+    "missing_keys": {"sinks.writers.append_missing"},
+    "exception probe": set(),
+}
+
+
+def test_one_keyed_append_and_one_partition_overwrite():
+    owners = _owners({"missing_keys"})
+    owners["partitionOverwriteMode"] = set()
+    owners["exception probe"] = set()
+    for owner, top in _definitions():
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "partitionOverwriteMode" in node.value
+            ):
+                owners["partitionOverwriteMode"].add(owner)
+            if not owner.startswith("sinks."):
+                continue
+            if isinstance(node, ast.ExceptHandler):
+                caught = ast.unparse(node.type) if node.type else ""
+                if "AnalysisException" in caught or any(
+                    isinstance(call, ast.Call)
+                    and getattr(call.func, "id", None) == "str"
+                    and [getattr(a, "id", None) for a in call.args]
+                    == [node.name]
+                    for call in ast.walk(node)
+                ):
+                    owners["exception probe"].add(owner)
+            elif isinstance(node, ast.Attribute) and node.attr in (
+                "getCondition", "getErrorClass"
+            ):
+                owners["exception probe"].add(owner)
+    assert owners == SINK_RULE_OWNERS, (
+        "overwrite partitions through sinks.writers.overwrite_partitions, "
+        "append keyed rows through sinks.writers.append_missing, and let "
+        f"an empty target stand for a first load: {owners}"
+    )
